@@ -504,6 +504,10 @@ object Bm25 {
     val spark = docs.sparkSession
     import spark.implicits._
     import graft.sources.Generations
+    // a rebuild supersedes the postings generation a crashed append's
+    // intent targets — finish that append first, or its marker could
+    // never roll forward again
+    recoverPendingAppend(spark, table)
     // every live name is a Generations VIEW over generation tables, so
     // maintenance flips are one atomic catalog op each (no window in
     // which a probe sees a missing or half-swapped table). Each member
@@ -567,25 +571,17 @@ object Bm25 {
       fileTracked = Set(s"${table}_postings"),
       addedFiles = addedFiles)
 
-  // ---- append crash recovery (r15 directive 4) ---------------------
-  // Property tagging the dfs generation with the append batch that
-  // produced it — recovery's commit detector — and the bounds
-  // generation with the batch whose delta it last applied — recovery's
-  // exactly-once guard for the additive counters.
+  // ---- append crash recovery ([[graft.sources.PendingAppend]]) ------
+  // Properties tagging the dfs generation with the append batch that
+  // produced it and that batch's additive bounds delta (n, Σdl) —
+  // recovery derives the batch's commit marker from the tag and rolls
+  // the delta forward from it — and the bounds generation with the
+  // batch whose delta it last applied — the exactly-once guard for the
+  // additive counters.
   private val batchProp = "graft.batch"
+  private val batchNProp = "graft.batch_n"
+  private val batchSumdlProp = "graft.batch_sumdl"
   private val appliedBatchProp = "graft.applied_batch"
-
-  /** Test seam: set to a crash-point name to make the next matching
-    * point throw, simulating a JVM death there; cleared on fire. The
-    * points are the two halves of the append's commit window:
-    * `bm25.append.afterDfsCommit` (nothing moved yet) and
-    * `bm25.append.afterMove` (postings in, bounds not applied). */
-  private[graft] var testCrashPoint: String = ""
-  private def crashPoint(name: String): Unit =
-    if (testCrashPoint == name) {
-      testCrashPoint = ""
-      throw new RuntimeException(s"simulated crash at $name (test seam)")
-    }
 
   /** Test seams for the lease-TTL-outrun races (r16 ADVICE): run a
     * foreign recoverer's action at the exact interleaving point —
@@ -597,81 +593,6 @@ object Bm25 {
   private def fireHook(get: () => () => Unit, set: (() => Unit) => Unit): Unit = {
     val h = get(); set(() => ()); h()
   }
-
-  /** The pending-append sidecar beside the index (`_`-prefixed: never a
-    * data file to any listing): the batch's staged file list plus its
-    * additive bounds delta — everything recovery needs to roll the
-    * append forward without the dead JVM. */
-  private def pendingPath(spark: org.apache.spark.sql.SparkSession,
-      table: String, batchId: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(graft.sources.Generations
-        .basePath(spark, s"${table}_postings")).getParent,
-      s"_pending_append_$batchId")
-
-  private def writePending(spark: org.apache.spark.sql.SparkSession,
-      table: String, batchId: String, stage: String, n: Long,
-      sumdl: Long, files: Seq[String]): Unit = {
-    val p = pendingPath(spark, table, batchId)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try {
-      val sb = new StringBuilder
-      sb.append(s"stage=$stage\n").append(s"n=$n\n").append(s"sumdl=$sumdl\n")
-      files.foreach(f => sb.append(s"file=$f\n"))
-      out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
-  }
-
-  private def deletePending(spark: org.apache.spark.sql.SparkSession,
-      table: String, batchId: String): Unit = {
-    val p = pendingPath(spark, table, batchId)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, false)
-  }
-
-  /** Generation-relative paths of the staged batch's data files. */
-  private def listStagedFiles(fs: org.apache.hadoop.fs.FileSystem,
-      stageP: org.apache.hadoop.fs.Path): Seq[String] = {
-    if (!fs.exists(stageP)) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    fs.listStatus(stageP)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("tb="))
-      .foreach { tbDir =>
-        fs.listStatus(tbDir.getPath)
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .foreach(f =>
-            out += s"${tbDir.getPath.getName}/${f.getPath.getName}")
-      }
-    out.toSeq.sorted
-  }
-
-  /** IDEMPOTENT staged-file move: renames whatever still sits in the
-    * stage; entries whose source is gone were moved by a previous
-    * attempt (file names carry the write job's UUID, so a present
-    * destination is always THIS batch's own earlier move). */
-  private def moveStagedIn(fs: org.apache.hadoop.fs.FileSystem,
-      stageP: org.apache.hadoop.fs.Path,
-      pDest: org.apache.hadoop.fs.Path, files: Seq[String]): Unit =
-    files.foreach { rel =>
-      val src = new org.apache.hadoop.fs.Path(stageP, rel)
-      val dest = new org.apache.hadoop.fs.Path(pDest, rel)
-      if (fs.exists(src)) {
-        if (!fs.exists(dest.getParent)) fs.mkdirs(dest.getParent)
-        // src-or-dest tolerance (r16 ADVICE): a recoverer rolling this
-        // batch forward concurrently (the op outran its lease TTL) may
-        // win the rename race — a failed rename with the destination
-        // present is its move, not an error
-        if (!fs.rename(src, dest))
-          require(fs.exists(dest),
-            s"bm25 append: rename $src -> $dest failed and the " +
-              "destination is absent")
-      } else require(fs.exists(dest),
-        s"bm25 append: staged file $rel exists at neither the stage " +
-          "nor the destination — the batch is lost past its df commit; " +
-          "rebuild the index (r16 ADVICE: never record files that " +
-          "never landed)")
-    }
 
   /** Add the batch's (n, Σdl) to the bounds table — a fresh tagged
     * generation behind an atomic flip, with an UNBOUNDED
@@ -736,86 +657,56 @@ object Bm25 {
   /** Recover an [[appendToIndex]] that died mid-commit — called
     * automatically at the start of every maintenance op, and available
     * directly for an operator who just restarted a dead ingest job.
-    * Keyed on the pending sidecar [[writePending]] left behind:
-    *
-    *  - if the current dfs generation carries the pending batch's tag,
-    *    the df merge COMMITTED — roll FORWARD: replay the staged-file
-    *    renames (idempotent — sources already moved are skipped), apply
-    *    the bounds delta unless the current bounds generation is
-    *    already tagged with the batch (exactly-once), and record the
-    *    snapshot commit so the add-file log sees the batch (duplicate
-    *    rows from a crash-after-record are deduped by the fold);
-    *  - otherwise the merge never committed — roll BACK: delete the
-    *    stage and the sidecar, index untouched (re-run the batch).
-    *
-    * A crash DURING recovery re-enters the same decision tree and
-    * converges: every step is idempotent or tagged. */
+    * The [[graft.sources.PendingAppend]] protocol, with BM25's point of
+    * no return being its tagged dfs generation: if the current dfs
+    * generation's batch tag names a pending intent, the df merge
+    * COMMITTED, so that batch's commit marker is written first and
+    * [[graft.sources.PendingAppend.recover]] rolls it FORWARD (staged
+    * moves replayed, bounds delta applied exactly once from the dfs
+    * tag, snapshot commit recorded); every other pending batch rolls
+    * BACK (stage and sidecar deleted, index untouched — re-run it).
+    * Orphan stages of a write that died before its intent are swept. */
   def recoverPendingAppend(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit =
       graft.sources.Generations.withMaintenanceLock(table) {
-    import graft.sources.Generations
+    import graft.sources.{Generations, PendingAppend}
+    val anchor = s"${table}_postings"
     val cat = spark.sessionState.catalog
-    if (!cat.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(
-        s"${table}_postings"))) return
+    if (!cat.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(anchor)))
+      return
+    // an index crashed mid-append under the previous sidecar format
+    // holds a batch only that build can finish — refuse, never ignore it
     val parent = new org.apache.hadoop.fs.Path(
-      Generations.basePath(spark, s"${table}_postings")).getParent
-    val fs = parent.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(parent)) return
-    val pendings = fs.listStatus(parent).filter(s =>
-      s.isFile && s.getPath.getName.startsWith("_pending_append_"))
-    if (pendings.isEmpty) return
-    pendings.sortBy(_.getPath.getName).foreach { pend =>
-      val batchId = pend.getPath.getName.stripPrefix("_pending_append_")
-      val in = fs.open(pend.getPath)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      val stageOpt = lines.find(_.startsWith("stage="))
-        .map(_.stripPrefix("stage="))
-      val dGen = Generations.ensureGen(spark, s"${table}_dfs")
-      val committed = cat.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(dGen))
-        .properties.get(batchProp).contains(batchId)
-      if (!committed) {
-        // the merge never committed (or a partial sidecar from a crash
-        // mid-write — which implies the same): the index is untouched
-        logger.warn(s"bm25 $table: rolling BACK pending append $batchId " +
-          "— its df merge never committed; re-run the batch")
-        stageOpt.foreach(sp =>
-          fs.delete(new org.apache.hadoop.fs.Path(sp), true))
-        fs.delete(pend.getPath, false)
-      } else {
-        logger.warn(s"bm25 $table: rolling FORWARD pending append " +
-          s"$batchId — its df merge committed but the staged move " +
-          "and/or bounds delta did not finish")
-        val n = lines.find(_.startsWith("n="))
-          .getOrElse(throw new IllegalStateException(
-            s"pending append $batchId sidecar is truncated but its df " +
-              "merge committed — should be impossible (the sidecar is " +
-              "fully written before the merge); rebuild the index"))
-          .stripPrefix("n=").toLong
-        val sumdl = lines.find(_.startsWith("sumdl=")).get
-          .stripPrefix("sumdl=").toLong
-        val files = lines.filter(_.startsWith("file="))
-          .map(_.stripPrefix("file="))
-        val pGen = Generations.ensureGen(spark, s"${table}_postings")
-        val pDest = new org.apache.hadoop.fs.Path(
-          Generations.location(spark, pGen))
-        val stage = new org.apache.hadoop.fs.Path(stageOpt.get)
-        moveStagedIn(fs, stage, pDest, files)
-        fs.delete(stage, true)
-        spark.sql(s"ALTER TABLE $pGen RECOVER PARTITIONS")
-        spark.catalog.refreshTable(pGen)
-        val bGen = Generations.ensureGen(spark, s"${table}_bounds")
-        val boundsApplied = cat.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(bGen))
-          .properties.get(appliedBatchProp).contains(batchId)
-        if (!boundsApplied) addBoundsTagged(spark, table, n, sumdl, batchId)
-        recordSnapshot(spark, table, "append-recovery", revertible = false,
-          addedFiles = Map(s"${table}_postings" -> files))
-        fs.delete(pend.getPath, false)
+      Generations.basePath(spark, anchor)).getParent
+    Option(parent.getFileSystem(spark.sessionState.newHadoopConf())
+        .globStatus(new org.apache.hadoop.fs.Path(parent, "_pending_append_*")))
+      .flatMap(_.headOption).foreach { legacy =>
+        throw new IllegalStateException(s"bm25 $table: ${legacy.getPath} " +
+          "is a pending append in the pre-PendingAppend sidecar format — " +
+          "finish the append with the previous build (any maintenance op " +
+          "recovers it), or delete this file and rebuild the index with " +
+          "buildIndex")
       }
-    }
+    val dfsProps = Generations.currentOpt(spark, s"${table}_dfs")
+      .map(g => cat.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(g)).properties)
+      .getOrElse(Map.empty[String, String])
+    val committed = dfsProps.get(batchProp)
+      .filter(PendingAppend.intentExists(spark, anchor, _))
+    committed.foreach(PendingAppend.markCommitted(spark, anchor, _))
+    PendingAppend.recover(spark, anchor, added => {
+      // every append's dfs commit follows this recovery, so only the
+      // tagged batch can carry a marker
+      val id = committed.getOrElse(throw new IllegalStateException(
+        s"bm25 $table: a pending append passed its commit marker but the " +
+          "dfs generation is not tagged with it; delete its " +
+          "_pending_idx_append_/_commit_idx_append_ files and rebuild the " +
+          "index"))
+      addBoundsTagged(spark, table, dfsProps(batchNProp).toLong,
+        dfsProps(batchSumdlProp).toLong, id)
+      recordSnapshot(spark, table, "append-recovery", revertible = false,
+        addedFiles = added)
+    })
   }
 
   /** The documents [[appendToIndex]] commits in `(fromId, toId]` added
@@ -904,10 +795,11 @@ object Bm25 {
     * and the documented wrapper would replay the whole append,
     * duplicating postings). A CRASH after the dfs commit — mid-move,
     * mid-bounds, anywhere — is rolled FORWARD by
-    * [[recoverPendingAppend]] (r15 directive 4): the batch's full
-    * intent (staged file list + bounds delta) was persisted in a
-    * pending sidecar before the commit, renames are idempotent and the
-    * bounds delta is exactly-once via a generation tag, so the next
+    * [[recoverPendingAppend]] (r15 directive 4): the batch's staged
+    * file list was persisted as a [[graft.sources.PendingAppend]]
+    * intent before the commit and its bounds delta rides the tagged dfs
+    * generation, renames are idempotent and the bounds delta is
+    * exactly-once via a generation tag, so the next
     * maintenance op (or an explicit recover call) COMPLETES the append
     * instead of the old rebuild-from-snapshot prescription; a crash
     * before the commit rolls back to an untouched index. A probe
@@ -936,7 +828,7 @@ object Bm25 {
     graft.sources.Generations.withMaintenanceLock(table) {
     val spark = docs.sparkSession
     import spark.implicits._
-    import graft.sources.Generations
+    import graft.sources.{Generations, PendingAppend}
     // a previous append may have died between its dfs commit and its
     // staged-file move — roll it forward (or a pre-commit death back)
     // before building on the index state (r15 directive 4)
@@ -963,51 +855,37 @@ object Bm25 {
     // term-sorted within files), and only move into the live generation
     // AFTER the dfs CAS below commits. A cross-JVM racer winning the
     // dfs CAS therefore leaves the index UNCHANGED by this op — the
-    // staging is deleted and the op is cleanly retryable (r14 ADVICE:
+    // batch is rolled back and the op is cleanly retryable (r14 ADVICE:
     // the previous append-first order left postings in with no df
-    // contributions on a lost race, and a re-run duplicated them). The
-    // remaining crash window is the rename pass between the dfs commit
-    // and the move — N file renames, microseconds against the write —
-    // documented below.
-    val pDest = new org.apache.hadoop.fs.Path(
-      Generations.location(spark, pGen))
-    val fs = pDest.getFileSystem(spark.sessionState.newHadoopConf())
+    // contributions on a lost race, and a re-run duplicated them). A
+    // failed staged write deletes its stage; a JVM death during it
+    // leaves an orphan stage the next recovery sweeps.
+    val anchor = s"${table}_postings"
+    val staged = graft.sources.StagedAppend.stage(
+      postingsOf(docs, idCol, textCol, nDirs.toInt)
+        .repartition($"tb").sortWithinPartitions($"tb", $"term"),
+      anchor, pGen, "tb")
     val batchId = java.util.UUID.randomUUID().toString.take(8)
-    val stageP = new org.apache.hadoop.fs.Path(
-      Generations.basePath(spark, s"${table}_postings") +
-        "__stage" + batchId)
-    postingsOf(docs, idCol, textCol, nDirs.toInt)
-      .repartition($"tb")
-      .sortWithinPartitions($"tb", $"term")
-      .write.format("parquet").mode("overwrite").partitionBy("tb")
-      .save(stageP.toString)
-    val stagedFiles: Seq[String] = listStagedFiles(fs, stageP)
-    // the staged write is the phase that scales with the batch — renew
-    // the cross-JVM lease before entering the commit window (r16
-    // ADVICE: an append outrunning the TTL could have its stage rolled
-    // back under it by another JVM's recovery)
-    Generations.renewLease(table)
-    val b = boundsOf(docs, idCol, textCol).collect()(0)
-    // PENDING MANIFEST (r15 directive 4 — closing the last
-    // non-retryable crash window): before the dfs merge commits, the
-    // batch's full intent — staged file list + additive bounds delta —
-    // lands in a sidecar beside the index, and the new dfs generation
-    // is tagged with the batch id. A crash ANYWHERE after the dfs
-    // commit is then rolled FORWARD by recoverPendingAppend (renames
-    // idempotent, bounds exactly-once via the generation tag, snapshot
-    // rows re-recorded); a crash BEFORE it rolls back (stage + sidecar
-    // deleted, index untouched). The previous contract documented this
-    // window honestly and prescribed a rebuild — now it self-heals.
-    writePending(spark, table, batchId, stageP.toString,
-      b.getLong(0), b.getLong(1), stagedFiles)
-    fireHook(() => testAfterPendingHook, testAfterPendingHook = _)
-    // df merge: vocabulary-sized, written as a FRESH generation and
-    // flipped atomically — a probe in another session during the merge
-    // reads the complete previous generation, never a partial one. df
-    // adds, max_tf/min_dl merge by max/min — the probe's per-term score
-    // bound stays valid over any append sequence.
-    val nextD = Generations.reserve(spark, s"${table}_dfs")
-    try {
+    val (addN, addSumdl) = try {
+      // the staged write is the phase that scales with the batch — renew
+      // the cross-JVM lease before entering the commit window (r16
+      // ADVICE: an append outrunning the TTL could have its stage rolled
+      // back under it by another JVM's recovery)
+      Generations.renewLease(table)
+      val b = boundsOf(docs, idCol, textCol).collect()(0)
+      // the batch's intent (staged file list) persists BEFORE the dfs
+      // merge commits; the new dfs generation carries the batch id and
+      // its additive bounds delta, so a crash ANYWHERE after the dfs
+      // commit is rolled FORWARD by recoverPendingAppend and a crash
+      // before it rolls BACK (stage + sidecar deleted, index untouched)
+      PendingAppend.writeIntent(spark, anchor, batchId, Seq(staged))
+      fireHook(() => testAfterPendingHook, testAfterPendingHook = _)
+      // df merge: vocabulary-sized, written as a FRESH generation and
+      // flipped atomically — a probe in another session during the merge
+      // reads the complete previous generation, never a partial one. df
+      // adds, max_tf/min_dl merge by max/min — the probe's per-term score
+      // bound stays valid over any append sequence.
+      val nextD = Generations.reserve(spark, s"${table}_dfs")
       writeDirs(
         spark.table(dGen)
           .unionByName(postingsOf(docs, idCol, textCol, nDirs.toInt)
@@ -1021,7 +899,8 @@ object Bm25 {
       // the batch tag is what recovery keys on: current dfs gen tagged
       // with this batch ⇒ the merge committed ⇒ roll forward
       spark.sql(s"ALTER TABLE $nextD SET TBLPROPERTIES " +
-        s"('$batchProp' = '$batchId')")
+        s"('$batchProp' = '$batchId', '$batchNProp' = '${b.getLong(0)}', " +
+        s"'$batchSumdlProp' = '${b.getLong(1)}')")
       // SIDECAR RE-CHECK before the point of no return (r16 ADVICE): if
       // this op outran its lease TTL, another JVM's recovery may have
       // rolled the batch BACK — sidecar and stage deleted. Committing
@@ -1030,7 +909,7 @@ object Bm25 {
       // instead — the index is untouched, re-run the batch. (The
       // check-to-commit window is microseconds against the TTL; the
       // recovery's decision is stable once the sidecar is gone.)
-      if (!fs.exists(pendingPath(spark, table, batchId)))
+      if (!PendingAppend.intentExists(spark, anchor, batchId))
         throw new IllegalStateException(
           s"bm25 append $batchId on $table: the pending sidecar vanished " +
             "before the df commit — this op outran its maintenance lease " +
@@ -1040,16 +919,16 @@ object Bm25 {
             "for batches this large)")
       // CAS on the generation the merge READ (dGen): a concurrent
       // append's committed df contributions must never be silently
-      // discarded. Losing here deletes the staging — index unchanged,
+      // discarded. Losing here rolls the batch back — index unchanged,
       // op retryable (retryOnConcurrentMaintenance-safe).
       Generations.commit(spark, s"${table}_dfs", nextD, Some(dGen))
+      (b.getLong(0), b.getLong(1))
     } catch {
       case e: Throwable =>
-        fs.delete(stageP, true)
-        deletePending(spark, table, batchId)
+        PendingAppend.rollBack(spark, anchor, batchId, Seq(staged))
         throw e
     }
-    crashPoint("bm25.append.afterDfsCommit")
+    PendingAppend.crashPoint("bm25.append.afterDfsCommit")
     fireHook(() => testAfterDfsCommitHook, testAfterDfsCommitHook = _)
     // the dfs flip committed — past here the batch WILL land. If the
     // sidecar is gone NOW, another JVM's recovery saw the committed tag
@@ -1057,45 +936,26 @@ object Bm25 {
     // snapshot — it deletes the sidecar LAST): everything this op still
     // had to do is done; finish as a success instead of double-applying
     // (r16 ADVICE — the lease-TTL-outrun window, closed end to end)
-    if (!fs.exists(pendingPath(spark, table, batchId))) {
+    if (!PendingAppend.intentExists(spark, anchor, batchId)) {
       logger.warn(s"bm25 append $batchId on $table: completed by another " +
         "JVM's recovery after this op outran its lease TTL — the batch " +
         "is fully applied (postings, bounds, snapshot); nothing left to do")
       return
     }
+    PendingAppend.markCommitted(spark, anchor, batchId)
     // move the staged posting files into the live generation's tb
     // directories (pure renames; file names carry the write job's UUID,
-    // so they never collide with resident files). The moved names are
-    // the commit's add-file delta for the snapshot log (r16) — zero
-    // directory walks per append commit.
-    moveStagedIn(fs, stageP, pDest, stagedFiles)
-    fs.delete(stageP, true)
-    // register any NEW partition directories this batch introduced in
-    // the shared external catalog (the probe-side refreshTables note
-    // below covers stale file listings in OTHER sessions)
-    spark.sql(s"ALTER TABLE $pGen RECOVER PARTITIONS")
-    spark.catalog.refreshTable(pGen)
-    crashPoint("bm25.append.afterMove")
-    // bounds: additive counters, 1 driver row — exactly-once via the
-    // batch tag (re-checked every CAS round, so a concurrent recovery's
-    // application is never doubled), unbounded CAS retry
-    addBoundsTagged(spark, table, b.getLong(0), b.getLong(1), batchId)
-    // a recovery may have finished the record half while this op was
-    // moving/adding (both directions are idempotent; the narrow
-    // double-record window leaves one extra dedup-folded commit row) —
-    // skip the duplicate when the sidecar is already gone
-    if (!fs.exists(pendingPath(spark, table, batchId))) {
-      logger.warn(s"bm25 append $batchId on $table: snapshot already " +
-        "recorded by a concurrent recovery — skipping the duplicate")
-      return
-    }
-    // NOT revertible (directory readers cannot un-see the appended
-    // files); the moved file names become the commit's add-file delta,
-    // which is exactly what lets resolveStateAsOf serve history ACROSS
-    // this commit
-    recordSnapshot(spark, table, "append", revertible = false,
-      addedFiles = Map(s"${table}_postings" -> stagedFiles))
-    deletePending(spark, table, batchId)
+    // so they never collide with resident files), then apply the bounds
+    // — additive counters, 1 driver row, exactly-once via the batch tag,
+    // unbounded CAS retry — and record the commit. NOT revertible
+    // (directory readers cannot un-see the appended files); the moved
+    // file names become the commit's add-file delta, which is exactly
+    // what lets resolveStateAsOf serve history ACROSS this commit.
+    PendingAppend.complete(spark, anchor, batchId, Seq(staged), added => {
+      addBoundsTagged(spark, table, addN, addSumdl, batchId)
+      recordSnapshot(spark, table, "append", revertible = false,
+        addedFiles = added)
+    })
     // auto-compaction cadence: reentrant under the family lock
     if (autoCompactAfter > 0 && graft.sources.Snapshots.addsSinceBase(
         spark, table, s"${table}_postings") >= autoCompactAfter) {

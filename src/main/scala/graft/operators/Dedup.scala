@@ -339,7 +339,7 @@ object Dedup {
     * automatically at the start of every MinHash maintenance op, and
     * available directly after restarting a dead ingest job. The
     * [[graft.sources.PendingAppend]] sidecar + commit-marker protocol
-    * (the BM25 pattern, r16 verdict directive 1): past the marker the
+    * shared by every index family: past the marker the
     * batch rolls FORWARD (both bucketed tables' staged moves replayed,
     * snapshot commit recorded); before it, BACK (stages + sidecar
     * deleted, index untouched — re-run the batch; re-ingesting is

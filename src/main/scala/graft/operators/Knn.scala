@@ -403,8 +403,7 @@ object Knn {
     import spark.implicits._
     // a previous append may have died past its commit marker — roll it
     // forward (or a pre-marker death back) before building on the
-    // index state (r16 verdict directive 1: the BM25 sidecar pattern,
-    // transplanted)
+    // index state (the PendingAppend protocol every family shares)
     recoverPendingAppend(spark, table)
     // appends target the CURRENT generation in place (new files only —
     // never a rewrite of files a reader holds, so no flip needed). The

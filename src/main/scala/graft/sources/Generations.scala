@@ -118,8 +118,8 @@ object Generations {
     * expiry timestamp; a holder that DIES leaves an entry that other
     * writers break after `spark.graft.lease.ttlSeconds` (default 600 —
     * generous against the longest maintenance op; a broken lease means
-    * the dead op's recovery contract applies, e.g.
-    * `Bm25.recoverPendingAppend`). Waiters poll up to
+    * the dead op's append recovery applies — [[PendingAppend.recover]]
+    * through each family's `recoverPendingAppend`). Waiters poll up to
     * `spark.graft.lease.waitSeconds` (default 120), then fail loudly
     * naming the holder.
     *
@@ -272,8 +272,9 @@ object Generations {
     * every append/ingest (right after the staged write — the phase that
     * scales with the batch); deliberately synchronous and best-effort:
     * one catalog read + one ALTER, and a lease already broken logs
-    * loudly instead of failing the op (the pending-sidecar re-checks
-    * at the commit points are the correctness guard). No-op when this
+    * loudly instead of failing the op (the
+    * [[PendingAppend.intentExists]] re-checks at the commit points are
+    * the correctness guard). No-op when this
     * JVM holds no lease on the family (bare unit contexts). */
   def renewLease(family: String): Unit = {
     if (!heldLeases.containsKey(family)) return

@@ -2,13 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Self-healing crash recovery for MULTI-MEMBER staged appends — the
-  * BM25 pending-sidecar pattern (`graft.operators.Bm25
-  * .recoverPendingAppend`) generalized so the IVF and MinHash append
-  * loops get the same guarantee (r16 verdict directive 1: their crash
-  * window between the staged file moves and the snapshot record was
-  * detect-only — live probes unaffected, but historical reads silently
-  * missed the batch until the next base manifest).
+/** Self-healing crash recovery for staged in-place appends — the ONE
+  * protocol every index family's append loop (BM25 postings, IVF cells
+  * + SQ8 replica, MinHash sigs + buckets) commits through.
   *
   * Protocol (all under the family maintenance lock):
   *
@@ -19,12 +15,14 @@ import org.apache.spark.sql.SparkSession
   *     member's (generation, layout kind, stage dir, file list) — in
   *     ONE sidecar file `_pending_idx_append_<batch>`;
   *  3. [[markCommitted]] creates the COMMIT MARKER
-  *     `_commit_idx_append_<batch>` — the atomic point of no return.
-  *     BM25 keys its forward/back decision on its dfs generation tag;
-  *     these families have no mid-append generation flip, so the
-  *     marker IS the committed bit: after it the batch's data is fully
-  *     staged and the append WILL complete (possibly by a successor
-  *     JVM), before it the batch never happened;
+  *     `_commit_idx_append_<batch>` — the atomic point of no return:
+  *     after it the batch's data is fully staged and the append WILL
+  *     complete (possibly by a successor JVM), before it the batch
+  *     never happened. BM25 has one more commit between intent and
+  *     marker (its dfs merge, a fresh generation tagged with the batch
+  *     id); its recovery derives the marker from that tag before
+  *     calling [[recover]], so the tagged dfs generation is BM25's
+  *     point of no return and the marker follows from it;
   *  4. [[complete]] moves every staged file in (idempotent,
   *     src-or-dest-tolerant renames), hands the add-file delta to the
   *     caller's snapshot record, and cleans up — marker before
@@ -32,13 +30,13 @@ import org.apache.spark.sql.SparkSession
   *
   * [[recover]] — called at the start of every maintenance op of the
   * family — replays the decision: marker present → roll FORWARD via
-  * the same [[complete]]; absent → roll BACK (stages + sidecar
-  * deleted, index untouched, re-run the batch). A second recovery of a
-  * crash-during-recovery is idempotent: moves skip files whose source
-  * is gone (destination verified), a duplicate snapshot record's add
-  * rows fold away by file-set dedup, and a sidecar outliving its
-  * marker (crash inside cleanup) rolls "back" over already-moved
-  * stages — deleting empty residue, never index files.
+  * the same [[complete]]; absent → roll BACK ([[rollBack]]: stages +
+  * sidecar deleted, index untouched, re-run the batch). A second
+  * recovery of a crash-during-recovery is idempotent: moves skip files
+  * whose source is gone (destination verified), a duplicate snapshot
+  * record's add rows fold away by file-set dedup, and a sidecar
+  * outliving its marker (crash inside cleanup) rolls "back" over
+  * already-moved stages — deleting empty residue, never index files.
   */
 object PendingAppend {
 
@@ -54,13 +52,14 @@ object PendingAppend {
       mkind: String, stage: String, files: Seq[String],
       stageTbl: String = "")
 
-  /** Test seam (the Bm25.testCrashPoint pattern): set to a point name
-    * to make the next matching [[crashPoint]] throw, simulating a JVM
-    * death there; cleared on fire. Points, in order:
-    * `pending.afterIntent` (sidecar written, no marker → roll back),
-    * `pending.afterMarker` (marker written, nothing moved → roll
-    * forward), `pending.afterMove` (files in, snapshot not recorded →
-    * roll forward records). */
+  /** Test seam: set to a point name to make the next matching
+    * [[crashPoint]] throw, simulating a JVM death there; cleared on
+    * fire. Points, in order: `pending.afterIntent` (sidecar written, no
+    * marker → roll back), `bm25.append.afterDfsCommit` (BM25 only: dfs
+    * merge committed, no marker yet → recovery derives the marker from
+    * the dfs tag and rolls forward), `pending.afterMarker` (marker
+    * written, nothing moved → roll forward), `pending.afterMove` (files
+    * in, snapshot not recorded → roll forward records). */
   private[graft] var testCrashPoint: String = ""
   private[graft] def crashPoint(name: String): Unit =
     if (testCrashPoint == name) {
@@ -74,6 +73,9 @@ object PendingAppend {
       Generations.basePath(spark, anchorTable)).getParent
 
   private def sidecarName(batchId: String) = s"_pending_idx_append_$batchId"
+  private def sidecarPath(spark: SparkSession, anchorTable: String,
+      batchId: String) = new org.apache.hadoop.fs.Path(
+    parentDir(spark, anchorTable), sidecarName(batchId))
   private def markerName(batchId: String) = s"_commit_idx_append_$batchId"
 
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
@@ -83,8 +85,7 @@ object PendingAppend {
     * which is before any rename touches the live index. */
   def writeIntent(spark: SparkSession, anchorTable: String,
       batchId: String, members: Seq[StagedMember]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(parentDir(spark, anchorTable),
-      sidecarName(batchId))
+    val p = sidecarPath(spark, anchorTable, batchId)
     val fs = fsOf(spark, p)
     val out = fs.create(p, true)
     try {
@@ -96,6 +97,16 @@ object PendingAppend {
       }
       out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } finally out.close()
+  }
+
+  /** Whether the batch's intent sidecar still exists — the re-check an
+    * op that may have outrun its lease makes around its commit point:
+    * gone before it means another JVM's recovery rolled the batch back,
+    * gone after it means that recovery completed the batch. */
+  def intentExists(spark: SparkSession, anchorTable: String,
+      batchId: String): Boolean = {
+    val p = sidecarPath(spark, anchorTable, batchId)
+    fsOf(spark, p).exists(p)
   }
 
   /** The commit point (step 3): one atomic small-file create. */
@@ -155,7 +166,11 @@ object PendingAppend {
       record: Map[String, Seq[String]] => Unit): Unit = {
     members.foreach(moveIn(spark, _))
     crashPoint("pending.afterMove")
-    record(members.map(m => m.member -> m.files).toMap)
+    // the sidecar is deleted LAST: already gone means a recovery in
+    // another JVM (this op outran its lease) completed and recorded the
+    // batch — recording again would double-apply the caller's delta
+    if (intentExists(spark, anchorTable, batchId))
+      record(members.map(m => m.member -> m.files).toMap)
     members.foreach(cleanupStage(spark, _))
     val parent = parentDir(spark, anchorTable)
     val fs = fsOf(spark, parent)
@@ -163,6 +178,16 @@ object PendingAppend {
       false)
     fs.delete(new org.apache.hadoop.fs.Path(parent, sidecarName(batchId)),
       false)
+  }
+
+  /** Roll a batch BACK before its commit point: delete its stages and
+    * its sidecar; the index never saw it. Idempotent — also the abort
+    * path of a live op that lost its commit (e.g. a lost CAS). */
+  def rollBack(spark: SparkSession, anchorTable: String, batchId: String,
+      members: Seq[StagedMember]): Unit = {
+    members.foreach(cleanupStage(spark, _))
+    val p = sidecarPath(spark, anchorTable, batchId)
+    fsOf(spark, p).delete(p, false)
   }
 
   private def parseSidecar(lines: List[String]): Seq[StagedMember] = {
@@ -222,8 +247,7 @@ object PendingAppend {
         logger.warn(s"pending append $batchId at $anchorTable: rolling " +
           "BACK — it never reached its commit marker; the index is " +
           "untouched, re-run the batch")
-        members.foreach(cleanupStage(spark, _))
-        fs.delete(pend.getPath, false)
+        rollBack(spark, anchorTable, batchId, members)
       }
     }
     // orphan stages: a crash during the staged WRITE left directories

@@ -610,10 +610,12 @@ object Snapshots {
     * and its snapshot record. Live probes are unaffected (they read
     * the directory); historical reads miss the unrecorded batch until
     * the next BASE manifest — any generation rewrite (compact/rebuild)
-    * self-heals the log by construction, which is the documented
-    * repair (each family's append contract already prescribes
-    * rebuild/compact after a crashed append; the BM25 append
-    * additionally self-recovers via its pending sidecar). Cost: one
+    * self-heals the log by construction. Every family's crashed append
+    * already self-recovers through [[PendingAppend]] (one intent
+    * sidecar and one commit marker, BM25's marker derived from its
+    * tagged dfs generation), so a non-empty audit means a crashed
+    * append not yet recovered, or a writer that bypassed that protocol.
+    * Cost: one
     * directory walk — audit cadence, never probe cadence. Returns
     * empty for untracked members and absent logs. */
   def unrecordedFiles(spark: SparkSession, index: String,

@@ -3,8 +3,8 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 
 /** Stage-and-move append into a live generation directory — the shared
-  * mechanic behind every in-place index append (BM25 postings pioneered
-  * it; IVF cells and the SQ8 replica ride this helper).
+  * mechanic behind every in-place partitioned index append (BM25
+  * postings, IVF cells and the SQ8 replica ride this helper).
   *
   * WHY staging instead of a direct `mode("append")` write:
   *  1. CRASH SAFETY — a failure during the WRITE leaves the live

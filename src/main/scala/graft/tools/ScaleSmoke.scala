@@ -10,7 +10,8 @@ import graft.operators.{Dedup, Knn, SimilarityJoin}
   * survive a 100× scale-up". Data is generated distributively from
   * hash-derived tokens (no driver-side materialization, no RNG state).
   *
-  * Usage: runMain graft.tools.ScaleSmoke [nDocs] [nVecs]
+  * Usage: runMain graft.tools.ScaleSmoke [nDocs] [nVecs], or from the
+  * compiled classes `tools/scale_smoke.sh <heap> [nDocs] [nVecs]`
   */
 object ScaleSmoke {
   /** Planted-truth check for the incremental-dedup smokes: every block

@@ -5,7 +5,7 @@ import java.util.concurrent.CountDownLatch
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bm25, Dedup}
-import graft.sources.{ConcurrentMaintenanceException, Generations, Tombstones}
+import graft.sources.{ConcurrentMaintenanceException, Generations, PendingAppend, Tombstones}
 
 /** The multi-writer contract of index maintenance (round 14, third
   * session — the "operational concurrency" gap the r13 verdict named):
@@ -360,13 +360,13 @@ class ConcurrentMaintenanceSpec extends AnyFunSuite {
     val tbl = s"g_crash_$tag"
     Bm25.buildIndex(base.toDF("doc_id", "text"), "doc_id", "text",
       tbl, s"$dir/idx", nDirs = 4)
-    Bm25.testCrashPoint = crashAt
+    PendingAppend.testCrashPoint = crashAt
     val e = intercept[RuntimeException] {
       Bm25.appendToIndex(batch.toDF("doc_id", "text"), "doc_id", "text", tbl)
     }
     assert(e.getMessage.contains("simulated crash"))
     // the dead JVM's successor: ANY maintenance op (or the explicit
-    // call) completes the append from the pending sidecar
+    // call) completes the append from its PendingAppend intent
     Bm25.recoverPendingAppend(spark, tbl)
     val ref = s"g_crash_${tag}_ref"
     Bm25.buildIndex(base.toDF("doc_id", "text"), "doc_id", "text",
@@ -408,7 +408,7 @@ class ConcurrentMaintenanceSpec extends AnyFunSuite {
 
   test("a crash between the staged move and the bounds delta rolls " +
       "FORWARD with the bounds applied exactly once") {
-    crashRecoveryCase("move", "bm25.append.afterMove")
+    crashRecoveryCase("move", "pending.afterMove")
   }
 
   test("a pending sidecar whose df merge never committed rolls BACK: " +
@@ -421,21 +421,19 @@ class ConcurrentMaintenanceSpec extends AnyFunSuite {
     val qs = Seq((1L, "rare2"), (2L, "words"))
     val before = bmRows(tbl, qs)
     // manufacture the crash-before-commit residue: a stage dir and a
-    // pending sidecar, with NO batch tag on the current dfs generation
-    val parent = new org.apache.hadoop.fs.Path(
-      Generations.basePath(spark, s"${tbl}_postings")).getParent
-    val fs = parent.getFileSystem(spark.sessionState.newHadoopConf())
+    // pending intent, with NO batch tag on the current dfs generation
     val stage = new org.apache.hadoop.fs.Path(
       Generations.basePath(spark, s"${tbl}_postings") + "__stagedead1")
+    val fs = stage.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(new org.apache.hadoop.fs.Path(stage, "tb=0"))
-    val pend = new org.apache.hadoop.fs.Path(parent, "_pending_append_dead1")
-    val out = fs.create(pend, true)
-    out.write(s"stage=$stage\nn=5\nsumdl=25\nfile=tb=0/ghost.parquet\n"
-      .getBytes("UTF-8"))
-    out.close()
+    PendingAppend.writeIntent(spark, s"${tbl}_postings", "dead1",
+      Seq(PendingAppend.StagedMember(s"${tbl}_postings",
+        Generations.current(spark, s"${tbl}_postings"), "partitioned",
+        stage.toString, Seq("tb=0/ghost.parquet"))))
     Bm25.recoverPendingAppend(spark, tbl)
     assert(!fs.exists(stage), "the dead stage must be reclaimed")
-    assert(!fs.exists(pend), "the sidecar must be reclaimed")
+    assert(!PendingAppend.intentExists(spark, s"${tbl}_postings", "dead1"),
+      "the sidecar must be reclaimed")
     assert(bmRows(tbl, qs) == before, "the index must be untouched")
     val ops = graft.sources.Snapshots.history(spark, tbl)
       .select("op").collect().map(_.getString(0)).toSeq

@@ -3,13 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.{Dedup, Knn}
+import graft.operators.{Bm25, Dedup, Knn}
 import graft.sources.{Generations, PendingAppend, Snapshots}
 
-/** Self-healing append crash recovery for the IVF and MinHash families
-  * (r17 — the r16 verdict's top directive: transplant BM25's
-  * pending-sidecar pattern so a crash between the staged file moves and
-  * the snapshot record no longer silently truncates historical reads).
+/** Self-healing append crash recovery through the one
+  * [[PendingAppend]] protocol (IVF and MinHash here; BM25's commit-window
+  * crash cases live in `ConcurrentMaintenanceSpec`, its stage-residue
+  * and legacy-sidecar cases below), so a crash between the staged file
+  * moves and the snapshot record never silently truncates historical
+  * reads.
   * Each crash half must recover to BIT-EQUALITY with a clean append:
   *
   *  - before the commit marker → roll BACK (stages + sidecar deleted,
@@ -207,20 +209,136 @@ class PendingAppendSpec extends AnyFunSuite {
     mhCrashCase("marker", "pending.afterMarker", forward = true)
   }
 
+  // -------------------------------------------------------------- bm25
+
+  private def bmDocs: Seq[(Long, String)] =
+    (0L until 60L).map(i => (i, s"shared words rare${i % 6} doc$i"))
+
+  private def bmRows(tbl: String): Seq[(Long, Long, Long, Long)] =
+    Bm25.topKAgainstIndex(Seq((1L, "rare1"), (2L, "rare4"), (3L, "words"))
+        .toDF("qid", "term"), tbl, k = 100)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sortBy(t => (t._1, t._2)).toSeq
+
+  private def stageDirs(anchor: String): Seq[String] = {
+    val parent = new org.apache.hadoop.fs.Path(
+      Generations.basePath(spark, anchor)).getParent
+    parent.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(parent).map(_.getPath.getName)
+      .filter(_.contains("__stage")).toSeq
+  }
+
   test("recovery sweeps orphan stage directories (a crash during the " +
       "staged write, before any sidecar)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfcr_orph").toString
+    // plant a stage directory no intent references beside `anchor`,
+    // recover, and check it is reclaimed with the live index untouched
+    def sweeps(anchor: String, partDir: String, rows: () => Seq[Product],
+        recover: () => Unit): Unit = {
+      val orphan = new org.apache.hadoop.fs.Path(
+        Generations.basePath(spark, anchor) + "__stagedeadbeef")
+      val fs = orphan.getFileSystem(spark.sessionState.newHadoopConf())
+      fs.mkdirs(new org.apache.hadoop.fs.Path(orphan, partDir))
+      val before = rows()
+      recover()
+      assert(!fs.exists(orphan), s"the orphan stage beside $anchor must be reclaimed")
+      assert(rows() == before, "the live index is untouched")
+    }
     val tbl = "g_ivfcr_orph"
     Knn.writeIvfIndex(vecs, "vec_id", "embedding", tbl, s"$dir/idx",
       nCells = 4)
+    sweeps(s"${tbl}_cells", "cell=0", () => knnRows(tbl),
+      () => Knn.recoverPendingAppend(spark, tbl))
+    val bm = "g_bmcr_orph"
+    Bm25.buildIndex(bmDocs.toDF("doc_id", "text"), "doc_id", "text", bm,
+      s"$dir/bm", nDirs = 4)
+    sweeps(s"${bm}_postings", "tb=0", () => bmRows(bm),
+      () => Bm25.recoverPendingAppend(spark, bm))
+  }
+
+  test("a BM25 append whose staged write throws leaves no stage " +
+      "directory behind; the index is unchanged and the re-run lands") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bmcr_fail").toString
+    val tbl = "g_bmcr_fail"
+    val (base, batch) = bmDocs.partition(_._1 % 2 == 0)
+    Bm25.buildIndex(base.toDF("doc_id", "text"), "doc_id", "text", tbl,
+      s"$dir/idx", nDirs = 4)
+    val before = bmRows(tbl)
+    val poisoned = org.apache.spark.sql.functions.udf((id: Long, t: String) =>
+      if (id == 31L) throw new RuntimeException("poisoned row") else t)
+    // the row must fail inside the write JOB, after its output directory
+    // exists: the repartition keeps the optimizer from folding the UDF
+    // over the local rows on the driver, and without adaptive execution
+    // the shuffle feeding the write runs inside that job
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val e = try intercept[Exception] {
+      Bm25.appendToIndex(batch.toDF("doc_id", "text").repartition(2)
+          .withColumn("text", poisoned($"doc_id", $"text")),
+        "doc_id", "text", tbl)
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("poisoned row")),
+      s"the append must fail on the poisoned row, got: $e")
+    assert(stageDirs(s"${tbl}_postings").isEmpty,
+      s"a failed staged write must leave no stage: ${stageDirs(s"${tbl}_postings")}")
+    assert(bmRows(tbl) == before, "the failed append must leave the index untouched")
+    val ops = Snapshots.history(spark, tbl)
+      .select("op").collect().map(_.getString(0)).toSeq
+    assert(ops == Seq("build"), s"a failed append records nothing: $ops")
+    Bm25.appendToIndex(batch.toDF("doc_id", "text"), "doc_id", "text", tbl)
+    val ref = "g_bmcr_fail_ref"
+    Bm25.buildIndex(bmDocs.toDF("doc_id", "text"), "doc_id", "text", ref,
+      s"$dir/ref", nDirs = 4)
+    assert(bmRows(tbl) == bmRows(ref), "the re-run must equal a clean build")
+  }
+
+  test("a BM25 rebuild over an append that crashed past its commit " +
+      "marker finishes that append first; recovery stays a no-op after") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bmcr_rebuild").toString
+    val tbl = "g_bmcr_rebuild"
+    val (base, batch) = bmDocs.partition(_._1 % 2 == 0)
+    Bm25.buildIndex(base.toDF("doc_id", "text"), "doc_id", "text", tbl,
+      s"$dir/idx", nDirs = 4)
+    PendingAppend.testCrashPoint = "pending.afterMove"
+    intercept[RuntimeException] {
+      Bm25.appendToIndex(batch.toDF("doc_id", "text"), "doc_id", "text", tbl)
+    }
+    Bm25.buildIndex(bmDocs.toDF("doc_id", "text"), "doc_id", "text", tbl,
+      s"$dir/idx", nDirs = 4)
+    val histBefore = Snapshots.history(spark, tbl).count()
+    Bm25.recoverPendingAppend(spark, tbl)
+    assert(Snapshots.history(spark, tbl).count() == histBefore,
+      "no pending append may survive the rebuild")
+    val ref = "g_bmcr_rebuild_ref"
+    Bm25.buildIndex(bmDocs.toDF("doc_id", "text"), "doc_id", "text", ref,
+      s"$dir/ref", nDirs = 4)
+    assert(bmRows(tbl) == bmRows(ref), "the rebuild must equal a clean build")
+  }
+
+  test("a BM25 index holding a sidecar in the pre-PendingAppend format " +
+      "refuses recovery loudly, naming the file and the repair") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bmcr_legacy").toString
+    val tbl = "g_bmcr_legacy"
+    val (base, batch) = bmDocs.partition(_._1 % 2 == 0)
+    Bm25.buildIndex(base.toDF("doc_id", "text"), "doc_id", "text", tbl,
+      s"$dir/idx", nDirs = 4)
+    // the residue the previous build left after a crashed append
     val parent = new org.apache.hadoop.fs.Path(
-      Generations.basePath(spark, s"${tbl}_cells")).getParent
-    val fs = parent.getFileSystem(spark.sessionState.newHadoopConf())
-    val orphan = new org.apache.hadoop.fs.Path(parent, "cells__stagedeadbeef")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(orphan, "cell=0"))
-    val before = knnRows(tbl)
-    Knn.recoverPendingAppend(spark, tbl)
-    assert(!fs.exists(orphan), "the orphan stage must be reclaimed")
-    assert(knnRows(tbl) == before, "the live index is untouched")
+      Generations.basePath(spark, s"${tbl}_postings")).getParent
+    val legacy = new org.apache.hadoop.fs.Path(parent, "_pending_append_old1")
+    val fs = legacy.getFileSystem(spark.sessionState.newHadoopConf())
+    val out = fs.create(legacy, true)
+    out.write((s"stage=$parent/postings__stageold1\nn=5\nsumdl=25\n" +
+      "file=tb=0/ghost.parquet\n").getBytes("UTF-8"))
+    out.close()
+    val e = intercept[IllegalStateException](Bm25.recoverPendingAppend(spark, tbl))
+    assert(e.getMessage.contains("_pending_append_old1"), e.getMessage)
+    assert(e.getMessage.contains("previous build") &&
+      e.getMessage.contains("rebuild the index"), e.getMessage)
+    // every maintenance op recovers first, so an append refuses too
+    intercept[IllegalStateException] {
+      Bm25.appendToIndex(batch.toDF("doc_id", "text"), "doc_id", "text", tbl)
+    }
+    assert(fs.exists(legacy), "the legacy sidecar is left for the old build")
   }
 }
