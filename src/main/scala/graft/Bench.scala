@@ -23,14 +23,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
+    // every run below, warmups included, is recorded; the records are
+    // written after spark.stop(), which drains the listener bus
+    val profile = graft.tools.Profile.attach(spark)
     // INPUT WRITER FINGERPRINT (r16 verdict directive 5): two rounds of
     // regress-map entries traced to driver testdata REGENERATION — same
     // seed-42 content, different parquet writer encodings, different IO
@@ -67,9 +63,8 @@ object Bench {
     // Warm the JVM once (codegen, parquet reader, shuffle machinery) so the
     // per-query numbers measure steady-state throughput, not first-query
     // JIT compilation. Uses the cheapest real query; not counted.
-    try SparkEntry.queries.toSeq.sortBy(_._1).headOption.foreach(_._2(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
-    catch { case _: Throwable => }
+    SparkEntry.queries.toSeq.sortBy(_._1).headOption.foreach { case (n, fn) =>
+      profile.run(n, "warmup")(fn(spark, sfDir)) }
     // Failed runs must never masquerade as timings (r14 verdict: the 2 KB
     // driver tail window drops stderr, so a caught error looked like a
     // 17 s regression). Every once() failure lands here and is emitted as
@@ -86,43 +81,21 @@ object Bench {
     // queries faster than it.
     val retimeUnder = sys.env.getOrElse("SPARK_GRAFT_RETIME_UNDER",
       "Infinity").toDouble
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // Full materialization through a noop sink: every column is produced
-      // and every operator (incl. UDFs) runs — a bare .count() would let
-      // Catalyst prune deterministic projections and benchmark nothing.
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+    // construct + exec of one run (Profile.run: the query function,
+    // then a noop write of its frame)
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+        phase: String): Double = {
+      val run = profile.run(name, phase)(fn(spark, sfDir))
+      run.error.foreach { e =>
         System.err.println(s"[bench] $name failed: $e")
         errs += name.takeWhile(_ != '_')
       }
-      (System.nanoTime() - t0) / 1e9
+      run.seconds
     }
-    // Queries that build a cached one-time layout on first touch (derived
-    // lakes, persisted index families, streaming replays through
-    // Queries.cachedLayout) would otherwise fold that setup into their
-    // first timed run no matter how slow it is (BENCH_r14 recorded q132's
-    // 17 s one-time streaming-replay build as its steady number). Build
-    // every such layout HERE, in the untimed warmup pass, so both timed
-    // runs measure the steady read path.
-    // q84 and q188–q192 joined the set in the r17 optimization round:
-    // q84's bucketed-table writes moved under cachedLayout (the join is
-    // the operator under test), and the r17-build feed/consume queries
-    // (q188–q192) replay their ingest histories at layout time — all
-    // were previously paying their one-time build inside the first
-    // timed run (the min-of-two steady still hid it, but the warmup
-    // pass is the declared methodology for layout-backed queries).
-    val layoutBacked = Set("q084", "q84", "q104", "q112", "q123", "q131",
-      "q132",
-      "q154", "q155", "q156", "q157", "q158", "q159", "q160", "q161",
-      "q162", "q163", "q164", "q165", "q166", "q167", "q168", "q169",
-      "q170", "q171", "q172", "q173", "q174", "q175", "q176", "q177",
-      "q178", "q179", "q180", "q181", "q182", "q183", "q184", "q185",
-      "q186", "q187", "q188", "q189", "q190", "q191", "q192")
     val byName = SparkEntry.queries.toSeq.sortBy(_._1)
     byName.foreach { case (name, fn) =>
       if (layoutBacked(name.takeWhile(_ != '_'))) {
-        val tw = once(name, fn)
+        val tw = once(name, fn, "build")
         System.err.println(f"[bench] warmup(build) $name ${tw}%.3fs")
       }
     }
@@ -144,7 +117,11 @@ object Bench {
       path.flatMap { p =>
         try Bench.parsePrevSteady(new String(java.nio.file.Files
           .readAllBytes(java.nio.file.Paths.get(p)), "UTF-8"))
-        catch { case _: Throwable => None }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] previous bench $p unreadable, " +
+            s"running with no baseline: $e")
+          None
+        }
       }.getOrElse(Map.empty)
     }
     // SELF-ADJUDICATION (r15 verdict directive 2): two rounds in a row a
@@ -158,13 +135,13 @@ object Bench {
     val adjudicated = scala.collection.mutable.LinkedHashSet.empty[String]
     val timed = byName.map { case (name, fn) =>
       val q = name.takeWhile(_ != '_')
-      val t1 = once(name, fn)
+      val t1 = once(name, fn, "first")
       var runs: List[Double] = List(t1)
-      if (t1 < retimeUnder || layoutBacked(q)) runs ::= once(name, fn)
+      if (t1 < retimeUnder || layoutBacked(q)) runs ::= once(name, fn, "retime")
       var steady = runs.min
       prevSteady.get(q).foreach { p =>
         if (steady - p > 0.3) {
-          (1 to 3).foreach(_ => runs ::= once(name, fn))
+          (1 to 3).foreach(_ => runs ::= once(name, fn, "adjudicate"))
           val sorted = runs.sorted
           val median = sorted(sorted.length / 2)
           System.err.println(f"[bench] retime $name: steady ${steady}%.3fs " +
@@ -316,5 +293,43 @@ object Bench {
     // shape, but the emitted line should stop producing it).
     println(candidates.find(_.length <= 1880).getOrElse(candidates.last))
     spark.stop()
+    try profile.write(java.nio.file.Paths.get("target", "bench_profile.jsonl"))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] profile sidecar not written: $e") }
   }
+
+  /** The bench session: `local[SPARK_GRAFT_CPUS]` (default 4) with
+    * SPARK_GRAFT_SHUFFLE shuffle partitions (default: the cpu count).
+    * graft.tools.Profile builds its session here too, so a profile
+    * number and a bench number come from one configuration. */
+  private[graft] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shuffle)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Queries that build a cached one-time layout on first touch (derived
+    * lakes, persisted index families, streaming replays through
+    * Queries.cachedLayout), keyed by their qNN prefix. Their first run
+    * would otherwise fold that setup into the timed run no matter how
+    * slow it is (BENCH_r14 recorded q132's 17 s one-time streaming-replay
+    * build as its steady number), so the bench builds every such layout
+    * in an untimed warmup pass and both timed runs measure the steady
+    * read path. q84 and q188–q192 joined the set in the r17 optimization
+    * round: q84's bucketed-table writes moved under cachedLayout (the
+    * join is the operator under test), and the feed/consume queries
+    * (q188–q192) replay their ingest histories at layout time. */
+  private[graft] val layoutBacked = Set("q84", "q104", "q112", "q123",
+    "q131", "q132",
+    "q154", "q155", "q156", "q157", "q158", "q159", "q160", "q161",
+    "q162", "q163", "q164", "q165", "q166", "q167", "q168", "q169",
+    "q170", "q171", "q172", "q173", "q174", "q175", "q176", "q177",
+    "q178", "q179", "q180", "q181", "q182", "q183", "q184", "q185",
+    "q186", "q187", "q188", "q189", "q190", "q191", "q192")
 }

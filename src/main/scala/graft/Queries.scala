@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, NormalizeGolden, TextAnalysis}
 import graft.multimodal.Multimodal
-import graft.operators.{AsOfJoin, Dedup, Knn, SimilarityJoin}
+import graft.operators.{AsOfJoin, Concurrent, Dedup, Knn, SimilarityJoin}
 import graft.sources.Bucketing
 
 /** The engine's query surface — one entry per operator family from
@@ -65,26 +65,6 @@ object Queries {
       write(dir)
       dir
     })
-  }
-
-  /** Construct two independent retrieval legs CONCURRENTLY (the
-    * guide's overlap-independent-jobs pattern): each index probe's
-    * construction runs a short sequence of bounded driver jobs
-    * (snapshot resolve, stats collects, the batch take) that are
-    * independent of the other leg's, so constructing them serially
-    * just serializes driver round-trips. Spark schedules jobs from
-    * multiple threads natively; the returned frames — and the fused
-    * plan built from them — are identical to sequential construction.
-    * Layouts must already exist (both hybrid legs build theirs via
-    * [[cachedLayout]] before forking). */
-  private def constructConcurrently(a: => DataFrame, b: => DataFrame)
-      : (DataFrame, DataFrame) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
   }
 
   // ---------------------------------------------------------------- scans
@@ -3722,7 +3702,7 @@ object Queries {
       graft.sources.Snapshots.tagStack(spark,
         Seq(bmTbl -> 2, ivfTbl -> 1), "stack_v1")
     }
-    val (bm, ivf) = constructConcurrently(
+    val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
           asOfTag = "stack_v1")
@@ -3780,7 +3760,7 @@ object Queries {
     cachedLayout(s"q158_ivfidx_${sfDir.hashCode.toHexString}") { d =>
       Knn.writeIvfIndex(emb, "vec_id", "embedding", ivfTbl, s"$d/idx")
     }
-    val (bm, ivf) = constructConcurrently(
+    val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10)
         .select($"qid", $"doc_id".as("id"),
@@ -3832,7 +3812,7 @@ object Queries {
     cachedLayout(s"q158_ivfidx_${sfDir.hashCode.toHexString}") { d =>
       Knn.writeIvfIndex(emb, "vec_id", "embedding", ivfTbl, s"$d/idx")
     }
-    val (bm, ivf) = constructConcurrently(
+    val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
           candidateFilter = Some($"doc_id" % 2 === 0))
@@ -3889,7 +3869,7 @@ object Queries {
       Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
         "embedding", ivfTbl)
     }
-    val (bm, ivf) = constructConcurrently(
+    val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
           asOfCommits = 2)
@@ -3942,7 +3922,7 @@ object Queries {
       Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
         "embedding", sqTbl)
     }
-    val (bm, sq) = constructConcurrently(
+    val (bm, sq) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
           asOfCommits = 2)

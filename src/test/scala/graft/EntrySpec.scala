@@ -13,6 +13,13 @@ class EntrySpec extends AnyFunSuite {
     assert(df.columns.toSet == Set("std", "n_docs", "n_langs"))
   }
 
+  test("every Bench.layoutBacked key is the qNN prefix of a registered " +
+      "query (a dead key silently drops a query from the warmup build)") {
+    val prefixes = SparkEntry.queries.keySet.map(_.takeWhile(_ != '_'))
+    val dead = Bench.layoutBacked -- prefixes
+    assert(dead.isEmpty, s"layoutBacked keys matching no query: $dead")
+  }
+
   test("every oracleSql key has a queries entry") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")

@@ -104,6 +104,30 @@ class TimeTravelSelectorsSpec extends AnyFunSuite {
     }
   }
 
+  test("a probe whose snapshot resolve AND cap-check take both throw " +
+      "reports both errors and leaves no resolve job running") {
+    val tbl = fixture
+    val failing = org.apache.spark.sql.functions.udf { (t: String) =>
+      if (t == "rare5") throw new IllegalStateException("query batch broke")
+      t
+    }
+    val queries = qs.toDF("qid", "raw")
+      .select($"qid", failing($"raw").as("term"))
+    val thrown = intercept[Throwable] {
+      Bm25.topKAgainstIndex(queries, tbl, k = 10, asOfTag = "no_such_tag")
+    }
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    val messages = (thrown +: thrown.getSuppressed.toSeq)
+      .flatMap(chain).flatMap(t => Option(t.getMessage))
+    assert(messages.exists(_.contains("no_such_tag")),
+      s"the resolve failure was lost: $messages")
+    assert(messages.exists(_.contains("query batch broke")),
+      s"the take failure was lost: $messages")
+    org.apache.spark.sql.graft.ListenerBus.drain(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
+
   test("compactLog preserves tags across its view flip, PINS the " +
       "tagged commit against retention, and never regresses the next " +
       "commit id (r16 ADVICE)") {
