@@ -26,9 +26,12 @@ object TitleStandardizer extends Serializable {
   def matchAlias(input: String): String =
     TitleDictionary.corpus(index.bestMatch(Tokenize.tokenizeAndStem(input)))
 
+  /** `"<alias> - <category>"` per corpus index, composed once per JVM so a
+    * row pays one array read instead of a concat and a category lookup. */
+  private lazy val outputs: Array[String] =
+    TitleDictionary.corpus.map(alias => alias + " - " + TitleDictionary.categoryOf(alias))
+
   /** Full `standardize_title` semantics: `"<alias> - <category>"`. */
-  def standardize(input: String): String = {
-    val alias = matchAlias(input)
-    alias + " - " + TitleDictionary.categoryOf(alias)
-  }
+  def standardize(input: String): String =
+    outputs(index.bestMatch(Tokenize.tokenizeAndStem(input)))
 }

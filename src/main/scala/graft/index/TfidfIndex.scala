@@ -18,11 +18,20 @@ import scala.collection.mutable
   *    results are bit-identical;
   *  - argmax: initial best = -0.0 with strict `>` over docs in corpus order
   *    (`utils.rs:173-181`) ⇒ all-zero scores fall back to doc 0, ties resolve
-  *    to the lowest corpus index. The inverted-index fast path below only
-  *    visits docs sharing ≥1 query term; non-candidates score exactly 0.0 and
-  *    can never win under strict `>` vs -0.0, and per-doc partial sums
-  *    accumulate in ascending term order — same adds, same order, same bits
-  *    as the reference's full scan.
+  *    to the lowest corpus index.
+  *
+  * Inverted-index fast path: `bestMatch` walks the postings of the query's
+  * terms only, so it visits docs sharing ≥1 query term; non-candidates score
+  * exactly 0.0 and can never win under strict `>` vs -0.0. Partial dot
+  * products go into a dense `double[numDocs]` accumulator: a doc's slot starts
+  * at 0.0 on its first posting and adds `qw · pv` in ascending query-term
+  * order, and the touched docs are then sorted and scored in ascending doc id
+  * — same adds, same order, same bits as the reference's full scan. The
+  * accumulator, a touched-doc list and a generation stamp per doc are
+  * per-thread scratch (Spark tasks share the executor JVM and this index),
+  * sized to this index. A slot is live only while its stamp equals the
+  * current call's generation, so a call that throws leaves nothing for the
+  * next one to clean up.
   *
   * The index is small (17,772 docs × ~6k terms, ~KBs of sparse data): built
   * once per JVM and shared by every task in that executor.
@@ -102,6 +111,9 @@ final class TfidfIndex(
     (idx, vals)
   }
 
+  @transient private lazy val scratch: ThreadLocal[TfidfIndex.Scratch] =
+    ThreadLocal.withInitial(() => new TfidfIndex.Scratch(numDocs))
+
   /** Index of the best-matching corpus doc for the stemmed query tokens. */
   def bestMatch(tokens: Array[String]): Int = {
     val (qIdx, qVal) = queryVector(tokens)
@@ -113,27 +125,35 @@ final class TfidfIndex(
     if (!(qNorm > 0.0)) return 0 // all scores 0.0 ⇒ reference keeps doc 0
 
     // accumulate per-candidate dot products in ascending query-term order
-    val acc = mutable.HashMap.empty[Int, Double]
+    val post = postings
+    val pDocs = post._1
+    val pVals = post._2
+    val s = scratch.get()
+    val gen = s.nextGeneration()
+    val acc = s.acc
+    val stamp = s.stamp
+    val touched = s.touched
+    var n = 0
     k = 0
     while (k < qIdx.length) {
-      val (pd, pv) = (postings._1(qIdx(k)), postings._2(qIdx(k)))
+      val pd = pDocs(qIdx(k))
+      val pv = pVals(qIdx(k))
       val qw = qVal(k)
       var p = 0
       while (p < pd.length) {
         val d = pd(p)
-        acc.update(d, acc.getOrElse(d, 0.0) + qw * pv(p))
+        if (stamp(d) != gen) { stamp(d) = gen; acc(d) = 0.0; touched(n) = d; n += 1 }
+        acc(d) += qw * pv(p)
         p += 1
       }
       k += 1
     }
-    if (acc.isEmpty) return 0
-    val cand = acc.keysIterator.toArray
-    java.util.Arrays.sort(cand)
+    java.util.Arrays.sort(touched, 0, n)
     var bestScore = -0.0
     var bestIdx = 0
     var c = 0
-    while (c < cand.length) {
-      val d = cand(c)
+    while (c < n) {
+      val d = touched(c)
       val dn = docNorms(d)
       val score = if (dn > 0.0) acc(d) / (dn * qNorm) else 0.0
       if (score > bestScore) { bestScore = score; bestIdx = d }
@@ -203,5 +223,21 @@ object TfidfIndex {
       d += 1
     }
     new TfidfIndex(termToIdx.toMap, docFreq, numDocs, docIdx, docVal, docNorms)
+  }
+
+  /** One thread's `bestMatch` scratch for an index of `numDocs` docs. */
+  private[index] final class Scratch(numDocs: Int) {
+    val acc = new Array[Double](numDocs)
+    val stamp = new Array[Int](numDocs)
+    val touched = new Array[Int](numDocs)
+    private var gen = 0
+
+    /** A generation no slot carries yet; on wrap-around every stamp is
+      * cleared first, so a stale slot can never look live. */
+    def nextGeneration(): Int = {
+      if (gen == Int.MaxValue) { java.util.Arrays.fill(stamp, 0); gen = 0 }
+      gen += 1
+      gen
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dict.TitleDictionary
 import graft.functions.TitleStandardizer
+import graft.text.Tokenize
 
 /** Golden vectors from the reference's sqllogictest suite
   * (`/root/reference/test/sql/title_mapper.test:17-41`) + edge-case
@@ -63,14 +64,22 @@ class StandardizeSpec extends AnyFunSuite {
   }
 
   test("ties resolve to the lowest corpus index") {
-    // duplicate corpus rows (3,247) must always resolve to their first
-    // occurrence; pick a duplicated alias and check the matched alias equals
-    // the duplicate itself (same string either way) and the category is the
-    // last-wins category
-    val dup = TitleDictionary.corpus.groupBy(identity).collectFirst {
-      case (t, arr) if arr.length > 1 => t
-    }.get
-    val out = TitleStandardizer.standardize(dup)
-    assert(out == s"$dup - ${TitleDictionary.categoryOf(dup)}")
+    // every copy of a duplicated corpus row (3,247 extra rows) scores the
+    // same, so the strict `>` argmax must return the full scan's index, at
+    // or before the alias's first occurrence; the output string is the same
+    // for every copy and cannot show a wrong tie-break
+    val idx = TitleStandardizer.index
+    val firstAt = TitleDictionary.corpus.zipWithIndex.groupBy(_._1).collect {
+      case (t, occ) if occ.length > 1 => t -> occ.map(_._2).min
+    }
+    assert(firstAt.nonEmpty)
+    val bad = firstAt.toSeq.sortBy(_._2).flatMap { case (dup, first) =>
+      val toks = Tokenize.tokenizeAndStem(dup)
+      val got = idx.bestMatch(toks)
+      val want = FullScanOracle.bestMatch(idx, toks)
+      if (got == want && got <= first) None
+      else Some(s"'$dup' (first at $first) -> $got, full scan $want")
+    }
+    assert(bad.isEmpty, s"\n${bad.take(20).mkString("\n")}")
   }
 }
