@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** BM25 top-k lexical retrieval (Robertson–Spärck Jones / Okapi BM25 —
   * Robertson & Zaragoza 2009, "The Probabilistic Relevance Framework")
@@ -180,9 +183,8 @@ object Bm25 {
     }
     // bounded batch: rows already on the driver (the cap-check take) —
     // a LocalRelation stage (same rows, original schema) makes every
-    // downstream read driver-local and every broadcast build jobless
-    // (see topKAgainstIndex; the checkpointed frame cost one
-    // materialization job plus a broadcast-build job per consumer)
+    // downstream read driver-local, so no consumer re-runs the caller's
+    // plan (each broadcast of it still costs one small build job)
     val qStaged = spark.createDataFrame(
       java.util.Arrays.asList(qPairsRaw: _*), qProjected.schema)
     val qTermSet = qStaged.select($"term").distinct()
@@ -1049,6 +1051,18 @@ object Bm25 {
     recordSnapshot(spark, table, "compact", revertible = true)
   }
 
+  /** Spark's `xxhash64(string, seed=42)` evaluated locally — the same
+    * Catalyst expression the index write compiled, so the driver-side
+    * directory keys match the on-disk `tb` values exactly. */
+  private def xxh64Local(s: String): Long = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    import org.apache.spark.unsafe.types.UTF8String
+    XxHash64(Seq(Literal(UTF8String.fromString(s),
+        org.apache.spark.sql.types.StringType)), 42L)
+      .eval(InternalRow.empty).asInstanceOf[Long]
+  }
+
   /** [[topK]] against a PERSISTED index from [[buildIndex]] — identical
     * ranking at `maxDf = Long.MaxValue` (same postings, same df, same
     * bounds, same scoring tree; `Bm25IndexSpec` pins it row-for-row),
@@ -1066,19 +1080,26 @@ object Bm25 {
     * loudly-logged prune (the standard stopword cut; BM25 weights such
     * terms near ln(1+~1) ≈ the noise floor, but a top-k reshuffle at the
     * margin is possible). The df check costs one scan of the
-    * term-pruned dfs table — never the postings. Default ∞ = exact. */
-  /** Spark's `xxhash64(string, seed=42)` evaluated locally — the same
-    * Catalyst expression the index write compiled, so the driver-side
-    * directory keys match the on-disk `tb` values exactly. */
-  private def xxh64Local(s: String): Long = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    import org.apache.spark.unsafe.types.UTF8String
-    XxHash64(Seq(Literal(UTF8String.fromString(s),
-        org.apache.spark.sql.types.StringType)), 42L)
-      .eval(InternalRow.empty).asInstanceOf[Long]
-  }
-
+    * term-pruned dfs table — never the postings. Default ∞ = exact.
+    *
+    * Paths — every one ranks identically; each switch is exact
+    * driver-side arithmetic, never an estimate:
+    *  - OVER-CAP (more than `maxBatchPairs` (qid, term) rows): the
+    *    fully-distributed scan-score-sort over the whole index, no dir
+    *    pruning, no query broadcast, loudly logged.
+    *  - WAND (`prune`, WAND stats present, Σ df of the kept terms ≥
+    *    `pruneMinPostings` and max df ≥ `pruneMinMaxDf`): the floor /
+    *    essential-terms / bound tail of [[wandScoreAndRank]].
+    *  - STRAIGHT, everything else, split by the scoring fanout
+    *    Σ_t df(t) · |qids sharing t| against `spreadMinFanout`:
+    *     - below it, the DRIVER FINISH ([[finishOnDriver]]): one Spark
+    *       job evaluates each surviving posting's contribution, and the
+    *       driver sums and ranks the longs — no query join, no
+    *       aggregation or window exchange;
+    *     - at or above it, the distributed [[scoreAndRank]] tail over
+    *       postings spread across the shuffle width.
+    * Every path reads the same dir-pruned, tombstone- and
+    * candidate-filtered postings. */
   /** @param prune lossless WAND/maxscore top-k bound (default ON; the
     *   round-12 finding: the EXACT index probe on zipf-common workloads
     *   paid the full corpus-scale (qid, doc) aggregation + sort the
@@ -1256,19 +1277,16 @@ object Bm25 {
     // bounded driver model: ONE retrieval batch (the same contract that
     // lets topK broadcast the query frame); its pairs — already
     // materialized by the cap-check take above — drive the floor term
-    // selection, its distinct terms the dir pruning. The batch rows are
-    // ON the driver already, so the staged query frame is a
+    // selection, its distinct terms the dir pruning, and the driver
+    // finish's fanout. The distributed tails stage the rows as a
     // LocalRelation (same rows, nulls preserved via the original
-    // schema): every downstream read is a driver-local scan and every
-    // broadcast of it builds WITHOUT a Spark job — a serving probe's
-    // latency is its sequential small-job count, and the checkpointed
-    // distributed frame this replaces cost one materialization job plus
-    // one broadcast-build job per consumer (r17 measurement: ~half of
-    // an index probe's wall time was these driver round-trips).
-    val qStaged = spark.createDataFrame(
+    // schema), so no query-side read re-runs the caller's plan; each
+    // broadcast of it still costs one small build job (the broadcast
+    // collects its child through a job even when that child is
+    // driver-local).
+    lazy val qStaged = spark.createDataFrame(
       java.util.Arrays.asList(qPairsRaw: _*), qProjected.schema)
-    val qPairs = qPairsRaw.map(r => (r.getLong(0), r.getString(1)))
-    val qTerms = qPairs.map(_._2).distinct
+    val qTerms = qPairsRaw.map(_.getString(1)).distinct
     val boundsRow = bTbl.collect()
     require(boundsRow.length == 1,
       s"index ${table}_bounds must hold exactly 1 row")
@@ -1324,17 +1342,16 @@ object Bm25 {
     // aggregation at the 10M decade; conversely at small volumes the
     // extra exchange plus its one-task-per-core stage IS the probe's
     // cost). The fanout is exact driver-side arithmetic:
-    // Σ_t df(t) · |qids sharing t| — never an estimate.
-    val nqByTerm = qPairs.groupBy(_._2).map { case (t, ps) =>
-      (t, ps.map(_._1).distinct.length.toLong) }
+    // Σ_t df(t) · |qids sharing t| — never an estimate. A null qid is
+    // one distinct query, as it is one group in the scoring aggregation.
+    val nqByTerm = qPairsRaw
+      .groupBy(_.getString(1)).map { case (t, rs) =>
+        (t, rs.map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+          .distinct.length.toLong) }
     val fanout = kept.iterator
       .map(s => s._2 * nqByTerm.getOrElse(s._1, 0L)).sum
-    val postings = dirPrunedPostings(keptTerms,
-      spread = fanout >= spreadMinFanout)
+    val spread = fanout >= spreadMinFanout
     val maxTermDf = if (kept.isEmpty) 0L else kept.map(_._2).max
-    // (n, sumdl) were just collected from the bounds member — stage the
-    // 1-row totals frame locally so its broadcast builds without a job
-    val totalsLocal = spark.createDataFrame(Seq((n, sumdl))).toDF("n", "sumdl")
     if (!prune || !hasWandStats || matchingPostings < pruneMinPostings ||
         maxTermDf < pruneMinMaxDf) {
       logger.info(s"bm25 topKAgainstIndex: straight scan-score-sort path " +
@@ -1343,10 +1360,19 @@ object Bm25 {
          else if (!hasWandStats) "pre-WAND dfs format"
          else if (matchingPostings < pruneMinPostings)
            s"below pruneMinPostings=$pruneMinPostings"
-         else s"max df below pruneMinMaxDf=$pruneMinMaxDf") + ")")
+         else s"max df below pruneMinMaxDf=$pruneMinMaxDf") +
+        s"), fanout $fanout " +
+        (if (spread) s">= spreadMinFanout=$spreadMinFanout: distributed tail"
+         else s"< spreadMinFanout=$spreadMinFanout: driver finish"))
+      if (!spread)
+        return finishOnDriver(dirPrunedPostings(keptTerms, spread = false),
+          qPairsRaw, kept, n, sumdl, k, k1, b,
+          qidNullable = qProjected.schema("qid").nullable)
       val dfs = spark.createDataFrame(kept.toSeq
           .map { case (t, df, _, _) => (t, df) }).toDF("term", "df")
-      return scoreAndRank(qStaged, postings, dfs, totalsLocal, k, k1, b)
+      val totals = spark.createDataFrame(Seq((n, sumdl))).toDF("n", "sumdl")
+      return scoreAndRank(qStaged, dirPrunedPostings(keptTerms), dfs,
+        totals, k, k1, b)
     }
     // floor lists ride their own dir-pruned scan (fewer directories
     // than the full kept set); per-term ub evaluated driver-side inside
@@ -1356,8 +1382,129 @@ object Bm25 {
       s"($matchingPostings matching postings >= " +
       s"pruneMinPostings=$pruneMinPostings, max term df $maxTermDf >= " +
       s"pruneMinMaxDf=$pruneMinMaxDf)")
-    wandScoreAndRank(qStaged, qPairs, kept, n, sumdl, postings,
+    wandScoreAndRank(qStaged, qPairsRaw.map(r => (r.getLong(0), r.getString(1))),
+      kept, n, sumdl, dirPrunedPostings(keptTerms, spread),
       dirPrunedPostings(_, spread = false), k, k1, b, floorTermsPerQuery,
       semiJoinMinPrunable)
+  }
+
+  /** The driver finish of a straight index probe whose scoring fanout is
+    * below `spreadMinFanout`: the rows [[scoreAndRank]] returns for the
+    * same inputs, without its query join, (qid, doc_id) aggregation
+    * exchange and top-k window exchange.
+    *
+    * ONE Spark job evaluates [[contributionE4]] once per surviving
+    * posting of the kept terms (the `postings` frame carries the dir
+    * pruning, tombstone anti-join and candidate filter) and collects
+    * (term ordinal, doc_id, c_e4). df, n and Σdl enter as literals
+    * instead of broadcast joins — broadcasting driver-local rows still
+    * costs a build job each — with the same long values and the same
+    * expression tree, so every c_e4 is bit-identical to the distributed
+    * tail's. The driver then only adds and sorts longs:
+    *  - each (qid, term) row of the batch fans its term's contributions
+    *    out to its qid, as the join does: a duplicate pair adds twice,
+    *    a null or unkept term matches nothing, and a null qid is one
+    *    group;
+    *  - the per-(qid, doc_id) sum is exact BIGINT (`Math.addExact`
+    *    throws on overflow, as ANSI `sum` does);
+    *  - the top k per qid rank by (score_e4 desc, doc_id asc, nulls
+    *    first) — the window's order.
+    * The result is a LocalRelation with the tail's schema, nullability
+    * included. `Bm25DriverFinishProps` pins row and schema equality
+    * against the distributed tail (`spreadMinFanout = 0`). */
+  private def finishOnDriver(postings: DataFrame, qRows: Array[Row],
+      kept: Array[(String, Long, Long, Long)], n: Long, sumdl: Long,
+      k: Int, k1: Double, b: Double, qidNullable: Boolean): DataFrame = {
+    val spark = postings.sparkSession
+    import spark.implicits._
+    val terms = kept.map(_._1)
+    val ordOf = terms.zipWithIndex.toMap
+    val contrib = postings
+      .select(typedLit(ordOf).apply($"term").as("ord"), $"doc_id", $"tf", $"dl")
+      .select($"ord", $"doc_id", $"tf", $"dl",
+        typedLit(kept.map(_._2).toSeq).apply($"ord").as("df"),
+        lit(n).as("n"), lit(sumdl).as("sumdl"))
+      .select($"ord", $"doc_id", contributionE4(k1, b).as("c_e4"))
+    val schema = StructType(Seq(
+      StructField("qid", LongType, qidNullable),
+      StructField("rank", LongType, nullable = false),
+      StructField("doc_id", LongType, contrib.schema("doc_id").nullable),
+      StructField("score_e4", LongType, nullable = true)))
+    val rows = if (terms.isEmpty) Array.empty[Row] else contrib.collect()
+
+    // dense doc slots in (doc_id asc, nulls first) order: the rank
+    // tie-break then compares slot numbers
+    def docOf(r: Row): java.lang.Long =
+      if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))
+    val slotOf = new java.util.HashMap[java.lang.Long, Integer]()
+    rows.foreach(r => slotOf.put(docOf(r), 0))
+    val docs = slotOf.keySet.toArray(new Array[java.lang.Long](0))
+    java.util.Arrays.sort(docs, java.util.Comparator.nullsFirst(
+      java.util.Comparator.naturalOrder[java.lang.Long]()))
+    docs.indices.foreach(i => slotOf.put(docs(i), i))
+    // contributions grouped by term ordinal (CSR: term o owns
+    // [start(o), start(o + 1)))
+    val start = new Array[Int](terms.length + 1)
+    rows.foreach(r => start(r.getInt(0) + 1) += 1)
+    terms.indices.foreach(o => start(o + 1) += start(o))
+    val slot = new Array[Int](rows.length)
+    val cE4 = new Array[Long](rows.length)
+    val fill = start.clone()
+    rows.foreach { r =>
+      val i = fill(r.getInt(0)); fill(r.getInt(0)) += 1
+      slot(i) = slotOf.get(docOf(r)); cE4(i) = r.getLong(2)
+    }
+    // kept-term ordinals per qid, one per (qid, term) row
+    val ordsOf = mutable.LinkedHashMap.empty[Option[Long], mutable.ArrayBuffer[Int]]
+    qRows.foreach { r =>
+      Option(r.getString(1)).flatMap(ordOf.get).foreach { o =>
+        val q = if (r.isNullAt(0)) None else Some(r.getLong(0))
+        ordsOf.getOrElseUpdate(q, mutable.ArrayBuffer.empty[Int]) += o
+      }
+    }
+
+    // per qid: sum into the dense slots (a slot is live for this qid
+    // when its stamp equals the qid's generation), then keep the best k
+    // of the touched slots by insertion into a sorted prefix
+    val acc = new Array[Long](docs.length)
+    val stamp = new Array[Int](docs.length)
+    val touched = new Array[Int](docs.length)
+    def before(d: Int, e: Int): Boolean =
+      acc(d) > acc(e) || (acc(d) == acc(e) && d < e)
+    val out = new java.util.ArrayList[Row]()
+    var gen = 0
+    ordsOf.foreach { case (q, ords) =>
+      gen += 1
+      var nTouched = 0
+      ords.foreach { o =>
+        var i = start(o)
+        while (i < start(o + 1)) {
+          val d = slot(i)
+          if (stamp(d) != gen) {
+            stamp(d) = gen; acc(d) = 0L; touched(nTouched) = d; nTouched += 1
+          }
+          acc(d) = Math.addExact(acc(d), cE4(i))
+          i += 1
+        }
+      }
+      val top = new Array[Int](math.min(k, nTouched))
+      var nTop = 0
+      var t = 0
+      while (t < nTouched) {
+        val d = touched(t)
+        if (nTop < top.length || before(d, top(nTop - 1))) {
+          var j = math.min(nTop, top.length - 1)
+          while (j > 0 && before(d, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
+          top(j) = d
+          if (nTop < top.length) nTop += 1
+        }
+        t += 1
+      }
+      val qid = q.map(Long.box).orNull
+      (0 until nTop).foreach { r =>
+        out.add(Row(qid, r + 1L, docs(top(r)), acc(top(r))))
+      }
+    }
+    spark.createDataFrame(out, schema)
   }
 }

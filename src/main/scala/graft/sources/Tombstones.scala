@@ -171,8 +171,8 @@ object Tombstones {
   /** [[frame]] for a SPECIFIC generation table — time-travel probes
     * resolve the deletes member from the family snapshot log and read
     * that generation directly. The maintained count property lives on
-    * the live view, so this counts the table (one footer read of a
-    * 1-file list; time travel is the rare path). */
+    * the live view, so this counts the table: parquet footers of a flat
+    * 1-file list, or a count job for any other layout. */
   def frameAt(spark: SparkSession, genTable: String): Option[(DataFrame, Long)] = {
     if (!exists(spark, genTable)) return None
     spark.catalog.refreshTable(genTable)
@@ -181,25 +181,32 @@ object Tombstones {
     // tiny 1-file table and the common historical state is EMPTY — a
     // count() job per time-travel probe was pure job latency (r18).
     // Footer row counts are exact (parquet metadata), so this equals
-    // df.count() on any data; a read failure falls back to the job.
-    val n = try {
+    // df.count() on the flat layout the writers produce. Anything else
+    // — a subdirectory (a partitioned or nested layout the flat listing
+    // would not see into), no data file at all, or a read failure —
+    // falls back to the job: a footer count of 0 would mean "no
+    // tombstones" and serve deleted rows.
+    val footerCount = try {
       val loc = new org.apache.hadoop.fs.Path(
         Generations.location(spark, genTable))
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.listStatus(loc).filter { s =>
+      val listed = fs.listStatus(loc).filter { s =>
         val nm = s.getPath.getName
-        s.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-      }.map { s =>
+        !nm.startsWith("_") && !nm.startsWith(".")
+      }
+      if (listed.isEmpty || listed.exists(_.isDirectory)) None
+      else Some(listed.map { s =>
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             s.getPath, spark.sessionState.newHadoopConf()))
         try rd.getRecordCount finally rd.close()
-      }.sum
+      }.sum)
     } catch { case e: Throwable =>
       logger.warn(s"tombstones: footer count of $genTable failed ($e) — " +
         "falling back to a count job")
-      df.count()
+      None
     }
+    val n = footerCount.getOrElse(df.count())
     if (n == 0L) None else Some((df, n))
   }
 

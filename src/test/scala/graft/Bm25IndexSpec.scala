@@ -207,17 +207,17 @@ class Bm25IndexSpec extends AnyFunSuite {
       // above ran are in flight at most briefly
       Thread.sleep(500)
     } finally spark.sparkContext.removeSparkListener(listener)
-    // The steady probe runs exactly FIVE actions — the qStaged
-    // localCheckpoint, the bounded take (cap check + query pairs in ONE
-    // action, where the r14 shape ran a count() AND a collect()), the
-    // dir-pruned dfs stats collect, the 1-row bounds collect, and the
-    // result — and AQE materializes each multi-stage action as one job
-    // per query stage, which lands at 12 on this corpus. Pinning the
+    // The steady probe of this 2-query batch (fanout far below
+    // spreadMinFanout, so the straight path finishes on the driver) runs
+    // THREE jobs: the 1-row bounds collect, the dir-pruned dfs stats
+    // collect and the one contribution collect. The batch is a local
+    // relation, so the cap-check take runs none, and df, n and Σdl ride
+    // as literals, so no broadcast build runs either. Pinning the
     // measured number makes any future per-probe bookkeeping job (the
-    // count()-for-the-cap regression, a max-scan on a log) a test
-    // failure instead of a silent serving-path tax.
-    assert(jobs.get() <= 12,
-      s"steady probe must stay within the measured 12 jobs (5 actions " +
-        s"under AQE staging), got ${jobs.get()}")
+    // count()-for-the-cap regression, a max-scan on a log, a broadcast of
+    // driver-local rows) a test failure instead of a silent serving-path
+    // tax.
+    assert(jobs.get() <= 3,
+      s"steady probe must stay within the measured 3 jobs, got ${jobs.get()}")
   }
 }

@@ -128,6 +128,36 @@ class IndexDeleteSpec extends AnyFunSuite {
     assert(!probed.exists(_._3 == 7L))
   }
 
+  test("bm25: a time-travel probe over a tombstone generation laid out in " +
+      "a partition directory still excludes the deleted docs") {
+    val tbl = "g_bm25_delpart"
+    Bm25.buildIndex(bmDocs, "doc_id", "text", tbl, s"${tmp("graft_bm25part")}/idx",
+      nDirs = 4)
+    Bm25.deleteFromIndex(spark, tbl,
+      bmDocs.filter($"doc_id" % 5 === 1).select($"doc_id"))
+    Bm25.appendToIndex(Seq((100L, "alpha g0 fresh")).toDF("doc_id", "text"),
+      "doc_id", "text", tbl)
+    // asOfCommits = 1: after the delete, before the append
+    def historical(): Seq[(Long, Long, Long, Long)] =
+      bmRows(Bm25.topKAgainstIndex(bmQueries, tbl, k = 100, asOfCommits = 1))
+    val flat = historical()
+    assert(flat.nonEmpty && flat.forall(_._3 % 5 != 1) && !flat.exists(_._3 == 100L))
+    // move the deletes generation's data files one level down, as a
+    // partitioned writer lays them out: the table still reads every id
+    val gen = graft.sources.Generations.current(spark, s"${tbl}_deletes")
+    val loc = new org.apache.hadoop.fs.Path(
+      graft.sources.Generations.location(spark, gen))
+    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+    val part = new org.apache.hadoop.fs.Path(loc, "bucket=0")
+    fs.mkdirs(part)
+    fs.listStatus(loc).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .foreach(s => assert(fs.rename(s.getPath, new org.apache.hadoop.fs.Path(part,
+        s.getPath.getName))))
+    spark.catalog.refreshTable(gen)
+    assert(spark.table(gen).count() == 8L)
+    assert(historical() == flat)
+  }
+
   test("bm25: the over-cap distributed fallback respects tombstones " +
       "(identical rows to the serving-shape probe)") {
     val tbl = "g_bm25_delcap"
