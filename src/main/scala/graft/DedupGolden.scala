@@ -1,6 +1,5 @@
 package graft
 
-import scala.io.Source
 import scala.util.hashing.MurmurHash3
 
 /** Pinned expected output of the MinHash+LSH fuzzy-dedup operator family
@@ -33,8 +32,8 @@ import scala.util.hashing.MurmurHash3
   *  - ids 9–14: six singletons over private vocabularies
   *
   * Fixture `dedup_golden_snapshot.tsv` is regenerated with
-  * `runMain graft.tools.GenDedupGolden` and drift-guarded by
-  * `DedupGoldenSpec`; [[oracleValuesSql]] replays it as an
+  * `runMain graft.tools.Golden dedup` and drift-guarded by
+  * `GoldenSpec`; [[Golden.dedup]]'s `oracleValuesSql` replays it as an
   * engine-independent VALUES oracle for q125.
   */
 object DedupGolden {
@@ -205,24 +204,4 @@ object DedupGolden {
       (id, status, nHist)
     }
   }
-
-  /** (doc_id, cluster_id) pinned rows from the checked-in fixture. */
-  lazy val rows: Seq[(Long, Long)] = {
-    val src = Source.fromResource("dedup_golden_snapshot.tsv")(scala.io.Codec.UTF8)
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val a = line.split("\t", -1)
-      require(a.length == 2, s"bad golden row: $line")
-      (a(0).toLong, a(1).toLong)
-    }.toVector
-    finally src.close()
-  }
-
-  /** DuckDB-runnable oracle: pinned rows as a VALUES table matching
-    * [[Queries.fuzzyDedupGolden]]'s columns. */
-  lazy val oracleValuesSql: String =
-    rows.map { case (d, c) => s"($d, $c)" }.mkString(
-      "SELECT CAST(doc_id AS BIGINT) AS doc_id, " +
-        "CAST(cluster_id AS BIGINT) AS cluster_id FROM (VALUES ",
-      ", ",
-      ") AS g(doc_id, cluster_id) ORDER BY doc_id")
 }

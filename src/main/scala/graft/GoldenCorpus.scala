@@ -1,36 +1,17 @@
 package graft
 
-import scala.io.Source
-
 /** The reference's 104-title example corpus with pinned standardized
-  * outputs (fixture `example_corpus_snapshot.tsv`; inputs from
+  * outputs (fixture `example_corpus_snapshot.tsv`, registered as
+  * [[Golden.exampleCorpus]]; inputs from
   * `/root/reference/examples/test_query.sql:3-112`). Five entries are the
   * reference's published sqllogictest goldens
   * (`/root/reference/test/sql/title_mapper.test:17-41`), which anchor the
   * rest of the snapshot. Shared by the driver-facing golden query
-  * ([[Queries.stdGolden]] / its VALUES-table oracle) and `Snapshot104Spec`.
+  * ([[Queries.stdGolden]] / its VALUES-table oracle) and `GoldenSpec`.
   */
 object GoldenCorpus {
 
-  lazy val pairs: Seq[(String, String)] = {
-    val src = Source.fromResource("example_corpus_snapshot.tsv")(scala.io.Codec.UTF8)
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val Array(in, out) = line.split("\t", 2)
-      (in, out)
-    }.toVector
-    finally src.close()
-  }
+  lazy val pairs: Seq[(String, String)] = Golden.exampleCorpus.rows
 
   lazy val titles: Seq[String] = pairs.map(_._1)
-
-  private def lit(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** DuckDB-runnable oracle: the pinned expected strings as a VALUES table,
-    * same column names and ordering as [[Queries.stdGolden]]. */
-  lazy val oracleValuesSql: String =
-    pairs.map { case (t, s) => s"(${lit(t)}, ${lit(s)})" }
-      .mkString(
-        "SELECT title, std FROM (VALUES ",
-        ", ",
-        ") AS g(title, std) ORDER BY title")
 }

@@ -3705,23 +3705,35 @@ object Queries {
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
-          asOfTag = "stack_v1")
-        .select($"qid", $"doc_id".as("id"),
-          expr("CAST(1000000000 DIV (60 + rank) AS BIGINT)").as("rrf")),
+          asOfTag = "stack_v1"),
       Knn.ivfTopKAgainstIndex(
           emb.filter($"vec_id" % 50 === 0), ivfTbl, "vec_id", "embedding",
-          k = 10, asOfTag = "stack_v1")
-        .select($"qid", $"nid".as("id"),
-          expr("CAST(1000000000 DIV (60 + CAST(rnk AS BIGINT)) AS BIGINT)")
-            .as("rrf")))
-    val w = Window.partitionBy($"qid").orderBy($"rrf_score".desc, $"id".asc)
-    bm.unionByName(ivf)
-      .groupBy($"qid", $"id")
-      .agg(sum($"rrf").as("rrf_score"), count(lit(1)).as("n_lists"))
+          k = 10, asOfTag = "stack_v1"))
+    rrfFuse(bm, ivf)
+  }
+
+  /** Reciprocal rank fusion of a BM25 top-k (`qid, doc_id, rank`) and a
+    * vector top-k (`qid, nid, rnk`), shared by every hybrid (q169's
+    * contract): each list contributes the integer `1e9 div (60 + rank)`,
+    * the fused score is their BIGINT sum with `n_lists` counting the lists
+    * that hold the id, and the top 5 per qid rank by (rrf_score desc,
+    * id asc). */
+  private def rrfFuse(bm25Top: DataFrame, annTop: DataFrame): DataFrame = {
+    val bm = bm25Top.select(col("qid"), col("doc_id").as("id"),
+      expr("CAST(1000000000 DIV (60 + rank) AS BIGINT)").as("rrf"))
+    val ann = annTop.select(col("qid"), col("nid").as("id"),
+      expr("CAST(1000000000 DIV (60 + CAST(rnk AS BIGINT)) AS BIGINT)")
+        .as("rrf"))
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(col("rrf_score").desc, col("id").asc)
+    bm.unionByName(ann)
+      .groupBy(col("qid"), col("id"))
+      .agg(sum(col("rrf")).as("rrf_score"), count(lit(1)).as("n_lists"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 5)
-      .select($"qid", $"rank", $"id".as("doc_id"), $"rrf_score", $"n_lists")
-      .orderBy($"qid", $"rank")
+      .filter(col("rank") <= 5)
+      .select(col("qid"), col("rank"), col("id").as("doc_id"),
+        col("rrf_score"), col("n_lists"))
+      .orderBy(col("qid"), col("rank"))
   }
 
   /** q169: HYBRID retrieval — the standard RAG retrieval stack: the
@@ -3762,23 +3774,11 @@ object Queries {
     }
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
-        .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10)
-        .select($"qid", $"doc_id".as("id"),
-          expr("CAST(1000000000 DIV (60 + rank) AS BIGINT)").as("rrf")),
+        .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10),
       Knn.ivfTopKAgainstIndex(
           emb.filter($"vec_id" % 50 === 0), ivfTbl, "vec_id", "embedding",
-          k = 10)
-        .select($"qid", $"nid".as("id"),
-          expr("CAST(1000000000 DIV (60 + CAST(rnk AS BIGINT)) AS BIGINT)")
-            .as("rrf")))
-    val w = Window.partitionBy($"qid").orderBy($"rrf_score".desc, $"id".asc)
-    bm.unionByName(ivf)
-      .groupBy($"qid", $"id")
-      .agg(sum($"rrf").as("rrf_score"), count(lit(1)).as("n_lists"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 5)
-      .select($"qid", $"rank", $"id".as("doc_id"), $"rrf_score", $"n_lists")
-      .orderBy($"qid", $"rank")
+          k = 10))
+    rrfFuse(bm, ivf)
   }
 
   /** q180: FILTERED hybrid retrieval — q169's RRF fusion with q173's
@@ -3815,23 +3815,11 @@ object Queries {
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
-          candidateFilter = Some($"doc_id" % 2 === 0))
-        .select($"qid", $"doc_id".as("id"),
-          expr("CAST(1000000000 DIV (60 + rank) AS BIGINT)").as("rrf")),
+          candidateFilter = Some($"doc_id" % 2 === 0)),
       Knn.ivfTopKAgainstIndex(
           emb.filter($"vec_id" % 50 === 0), ivfTbl, "vec_id", "embedding",
-          k = 10, candidateFilter = Some($"id" % 2 === 0))
-        .select($"qid", $"nid".as("id"),
-          expr("CAST(1000000000 DIV (60 + CAST(rnk AS BIGINT)) AS BIGINT)")
-            .as("rrf")))
-    val w = Window.partitionBy($"qid").orderBy($"rrf_score".desc, $"id".asc)
-    bm.unionByName(ivf)
-      .groupBy($"qid", $"id")
-      .agg(sum($"rrf").as("rrf_score"), count(lit(1)).as("n_lists"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 5)
-      .select($"qid", $"rank", $"id".as("doc_id"), $"rrf_score", $"n_lists")
-      .orderBy($"qid", $"rank")
+          k = 10, candidateFilter = Some($"id" % 2 === 0)))
+    rrfFuse(bm, ivf)
   }
 
   /** q184: TIME-TRAVEL hybrid retrieval — "serve yesterday's stack"
@@ -3872,23 +3860,11 @@ object Queries {
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
-          asOfCommits = 2)
-        .select($"qid", $"doc_id".as("id"),
-          expr("CAST(1000000000 DIV (60 + rank) AS BIGINT)").as("rrf")),
+          asOfCommits = 2),
       Knn.ivfTopKAgainstIndex(
           emb.filter($"vec_id" % 50 === 0), ivfTbl, "vec_id", "embedding",
-          k = 10, asOfCommits = 1)
-        .select($"qid", $"nid".as("id"),
-          expr("CAST(1000000000 DIV (60 + CAST(rnk AS BIGINT)) AS BIGINT)")
-            .as("rrf")))
-    val w = Window.partitionBy($"qid").orderBy($"rrf_score".desc, $"id".asc)
-    bm.unionByName(ivf)
-      .groupBy($"qid", $"id")
-      .agg(sum($"rrf").as("rrf_score"), count(lit(1)).as("n_lists"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 5)
-      .select($"qid", $"rank", $"id".as("doc_id"), $"rrf_score", $"n_lists")
-      .orderBy($"qid", $"rank")
+          k = 10, asOfCommits = 1))
+    rrfFuse(bm, ivf)
   }
 
   /** q185: the QUANTIZED "serve yesterday's stack" — q184's time-travel
@@ -3925,23 +3901,11 @@ object Queries {
     val (bm, sq) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
-          asOfCommits = 2)
-        .select($"qid", $"doc_id".as("id"),
-          expr("CAST(1000000000 DIV (60 + rank) AS BIGINT)").as("rrf")),
+          asOfCommits = 2),
       Knn.ivfTopKAgainstIndexSq8(
           emb.filter($"vec_id" % 50 === 0), sqTbl, "vec_id", "embedding",
-          k = 10, asOfCommits = 1)
-        .select($"qid", $"nid".as("id"),
-          expr("CAST(1000000000 DIV (60 + CAST(rnk AS BIGINT)) AS BIGINT)")
-            .as("rrf")))
-    val w = Window.partitionBy($"qid").orderBy($"rrf_score".desc, $"id".asc)
-    bm.unionByName(sq)
-      .groupBy($"qid", $"id")
-      .agg(sum($"rrf").as("rrf_score"), count(lit(1)).as("n_lists"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= 5)
-      .select($"qid", $"rank", $"id".as("doc_id"), $"rrf_score", $"n_lists")
-      .orderBy($"qid", $"rank")
+          k = 10, asOfCommits = 1))
+    rrfFuse(bm, sq)
   }
 
   /** q162: MinHash index COMPACTION — the layout-maintenance primitive

@@ -408,7 +408,7 @@ object SfOracles {
 
   private def lit(s: String): String =
     if (s == null) "CAST(NULL AS VARCHAR)"
-    else "'" + s.replace("'", "''") + "'"
+    else Golden.lit(s)
 
   /** Double as a DuckDB literal that parses back to the identical IEEE
     * value (shortest round-trip repr through strtod). */

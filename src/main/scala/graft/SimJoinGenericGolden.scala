@@ -1,7 +1,5 @@
 package graft
 
-import scala.io.Source
-
 import graft.text.Tokenize
 
 /** Pinned expected output of the GENERIC (no-driver-index) similarity-join
@@ -29,8 +27,9 @@ import graft.text.Tokenize
   * (identical weight vector ⇒ score_e6 = 1000000).
   *
   * Fixture `simjoin_generic_golden_snapshot.tsv` is regenerated with
-  * `runMain graft.tools.GenSimJoinGenericGolden`, drift-guarded by
-  * `SimJoinGenericGoldenSpec`; [[oracleValuesSql]] replays it for q128.
+  * `runMain graft.tools.Golden simjoin_generic`, drift-guarded by
+  * `GoldenSpec`; [[Golden.simjoinGeneric]]'s `oracleValuesSql` replays it
+  * for q128.
   */
 object SimJoinGenericGolden {
 
@@ -107,24 +106,4 @@ object SimJoinGenericGolden {
     }
     (topk ++ thr).sortBy { case (m, q, r, _, _) => (m, q, r) }
   }
-
-  /** Pinned rows from the checked-in fixture. */
-  lazy val rows: Seq[(String, Long, Int, Long, Long)] = {
-    val src = Source.fromResource("simjoin_generic_golden_snapshot.tsv")(scala.io.Codec.UTF8)
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val a = line.split("\t", -1)
-      require(a.length == 5, s"bad golden row: $line")
-      (a(0), a(1).toLong, a(2).toInt, a(3).toLong, a(4).toLong)
-    }.toVector
-    finally src.close()
-  }
-
-  /** DuckDB-runnable oracle matching [[Queries.simJoinGenericGolden]]. */
-  lazy val oracleValuesSql: String =
-    rows.map { case (m, q, r, d, s) => s"('$m', $q, $r, $d, $s)" }.mkString(
-      "SELECT method, CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk, " +
-        "CAST(rid AS BIGINT) AS rid, CAST(score_e6 AS BIGINT) AS score_e6 " +
-        "FROM (VALUES ",
-      ", ",
-      ") AS g(method, qid, rnk, rid, score_e6) ORDER BY method, qid, rnk")
 }

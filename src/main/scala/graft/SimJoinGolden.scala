@@ -1,7 +1,5 @@
 package graft
 
-import scala.io.Source
-
 import graft.dict.TitleDictionary
 import graft.functions.TitleStandardizer
 import graft.text.Tokenize
@@ -23,8 +21,8 @@ import graft.text.Tokenize
   * difference between the JVM loop and the shuffled Spark aggregate.
   *
   * Fixture `simjoin_golden_snapshot.tsv` is regenerated with
-  * `runMain graft.tools.GenSimJoinGolden`, drift-guarded by
-  * `SimJoinGoldenSpec`; [[oracleValuesSql]] replays it for q127.
+  * `runMain graft.tools.Golden simjoin`, drift-guarded by
+  * `GoldenSpec`; [[Golden.simjoin]]'s `oracleValuesSql` replays it for q127.
   */
 object SimJoinGolden {
 
@@ -67,29 +65,4 @@ object SimJoinGolden {
       }
     }
   }
-
-  /** Pinned rows from the checked-in fixture. */
-  lazy val rows: Seq[(String, Int, Int, String, String, Long)] = {
-    val src = Source.fromResource("simjoin_golden_snapshot.tsv")(scala.io.Codec.UTF8)
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val a = line.split("\t", -1)
-      require(a.length == 6, s"bad golden row: $line")
-      (a(0), a(1).toInt, a(2).toInt, a(3), a(4), a(5).toLong)
-    }.toVector
-    finally src.close()
-  }
-
-  private def lit(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** DuckDB-runnable oracle matching [[Queries.simJoinGolden]]'s columns. */
-  lazy val oracleValuesSql: String =
-    rows.map { case (t, r, d, a, c, s) =>
-      s"(${lit(t)}, $r, $d, ${lit(a)}, ${lit(c)}, $s)"
-    }.mkString(
-      "SELECT title, CAST(rnk AS INTEGER) AS rnk, " +
-        "CAST(match_doc_id AS INTEGER) AS match_doc_id, alias, category, " +
-        "CAST(score_e6 AS BIGINT) AS score_e6 FROM (VALUES ",
-      ", ",
-      ") AS g(title, rnk, match_doc_id, alias, category, score_e6) " +
-        "ORDER BY title, rnk")
 }

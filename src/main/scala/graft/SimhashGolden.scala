@@ -1,6 +1,5 @@
 package graft
 
-import scala.io.Source
 import scala.util.hashing.MurmurHash3
 
 /** Pinned expected output of the SimHash near-dup family (q36) over a
@@ -19,8 +18,9 @@ import scala.util.hashing.MurmurHash3
   * recompute says is the truth), and unrelated texts (far apart).
   *
   * Fixture `simhash_golden_snapshot.tsv` is regenerated with
-  * `runMain graft.tools.GenSimhashGolden`, drift-guarded by
-  * `SimhashGoldenSpec`.
+  * `runMain graft.tools.Golden simhash`, drift-guarded by
+  * `GoldenSpec`; [[Golden.simhash]]'s `oracleValuesSql` replays it for
+  * q129.
   */
 object SimhashGolden {
 
@@ -78,23 +78,4 @@ object SimhashGolden {
       if d <= MaxDistance
     } yield (ia, ib, d)).sortBy { case (a, b, _) => (a, b) }
   }
-
-  /** Pinned rows from the checked-in fixture. */
-  lazy val rows: Seq[(Long, Long, Int)] = {
-    val src = Source.fromResource("simhash_golden_snapshot.tsv")(scala.io.Codec.UTF8)
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val a = line.split("\t", -1)
-      require(a.length == 3, s"bad golden row: $line")
-      (a(0).toLong, a(1).toLong, a(2).toInt)
-    }.toVector
-    finally src.close()
-  }
-
-  /** DuckDB-runnable oracle matching [[Queries.simhashGolden]]. */
-  lazy val oracleValuesSql: String =
-    rows.map { case (a, b, d) => s"($a, $b, $d)" }.mkString(
-      "SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b, " +
-        "CAST(hamming AS INTEGER) AS hamming FROM (VALUES ",
-      ", ",
-      ") AS g(id_a, id_b, hamming) ORDER BY id_a, id_b")
 }

@@ -1,7 +1,5 @@
 package graft
 
-import scala.io.Source
-
 /** Pinned expected output of the approximate-sketch aggregate family
   * (q63/q98: `hll_sketch_agg`/`hll_union_agg`/`hll_sketch_estimate`,
   * `approx_count_distinct`, `approx_percentile`) over a constructed,
@@ -42,11 +40,12 @@ import scala.io.Source
   *           rank-window check)
   *
   * Fixture `sketch_golden_snapshot.tsv` is regenerated with
-  * `runMain graft.tools.GenSketchGolden` (a Spark run — the approximate
+  * `runMain graft.tools.Golden sketch` (a Spark run — the approximate
   * columns characterize the engine's sketches; the EXACT columns and the
   * rank windows are independently re-derived here in [[recomputeExact]]
-  * and cross-checked by `SketchGoldenSpec`); [[oracleValuesSql]] replays
-  * the fixture as an engine-independent VALUES oracle for q130.
+  * and cross-checked by `SketchGoldenSpec`); [[Golden.sketch]]'s
+  * `oracleValuesSql` replays the fixture as an engine-independent VALUES
+  * oracle for q130.
   */
 object SketchGolden {
 
@@ -92,28 +91,4 @@ object SketchGolden {
     val (alo, ahi) = window(chars.flatten.map(_.toLong).toArray.sorted)
     perGroup :+ (("ALL", users.reduce(_ ++ _).size.toLong, alo, ahi))
   }
-
-  /** (grp, exact_users, hll_users, acd_users, p50_in_window) pinned rows
-    * from the checked-in fixture. */
-  lazy val rows: Seq[(String, Long, Long, Long, Boolean)] = {
-    val src = Source.fromResource("sketch_golden_snapshot.tsv")(scala.io.Codec.UTF8)
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val a = line.split("\t", -1)
-      require(a.length == 5, s"bad golden row: $line")
-      (a(0), a(1).toLong, a(2).toLong, a(3).toLong, a(4).toBoolean)
-    }.toVector
-    finally src.close()
-  }
-
-  /** DuckDB-runnable oracle: pinned rows as a VALUES table matching
-    * [[Queries.sketchGolden]]'s columns. */
-  lazy val oracleValuesSql: String =
-    rows.map { case (g, e, h, a, b) => s"('$g', $e, $h, $a, $b)" }.mkString(
-      "SELECT grp, CAST(exact_users AS BIGINT) AS exact_users, " +
-        "CAST(hll_users AS BIGINT) AS hll_users, " +
-        "CAST(acd_users AS BIGINT) AS acd_users, " +
-        "CAST(p50_in_window AS BOOLEAN) AS p50_in_window FROM (VALUES ",
-      ", ",
-      ") AS g(grp, exact_users, hll_users, acd_users, p50_in_window) " +
-        "ORDER BY grp")
 }

@@ -487,7 +487,7 @@ object SparkEntry {
         |GROUP BY token ORDER BY cnt DESC, token LIMIT 20""".stripMargin,
     // Flagship standardize_title golden: the oracle is the pinned fixture
     // itself (VALUES table) — engine-independent; see Queries.stdGolden.
-    "q52_std_golden" -> GoldenCorpus.oracleValuesSql,
+    "q52_std_golden" -> Golden.exampleCorpus.oracleValuesSql,
     // Same gram definition as Dedup.shingles: lowercase, split \s+, drop
     // empties, word bigrams (or the whole token string when < n tokens),
     // distinct. Ints out; the float jaccard (one IEEE division) only orders.
@@ -1733,8 +1733,8 @@ object SparkEntry {
         |ORDER BY c_mktsegment, decile""".stripMargin,
     // Engine-independent VALUES golden of the text-UDF family over the
     // pinned 104-title corpus (q52 pattern; fixture regenerated by
-    // GenTextUdfsGolden, drift-guarded by TextUdfsGoldenSpec).
-    "q121_text_udfs_golden" -> graft.TextUdfsGolden.oracleValuesSql,
+    // graft.tools.Golden text_udfs, drift-guarded by GoldenSpec).
+    "q121_text_udfs_golden" -> graft.Golden.textUdfs.oracleValuesSql,
     // Pinned decode-golden stats, hand-checkable from the fixture bytes:
     // bmp_2x2 channel sums over BGR (10..120), ppm round trip (both
     // header forms), WAV samples (1000,-1000,2000,-3000) -> sum/sumSq/
@@ -1781,9 +1781,9 @@ object SparkEntry {
         |ORDER BY c.user_id, c.click_id, p.purchase_id""".stripMargin,
     // Engine-independent VALUES golden of the MinHash+LSH fuzzy-dedup
     // pipeline over the constructed corpus (expected clusters re-derived
-    // in pure JVM by DedupGolden.recompute; regenerated by GenDedupGolden,
-    // drift-guarded by DedupGoldenSpec).
-    "q125_fuzzy_dedup_golden" -> graft.DedupGolden.oracleValuesSql,
+    // in pure JVM by DedupGolden.recompute; regenerated by
+    // graft.tools.Golden dedup, drift-guarded by GoldenSpec).
+    "q125_fuzzy_dedup_golden" -> graft.Golden.dedup.oracleValuesSql,
     // Constructed-truth ANN golden: expected rows are JVM-exact cosine
     // answers (AnnGolden.expectedTopK/expectedPairs); the Spark side runs
     // the distributed LSH / IVF / near-dup machinery.
@@ -1794,21 +1794,21 @@ object SparkEntry {
     "q137_semdedup_golden" -> graft.SemDedupGolden.oracleValuesSql,
     // Engine-independent VALUES golden of the ranked dictionary
     // similarity join over the pinned 104-title corpus (JVM re-derivation
-    // in SimJoinGolden.recompute; regenerated by GenSimJoinGolden,
-    // drift-guarded by SimJoinGoldenSpec).
-    "q127_simjoin_golden" -> graft.SimJoinGolden.oracleValuesSql,
+    // in SimJoinGolden.recompute; regenerated by graft.tools.Golden
+    // simjoin, drift-guarded by GoldenSpec).
+    "q127_simjoin_golden" -> graft.Golden.simjoin.oracleValuesSql,
     // Engine-independent VALUES goldens for the generic similarity join
     // (topKAgainst + lossless thresholdJoin vs a JVM re-derivation of the
     // distributed-idf contract) and the simhash near-dup pairs (pigeonhole
     // banding vs brute-force all-pairs hamming).
-    "q128_simjoin_generic_golden" -> graft.SimJoinGenericGolden.oracleValuesSql,
-    "q129_simhash_golden" -> graft.SimhashGolden.oracleValuesSql,
+    "q128_simjoin_generic_golden" -> graft.Golden.simjoinGeneric.oracleValuesSql,
+    "q129_simhash_golden" -> graft.Golden.simhash.oracleValuesSql,
     // q130 pins the approximate-sketch family itself (HLL estimates,
     // approx_count_distinct, approx_percentile's rank guarantee) — the
     // family q63/q98 exercise on SF data — over a constructed input with
     // JVM-derivable exact truth; see SketchGolden's scaladoc for which
     // parts of each sketch are pinnable and why.
-    "q130_sketch_golden" -> graft.SketchGolden.oracleValuesSql,
+    "q130_sketch_golden" -> graft.Golden.sketch.oracleValuesSql,
     // q131 replays events through the REAL streaming foreachBatch upsert
     // (8 micro-batches, generation-pointer snapshot); the payload is a
     // pure function of (key, ts), so the final snapshot is exactly the

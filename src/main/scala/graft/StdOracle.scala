@@ -26,7 +26,7 @@ import graft.functions.TitleStandardizer
   * argmax semantics (`/root/reference/src/lib.rs:62-67`) on the live
   * corpus, tie-breaks included.
   *
-  * [[Verify]] / [[tools.VerifyOne]] call [[prepare]] before dumping
+  * [[Verify]] calls [[prepare]] before dumping
   * `oracle_sql.json`; if anything dumps unprepared, the placeholder SQL
   * fails loudly in DuckDB (never a silent green).
   */
@@ -50,12 +50,10 @@ object StdOracle {
     }
   }
 
-  private def lit(s: String): String = "'" + s.replace("'", "''") + "'"
-
   /** The `std_map(title, std)` CTE body for the prepared scale factor. */
   private def valuesCte: String = prepared match {
     case Some((_, pairs)) =>
-      pairs.map { case (t, s) => s"(${lit(t)}, ${lit(s)})" }
+      pairs.map { case (t, s) => s"(${Golden.lit(t)}, ${Golden.lit(s)})" }
         .mkString("std_map(title, std) AS (VALUES ", ", ", ")")
     case None =>
       // Loud DuckDB-side failure: a dump that skipped prepare() must never

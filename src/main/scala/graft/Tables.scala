@@ -20,14 +20,19 @@ object Tables {
     * 1-task footer-read job, and nearly every query constructs 1-3
     * input frames — ~100 ms of fixed driver round-trip per query at
     * the bench SF (r18 measurement: JobProfile showed the footer job
-    * as the first job of every query). The schema is immutable
-    * metadata of an immutable input file, so caching it changes no
-    * result — the data is still read from parquet on every run. */
+    * as the first job of every query). An entry is keyed on the path
+    * plus the file's length and modification time, so a file rewritten
+    * in place is re-inferred instead of read under its old schema; the
+    * data is still read from parquet on every run. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
   private def readWithCachedSchema(spark: SparkSession,
       path: String): DataFrame = {
-    val s = schemaCache.computeIfAbsent(path,
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    val s = schemaCache.computeIfAbsent(
+      (path, st.getLen, st.getModificationTime),
       _ => spark.read.parquet(path).schema)
     spark.read.schema(s).parquet(path)
   }

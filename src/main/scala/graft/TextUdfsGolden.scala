@@ -1,40 +1,33 @@
 package graft
 
-import scala.io.Source
+import graft.functions.TitleStandardizer
+import graft.text.Tokenize
 
 /** Pinned outputs of the text-UDF family (tokenize+stem, sparse TF-IDF
   * vector cardinality and first-stem weight) over the 104-title example
   * corpus — the q52 pattern applied to the UDFs DuckDB cannot evaluate.
   * Fixture `text_udfs_golden_snapshot.tsv` is regenerated with
-  * `runMain graft.tools.GenTextUdfsGolden` and drift-guarded by
-  * `TextUdfsGoldenSpec`; [[oracleValuesSql]] replays it as an
+  * `runMain graft.tools.Golden text_udfs` and drift-guarded by
+  * `GoldenSpec`; [[Golden.textUdfs]]'s `oracleValuesSql` replays it as an
   * engine-independent VALUES oracle for q121.
   */
 object TextUdfsGolden {
 
-  /** (title, n_stems, stems_str, first_stem, tfidf_card, w_e9) */
-  lazy val rows: Seq[(String, Int, String, String, Int, Long)] = {
-    val src = Source.fromResource("text_udfs_golden_snapshot.tsv")(scala.io.Codec.UTF8)
-    try src.getLines().filter(_.nonEmpty).map { line =>
-      val a = line.split("\t", -1)
-      require(a.length == 6, s"bad golden row: $line")
-      (a(0), a(1).toInt, a(2), a(3), a(4).toInt, a(5).toLong)
-    }.toVector
-    finally src.close()
+  /** (title, n_stems, stems_str, first_stem, tfidf_card, w_e9) per title,
+    * in pure JVM (the Spark query applies the same per-row pure
+    * functions); the w_e9 rounding replicates Spark's `round(double)`
+    * (BigDecimal HALF_UP). */
+  def recompute: Seq[(String, Int, String, String, Int, Long)] = {
+    val idx = TitleStandardizer.index
+    val inv = idx.idxToTerm
+    GoldenCorpus.titles.map { title =>
+      val stems = Tokenize.tokenizeAndStem(title)
+      val firstStem = stems.headOption.getOrElse("")
+      val (ti, tv) = idx.queryVector(stems)
+      val vec = ti.indices.map(k => inv(ti(k)) -> tv(k)).toMap
+      val wE9 = java.math.BigDecimal.valueOf(vec.getOrElse(firstStem, 0.0) * 1e9)
+        .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+      (title, stems.length, stems.mkString("|"), firstStem, vec.size, wE9)
+    }
   }
-
-  private def lit(s: String): String = "'" + s.replace("'", "''") + "'"
-
-  /** DuckDB-runnable oracle: pinned rows as a VALUES table with the same
-    * column names/types/order as [[Queries.textUdfsGolden]]. */
-  lazy val oracleValuesSql: String =
-    rows.map { case (t, n, ss, fs, c, w) =>
-      s"(${lit(t)}, $n, ${lit(ss)}, ${lit(fs)}, $c, $w)"
-    }.mkString(
-      "SELECT title, CAST(n_stems AS INTEGER) AS n_stems, stems_str, " +
-        "first_stem, CAST(tfidf_card AS INTEGER) AS tfidf_card, " +
-        "CAST(w_e9 AS BIGINT) AS w_e9 FROM (VALUES ",
-      ", ",
-      ") AS g(title, n_stems, stems_str, first_stem, tfidf_card, w_e9) " +
-        "ORDER BY title")
 }

@@ -5,7 +5,13 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    // Verify <sfDir> <outDir> [query …]: named queries restrict the dump
+    // and oracle_sql.json to those queries (a subset for tools/check.py)
+    val (sfDir, outDir, names) = (args(0), args(1), args.drop(2).toSet)
+    val queries = SparkEntry.queries
+    require(names.subsetOf(queries.keySet),
+      s"unknown queries: ${(names -- queries.keySet).mkString(" ")}")
+    def picked(name: String): Boolean = names.isEmpty || names(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -20,7 +26,7 @@ object Verify {
     // is dumped below.
     StdOracle.prepare(spark, sfDir)
     SfOracles.prepare(spark, sfDir)
-    SparkEntry.queries.foreach { case (name, fn) =>
+    queries.filter(q => picked(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -39,7 +45,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => picked(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -33,12 +33,11 @@ object NormalizeGolden {
     (9L, "São_Paulo—2024", "sao_paulo—2024"),
     (10L, "", ""))
 
-  private def lit(s: String): String = "'" + s.replace("'", "''") + "'"
-
   /** DuckDB-runnable oracle: the pinned expected strings as a VALUES table,
     * same column names and ordering as `Queries.normalizeGolden`. */
   lazy val oracleValuesSql: String =
-    pairs.map { case (id, _, expected) => s"($id, ${lit(expected)})" }
+    pairs.map { case (id, _, expected) =>
+      s"($id, ${graft.Golden.lit(expected)})" }
       .mkString(
         "SELECT CAST(id AS BIGINT) AS id, normalized FROM (VALUES ",
         ", ",

@@ -4,20 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
 
-/** Drift guard + distributed-vs-straight-line cross-check for the q125
-  * golden: the pure-JVM re-derivation must reproduce the checked-in
-  * fixture, and the DISTRIBUTED `Dedup.fuzzyClusters` plan must reproduce
-  * the same clustering over the same corpus. */
+/** Distributed-vs-straight-line cross-check for the q125 golden (its
+  * drift guard is `GoldenSpec`): the fixture encodes the constructed
+  * clusters, and the DISTRIBUTED `Dedup.fuzzyClusters` plan must
+  * reproduce the pure-JVM clustering over the same corpus. */
 class DedupGoldenSpec extends AnyFunSuite {
   import SparkSuiteBase.spark
 
-  test("pure-JVM recompute reproduces the pinned fixture") {
-    assert(DedupGolden.recompute == DedupGolden.rows,
-      "dedup golden drift — regenerate with GenDedupGolden and review")
-  }
-
   test("fixture encodes the constructed cluster structure") {
-    val cl = DedupGolden.rows.toMap
+    val cl = Golden.dedup.rows.toMap
     assert(cl(0L) == 0L && cl(1L) == 0L, "identical pair merges")
     assert(cl(2L) == 2L && cl(3L) == 2L && cl(4L) == 2L, "fuzzy triple merges")
     assert(cl(5L) == 5L && cl(6L) == 5L, "fuzzy pair merges")

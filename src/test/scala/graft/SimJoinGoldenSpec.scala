@@ -2,20 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drift guard + distributed-vs-straight-line cross-check for the q127
-  * golden: the JVM re-derivation must reproduce the checked-in fixture,
-  * and the DISTRIBUTED SimilarityJoin.topK plan must reproduce the same
-  * ranked rows (ranks, ids, aliases, categories AND e6 scores). */
+/** Distributed-vs-straight-line cross-check for the q127 golden (its
+  * drift guard is `GoldenSpec`): the DISTRIBUTED SimilarityJoin.topK plan
+  * must reproduce the pinned ranked rows (ranks, ids, aliases, categories
+  * AND e6 scores). */
 class SimJoinGoldenSpec extends AnyFunSuite {
   import SparkSuiteBase.spark
 
-  test("pure-JVM recompute reproduces the pinned fixture") {
-    assert(SimJoinGolden.recompute == SimJoinGolden.rows,
-      "simjoin golden drift — regenerate with GenSimJoinGolden and review")
-  }
-
   test("fixture shape: each title carries contiguous ranks, fallbacks score 0") {
-    val byTitle = SimJoinGolden.rows.groupBy(_._1)
+    val byTitle = Golden.simjoin.rows.groupBy(_._1)
     assert(byTitle.size == GoldenCorpus.titles.size)
     byTitle.foreach { case (t, rs) =>
       assert(rs.map(_._2).sorted == (1 to rs.length), s"rank gap for '$t'")
@@ -29,6 +24,6 @@ class SimJoinGoldenSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3),
         r.getString(4), r.getLong(5))).toSeq
-    assert(got == SimJoinGolden.rows)
+    assert(got == Golden.simjoin.rows)
   }
 }

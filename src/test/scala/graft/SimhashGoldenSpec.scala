@@ -4,18 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
 
-/** Drift guard + distributed-vs-brute-force cross-check for the q129
-  * golden (simhash near-dup pairs). */
+/** Distributed-vs-brute-force cross-check for the q129 golden (simhash
+  * near-dup pairs; its drift guard is `GoldenSpec`). */
 class SimhashGoldenSpec extends AnyFunSuite {
   import SparkSuiteBase.spark
 
-  test("pure-JVM brute-force recompute reproduces the pinned fixture") {
-    assert(SimhashGolden.recompute == SimhashGolden.rows,
-      "simhash golden drift — regenerate with GenSimhashGolden")
-  }
-
   test("fixture encodes bag-of-words invariance: all twins of doc 0 at distance 0") {
-    val zero = SimhashGolden.rows.filter(_._3 == 0).map { case (a, b, _) => (a, b) }.toSet
+    val zero = Golden.simhash.rows.filter(_._3 == 0).map { case (a, b, _) => (a, b) }.toSet
     Seq((0L, 1L), (0L, 2L), (0L, 7L), (1L, 2L), (1L, 7L), (2L, 7L))
       .foreach(p => assert(zero.contains(p), s"twin pair $p at distance 0"))
   }

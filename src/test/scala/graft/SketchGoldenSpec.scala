@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drift guard + engine-independent cross-checks for the q130 sketch
-  * golden: the EXACT columns of the fixture must match the straight-line
+/** Engine-independent cross-checks for the q130 sketch golden (its drift
+  * guard is `GoldenSpec`): the EXACT columns of the fixture must match the straight-line
   * JVM re-derivation, the approximate columns must sit inside their
   * published error bounds around that exact truth, every rank-window
   * boolean must be true, and the pinned estimates must be invariant to
@@ -14,26 +14,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class SketchGoldenSpec extends AnyFunSuite {
   import SparkSuiteBase.spark
 
-  private def run(): Seq[(String, Long, Long, Long, Boolean)] =
-    Queries.sketchGolden(spark, "").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getBoolean(4))).toSeq
-
-  test("query reproduces the pinned fixture") {
-    assert(run() == SketchGolden.rows,
-      "sketch golden drift — regenerate with GenSketchGolden and review")
-  }
-
   test("fixture's exact columns match the pure-JVM re-derivation") {
     val exact = SketchGolden.recomputeExact.map { case (g, n, _, _) => g -> n }.toMap
-    SketchGolden.rows.foreach { case (g, exactUsers, _, _, inWindow) =>
+    Golden.sketch.rows.foreach { case (g, exactUsers, _, _, inWindow) =>
       assert(exact(g) == exactUsers, s"group $g exact distinct")
       assert(inWindow, s"group $g approx_percentile outside its rank window")
     }
   }
 
   test("approximate columns sit inside their error bounds") {
-    SketchGolden.rows.foreach { case (g, exact, hll, acd, _) =>
+    Golden.sketch.rows.foreach { case (g, exact, hll, acd, _) =>
       // lgK=12 HLL: RSE ≈ 1.04/sqrt(2^12) ≈ 1.6%; acd rsd requested 2%.
       // 5% ≈ 3σ — a fixture outside this is a bug, not bad luck.
       assert(math.abs(hll - exact).toDouble / exact < 0.05, s"group $g hll $hll vs $exact")
@@ -62,7 +52,7 @@ class SketchGoldenSpec extends AnyFunSuite {
       val got = Queries.sketchGoldenOn(spark, layout).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getBoolean(4))).toSeq
-      assert(got == SketchGolden.rows, s"layout ${layout.rdd.getNumPartitions}")
+      assert(got == Golden.sketch.rows, s"layout ${layout.rdd.getNumPartitions}")
     }
   }
 }

@@ -2,36 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TitleStandardizer
-import graft.text.Tokenize
-
-/** Drift guard for the q121 golden fixture: the live text-UDF pipeline
-  * (tokenize+stem, TF-IDF query vector) must reproduce every pinned row
-  * of `text_udfs_golden_snapshot.tsv`. A stemmer/vocab/idf change that
-  * alters any output fails here before the driver's oracle does. */
+/** Shape checks for the q121 golden fixture
+  * `text_udfs_golden_snapshot.tsv`; its drift guard (the live text-UDF
+  * pipeline reproduces every pinned row) is `GoldenSpec`. */
 class TextUdfsGoldenSpec extends AnyFunSuite {
 
-  test("live text-UDF pipeline reproduces every pinned golden row") {
-    val idx = TitleStandardizer.index
-    val inv = idx.idxToTerm
-    val live = GoldenCorpus.titles.map { title =>
-      val stems = Tokenize.tokenizeAndStem(title)
-      val firstStem = stems.headOption.getOrElse("")
-      val (ti, tv) = idx.queryVector(stems)
-      val vec = ti.indices.map(k => inv(ti(k)) -> tv(k)).toMap
-      val wE9 = java.math.BigDecimal.valueOf(vec.getOrElse(firstStem, 0.0) * 1e9)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue
-      (title, stems.length, stems.mkString("|"), firstStem, vec.size, wE9)
-    }
-    assert(live.size == TextUdfsGolden.rows.size)
-    live.zip(TextUdfsGolden.rows).foreach { case (l, p) =>
-      assert(l == p, s"golden drift at title '${p._1}'")
-    }
-  }
-
   test("golden fixture is well-formed (non-empty stems, positive weights)") {
-    assert(TextUdfsGolden.rows.nonEmpty)
-    TextUdfsGolden.rows.foreach { case (title, nStems, stemsStr, firstStem, card, wE9) =>
+    assert(Golden.textUdfs.rows.nonEmpty)
+    Golden.textUdfs.rows.foreach { case (title, nStems, stemsStr, firstStem, card, wE9) =>
       assert(nStems > 0, s"'$title' has no stems")
       assert(stemsStr.split('|').length == nStems)
       assert(firstStem.nonEmpty)
