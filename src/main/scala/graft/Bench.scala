@@ -63,8 +63,9 @@ object Bench {
     // Warm the JVM once (codegen, parquet reader, shuffle machinery) so the
     // per-query numbers measure steady-state throughput, not first-query
     // JIT compilation. Uses the cheapest real query; not counted.
-    SparkEntry.queries.toSeq.sortBy(_._1).headOption.foreach { case (n, fn) =>
-      profile.run(n, "warmup")(fn(spark, sfDir)) }
+    val byName = SparkEntry.registry.sortBy(_.name)
+    byName.headOption.foreach(q =>
+      profile.run(q.name, "warmup")(q.build(spark, sfDir)))
     // Failed runs must never masquerade as timings (r14 verdict: the 2 KB
     // driver tail window drops stderr, so a caught error looked like a
     // 17 s regression). Every once() failure lands here and is emitted as
@@ -82,23 +83,16 @@ object Bench {
     val retimeUnder = sys.env.getOrElse("SPARK_GRAFT_RETIME_UNDER",
       "Infinity").toDouble
     // construct + exec of one run (Profile.run: the query function,
-    // then a noop write of its frame)
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        phase: String): Double = {
-      val run = profile.run(name, phase)(fn(spark, sfDir))
+    // then a noop write of its frame); a failed run lands in errs
+    def checked(q: SparkEntry.Query, run: graft.tools.Profile.Run) = {
       run.error.foreach { e =>
-        System.err.println(s"[bench] $name failed: $e")
-        errs += name.takeWhile(_ != '_')
+        System.err.println(s"[bench] ${q.name} failed: $e")
+        errs += q.id
       }
-      run.seconds
+      run
     }
-    val byName = SparkEntry.queries.toSeq.sortBy(_._1)
-    byName.foreach { case (name, fn) =>
-      if (layoutBacked(name.takeWhile(_ != '_'))) {
-        val tw = once(name, fn, "build")
-        System.err.println(f"[bench] warmup(build) $name ${tw}%.3fs")
-      }
-    }
+    def once(q: SparkEntry.Query, phase: String): Double =
+      checked(q, profile.run(q.name, phase)(q.build(spark, sfDir))).seconds
     // Steady-to-steady round-over-round comparison (VERDICT r7 directive:
     // never again mix single-shot and steady methodologies in the delta).
     // The previous round's steady map is read from the newest BENCH_r*.json
@@ -133,26 +127,35 @@ object Bench {
     // "noise_adjudicated" instead. ~10 s of extra wall per flagged
     // query, zero when the round is clean.
     val adjudicated = scala.collection.mutable.LinkedHashSet.empty[String]
-    val timed = byName.map { case (name, fn) =>
-      val q = name.takeWhile(_ != '_')
-      val t1 = once(name, fn, "first")
+    // Layout-backed queries (derived lakes, persisted index families,
+    // streaming replays through Queries.cachedLayout) would fold their
+    // one-time layout build into the first run no matter how slow it is
+    // (BENCH_r14 recorded q132's 17 s streaming-replay build as its
+    // steady number). Profile.firstRun records a first run that touched
+    // a layout as `build` and runs the query again, and such a query is
+    // always retimed, so both timed runs measure the steady read path.
+    val timed = byName.map { q =>
+      val first = checked(q,
+        profile.firstRun(q.name, "first")(q.build(spark, sfDir)))
+      val t1 = first.seconds
       var runs: List[Double] = List(t1)
-      if (t1 < retimeUnder || layoutBacked(q)) runs ::= once(name, fn, "retime")
+      if (t1 < retimeUnder || first.touchedLayout) runs ::= once(q, "retime")
       var steady = runs.min
-      prevSteady.get(q).foreach { p =>
+      prevSteady.get(q.id).foreach { p =>
         if (steady - p > 0.3) {
-          (1 to 3).foreach(_ => runs ::= once(name, fn, "adjudicate"))
+          (1 to 3).foreach(_ => runs ::= once(q, "adjudicate"))
           val sorted = runs.sorted
           val median = sorted(sorted.length / 2)
-          System.err.println(f"[bench] retime $name: steady ${steady}%.3fs " +
+          System.err.println(f"[bench] retime ${q.name}: steady ${steady}%.3fs " +
             f"vs prev ${p}%.3fs — ${runs.length} reps, median ${median}%.3fs")
-          if (median - p <= 0.3) adjudicated += q
+          if (median - p <= 0.3) adjudicated += q.id
           steady = median
         }
       }
-      (name, t1, steady)
+      (q, t1, steady)
     }
-    val results = timed.map { case (n, _, s) => n -> s }.toMap
+    // keyed by qNN id, the JSON key
+    val results = timed.map { case (q, _, s) => q.id -> s }.toMap
     // The driver stores only the final ~2000 chars of output; a 64-query map
     // with full names and 9-digit values overflows that window and the JSON
     // head gets truncated (BENCH_r03 arrived unparseable). Keys are therefore
@@ -173,22 +176,20 @@ object Bench {
         s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
       else s
     }
-    timed.foreach { case (k, t1, s) =>
-      val d = prevSteady.get(k.takeWhile(_ != '_'))
+    timed.foreach { case (q, t1, s) =>
+      val d = prevSteady.get(q.id)
         .map(p => s" prev=${f(p)}s delta=${f(s - p)}s").getOrElse("")
-      System.err.println(s"[bench] $k first=${f(t1)}s steady=${f(s)}s$d") }
-    val qs = results.map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + f(v) }
+      System.err.println(s"[bench] ${q.name} first=${f(t1)}s steady=${f(s)}s$d") }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
-    val noise = timed.map { case (n, t1, s) => (n.takeWhile(_ != '_'), t1 - s) }
+    val noise = timed.map { case (q, t1, s) => (q.id, t1 - s) }
       .filter(_._2 > 0.15).sortBy(-_._2).take(8)
       .map { case (k, d) => "\"" + k + "\":" + f(d) }.mkString("{", ",", "}")
-    val regress = timed.map { case (n, _, s) =>
-        val q = n.takeWhile(_ != '_')
-        (q, s - prevSteady.getOrElse(q, s))
+    val regress = timed.map { case (q, _, s) =>
+        (q.id, s - prevSteady.getOrElse(q.id, s))
       }.filter(_._2 > 0.3).sortBy(-_._2).take(5)
       .map { case (k, d) => "\"" + k + "\":" + f(d) }.mkString("{", ",", "}")
-    val prevTotal = timed.flatMap { case (n, _, _) =>
-      prevSteady.get(n.takeWhile(_ != '_')) }.sum
+    val prevTotal = timed.flatMap { case (q, _, _) => prevSteady.get(q.id) }.sum
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Hard guard on the driver's ~2000-char tail window: shed detail in
     // stages rather than let the JSON head get truncated (the BENCH_r03
@@ -200,16 +201,15 @@ object Bench {
     // — a compact vsPrev (1-decimal prev total, 2-decimal regress, top
     // 4, short sf) survives down to the last rung.
     def qsMap(dec: Int): String = results
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fTrim(v, dec) }
+      .map { case (k, v) => "\"" + k + "\":" + fTrim(v, dec) }
       .mkString("{", ",", "}")
     // prev_steady_total covers only the shared queries (new queries have no
     // prev number), so value - prev_steady_total is NOT the round delta when
     // the surface grew — the per-query regress map is the honest signal.
     def f1(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val regressShort = timed.map { case (n, _, s) =>
-        val q = n.takeWhile(_ != '_')
-        (q, s - prevSteady.getOrElse(q, s))
+    val regressShort = timed.map { case (q, _, s) =>
+        (q.id, s - prevSteady.getOrElse(q.id, s))
       }.filter(_._2 > 0.3).sortBy(-_._2).take(4)
       .map { case (k, d) => "\"" + k + "\":" + fTrim(d, 2) }
       .mkString("{", ",", "}")
@@ -238,7 +238,7 @@ object Bench {
       val big = results.filter(_._2 >= cut)
       val small = results.filter(_._2 < cut)
       val bigMap = big.map { case (k, v) =>
-          "\"" + k.takeWhile(_ != '_') + "\":" + fTrim(v, 1) }
+          "\"" + k + "\":" + fTrim(v, 1) }
         .mkString("{", ",", "}")
       val adjN =
         if (adjudicated.isEmpty) "" else s""","adj_n":${adjudicated.size}"""
@@ -265,7 +265,7 @@ object Bench {
         val big = results.filter(_._2 >= 0.25)
         val small = results.filter(_._2 < 0.25)
         val bigMap = big.map { case (k, v) =>
-            "\"" + k.takeWhile(_ != '_') + "\":" + fTrim(v, 1) }
+            "\"" + k + "\":" + fTrim(v, 1) }
           .mkString("{", ",", "}")
         // the adjudication marker in its compact form (one comma string
         // — it explains a clean regress map, so it outranks per-query
@@ -313,23 +313,4 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Queries that build a cached one-time layout on first touch (derived
-    * lakes, persisted index families, streaming replays through
-    * Queries.cachedLayout), keyed by their qNN prefix. Their first run
-    * would otherwise fold that setup into the timed run no matter how
-    * slow it is (BENCH_r14 recorded q132's 17 s one-time streaming-replay
-    * build as its steady number), so the bench builds every such layout
-    * in an untimed warmup pass and both timed runs measure the steady
-    * read path. q84 and q188–q192 joined the set in the r17 optimization
-    * round: q84's bucketed-table writes moved under cachedLayout (the
-    * join is the operator under test), and the feed/consume queries
-    * (q188–q192) replay their ingest histories at layout time. */
-  private[graft] val layoutBacked = Set("q84", "q104", "q112", "q123",
-    "q131", "q132",
-    "q154", "q155", "q156", "q157", "q158", "q159", "q160", "q161",
-    "q162", "q163", "q164", "q165", "q166", "q167", "q168", "q169",
-    "q170", "q171", "q172", "q173", "q174", "q175", "q176", "q177",
-    "q178", "q179", "q180", "q181", "q182", "q183", "q184", "q185",
-    "q186", "q187", "q188", "q189", "q190", "q191", "q192")
 }

@@ -592,416 +592,304 @@ object SfOracles {
       p: (Int, Long, Long, Long, Long) =>
         s"(${p._1}, ${p._2}, ${p._3}, ${p._4}, ${p._5})" }
 
-  /** Oracle SQL, same column names/ordering as the Spark side. */
-  def oracles: Map[String, String] = {
-    val m = oraclesBase
-    // q192: the STACK-TAG hybrid — q184's "serve yesterday's stack"
-    // with both legs addressed by ONE tagStack name instead of
-    // per-index commit depths; the resolved states are identical by
-    // construction, so the oracle is q184's verbatim
-    m + ("q192_hybrid_rrf_stack_tag" -> m("q184_hybrid_rrf_tt"))
-  }
+  /** The ranked kNN projection every LSH and IVF mirror ends in. */
+  private def knnRanked(cte: String, rel: String): String =
+    s"""WITH $cte
+       |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
+       |       CAST(nid AS BIGINT) AS nid, score
+       |FROM $rel ORDER BY qid, rnk""".stripMargin
 
-  private def oraclesBase: Map[String, String] = Map(
-    "q35_dedup_fuzzy" ->
-      s"""WITH $fuzzyCte
-         |SELECT d.doc_id, CAST(f.cluster_id AS BIGINT) AS cluster_id
-         |FROM documents d JOIN fz f ON f.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "q36_dedup_simhash" ->
-      s"""WITH $simhashCte
-         |SELECT d.doc_id, s.simhash
-         |FROM documents d JOIN sh s ON s.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "q37_ngram_jaccard" ->
-      s"""WITH $jaccardCte
-         |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b, jaccard
-         |FROM jc ORDER BY jaccard DESC, id_a, id_b""".stripMargin,
-    "q38_knn_lsh" ->
-      s"""WITH $lshCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM lk ORDER BY qid, rnk""".stripMargin,
-    "q45_text_udfs" ->
-      s"""WITH $textCte
-         |SELECT d.doc_id, m.n_stems, m.stems_hash, m.tfidf_card,
-         |       m.first_stem_weight, m.first_stem
-         |FROM documents d JOIN tm m ON m.title = substr(d.text, 1, 40)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q50_embedding_dedup_clusters" ->
-      s"""WITH $nearDupCte
-         |SELECT e.vec_id, CAST(n.cluster_id AS BIGINT) AS cluster_id
-         |FROM embeddings e JOIN nd n ON n.vec_id = e.vec_id
-         |ORDER BY e.vec_id""".stripMargin,
-    // q46: one row per document; titles with no scored candidate fall back
-    // to (rnk 1, alias 0), matching the query wrapper's left-join coalesce
-    "q46_similarity_join_generic" ->
-      s"""WITH $simGenCte
-         |SELECT d.doc_id, CAST(1 AS INTEGER) AS rnk,
-         |       CAST(COALESCE(g.alias_id, 0) AS BIGINT) AS alias_id
-         |FROM documents d LEFT JOIN sg g ON g.title = substr(d.text, 1, 40)
-         |ORDER BY d.doc_id""".stripMargin,
-    // q49: only documents whose title clears the threshold emit a row
-    "q49_similarity_join_threshold" ->
-      s"""WITH $simThrCte
-         |SELECT d.doc_id, CAST(1 AS INTEGER) AS rnk,
-         |       CAST(g.alias_id AS BIGINT) AS alias_id
-         |FROM documents d JOIN st g ON g.title = substr(d.text, 1, 40)
-         |ORDER BY d.doc_id""".stripMargin,
-    // q42: IVF kNN — oracle-able since round 9's driver-side Lloyd loop
-    // (ascending-id mean folds) made the whole pipeline deterministic
-    "q42_knn_ivf" ->
-      s"""WITH $ivfCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM iv ORDER BY qid, rnk""".stripMargin,
-    // q158: the SAME mirror rows as q42 — the persisted IVF index must
-    // rank bit-identically to the in-session form (same deterministic
-    // quantizer, same assignment, same scoring tree)
-    "q158_knn_ivf_index" ->
-      s"""WITH $ivfCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM iv ORDER BY qid, rnk""".stripMargin,
-    // q160: IVF index APPEND — the quantizer stays the build half's
-    // (even vec_ids; serving never retrains per batch), the appended
-    // odd-id vectors join the cell table; the mirror replays exactly
-    // that contract (train on evens, assign/score all)
-    "q160_knn_ivf_append" ->
-      s"""WITH $ivfAppCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM iva ORDER BY qid, rnk""".stripMargin,
-    // q168: the SAME mirror rows as q160 — streaming micro-batch
-    // appends to the frozen quantizer must neither retrain nor lose a
-    // vector
-    // q181: IVF time travel across the append commit — the probe must
-    // serve the BUILD-TIME index exactly (even-trained quantizer, even
-    // candidates; the appended odds unseen via the file manifest)
-    "q181_knn_ivf_tt_append" ->
-      s"""WITH $ivfTtCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM ivt ORDER BY qid, rnk""".stripMargin,
-    "q168_knn_ivf_append_stream" ->
-      s"""WITH $ivfAppCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM iva ORDER BY qid, rnk""".stripMargin,
-    // q163: the SAME mirror rows as q160 — compacting the grown cell
-    // directories is pure layout maintenance; ranking must not move
-    "q163_knn_ivf_compact" ->
-      s"""WITH $ivfAppCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM iva ORDER BY qid, rnk""".stripMargin,
-    // q175: IVF recall@10 — the standard ANN quality metric as an
-    // oracle query: both legs (cell-pruned probe, exact brute top-10)
-    // are bit-identical mirrors of the Spark operators, so the per-query
-    // hit count is an exact integer
-    "q175_knn_ivf_recall" ->
-      s"""WITH $ivfRecallCte
-         |SELECT CAST(qid AS BIGINT) AS qid,
-         |       CAST(hits_at_10 AS BIGINT) AS hits_at_10
-         |FROM ivr ORDER BY qid""".stripMargin,
-    // q172: IVF index DELETE — tombstoned vectors leave every result
-    // immediately while the build-time quantizer (trained on the full
-    // corpus) keeps serving; the mirror replays exactly that split
-    // (train on all, candidates minus deletes)
-    "q172_knn_ivf_delete" ->
-      s"""WITH $ivfDelCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM ivd ORDER BY qid, rnk""".stripMargin,
-    // q173: metadata-FILTERED vector search — the predicate restricts
-    // candidates before scoring (each query's top-k ranks qualifying
-    // vectors only); the index itself is q158's, unmodified
-    "q173_knn_ivf_filtered" ->
-      s"""WITH $ivfFilCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM ivq ORDER BY qid, rnk""".stripMargin,
-    // q178: the SQ8-quantized serving probe — same deterministic
-    // quantizer and cell pruning as q158, but candidates scored as
-    // cosine(query, byte-quantized reconstruction); the mirror replays
-    // the quantization (exact per-dim min/max, half-up byte codes) and
-    // the Sq8Dot/Sq8NormSq left-to-right IEEE sums, so scores are
-    // bit-exact, no float tolerance
-    "q178_knn_ivf_sq8" ->
-      s"""WITH $ivfSq8Cte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM ivs ORDER BY qid, rnk""".stripMargin,
-    // q183: SQ8 time travel across the append commit — the quantized
-    // probe must serve the QUANTIZE-TIME (codes, params) pair exactly:
-    // even-trained quantizer, params from the even cells, even
-    // candidates only; the appended odd codes unseen via the file
-    // manifest, the params from the historical generation's sidecar
-    "q183_knn_ivf_sq8_tt" ->
-      s"""WITH $ivfSq8TtCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM ivst ORDER BY qid, rnk""".stripMargin,
-    // q164: the SAME mirror rows as q42/q158 — rebuild-after-append
-    // retrains on the whole corpus, so it must equal one fresh build
-    "q164_knn_ivf_rebuild" ->
-      s"""WITH $ivfCte
-         |SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS INTEGER) AS rnk,
-         |       CAST(nid AS BIGINT) AS nid, score
-         |FROM iv ORDER BY qid, rnk""".stripMargin,
-    // q169: hybrid retrieval — the BM25 leg is replayed end-to-end in
-    // SQL (the shared rank-unbounded CTE chain, cut at rank <= 10) and
-    // the IVF leg comes from the mirror; the reciprocal-rank fusion is
-    // pure BIGINT (1e9 // (60 + rank) — integer division both engines
-    // compute identically on positive values), so fused scores, tie
-    // order (rrf desc, doc_id asc) and the per-list count are all
-    // hash-pinned. The first oracle to exercise two persisted index
-    // families inside one query plan.
-    "q169_hybrid_rrf" ->
-      s"""WITH ${Bm25OracleSql.rankedCtes},
-         |$hybridIvfCte,
-         |u AS (
-         |  SELECT qid, doc_id AS id, 1000000000 // (60 + rank) AS rrf
-         |  FROM ranked WHERE rank <= 10
-         |  UNION ALL
-         |  SELECT qid, nid AS id, 1000000000 // (60 + rnk) AS rrf FROM hiv),
-         |fused AS (
-         |  SELECT qid, id, CAST(sum(rrf) AS BIGINT) AS rrf_score,
-         |         CAST(count(*) AS BIGINT) AS n_lists
-         |  FROM u GROUP BY qid, id),
-         |rr AS (
-         |  SELECT qid, id, rrf_score, n_lists,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |      ORDER BY rrf_score DESC, id) AS rank
-         |  FROM fused)
-         |SELECT qid, CAST(rank AS BIGINT) AS rank, id AS doc_id,
-         |       rrf_score, n_lists
-         |FROM rr WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // q180: FILTERED hybrid retrieval — q169's fusion with q173's
-    // metadata predicate on BOTH legs. The BM25 leg replays with the
-    // candidates-only exclusion (odd docs out of contrib, statistics
-    // index-wide — exactly topKAgainstIndex(candidateFilter)'s
-    // published semantics, the q170 delete placement); the IVF leg
-    // comes from the candidate-filtered mirror. Fusion identical to
-    // q169: pure-BIGINT RRF, ties on doc_id, n_lists pinned.
-    "q180_hybrid_rrf_filtered" ->
-      s"""WITH ${Bm25OracleSql.rankedCtesExcluding("p.doc_id % 2 = 1")},
-         |$hybridFilIvfCte,
-         |u AS (
-         |  SELECT qid, doc_id AS id, 1000000000 // (60 + rank) AS rrf
-         |  FROM ranked WHERE rank <= 10
-         |  UNION ALL
-         |  SELECT qid, nid AS id, 1000000000 // (60 + rnk) AS rrf FROM hfiv),
-         |fused AS (
-         |  SELECT qid, id, CAST(sum(rrf) AS BIGINT) AS rrf_score,
-         |         CAST(count(*) AS BIGINT) AS n_lists
-         |  FROM u GROUP BY qid, id),
-         |rr AS (
-         |  SELECT qid, id, rrf_score, n_lists,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |      ORDER BY rrf_score DESC, id) AS rank
-         |  FROM fused)
-         |SELECT qid, CAST(rank AS BIGINT) AS rank, id AS doc_id,
-         |       rrf_score, n_lists
-         |FROM rr WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // q184: TIME-TRAVEL hybrid retrieval — "serve yesterday's stack":
-    // q169's RRF fusion with BOTH legs read at their pre-append commits.
-    // The BM25 leg replays over the even build corpus (rankedCtesCorpus
-    // — statistics shrink WITH the corpus, the q179 time-travel
-    // semantics, cut at rank <= 10); the IVF leg comes from the
-    // build-time mirror (even-trained quantizer, even candidates,
-    // every-50th qids at k=10). Fusion identical to q169: pure-BIGINT
-    // RRF, ties on doc_id, n_lists pinned.
-    "q184_hybrid_rrf_tt" ->
-      s"""WITH ${Bm25OracleSql.rankedCtesCorpus("doc_id % 2 = 0")},
-         |$hybridTtIvfCte,
-         |u AS (
-         |  SELECT qid, doc_id AS id, 1000000000 // (60 + rank) AS rrf
-         |  FROM ranked WHERE rank <= 10
-         |  UNION ALL
-         |  SELECT qid, nid AS id, 1000000000 // (60 + rnk) AS rrf FROM htiv),
-         |fused AS (
-         |  SELECT qid, id, CAST(sum(rrf) AS BIGINT) AS rrf_score,
-         |         CAST(count(*) AS BIGINT) AS n_lists
-         |  FROM u GROUP BY qid, id),
-         |rr AS (
-         |  SELECT qid, id, rrf_score, n_lists,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |      ORDER BY rrf_score DESC, id) AS rank
-         |  FROM fused)
-         |SELECT qid, CAST(rank AS BIGINT) AS rank, id AS doc_id,
-         |       rrf_score, n_lists
-         |FROM rr WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // q185: the QUANTIZED "serve yesterday's stack" — q184's fusion
-    // with the vector leg served from the SQ8 replica at its
-    // quantize-time commit (the serving-economics deployment rolled
-    // back whole: lexical + quantized-vector legs both historical)
-    "q185_hybrid_rrf_tt_sq8" ->
-      s"""WITH ${Bm25OracleSql.rankedCtesCorpus("doc_id % 2 = 0")},
-         |$hybridTtSq8Cte,
-         |u AS (
-         |  SELECT qid, doc_id AS id, 1000000000 // (60 + rank) AS rrf
-         |  FROM ranked WHERE rank <= 10
-         |  UNION ALL
-         |  SELECT qid, nid AS id, 1000000000 // (60 + rnk) AS rrf FROM htsq),
-         |fused AS (
-         |  SELECT qid, id, CAST(sum(rrf) AS BIGINT) AS rrf_score,
-         |         CAST(count(*) AS BIGINT) AS n_lists
-         |  FROM u GROUP BY qid, id),
-         |rr AS (
-         |  SELECT qid, id, rrf_score, n_lists,
-         |    ROW_NUMBER() OVER (PARTITION BY qid
-         |      ORDER BY rrf_score DESC, id) AS rank
-         |  FROM fused)
-         |SELECT qid, CAST(rank AS BIGINT) AS rank, id AS doc_id,
-         |       rrf_score, n_lists
-         |FROM rr WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    // q141: Bloom decontamination — even the FALSE POSITIVES are pinned
-    // (the bitset is partitioning-invariant and byte-replayed locally)
-    "q141_bloom_decontamination" ->
-      s"""WITH $bloomCte
-         |SELECT d.doc_id, CAST(b.n_grams AS BIGINT) AS n_grams,
-         |       CAST(b.n_flagged AS BIGINT) AS n_flagged, b.contaminated
-         |FROM bl b JOIN documents d ON d.doc_id = b.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q142: BPE token counts + packing — joined to the live documents
-    // table so DuckDB verifies every packed id exists exactly once
-    "q142_bpe_packing" ->
-      s"""WITH $bpeCte
-         |SELECT d.doc_id, b.n_tokens_bpe, b.shard, b.pack
-         |FROM documents d JOIN bp b ON b.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q147: BPE token-id chunk digests — joined to the live documents
-    // table; every 32-id window's exact content is pinned by the md5
-    // chain the mirror re-derives
-    // q153: incremental fuzzy dedup — the mirror replays the whole
-    // candidate machine (exact-slice banding == the operator's hash
-    // buckets at this threshold), so even n_hist_dups counts are pinned
-    // q182: MinHash time travel across both ingest commits — the %3==1
-    // batch re-classified against the BUILD-TIME history alone
-    "q182_minhash_tt_ingest" ->
-      s"""WITH $incFuzzyTtCte
-         |SELECT d.doc_id, f.status, CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
-         |FROM documents d JOIN ift f ON f.doc_id = d.doc_id
-         |WHERE d.doc_id % 3 = 1
-         |ORDER BY d.doc_id""".stripMargin,
-    "q153_minhash_incremental" ->
-      s"""WITH $incFuzzyCte
-         |SELECT d.doc_id, f.status, CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
-         |FROM documents d JOIN ifz f ON f.doc_id = d.doc_id
-         |WHERE d.doc_id % 2 = 1
-         |ORDER BY d.doc_id""".stripMargin,
-    // q154: the SAME mirror rows as q153 — the persisted-index probe
-    // must classify bit-identically to the stateless form on the same
-    // odd/even split (the index only changes where history signatures
-    // are stored, never what they are)
-    "q154_minhash_index_incremental" ->
-      s"""WITH $incFuzzyCte
-         |SELECT d.doc_id, f.status, CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
-         |FROM documents d JOIN ifz f ON f.doc_id = d.doc_id
-         |WHERE d.doc_id % 2 = 1
-         |ORDER BY d.doc_id""".stripMargin,
-    // q171: MinHash index DELETE — the probe against the tombstoned
-    // index must classify exactly like a probe against a history that
-    // never held the deleted docs (the mirror replays that smaller
-    // history)
-    "q171_minhash_index_delete" ->
-      s"""WITH $incFuzzyDelCte
-         |SELECT d.doc_id, f.status, CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
-         |FROM documents d JOIN ifd f ON f.doc_id = d.doc_id
-         |WHERE d.doc_id % 2 = 1
-         |ORDER BY d.doc_id""".stripMargin,
-    // q157: the two-batch ingest loop — batch 2's rows are mirrored
-    // against history GROWN by batch 1, so cross-batch dup_history
-    // counts (impossible for any single stateless probe) are pinned
-    "q157_minhash_index_ingest" ->
-      s"""WITH $incFuzzy2Cte
-         |SELECT d.doc_id, CAST(f.batch AS INTEGER) AS batch, f.status,
-         |       CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
-         |FROM documents d JOIN if2 f ON f.doc_id = d.doc_id
-         |WHERE d.doc_id % 3 <> 0
-         |ORDER BY d.doc_id""".stripMargin,
-    // q165: the SAME mirror rows as q157 — the streaming wrapper
-    // (file-source micro-batches through foreachBatch) must add
-    // delivery, never change classification
-    "q165_minhash_ingest_stream" ->
-      s"""WITH $incFuzzy2Cte
-         |SELECT d.doc_id, CAST(f.batch AS INTEGER) AS batch, f.status,
-         |       CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
-         |FROM documents d JOIN if2 f ON f.doc_id = d.doc_id
-         |WHERE d.doc_id % 3 <> 0
-         |ORDER BY d.doc_id""".stripMargin,
-    // q162: the SAME mirror rows as q157 — compaction between the two
-    // ingest batches is pure layout maintenance, so batch 2's
-    // cross-batch classification must survive the rewrite untouched
-    "q162_minhash_index_compact" ->
-      s"""WITH $incFuzzy2Cte
-         |SELECT d.doc_id, CAST(f.batch AS INTEGER) AS batch, f.status,
-         |       CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
-         |FROM documents d JOIN if2 f ON f.doc_id = d.doc_id
-         |WHERE d.doc_id % 3 <> 0
-         |ORDER BY d.doc_id""".stripMargin,
-    "q147_bpe_chunk_ids" ->
-      s"""WITH $bpeIdCte
-         |SELECT d.doc_id, CAST(b.n_ids AS BIGINT) AS n_ids,
-         |       CAST(b.n_chunks AS BIGINT) AS n_chunks, b.chunks_md5
-         |FROM documents d JOIN bpi b ON b.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q143: per-lang linear count — the estimate (and every register
-    // bit) is partitioning-invariant, so the mirror VALUES pin it while
-    // DuckDB derives the exact distinct column itself
-    "q143_linear_count" ->
-      s"""WITH $lcCte
-         |SELECT d.lang, CAST(count(DISTINCT d.text) AS BIGINT) AS n_exact,
-         |       lc.n_set_bits, lc.est_distinct
-         |FROM documents d JOIN lc ON lc.lang = d.lang
-         |WHERE d.text IS NOT NULL
-         |GROUP BY d.lang, lc.n_set_bits, lc.est_distinct
-         |ORDER BY d.lang""".stripMargin,
-    // q140: the seed-trained quality classifier's e6 scores + keep flags
-    "q140_quality_classifier" ->
-      s"""WITH $qualityCte
-         |SELECT d.doc_id, CAST(q.score_e6 AS BIGINT) AS score_e6, q.keep
-         |FROM documents d JOIN qc q ON q.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q144: the hashed-n-gram classifier's gram counts + e6 scores
-    "q144_hashed_quality_classifier" ->
-      s"""WITH $hashedQualityCte
-         |SELECT d.doc_id, CAST(q.n_grams AS BIGINT) AS n_grams,
-         |       CAST(q.score_e6 AS BIGINT) AS score_e6, q.keep
-         |FROM documents d JOIN hq q ON q.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q148: the composed v4 pipeline — one row per SELECTED doc, joined
-    // to the live documents table so DuckDB verifies the winner set
-    "q148_pipeline_v4" ->
-      s"""WITH $pipelineV4Cte
-         |SELECT d.doc_id, CAST(p.score_e6 AS BIGINT) AS score_e6,
-         |       CAST(p.n_tokens_bpe AS BIGINT) AS n_tokens_bpe,
-         |       CAST(p.n_spans AS BIGINT) AS n_spans,
-         |       CAST(p.dup_tokens AS BIGINT) AS dup_tokens,
-         |       CAST(p.n_clean_bpe AS BIGINT) AS n_clean_bpe,
-         |       CAST(p.shard AS BIGINT) AS shard,
-         |       CAST(p.pack AS BIGINT) AS pack
-         |FROM documents d JOIN pv4 p ON p.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q149: held-out classifier evaluation — one integer confusion row
-    "q149_classifier_eval" ->
-      s"""WITH $hashedEvalCte
-         |SELECT CAST(n_eval AS BIGINT) AS n_eval, CAST(tp AS BIGINT) AS tp,
-         |       CAST(fp AS BIGINT) AS fp, CAST(fn AS BIGINT) AS fn,
-         |       CAST(tn AS BIGINT) AS tn,
-         |       CAST(precision_e6 AS BIGINT) AS precision_e6,
-         |       CAST(recall_e6 AS BIGINT) AS recall_e6,
-         |       CAST(accuracy_e6 AS BIGINT) AS accuracy_e6
-         |FROM hqe""".stripMargin,
-    // q139: the DSIR Gumbel-top-k selection, joined back to the live
-    // documents table so DuckDB verifies the selected ids exist
-    "q139_dsir_resample" ->
-      s"""WITH $dsirCte
-         |SELECT CAST(s.rnk AS INTEGER) AS rnk, d.doc_id,
-         |       CAST(s.n_feats AS BIGINT) AS n_feats,
-         |       CAST(s.logw_e4 AS BIGINT) AS logw_e4,
-         |       CAST(s.key_e4 AS BIGINT) AS key_e4
-         |FROM ds s JOIN documents d ON d.doc_id = s.doc_id
-         |ORDER BY s.rnk""".stripMargin)
+  /** The hybrids' fusion: the BM25 leg (`ranked`, cut at rank <= 10) and
+    * the IVF mirror `ivfRel` fused by reciprocal rank. The fusion is
+    * pure BIGINT (1e9 // (60 + rank) — integer division both engines
+    * compute identically on positive values), so fused scores, tie
+    * order (rrf desc, doc_id asc) and the per-list count are all
+    * hash-pinned. */
+  private def rrfFused(rankedCtes: String, ivfCte: String,
+      ivfRel: String): String =
+    s"""WITH $rankedCtes,
+       |$ivfCte,
+       |u AS (
+       |  SELECT qid, doc_id AS id, 1000000000 // (60 + rank) AS rrf
+       |  FROM ranked WHERE rank <= 10
+       |  UNION ALL
+       |  SELECT qid, nid AS id, 1000000000 // (60 + rnk) AS rrf FROM $ivfRel),
+       |fused AS (
+       |  SELECT qid, id, CAST(sum(rrf) AS BIGINT) AS rrf_score,
+       |         CAST(count(*) AS BIGINT) AS n_lists
+       |  FROM u GROUP BY qid, id),
+       |rr AS (
+       |  SELECT qid, id, rrf_score, n_lists,
+       |    ROW_NUMBER() OVER (PARTITION BY qid
+       |      ORDER BY rrf_score DESC, id) AS rank
+       |  FROM fused)
+       |SELECT qid, CAST(rank AS BIGINT) AS rank, id AS doc_id,
+       |       rrf_score, n_lists
+       |FROM rr WHERE rank <= 5 ORDER BY qid, rank""".stripMargin
+
+  /** The incremental MinHash classification of the probed `where` rows. */
+  private def minhashStatus(cte: String, rel: String, where: String): String =
+    s"""WITH $cte
+       |SELECT d.doc_id, f.status, CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
+       |FROM documents d JOIN $rel f ON f.doc_id = d.doc_id
+       |WHERE $where
+       |ORDER BY d.doc_id""".stripMargin
+
+  // Oracle SQL, one member per oracle, with the Spark side's column
+  // names and ordering. SparkEntry.registry points each query at its
+  // member; queries that must answer identically share one.
+
+  def fuzzyDedup: String =
+    s"""WITH $fuzzyCte
+       |SELECT d.doc_id, CAST(f.cluster_id AS BIGINT) AS cluster_id
+       |FROM documents d JOIN fz f ON f.doc_id = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  def simhashDedup: String =
+    s"""WITH $simhashCte
+       |SELECT d.doc_id, s.simhash
+       |FROM documents d JOIN sh s ON s.doc_id = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  def ngramJaccard: String =
+    s"""WITH $jaccardCte
+       |SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b, jaccard
+       |FROM jc ORDER BY jaccard DESC, id_a, id_b""".stripMargin
+
+  def knnLsh: String = knnRanked(lshCte, "lk")
+
+  def textUdfs: String =
+    s"""WITH $textCte
+       |SELECT d.doc_id, m.n_stems, m.stems_hash, m.tfidf_card,
+       |       m.first_stem_weight, m.first_stem
+       |FROM documents d JOIN tm m ON m.title = substr(d.text, 1, 40)
+       |ORDER BY d.doc_id""".stripMargin
+
+  def embeddingClusters: String =
+    s"""WITH $nearDupCte
+       |SELECT e.vec_id, CAST(n.cluster_id AS BIGINT) AS cluster_id
+       |FROM embeddings e JOIN nd n ON n.vec_id = e.vec_id
+       |ORDER BY e.vec_id""".stripMargin
+
+  /** q46: one row per document; titles with no scored candidate fall
+    * back to (rnk 1, alias 0), matching the query wrapper's left-join
+    * coalesce. */
+  def simJoinGeneric: String =
+    s"""WITH $simGenCte
+       |SELECT d.doc_id, CAST(1 AS INTEGER) AS rnk,
+       |       CAST(COALESCE(g.alias_id, 0) AS BIGINT) AS alias_id
+       |FROM documents d LEFT JOIN sg g ON g.title = substr(d.text, 1, 40)
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** q49: only documents whose title clears the threshold emit a row. */
+  def simJoinThreshold: String =
+    s"""WITH $simThrCte
+       |SELECT d.doc_id, CAST(1 AS INTEGER) AS rnk,
+       |       CAST(g.alias_id AS BIGINT) AS alias_id
+       |FROM documents d JOIN st g ON g.title = substr(d.text, 1, 40)
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** IVF kNN — oracle-able since round 9's driver-side Lloyd loop
+    * (ascending-id mean folds) made the whole pipeline deterministic. */
+  def ivf: String = knnRanked(ivfCte, "iv")
+
+  /** IVF index APPEND: the quantizer stays the build half's (even
+    * vec_ids; serving never retrains per batch), the appended odd-id
+    * vectors join the cell table; the mirror replays exactly that
+    * contract (train on evens, assign/score all). */
+  def ivfAppend: String = knnRanked(ivfAppCte, "iva")
+
+  /** IVF time travel across the append commit: the probe must serve the
+    * BUILD-TIME index exactly (even-trained quantizer, even candidates;
+    * the appended odds unseen via the file manifest). */
+  def ivfTimeTravel: String = knnRanked(ivfTtCte, "ivt")
+
+  /** IVF recall@10, the standard ANN quality metric as an oracle query:
+    * both legs (cell-pruned probe, exact brute top-10) are bit-identical
+    * mirrors of the Spark operators, so the per-query hit count is an
+    * exact integer. */
+  def ivfRecall: String =
+    s"""WITH $ivfRecallCte
+       |SELECT CAST(qid AS BIGINT) AS qid,
+       |       CAST(hits_at_10 AS BIGINT) AS hits_at_10
+       |FROM ivr ORDER BY qid""".stripMargin
+
+  /** IVF index DELETE: tombstoned vectors leave every result immediately
+    * while the build-time quantizer (trained on the full corpus) keeps
+    * serving; the mirror replays exactly that split (train on all,
+    * candidates minus deletes). */
+  def ivfDelete: String = knnRanked(ivfDelCte, "ivd")
+
+  /** Metadata-FILTERED vector search: the predicate restricts candidates
+    * before scoring (each query's top-k ranks qualifying vectors only);
+    * the index itself is q158's, unmodified. */
+  def ivfFiltered: String = knnRanked(ivfFilCte, "ivq")
+
+  /** The SQ8-quantized serving probe: same deterministic quantizer and
+    * cell pruning as q158, but candidates scored as cosine(query,
+    * byte-quantized reconstruction); the mirror replays the quantization
+    * (exact per-dim min/max, half-up byte codes) and the
+    * Sq8Dot/Sq8NormSq left-to-right IEEE sums, so scores are bit-exact,
+    * no float tolerance. */
+  def ivfSq8: String = knnRanked(ivfSq8Cte, "ivs")
+
+  /** SQ8 time travel across the append commit: the quantized probe must
+    * serve the QUANTIZE-TIME (codes, params) pair exactly: even-trained
+    * quantizer, params from the even cells, even candidates only; the
+    * appended odd codes unseen via the file manifest, the params from
+    * the historical generation's sidecar. */
+  def ivfSq8TimeTravel: String = knnRanked(ivfSq8TtCte, "ivst")
+
+  /** Hybrid retrieval: the BM25 leg is replayed end-to-end in SQL (the
+    * shared rank-unbounded CTE chain) and the IVF leg comes from the
+    * mirror. The first oracle to exercise two persisted index families
+    * inside one query plan. */
+  def hybridRrf: String =
+    rrfFused(Bm25OracleSql.rankedCtes, hybridIvfCte, "hiv")
+
+  /** FILTERED hybrid retrieval: q169's fusion with q173's metadata
+    * predicate on BOTH legs. The BM25 leg replays with the
+    * candidates-only exclusion (odd docs out of contrib, statistics
+    * index-wide — exactly topKAgainstIndex(candidateFilter)'s published
+    * semantics, the q170 delete placement); the IVF leg comes from the
+    * candidate-filtered mirror. */
+  def hybridRrfFiltered: String =
+    rrfFused(Bm25OracleSql.rankedCtesExcluding("p.doc_id % 2 = 1"),
+      hybridFilIvfCte, "hfiv")
+
+  /** TIME-TRAVEL hybrid retrieval, "serve yesterday's stack": q169's
+    * fusion with BOTH legs read at their pre-append commits. The BM25 leg
+    * replays over the even build corpus (rankedCtesCorpus — statistics
+    * shrink WITH the corpus, the q179 time-travel semantics); the IVF leg
+    * comes from the build-time mirror (even-trained quantizer, even
+    * candidates, every-50th qids at k=10). */
+  def hybridRrfTimeTravel: String =
+    rrfFused(Bm25OracleSql.rankedCtesCorpus("doc_id % 2 = 0"),
+      hybridTtIvfCte, "htiv")
+
+  /** The QUANTIZED "serve yesterday's stack": q184's fusion with the
+    * vector leg served from the SQ8 replica at its quantize-time commit
+    * (the serving-economics deployment rolled back whole: lexical +
+    * quantized-vector legs both historical). */
+  def hybridRrfTimeTravelSq8: String =
+    rrfFused(Bm25OracleSql.rankedCtesCorpus("doc_id % 2 = 0"),
+      hybridTtSq8Cte, "htsq")
+
+  /** Bloom decontamination: even the FALSE POSITIVES are pinned (the
+    * bitset is partitioning-invariant and byte-replayed locally). */
+  def bloomDecontamination: String =
+    s"""WITH $bloomCte
+       |SELECT d.doc_id, CAST(b.n_grams AS BIGINT) AS n_grams,
+       |       CAST(b.n_flagged AS BIGINT) AS n_flagged, b.contaminated
+       |FROM bl b JOIN documents d ON d.doc_id = b.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** BPE token counts + packing, joined to the live documents table so
+    * DuckDB verifies every packed id exists exactly once. */
+  def bpePacking: String =
+    s"""WITH $bpeCte
+       |SELECT d.doc_id, b.n_tokens_bpe, b.shard, b.pack
+       |FROM documents d JOIN bp b ON b.doc_id = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** MinHash time travel across both ingest commits: the %3==1 batch
+    * re-classified against the BUILD-TIME history alone. */
+  def minhashTimeTravel: String =
+    minhashStatus(incFuzzyTtCte, "ift", "d.doc_id % 3 = 1")
+
+  /** Incremental fuzzy dedup: the mirror replays the whole candidate
+    * machine (exact-slice banding == the operator's hash buckets at this
+    * threshold), so even n_hist_dups counts are pinned. */
+  def minhashIncremental: String =
+    minhashStatus(incFuzzyCte, "ifz", "d.doc_id % 2 = 1")
+
+  /** MinHash index DELETE: the probe against the tombstoned index must
+    * classify exactly like a probe against a history that never held the
+    * deleted docs (the mirror replays that smaller history). */
+  def minhashDelete: String =
+    minhashStatus(incFuzzyDelCte, "ifd", "d.doc_id % 2 = 1")
+
+  /** The two-batch MinHash ingest loop: batch 2's rows are mirrored
+    * against history GROWN by batch 1, so cross-batch dup_history counts
+    * (impossible for any single stateless probe) are pinned. */
+  def minhashIngest: String =
+    s"""WITH $incFuzzy2Cte
+       |SELECT d.doc_id, CAST(f.batch AS INTEGER) AS batch, f.status,
+       |       CAST(f.n_hist_dups AS BIGINT) AS n_hist_dups
+       |FROM documents d JOIN if2 f ON f.doc_id = d.doc_id
+       |WHERE d.doc_id % 3 <> 0
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** BPE token-id chunk digests, joined to the live documents table;
+    * every 32-id window's exact content is pinned by the md5 chain the
+    * mirror re-derives. */
+  def bpeChunkIds: String =
+    s"""WITH $bpeIdCte
+       |SELECT d.doc_id, CAST(b.n_ids AS BIGINT) AS n_ids,
+       |       CAST(b.n_chunks AS BIGINT) AS n_chunks, b.chunks_md5
+       |FROM documents d JOIN bpi b ON b.doc_id = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** Per-lang linear count: the estimate (and every register bit) is
+    * partitioning-invariant, so the mirror VALUES pin it while DuckDB
+    * derives the exact distinct column itself. */
+  def linearCount: String =
+    s"""WITH $lcCte
+       |SELECT d.lang, CAST(count(DISTINCT d.text) AS BIGINT) AS n_exact,
+       |       lc.n_set_bits, lc.est_distinct
+       |FROM documents d JOIN lc ON lc.lang = d.lang
+       |WHERE d.text IS NOT NULL
+       |GROUP BY d.lang, lc.n_set_bits, lc.est_distinct
+       |ORDER BY d.lang""".stripMargin
+
+  /** The seed-trained quality classifier's e6 scores + keep flags. */
+  def qualityClassifier: String =
+    s"""WITH $qualityCte
+       |SELECT d.doc_id, CAST(q.score_e6 AS BIGINT) AS score_e6, q.keep
+       |FROM documents d JOIN qc q ON q.doc_id = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** The hashed-n-gram classifier's gram counts + e6 scores. */
+  def hashedQualityClassifier: String =
+    s"""WITH $hashedQualityCte
+       |SELECT d.doc_id, CAST(q.n_grams AS BIGINT) AS n_grams,
+       |       CAST(q.score_e6 AS BIGINT) AS score_e6, q.keep
+       |FROM documents d JOIN hq q ON q.doc_id = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** The composed v4 pipeline: one row per SELECTED doc, joined to the
+    * live documents table so DuckDB verifies the winner set. */
+  def pipelineV4: String =
+    s"""WITH $pipelineV4Cte
+       |SELECT d.doc_id, CAST(p.score_e6 AS BIGINT) AS score_e6,
+       |       CAST(p.n_tokens_bpe AS BIGINT) AS n_tokens_bpe,
+       |       CAST(p.n_spans AS BIGINT) AS n_spans,
+       |       CAST(p.dup_tokens AS BIGINT) AS dup_tokens,
+       |       CAST(p.n_clean_bpe AS BIGINT) AS n_clean_bpe,
+       |       CAST(p.shard AS BIGINT) AS shard,
+       |       CAST(p.pack AS BIGINT) AS pack
+       |FROM documents d JOIN pv4 p ON p.doc_id = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** Held-out classifier evaluation: one integer confusion row. */
+  def classifierEval: String =
+    s"""WITH $hashedEvalCte
+       |SELECT CAST(n_eval AS BIGINT) AS n_eval, CAST(tp AS BIGINT) AS tp,
+       |       CAST(fp AS BIGINT) AS fp, CAST(fn AS BIGINT) AS fn,
+       |       CAST(tn AS BIGINT) AS tn,
+       |       CAST(precision_e6 AS BIGINT) AS precision_e6,
+       |       CAST(recall_e6 AS BIGINT) AS recall_e6,
+       |       CAST(accuracy_e6 AS BIGINT) AS accuracy_e6
+       |FROM hqe""".stripMargin
+
+  /** The DSIR Gumbel-top-k selection, joined back to the live documents
+    * table so DuckDB verifies the selected ids exist. */
+  def dsirResample: String =
+    s"""WITH $dsirCte
+       |SELECT CAST(s.rnk AS INTEGER) AS rnk, d.doc_id,
+       |       CAST(s.n_feats AS BIGINT) AS n_feats,
+       |       CAST(s.logw_e4 AS BIGINT) AS logw_e4,
+       |       CAST(s.key_e4 AS BIGINT) AS key_e4
+       |FROM ds s JOIN documents d ON d.doc_id = s.doc_id
+       |ORDER BY s.rnk""".stripMargin
 }

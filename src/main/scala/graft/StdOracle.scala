@@ -67,27 +67,31 @@ object StdOracle {
       |  SELECT d.doc_id, m.title, m.std, d.lang
       |  FROM documents d JOIN std_map m ON m.title = substr(d.text, 1, 40))""".stripMargin
 
-  /** Oracle SQL for the five std-family queries, same column names and
-    * ordering as the Spark side ([[Queries.stdScan]] etc.). */
-  def oracles: Map[String, String] = Map(
-    "q30_std_scan" ->
-      s"""WITH $valuesCte, $docsCte
-         |SELECT doc_id, title, std FROM docs ORDER BY doc_id""".stripMargin,
-    "q31_std_group_count" ->
-      s"""WITH $valuesCte, $docsCte
-         |SELECT std, COUNT(*) AS n_docs, COUNT(DISTINCT lang) AS n_langs
-         |FROM docs GROUP BY std ORDER BY n_docs DESC, std ASC""".stripMargin,
-    "q32_std_filter" ->
-      s"""WITH $valuesCte, $docsCte
-         |SELECT doc_id, std FROM docs
-         |WHERE std LIKE '%Worker%'
-         |   OR std IN ('Data Strategist - Data Scientists', 'Poet - Writers and Authors')
-         |ORDER BY doc_id""".stripMargin,
-    "q33_std_category_rollup" ->
-      s"""WITH $valuesCte, $docsCte
-         |SELECT split_part(std, ' - ', 2) AS category, COUNT(*) AS n
-         |FROM docs GROUP BY 1 ORDER BY n DESC, category ASC""".stripMargin,
-    "q34_similarity_join" ->
-      s"""WITH $valuesCte, $docsCte
-         |SELECT doc_id, std FROM docs ORDER BY doc_id""".stripMargin)
+  /** Oracle SQL for the five std-family queries, one member each, with
+    * the Spark side's column names and ordering ([[Queries.stdScan]]
+    * etc.). */
+  def scan: String =
+    s"""WITH $valuesCte, $docsCte
+       |SELECT doc_id, title, std FROM docs ORDER BY doc_id""".stripMargin
+
+  def groupCount: String =
+    s"""WITH $valuesCte, $docsCte
+       |SELECT std, COUNT(*) AS n_docs, COUNT(DISTINCT lang) AS n_langs
+       |FROM docs GROUP BY std ORDER BY n_docs DESC, std ASC""".stripMargin
+
+  def filter: String =
+    s"""WITH $valuesCte, $docsCte
+       |SELECT doc_id, std FROM docs
+       |WHERE std LIKE '%Worker%'
+       |   OR std IN ('Data Strategist - Data Scientists', 'Poet - Writers and Authors')
+       |ORDER BY doc_id""".stripMargin
+
+  def categoryRollup: String =
+    s"""WITH $valuesCte, $docsCte
+       |SELECT split_part(std, ' - ', 2) AS category, COUNT(*) AS n
+       |FROM docs GROUP BY 1 ORDER BY n DESC, category ASC""".stripMargin
+
+  def similarityJoin: String =
+    s"""WITH $valuesCte, $docsCte
+       |SELECT doc_id, std FROM docs ORDER BY doc_id""".stripMargin
 }

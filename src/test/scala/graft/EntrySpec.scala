@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract smoke: entry() must run on a bare session (it registers
-  * its own functions) and return rows. */
+  * its own functions) and return rows; the query registry's keys are
+  * unique, and layout-backed queries are seen through their
+  * `cachedLayout` calls. */
 class EntrySpec extends AnyFunSuite {
-  import SparkSuiteBase.spark
+  import SparkSuiteBase.{spark, sfDir}
 
   test("entry() runs on a plain session and returns rows") {
     val df = SparkEntry.entry(spark)
@@ -13,15 +15,20 @@ class EntrySpec extends AnyFunSuite {
     assert(df.columns.toSet == Set("std", "n_docs", "n_langs"))
   }
 
-  test("every Bench.layoutBacked key is the qNN prefix of a registered " +
-      "query (a dead key silently drops a query from the warmup build)") {
-    val prefixes = SparkEntry.queries.keySet.map(_.takeWhile(_ != '_'))
-    val dead = Bench.layoutBacked -- prefixes
-    assert(dead.isEmpty, s"layoutBacked keys matching no query: $dead")
+  test("registry names and qNN ids are unique (a duplicate name would " +
+      "vanish from the derived maps, a duplicate id would merge bench JSON keys)") {
+    def dupes(xs: Seq[String]) = xs.diff(xs.distinct)
+    assert(dupes(SparkEntry.registry.map(_.name)).isEmpty)
+    assert(dupes(SparkEntry.registry.map(_.id)).isEmpty)
   }
 
-  test("every oracleSql key has a queries entry") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("constructing q104 calls cachedLayout; constructing q01 does not") {
+    def layoutCalls(name: String): Long = {
+      val before = Queries.layoutCalls
+      SparkEntry.queries(name)(spark, sfDir)
+      Queries.layoutCalls - before
+    }
+    assert(layoutCalls("q104_zorder_lake") > 0)
+    assert(layoutCalls("q01_scan_filter_project") == 0)
   }
 }

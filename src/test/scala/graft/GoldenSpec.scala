@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * every `*_snapshot.tsv` under `src/{main,test}/resources` must have
   * exactly one registered owner. Two snapshots also pin their size:
   * the example corpus (whose recompute re-reads its own title column)
-  * and the complete dictionary-corpus token domain. */
+  * and the complete dictionary-corpus token domain. The example corpus
+  * also pins its titles: an edited title whose `std` is rewritten to
+  * match passes the drift check, but not the title digest. */
 class GoldenSpec extends AnyFunSuite {
 
   private val pinnedSize = Map("example_corpus" -> 105, "corpus_stems" -> 4532)
@@ -28,6 +32,14 @@ class GoldenSpec extends AnyFunSuite {
       assert(drift.isEmpty, s"${g.name} golden drift — review, then " +
         s"`runMain graft.tools.Golden ${g.name}`\n${drift.take(20).mkString("\n")}")
     }
+  }
+
+  test("example_corpus: the title column matches its pinned SHA-256") {
+    val titles = Golden.exampleCorpus.rows.map(_._1).mkString("\n")
+    val sha = MessageDigest.getInstance("SHA-256").digest(titles.getBytes(UTF_8))
+      .map("%02x".format(_)).mkString
+    assert(sha == "836372ab1bcdc7b552decc594d20668ffa606b60bf0e13811251087542a1dc3c",
+      "the reference's example-corpus titles changed")
   }
 
   test("every *_snapshot.tsv under src/{main,test}/resources has exactly one registered owner") {

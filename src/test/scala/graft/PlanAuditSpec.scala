@@ -12,6 +12,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanAuditSpec extends AnyFunSuite {
   import SparkSuiteBase.{spark, sfDir}
 
+  /** Every registered query's executed plan, planned once and shared by
+    * the audits below. */
+  private lazy val plans: Map[String, String] = SparkEntry.registry.map(q =>
+    q.name -> q.build(spark, sfDir).queryExecution.executedPlan.toString).toMap
+
+  /** The registered queries whose plan matches `bad` and that are not in
+    * `allowed`; an allowlist entry naming no registered query fails. */
+  private def offenders(allowed: Set[String])(bad: String => Boolean) = {
+    val unknown = allowed -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"allowlist names no registered query: $unknown")
+    plans.toSeq.sortBy(_._1).collect {
+      case (name, plan) if bad(plan) && !allowed(name) => name
+    }
+  }
+
   /** Queries whose plan legitimately contains BroadcastNestedLoopJoin:
     * the nested-loop side is a broadcast probe set bounded by a constant
     * (vec_id < 10 / < 100), so work is O(corpus × probes) = one scan;
@@ -117,8 +132,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // q66: first-occurrence must be the map-side-combining aggregate, not
     // a window keyed by the chunk text (a viral chunk would pin every
     // occurrence to one reducer).
-    val q66 = SparkEntry.queries("q66_chunk_dedup")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q66 = plans("q66_chunk_dedup")
     assert(!q66.contains("Window"), s"q66 must not plan any window:\n$q66")
     // q68: ranks must come from the ONE materialized range slicing (the
     // operator's internal lineage cut — round-9 hazard: two evaluations
@@ -126,8 +140,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // orders and silently corrupt global ranks), and every rank/offset
     // window must be keyed by the slice id — never by the segment alone
     // over the raw rows.
-    val q68 = SparkEntry.queries("q68_quantiles_exact")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q68 = plans("q68_quantiles_exact")
     assert(q68.contains("Scan ExistingRDD") && q68.contains("pid#"),
       s"q68 must rank over the checkpointed slicing (pid column):\n$q68")
     assert(q68.contains("hashpartitioning(pid#"),
@@ -135,8 +148,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // q145: the token-budget cumsum must ride the SAME sharded machinery —
     // local windows keyed by the checkpointed slice id, never one global
     // empty-partition order window over the whole corpus.
-    val q145 = SparkEntry.queries("q145_token_budget_select")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q145 = plans("q145_token_budget_select")
     assert(q145.contains("Scan ExistingRDD") && q145.contains("pid#"),
       s"q145 must cumsum over the checkpointed slicing (pid column):\n$q145")
     assert(q145.contains("hashpartitioning(pid#"),
@@ -145,8 +157,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // checkpointed range slicing of the digest key — local row_numbers
     // keyed by the slice id plus driver offsets, never a global-order
     // single-task window over the corpus.
-    val q151 = SparkEntry.queries("q151_training_order_shuffle")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q151 = plans("q151_training_order_shuffle")
     assert(q151.contains("Scan ExistingRDD") && q151.contains("pid#"),
       s"q151 must rank over the checkpointed slicing (pid column):\n$q151")
     assert(q151.contains("hashpartitioning(pid#"),
@@ -157,8 +168,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // boilerplate gram's every occurrence to one reducer. The only
     // windows allowed are the per-doc gaps-and-islands (keyed by doc_id,
     // bounded by document length).
-    val q133 = SparkEntry.queries("q133_substring_dedup")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q133 = plans("q133_substring_dedup")
     assert(q133.contains("partial_count"),
       s"q133's gram count must combine map-side:\n$q133")
     assert(!q133.contains("windowspecdefinition(gram"),
@@ -167,8 +177,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // (TakeOrderedAndProject), never a global sort feeding the limit —
     // and the bucket-count aggregates must combine map-side (the hot
     // bucket absorbing the most common unigram collapses per partition).
-    val q139 = SparkEntry.queries("q139_dsir_resample")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q139 = plans("q139_dsir_resample")
     assert(q139.contains("TakeOrderedAndProject"),
       s"q139's top-k must be a distributed TakeOrdered:\n$q139")
     assert(q139.contains("partial_count") || q139.contains("partial_sum"),
@@ -177,37 +186,30 @@ class PlanAuditSpec extends AnyFunSuite {
     // exchange in the whole plan is the output ordering's range exchange
     // (no hashpartitioning shuffle anywhere; features + weight fold +
     // sigmoid + e6 cast all ride the scan).
-    val q140 = SparkEntry.queries("q140_quality_classifier")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q140 = plans("q140_quality_classifier")
     assert(!q140.contains("hashpartitioning"),
       s"q140 scoring must be shuffle-free (range exchange for output order only):\n$q140")
     // q144: same contract for the hashed-n-gram variant — the D bucket
     // weights ride the plan as an array literal and the gram fold is a
     // higher-order aggregate over the staged token array: no join, no
     // hashpartitioning exchange, no ScalaUDF in the scoring pass.
-    val q144 = SparkEntry.queries("q144_hashed_quality_classifier")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q144 = plans("q144_hashed_quality_classifier")
     assert(!q144.contains("hashpartitioning"),
       s"q144 scoring must be shuffle-free (range exchange for output order only):\n$q144")
     // q141: the Bloom probe is ONE map-side projection over the train
     // scan — no shuffle, no join of any kind (the filter rides the plan
     // as a literal); only the output ordering's range exchange remains.
-    val q141 = SparkEntry.queries("q141_bloom_decontamination")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val q141 = plans("q141_bloom_decontamination")
     assert(!q141.contains("hashpartitioning") && !q141.contains("Join"),
       s"q141 must be a joinless, shuffle-free probe:\n$q141")
   }
 
   test("no shipped query plans a cartesian product / unbounded nested-loop join") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-      val cartesian = plan.contains("CartesianProduct")
-      val bnlj = plan.contains("BroadcastNestedLoopJoin") && !boundedProbeBnlj(name)
-      if (cartesian || bnlj)
-        Some(s"$name: ${if (cartesian) "CartesianProduct" else "unlisted BroadcastNestedLoopJoin"}")
-      else None
-    }
-    assert(offenders.isEmpty, s"\n${offenders.mkString("\n")}")
+    val cartesian = offenders(Set.empty)(_.contains("CartesianProduct"))
+    assert(cartesian.isEmpty, s"CartesianProduct in: ${cartesian.mkString(", ")}")
+    val bnlj = offenders(boundedProbeBnlj)(_.contains("BroadcastNestedLoopJoin"))
+    assert(bnlj.isEmpty,
+      s"unlisted BroadcastNestedLoopJoin in: ${bnlj.mkString(", ")}")
   }
 
   /** Queries allowed to carry a ScalaUDF in their plan: the declared
@@ -240,12 +242,8 @@ class PlanAuditSpec extends AnyFunSuite {
     "q143_linear_count") // sketch-bytes popcount/estimate UDF over the 1-row-per-group register
 
   test("only declared UDF-bearing queries plan a ScalaUDF") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-      if (plan.contains("UDF") && !udfBearing(name)) Some(name) else None
-    }
-    assert(offenders.isEmpty,
-      s"unexpected ScalaUDF in: ${offenders.mkString(", ")}")
+    val udf = offenders(udfBearing)(_.contains("UDF"))
+    assert(udf.isEmpty, s"unexpected ScalaUDF in: ${udf.mkString(", ")}")
   }
 
   test("bm25 fanout gate: spread engages above the threshold, never below") {

@@ -64,6 +64,20 @@ class ProfileSpec extends AnyFunSuite {
     (runs, records, groupJobs, groupStages, tasksOfStage.toMap)
   }
 
+  test("firstRun records a run that touched a cached layout as build and runs it again") {
+    val profile = Profile.attach(spark)
+    def first(name: String) = profile.firstRun(name, "first")(
+      SparkEntry.queries(name)(spark, SparkSuiteBase.sfDir))
+    try {
+      assert(first("q104_zorder_lake").touchedLayout)
+      assert(!first("q01_scan_filter_project").touchedLayout)
+      ListenerBus.drain(spark)
+      assert(profile.records.map(r => (r.query, r.phase)) == Seq(
+        ("q104_zorder_lake", "build"), ("q104_zorder_lake", "first"),
+        ("q01_scan_filter_project", "first")))
+    } finally spark.sparkContext.removeSparkListener(profile)
+  }
+
   test("every job, stage and task lands in the record of the query that ran it") {
     val (_, records, groupJobs, groupStages, tasksOfStage) = fixture
     assert(records.keySet == queries.map(_._1).toSet)

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Shared local session for operator specs (one per forked test JVM). */
@@ -17,4 +21,11 @@ object SparkSuiteBase {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Deletes `p` and everything under it. */
+  def deleteTree(p: Path): Unit = {
+    val s = Files.walk(p)
+    try s.iterator.asScala.toVector.reverse.foreach(Files.delete)
+    finally s.close()
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -12,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rewritten in place under a new layout must be read under the new
   * schema, not the cached one. */
 class TablesSpec extends AnyFunSuite {
-  import SparkSuiteBase.spark
-
-  private def deleteTree(p: Path): Unit = {
-    val s = Files.walk(p)
-    try s.iterator.asScala.toVector.reverse.foreach(Files.delete)
-    finally s.close()
-  }
+  import SparkSuiteBase.{deleteTree, spark}
 
   test("events.parquet rewritten in place (naive micros -> int64 nanos) reads the new values") {
     import spark.implicits._
