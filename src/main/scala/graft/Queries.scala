@@ -47,23 +47,33 @@ object Queries {
     * invocations (bench warm-up + timed runs, multi-SF sweeps) reuse the
     * directory, and a shutdown hook removes every cached dir — no /tmp
     * leak across sweeps, and a benchmarked READ query no longer folds a
-    * full table write into its timing. Every call, hit or build, moves
-    * [[layoutCalls]]: Bench and graft.tools.Profile record a run that
-    * moved it as a layout build and run the query again for timing. */
-  private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+    * full table write into its timing. A layout read by several queries
+    * has one private definition here that owns its name, catalog table
+    * and writer; its callers never repeat them. The same map records
+    * the [[runOnce]] steps, which own no directory. Every call, hit or
+    * build, moves [[layoutCalls]]: Bench and graft.tools.Profile record
+    * a run that moved it as a layout build and run the query again for
+    * timing. */
+  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), Option[String]]()
   private val layoutCallCount = new java.util.concurrent.atomic.AtomicLong
   private[graft] def layoutCalls: Long = layoutCallCount.get
   private[graft] def layoutsBuilt: Int = layoutCache.size
+  /** Every cached layout and run-once step with its directory (`None`
+    * for a run-once step). */
+  private[graft] def layouts: Map[(String, String), Option[String]] = {
+    import scala.jdk.CollectionConverters._
+    layoutCache.asScala.toMap
+  }
   private lazy val layoutCleanupHook: Unit = {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      layoutCache.values.forEach { d =>
+      layoutCache.values.forEach(_.foreach { d =>
         scala.util.Try {
           java.nio.file.Files.walk(java.nio.file.Paths.get(d))
             .sorted(java.util.Comparator.reverseOrder())
             .forEach(p => java.nio.file.Files.deleteIfExists(p))
         }
-      }))
+      })))
   }
   private def cachedLayout(name: String, sfDir: String)(
       write: String => Unit): String = {
@@ -72,8 +82,16 @@ object Queries {
     layoutCache.computeIfAbsent((name, sfDir), { _ =>
       val dir = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
       write(dir)
-      dir
-    })
+      Some(dir)
+    }).get
+  }
+
+  /** Runs `step` — a one-time side effect on a cached layout of `sfDir`,
+    * such as tagging or quantizing an index in place — once per JVM per
+    * (`name`, `sfDir`), like [[cachedLayout]] but with no directory. */
+  private def runOnce(name: String, sfDir: String)(step: => Unit): Unit = {
+    layoutCallCount.incrementAndGet()
+    layoutCache.computeIfAbsent((name, sfDir), { _ => step; None })
   }
 
   /** Catalog-name suffix of the tables a layout of `sfDir` registers: a
@@ -1036,6 +1054,76 @@ object Queries {
       .orderBy($"qid", $"rnk")
   }
 
+  /** q158's IVF serving index over the whole embeddings corpus, shared
+    * by every query that probes it (q169, q173, q175, q178, q180).
+    * Returns its catalog table. */
+  private[graft] def ivfIndex(spark: SparkSession, sfDir: String): String = {
+    val tbl = s"g_ivfidx_${sfTag(sfDir)}"
+    cachedLayout("q158_ivfidx", sfDir) { d =>
+      Knn.writeIvfIndex(Tables(spark, sfDir, "embeddings"), "vec_id",
+        "embedding", tbl, s"$d/idx")
+    }
+    tbl
+  }
+
+  /** q160's IVF index: the even ids build it (training the quantizer),
+    * then the odd ids are appended to the existing cells. Shared with
+    * q181, q184 and q192. Returns its catalog table. */
+  private[graft] def ivfAppendIndex(spark: SparkSession,
+      sfDir: String): String = {
+    import spark.implicits._
+    val tbl = s"g_ivfapp_${sfTag(sfDir)}"
+    cachedLayout("q160_ivfapp", sfDir) { d =>
+      val emb = Tables(spark, sfDir, "embeddings")
+      Knn.writeIvfIndex(emb.filter($"vec_id" % 2 === 0), "vec_id",
+        "embedding", tbl, s"$d/idx")
+      Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
+        "embedding", tbl)
+    }
+    tbl
+  }
+
+  /** q183's SQ8 index: build on the even ids, quantize, then append the
+    * odd ids (codes grown under the frozen params). Shared with q185.
+    * Returns its catalog table. */
+  private def sq8TimeTravelIndex(spark: SparkSession, sfDir: String): String = {
+    import spark.implicits._
+    val tbl = s"g_sq8tt_${sfTag(sfDir)}"
+    cachedLayout("q183_sq8tt", sfDir) { d =>
+      val emb = Tables(spark, sfDir, "embeddings")
+      Knn.writeIvfIndex(emb.filter($"vec_id" % 2 === 0), "vec_id",
+        "embedding", tbl, s"$d/idx")
+      Knn.quantizeIvfIndex(spark, tbl)
+      Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
+        "embedding", tbl)
+    }
+    tbl
+  }
+
+  /** q157's MinHash ingest loop: `doc_id % 3 == 0` builds the index, then
+    * the `% 3 == 1` and `% 3 == 2` batches are each classified against
+    * the grown index and appended, their classifications written to
+    * `b1` and `b2` under the layout dir. Shared with q182. Returns the
+    * catalog table and the layout dir. */
+  private def minhashIngestIndex(spark: SparkSession,
+      sfDir: String): (String, String) = {
+    import spark.implicits._
+    val tbl = s"g_mhing_${sfTag(sfDir)}"
+    val dir = cachedLayout("q157_mhing", sfDir) { d =>
+      val docs = Tables(spark, sfDir, "documents")
+      graft.operators.Dedup.writeMinhashIndex(
+        docs.filter($"doc_id" % 3 === 0), "doc_id", "text",
+        tbl, s"$d/idx", numBuckets = 8)
+      graft.operators.Dedup.ingestAgainstIndex(
+          docs.filter($"doc_id" % 3 === 1), tbl, "doc_id", "text")
+        .write.mode("overwrite").parquet(s"$d/b1")
+      graft.operators.Dedup.ingestAgainstIndex(
+          docs.filter($"doc_id" % 3 === 2), tbl, "doc_id", "text")
+        .write.mode("overwrite").parquet(s"$d/b2")
+    }
+    (tbl, dir)
+  }
+
   /** q158: IVF kNN against the PERSISTED index — q42's search,
     * serving-shaped: the deterministic quantizer + cell assignments are
     * materialized once ([[graft.operators.Knn.writeIvfIndex]] —
@@ -1048,11 +1136,7 @@ object Queries {
   def knnIvfIndex(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
-    val tbl = s"g_ivfidx_${sfTag(sfDir)}"
-    cachedLayout("q158_ivfidx", sfDir) { d =>
-      Knn.writeIvfIndex(emb, "vec_id", "embedding", tbl, s"$d/idx")
-    }
-    Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10), tbl,
+    Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10), ivfIndex(spark, sfDir),
         "vec_id", "embedding", k = 5)
       .orderBy($"qid", $"rnk")
   }
@@ -1069,14 +1153,8 @@ object Queries {
   def knnIvfIndexAppend(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
-    val tbl = s"g_ivfapp_${sfTag(sfDir)}"
-    cachedLayout("q160_ivfapp", sfDir) { d =>
-      Knn.writeIvfIndex(emb.filter($"vec_id" % 2 === 0), "vec_id",
-        "embedding", tbl, s"$d/idx")
-      Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
-        "embedding", tbl)
-    }
-    Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10), tbl,
+    Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10),
+        ivfAppendIndex(spark, sfDir),
         "vec_id", "embedding", k = 5)
       .orderBy($"qid", $"rnk")
   }
@@ -1093,14 +1171,8 @@ object Queries {
       sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
-    val tbl = s"g_ivfapp_${sfTag(sfDir)}"
-    cachedLayout("q160_ivfapp", sfDir) { d =>
-      Knn.writeIvfIndex(emb.filter($"vec_id" % 2 === 0), "vec_id",
-        "embedding", tbl, s"$d/idx")
-      Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
-        "embedding", tbl)
-    }
-    Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10), tbl,
+    Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10),
+        ivfAppendIndex(spark, sfDir),
         "vec_id", "embedding", k = 5, asOfCommits = 1)
       .orderBy($"qid", $"rnk")
   }
@@ -1117,21 +1189,10 @@ object Queries {
   def minhashTimeTravelAcrossIngest(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables(spark, sfDir, "documents")
-    val tbl = s"g_mhing_${sfTag(sfDir)}"
-    cachedLayout("q157_mhing", sfDir) { d =>
-      graft.operators.Dedup.writeMinhashIndex(
-        docs.filter($"doc_id" % 3 === 0), "doc_id", "text",
-        tbl, s"$d/idx", numBuckets = 8)
-      graft.operators.Dedup.ingestAgainstIndex(
-          docs.filter($"doc_id" % 3 === 1), tbl, "doc_id", "text")
-        .write.mode("overwrite").parquet(s"$d/b1")
-      graft.operators.Dedup.ingestAgainstIndex(
-          docs.filter($"doc_id" % 3 === 2), tbl, "doc_id", "text")
-        .write.mode("overwrite").parquet(s"$d/b2")
-    }
+    val (tbl, _) = minhashIngestIndex(spark, sfDir)
     graft.operators.Dedup.minhashIncrementalAgainstIndex(
-        docs.filter($"doc_id" % 3 === 1), tbl, "doc_id", "text",
+        Tables(spark, sfDir, "documents").filter($"doc_id" % 3 === 1),
+        tbl, "doc_id", "text",
         asOfCommits = 2)
       .orderBy($"doc_id")
   }
@@ -1174,12 +1235,8 @@ object Queries {
   def knnIvfRecall(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
-    val tbl = s"g_ivfidx_${sfTag(sfDir)}"
-    cachedLayout("q158_ivfidx", sfDir) { d =>
-      Knn.writeIvfIndex(emb, "vec_id", "embedding", tbl, s"$d/idx")
-    }
     val queries = emb.filter($"vec_id" < 10)
-    val ivf = Knn.ivfTopKAgainstIndex(queries, tbl,
+    val ivf = Knn.ivfTopKAgainstIndex(queries, ivfIndex(spark, sfDir),
       "vec_id", "embedding", k = 10).select($"qid", $"nid")
     val exact = Knn.bruteForceTopK(emb, queries,
       "vec_id", "embedding", k = 10).select($"qid", $"nid")
@@ -1206,13 +1263,8 @@ object Queries {
   def knnIvfSq8(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
-    val tbl = s"g_ivfidx_${sfTag(sfDir)}"
-    cachedLayout("q158_ivfidx", sfDir) { d =>
-      Knn.writeIvfIndex(emb, "vec_id", "embedding", tbl, s"$d/idx")
-    }
-    cachedLayout("q178_ivfsq8", sfDir) { _ =>
-      Knn.quantizeIvfIndex(spark, tbl)
-    }
+    val tbl = ivfIndex(spark, sfDir)
+    runOnce("q178_ivfsq8", sfDir) { Knn.quantizeIvfIndex(spark, tbl) }
     Knn.ivfTopKAgainstIndexSq8(emb.filter($"vec_id" < 10), tbl,
         "vec_id", "embedding", k = 5)
       .orderBy($"qid", $"rnk")
@@ -1235,15 +1287,8 @@ object Queries {
   def knnIvfSq8TimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
-    val tbl = s"g_sq8tt_${sfTag(sfDir)}"
-    cachedLayout("q183_sq8tt", sfDir) { d =>
-      Knn.writeIvfIndex(emb.filter($"vec_id" % 2 === 0), "vec_id",
-        "embedding", tbl, s"$d/idx")
-      Knn.quantizeIvfIndex(spark, tbl)
-      Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
-        "embedding", tbl)
-    }
-    Knn.ivfTopKAgainstIndexSq8(emb.filter($"vec_id" < 10), tbl,
+    Knn.ivfTopKAgainstIndexSq8(emb.filter($"vec_id" < 10),
+        sq8TimeTravelIndex(spark, sfDir),
         "vec_id", "embedding", k = 5, asOfCommits = 1)
       .orderBy($"qid", $"rnk")
   }
@@ -1259,11 +1304,7 @@ object Queries {
   def knnIvfFiltered(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
-    val tbl = s"g_ivfidx_${sfTag(sfDir)}"
-    cachedLayout("q158_ivfidx", sfDir) { d =>
-      Knn.writeIvfIndex(emb, "vec_id", "embedding", tbl, s"$d/idx")
-    }
-    Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10), tbl,
+    Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10), ivfIndex(spark, sfDir),
         "vec_id", "embedding", k = 5,
         candidateFilter = Some(col("id") % 2 === 0))
       .orderBy($"qid", $"rnk")
@@ -3190,19 +3231,7 @@ object Queries {
     * mirror replays batch 1 vs history and batch 2 vs history∪batch 1. */
   def minhashIndexIngestLoop(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables(spark, sfDir, "documents")
-    val tbl = s"g_mhing_${sfTag(sfDir)}"
-    val dir = cachedLayout("q157_mhing", sfDir) { d =>
-      graft.operators.Dedup.writeMinhashIndex(
-        docs.filter($"doc_id" % 3 === 0), "doc_id", "text",
-        tbl, s"$d/idx", numBuckets = 8)
-      graft.operators.Dedup.ingestAgainstIndex(
-          docs.filter($"doc_id" % 3 === 1), tbl, "doc_id", "text")
-        .write.mode("overwrite").parquet(s"$d/b1")
-      graft.operators.Dedup.ingestAgainstIndex(
-          docs.filter($"doc_id" % 3 === 2), tbl, "doc_id", "text")
-        .write.mode("overwrite").parquet(s"$d/b2")
-    }
+    val (_, dir) = minhashIngestIndex(spark, sfDir)
     spark.read.parquet(s"$dir/b1").withColumn("batch", lit(1))
       .unionByName(spark.read.parquet(s"$dir/b2").withColumn("batch", lit(2)))
       .select($"doc_id", $"batch", $"status", $"n_hist_dups")
@@ -3235,6 +3264,39 @@ object Queries {
       .orderBy($"qid", $"rank")
   }
 
+  /** q155's BM25 serving index over the whole corpus, shared with
+    * q166, q169 and q180. Returns its catalog table. */
+  private def bm25Index(spark: SparkSession, sfDir: String): String = {
+    val tbl = s"g_bm25idx_${sfTag(sfDir)}"
+    cachedLayout("q155_bm25idx", sfDir) { d =>
+      graft.operators.Bm25.buildIndex(
+        Tables(spark, sfDir, "documents"), "doc_id", "text",
+        tbl, s"$d/idx", nDirs = 8)
+    }
+    tbl
+  }
+
+  /** q177's BM25 maintenance history: build(evens) → append(odds) →
+    * delete(doc_id % 7 == 3), one commit each in the family snapshot
+    * log. Shared with q179, q184, q185, q190 and q192, which read it at
+    * different commits. Returns its catalog table. */
+  private[graft] def bm25TimeTravelIndex(spark: SparkSession,
+      sfDir: String): String = {
+    import spark.implicits._
+    val tbl = s"g_bm25tt_${sfTag(sfDir)}"
+    cachedLayout("q177_bm25tt", sfDir) { d =>
+      val docs = Tables(spark, sfDir, "documents")
+      graft.operators.Bm25.buildIndex(
+        docs.filter($"doc_id" % 2 === 0), "doc_id", "text",
+        tbl, s"$d/idx", nDirs = 8)
+      graft.operators.Bm25.appendToIndex(
+        docs.filter($"doc_id" % 2 === 1), "doc_id", "text", tbl)
+      graft.operators.Bm25.deleteFromIndex(spark, tbl,
+        docs.filter($"doc_id" % 7 === 3).select($"doc_id"))
+    }
+    tbl
+  }
+
   /** q155: BM25 against the PERSISTED serving index — the same
     * retrieval batch and ranking as q152, but scored through
     * [[graft.operators.Bm25.buildIndex]] +
@@ -3246,14 +3308,8 @@ object Queries {
     * `maxDf = ∞` the ranking is bit-identical to q152 (same oracle). */
   def bm25IndexTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tbl = s"g_bm25idx_${sfTag(sfDir)}"
-    cachedLayout("q155_bm25idx", sfDir) { d =>
-      graft.operators.Bm25.buildIndex(
-        Tables(spark, sfDir, "documents"), "doc_id", "text",
-        tbl, s"$d/idx", nDirs = 8)
-    }
     graft.operators.Bm25.topKAgainstIndex(
-        bm25QueryBatch(spark, sfDir), tbl, k = 5)
+        bm25QueryBatch(spark, sfDir), bm25Index(spark, sfDir), k = 5)
       .orderBy($"qid", $"rank")
   }
 
@@ -3317,14 +3373,8 @@ object Queries {
     * just by `Bm25IndexSpec`. */
   def bm25IndexExactScanTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tbl = s"g_bm25idx_${sfTag(sfDir)}"
-    cachedLayout("q155_bm25idx", sfDir) { d =>
-      graft.operators.Bm25.buildIndex(
-        Tables(spark, sfDir, "documents"), "doc_id", "text",
-        tbl, s"$d/idx", nDirs = 8)
-    }
-    graft.operators.Bm25.topKAgainstIndex(
-        bm25QueryBatch(spark, sfDir), tbl, k = 5, prune = false)
+    graft.operators.Bm25.topKAgainstIndex(bm25QueryBatch(spark, sfDir),
+        bm25Index(spark, sfDir), k = 5, prune = false)
       .orderBy($"qid", $"rank")
   }
 
@@ -3409,26 +3459,15 @@ object Queries {
     * included (the resolved deletes generation is empty). */
   def bm25TimeTravelTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val tbl = s"g_bm25tt_${sfTag(sfDir)}"
-    cachedLayout("q177_bm25tt", sfDir) { d =>
-      val docs = Tables(spark, sfDir, "documents")
-      graft.operators.Bm25.buildIndex(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text",
-        tbl, s"$d/idx", nDirs = 8)
-      graft.operators.Bm25.appendToIndex(
-        docs.filter($"doc_id" % 2 === 1), "doc_id", "text", tbl)
-      graft.operators.Bm25.deleteFromIndex(spark, tbl,
-        docs.filter($"doc_id" % 7 === 3).select($"doc_id"))
-    }
-    graft.operators.Bm25.topKAgainstIndex(
-        bm25QueryBatch(spark, sfDir), tbl, k = 5, asOfCommits = 1)
+    graft.operators.Bm25.topKAgainstIndex(bm25QueryBatch(spark, sfDir),
+        bm25TimeTravelIndex(spark, sfDir), k = 5, asOfCommits = 1)
       .orderBy($"qid", $"rank")
   }
 
   /** q179: time travel ACROSS an in-place append commit — the round-15
     * capability the r14 contract refused. Same maintenance history as
-    * q177 (build on evens → append odds → delete %7==3; the layout is
-    * shared, built once), probed at `asOfCommits = 2`: the BUILD-TIME
+    * q177 (build on evens → append odds → delete %7==3; one layout,
+    * [[bm25TimeTravelIndex]]), probed at `asOfCommits = 2`: the BUILD-TIME
     * state. The probe's posting read lists the build commit's FILE
     * MANIFEST (recorded per maintenance commit in the family snapshot
     * log's `_logfiles` sibling) instead of the live generation
@@ -3441,19 +3480,8 @@ object Queries {
   def bm25TimeTravelAcrossAppend(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val tbl = s"g_bm25tt_${sfTag(sfDir)}"
-    cachedLayout("q177_bm25tt", sfDir) { d =>
-      val docs = Tables(spark, sfDir, "documents")
-      graft.operators.Bm25.buildIndex(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text",
-        tbl, s"$d/idx", nDirs = 8)
-      graft.operators.Bm25.appendToIndex(
-        docs.filter($"doc_id" % 2 === 1), "doc_id", "text", tbl)
-      graft.operators.Bm25.deleteFromIndex(spark, tbl,
-        docs.filter($"doc_id" % 7 === 3).select($"doc_id"))
-    }
-    graft.operators.Bm25.topKAgainstIndex(
-        bm25QueryBatch(spark, sfDir), tbl, k = 5, asOfCommits = 2)
+    graft.operators.Bm25.topKAgainstIndex(bm25QueryBatch(spark, sfDir),
+        bm25TimeTravelIndex(spark, sfDir), k = 5, asOfCommits = 2)
       .orderBy($"qid", $"rank")
   }
 
@@ -3611,17 +3639,7 @@ object Queries {
     * the oracle pins both halves (appended-only, then surviving-only). */
   def bm25IncrementalFeed(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables(spark, sfDir, "documents")
-    val tbl = s"g_bm25tt_${sfTag(sfDir)}"
-    cachedLayout("q177_bm25tt", sfDir) { d =>
-      graft.operators.Bm25.buildIndex(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text",
-        tbl, s"$d/idx", nDirs = 8)
-      graft.operators.Bm25.appendToIndex(
-        docs.filter($"doc_id" % 2 === 1), "doc_id", "text", tbl)
-      graft.operators.Bm25.deleteFromIndex(spark, tbl,
-        docs.filter($"doc_id" % 7 === 3).select($"doc_id"))
-    }
+    val tbl = bm25TimeTravelIndex(spark, sfDir)
     val from = graft.sources.Snapshots.commitIdFor(spark, tbl,
       asOfCommits = 2)
     val to = graft.sources.Snapshots.commitIdFor(spark, tbl)
@@ -3684,37 +3702,20 @@ object Queries {
     * per-index commit arithmetic, and each index pins its tagged
     * commit against its own log's retention, so the named deployment
     * state stays servable as maintenance continues. Layouts shared
-    * with q177/q160 (zero extra builds); the tagging call re-runs
-    * idempotently on every invocation. Fusion and oracle are q184's
+    * with q177/q160 (zero extra builds); the tag is minted once per
+    * JVM through [[runOnce]]. Fusion and oracle are q184's
     * verbatim — equality pins that the one name resolves BOTH
     * families to exactly the states the depth arithmetic named. */
   def hybridRrfStackTag(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val bmTbl = s"g_bm25tt_${sfTag(sfDir)}"
-    cachedLayout("q177_bm25tt", sfDir) { d =>
-      val docs = Tables(spark, sfDir, "documents")
-      graft.operators.Bm25.buildIndex(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text",
-        bmTbl, s"$d/idx", nDirs = 8)
-      graft.operators.Bm25.appendToIndex(
-        docs.filter($"doc_id" % 2 === 1), "doc_id", "text", bmTbl)
-      graft.operators.Bm25.deleteFromIndex(spark, bmTbl,
-        docs.filter($"doc_id" % 7 === 3).select($"doc_id"))
-    }
-    val ivfTbl = s"g_ivfapp_${sfTag(sfDir)}"
+    val bmTbl = bm25TimeTravelIndex(spark, sfDir)
+    val ivfTbl = ivfAppendIndex(spark, sfDir)
     val emb = Tables(spark, sfDir, "embeddings")
-    cachedLayout("q160_ivfapp", sfDir) { d =>
-      Knn.writeIvfIndex(emb.filter($"vec_id" % 2 === 0), "vec_id",
-        "embedding", ivfTbl, s"$d/idx")
-      Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
-        "embedding", ivfTbl)
-    }
-    // the stack tag is minted ONCE per JVM with the layouts it names
-    // (r18): tagging is idempotent (same state ⇒ same value rewritten),
-    // so re-tagging on every run only re-paid two manifest collects and
-    // two catalog ALTERs per invocation — the operator under test is
-    // the tag-addressed two-leg probe below, which runs every time
-    cachedLayout("q192_stacktag", sfDir) { _ =>
+    // tagging is idempotent (same state ⇒ same value rewritten), so
+    // re-tagging on every run would only re-pay two manifest collects
+    // and two catalog ALTERs — the operator under test is the
+    // tag-addressed two-leg probe below, which runs every time
+    runOnce("q192_stacktag", sfDir) {
       graft.sources.Snapshots.tagStack(spark,
         Seq(bmTbl -> 2, ivfTbl -> 1), "stack_v1")
     }
@@ -3774,20 +3775,11 @@ object Queries {
     * corpus-scale. */
   def hybridRrfRetrieval(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // BM25 leg: q155's persisted index (same cachedLayout key — built
-    // once per JVM and shared across q155/q166/q169)
-    val bmTbl = s"g_bm25idx_${sfTag(sfDir)}"
-    cachedLayout("q155_bm25idx", sfDir) { d =>
-      graft.operators.Bm25.buildIndex(
-        Tables(spark, sfDir, "documents"), "doc_id", "text",
-        bmTbl, s"$d/idx", nDirs = 8)
-    }
-    // IVF leg: q158's persisted index (same sharing)
-    val ivfTbl = s"g_ivfidx_${sfTag(sfDir)}"
+    // BM25 leg: q155's persisted index ([[bm25Index]], built once per
+    // JVM); IVF leg: q158's ([[ivfIndex]])
+    val bmTbl = bm25Index(spark, sfDir)
+    val ivfTbl = ivfIndex(spark, sfDir)
     val emb = Tables(spark, sfDir, "embeddings")
-    cachedLayout("q158_ivfidx", sfDir) { d =>
-      Knn.writeIvfIndex(emb, "vec_id", "embedding", ivfTbl, s"$d/idx")
-    }
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10),
@@ -3804,8 +3796,9 @@ object Queries {
     * non-qualifying docs out of its candidates (the new
     * `topKAgainstIndex(candidateFilter)` — symmetric to the IVF leg's),
     * both with delete-style semantics: candidates only, statistics
-    * index-wide. Same persisted indexes as q169 (shared layouts, zero
-    * extra build); the filter here is `doc_id % 2 = 0` / `id % 2 = 0`
+    * index-wide. Same persisted indexes as q169 ([[bm25Index]] and
+    * [[ivfIndex]], zero extra build); the filter here is
+    * `doc_id % 2 = 0` / `id % 2 = 0`
     * (q173's predicate), so the oracle replays the BM25 leg with
     * `rankedCtesExcluding(odd)` and the IVF leg from the
     * candidate-filtered mirror.
@@ -3817,17 +3810,9 @@ object Queries {
   def hybridRrfFilteredRetrieval(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val bmTbl = s"g_bm25idx_${sfTag(sfDir)}"
-    cachedLayout("q155_bm25idx", sfDir) { d =>
-      graft.operators.Bm25.buildIndex(
-        Tables(spark, sfDir, "documents"), "doc_id", "text",
-        bmTbl, s"$d/idx", nDirs = 8)
-    }
-    val ivfTbl = s"g_ivfidx_${sfTag(sfDir)}"
+    val bmTbl = bm25Index(spark, sfDir)
+    val ivfTbl = ivfIndex(spark, sfDir)
     val emb = Tables(spark, sfDir, "embeddings")
-    cachedLayout("q158_ivfidx", sfDir) { d =>
-      Knn.writeIvfIndex(emb, "vec_id", "embedding", ivfTbl, s"$d/idx")
-    }
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
@@ -3854,25 +3839,9 @@ object Queries {
     * fusion touches ≤ 2·k rows per query, retrieval-batch-bounded. */
   def hybridRrfTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val bmTbl = s"g_bm25tt_${sfTag(sfDir)}"
-    cachedLayout("q177_bm25tt", sfDir) { d =>
-      val docs = Tables(spark, sfDir, "documents")
-      graft.operators.Bm25.buildIndex(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text",
-        bmTbl, s"$d/idx", nDirs = 8)
-      graft.operators.Bm25.appendToIndex(
-        docs.filter($"doc_id" % 2 === 1), "doc_id", "text", bmTbl)
-      graft.operators.Bm25.deleteFromIndex(spark, bmTbl,
-        docs.filter($"doc_id" % 7 === 3).select($"doc_id"))
-    }
-    val ivfTbl = s"g_ivfapp_${sfTag(sfDir)}"
+    val bmTbl = bm25TimeTravelIndex(spark, sfDir)
+    val ivfTbl = ivfAppendIndex(spark, sfDir)
     val emb = Tables(spark, sfDir, "embeddings")
-    cachedLayout("q160_ivfapp", sfDir) { d =>
-      Knn.writeIvfIndex(emb.filter($"vec_id" % 2 === 0), "vec_id",
-        "embedding", ivfTbl, s"$d/idx")
-      Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
-        "embedding", ivfTbl)
-    }
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
@@ -3894,26 +3863,9 @@ object Queries {
     * builds. Fusion identical to q169/q184. */
   def hybridRrfTimeTravelSq8(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val bmTbl = s"g_bm25tt_${sfTag(sfDir)}"
-    cachedLayout("q177_bm25tt", sfDir) { d =>
-      val docs = Tables(spark, sfDir, "documents")
-      graft.operators.Bm25.buildIndex(
-        docs.filter($"doc_id" % 2 === 0), "doc_id", "text",
-        bmTbl, s"$d/idx", nDirs = 8)
-      graft.operators.Bm25.appendToIndex(
-        docs.filter($"doc_id" % 2 === 1), "doc_id", "text", bmTbl)
-      graft.operators.Bm25.deleteFromIndex(spark, bmTbl,
-        docs.filter($"doc_id" % 7 === 3).select($"doc_id"))
-    }
-    val sqTbl = s"g_sq8tt_${sfTag(sfDir)}"
+    val bmTbl = bm25TimeTravelIndex(spark, sfDir)
+    val sqTbl = sq8TimeTravelIndex(spark, sfDir)
     val emb = Tables(spark, sfDir, "embeddings")
-    cachedLayout("q183_sq8tt", sfDir) { d =>
-      Knn.writeIvfIndex(emb.filter($"vec_id" % 2 === 0), "vec_id",
-        "embedding", sqTbl, s"$d/idx")
-      Knn.quantizeIvfIndex(spark, sqTbl)
-      Knn.appendToIvfIndex(emb.filter($"vec_id" % 2 === 1), "vec_id",
-        "embedding", sqTbl)
-    }
     val (bm, sq) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,

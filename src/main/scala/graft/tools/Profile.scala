@@ -68,7 +68,8 @@ final class Profile extends SparkListener {
     record(query, _ => phase)(build)
 
   /** A query's first timed run: [[run]], except that a run that called
-    * `Queries.cachedLayout` may have built a one-time layout, so it is
+    * `Queries.cachedLayout` or `Queries.runOnce` may have built a
+    * one-time layout or run a one-time step, so it is
     * recorded as `build` and, unless it failed, the query runs again
     * under `phase`. The returned run never times a layout build. */
   def firstRun(query: String, phase: String)(build: => DataFrame): Run = {
@@ -152,7 +153,7 @@ final class Profile extends SparkListener {
 object Profile {
   /** One run's split: `seconds` is construct plus exec, the time the
     * bench reports. `touchedLayout`: the run called
-    * `Queries.cachedLayout`, a hit or a build. */
+    * `Queries.cachedLayout` or `Queries.runOnce`, a hit or a build. */
   final case class Run(constructNs: Long, execNs: Long,
       error: Option[Throwable], touchedLayout: Boolean) {
     def seconds: Double = (constructNs + execNs) / 1e9
