@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, NormalizeGolden, TextAnalysis}
 import graft.multimodal.Multimodal
 import graft.operators.{AsOfJoin, Concurrent, Dedup, Knn, SimilarityJoin}
-import graft.sources.Bucketing
+import graft.sources.{AsOf, Bucketing}
 
 /** The engine's query surface — one entry per operator family from
   * SURVEY.md §2, each runnable by the driver via
@@ -87,8 +87,8 @@ object Queries {
   }
 
   /** Runs `step` — a one-time side effect on a cached layout of `sfDir`,
-    * such as tagging or quantizing an index in place — once per JVM per
-    * (`name`, `sfDir`), like [[cachedLayout]] but with no directory. */
+    * such as tagging an index — once per JVM per (`name`, `sfDir`), like
+    * [[cachedLayout]] but with no directory. */
   private def runOnce(name: String, sfDir: String)(step: => Unit): Unit = {
     layoutCallCount.incrementAndGet()
     layoutCache.computeIfAbsent((name, sfDir), { _ => step; None })
@@ -1054,14 +1054,16 @@ object Queries {
       .orderBy($"qid", $"rnk")
   }
 
-  /** q158's IVF serving index over the whole embeddings corpus, shared
-    * by every query that probes it (q169, q173, q175, q178, q180).
-    * Returns its catalog table. */
+  /** q158's IVF serving index over the whole embeddings corpus with its
+    * SQ8 replica, shared by every query that probes it (q169, q173,
+    * q175, q178, q180). Its snapshot log holds exactly `build` then
+    * `quantize`, whichever query builds it. Returns its catalog table. */
   private[graft] def ivfIndex(spark: SparkSession, sfDir: String): String = {
     val tbl = s"g_ivfidx_${sfTag(sfDir)}"
     cachedLayout("q158_ivfidx", sfDir) { d =>
       Knn.writeIvfIndex(Tables(spark, sfDir, "embeddings"), "vec_id",
         "embedding", tbl, s"$d/idx")
+      Knn.quantizeIvfIndex(spark, tbl)
     }
     tbl
   }
@@ -1162,7 +1164,7 @@ object Queries {
   /** q181: IVF time travel ACROSS the append commit — the vector-family
     * twin of q179 (family symmetry of the file-manifest capability):
     * q160's layout (build on evens — quantizer trained on the build
-    * half — then append the odds in place), probed at `asOfCommits = 1`,
+    * half — then append the odds in place), probed at `AsOf.Commits(1)`,
     * the BUILD-TIME state. The cells read lists the build commit's file
     * manifest, so the appended odd vectors are structurally unseen; the
     * ranking must equal a probe of an even-only index (mirror: train on
@@ -1173,7 +1175,7 @@ object Queries {
     val emb = Tables(spark, sfDir, "embeddings")
     Knn.ivfTopKAgainstIndex(emb.filter($"vec_id" < 10),
         ivfAppendIndex(spark, sfDir),
-        "vec_id", "embedding", k = 5, asOfCommits = 1)
+        "vec_id", "embedding", k = 5, asOf = AsOf.Commits(1))
       .orderBy($"qid", $"rnk")
   }
 
@@ -1181,7 +1183,7 @@ object Queries {
     * dedup-family twin of q179: q157's layout (build on %3==0, ingest
     * %3==1 then %3==2 — both in-place grows of the sigs/buckets
     * generations), with the %3==1 batch RE-CLASSIFIED at
-    * `asOfCommits = 2`: the BUILD-TIME history. The historical
+    * `AsOf.Commits(2)`: the BUILD-TIME history. The historical
     * sigs/buckets reads list the build commit's file manifests, so both
     * ingested batches are unseen and the classification must equal the
     * stateless form against the %3==0 history alone (= what batch 1 saw
@@ -1193,7 +1195,7 @@ object Queries {
     graft.operators.Dedup.minhashIncrementalAgainstIndex(
         Tables(spark, sfDir, "documents").filter($"doc_id" % 3 === 1),
         tbl, "doc_id", "text",
-        asOfCommits = 2)
+        asOf = AsOf.Commits(2))
       .orderBy($"doc_id")
   }
 
@@ -1249,10 +1251,10 @@ object Queries {
   }
 
   /** q178: SQ8-QUANTIZED vector serving — the memory/IO-economics shape
-    * of the IVF index: q158's index is scalar-quantized to one byte per
-    * dimension ([[graft.operators.Knn.quantizeIvfIndex]] — per-dim
-    * affine (min, max) params, codes in the same cell-directory layout,
-    * 8× less probe IO than the float64 cells) and probed through
+    * of the IVF index: q158's index carries a replica scalar-quantized
+    * to one byte per dimension ([[graft.operators.Knn.quantizeIvfIndex]]
+    * — per-dim affine (min, max) params, codes in the same
+    * cell-directory layout, 8× less probe IO than the float64 cells) and probed through
     * [[graft.operators.Knn.ivfTopKAgainstIndexSq8]]: identical cell
     * pruning, rerank scored against the byte-decoded RECONSTRUCTION
     * inside whole-stage codegen ([[graft.expressions.Sq8Dot]]). The
@@ -1263,21 +1265,16 @@ object Queries {
   def knnIvfSq8(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables(spark, sfDir, "embeddings")
-    val tbl = ivfIndex(spark, sfDir)
-    runOnce("q178_ivfsq8", sfDir) { Knn.quantizeIvfIndex(spark, tbl) }
-    Knn.ivfTopKAgainstIndexSq8(emb.filter($"vec_id" < 10), tbl,
-        "vec_id", "embedding", k = 5)
+    Knn.ivfTopKAgainstIndexSq8(emb.filter($"vec_id" < 10),
+        ivfIndex(spark, sfDir), "vec_id", "embedding", k = 5)
       .orderBy($"qid", $"rnk")
   }
 
   /** q183: SQ8 time travel ACROSS the append commit — the quantized
-    * deployment's rollback read (r15 verdict directive 3: the float
-    * probe had `asOfCommits`, the SQ8 probe didn't, so "serve
-    * yesterday's index" silently wasn't available where the serving
-    * economics live). Layout: build on the even half (quantizer trained
-    * on evens) → [[graft.operators.Knn.quantizeIvfIndex]] (params
+    * deployment's rollback read. Layout: build on the even half
+    * (quantizer trained on evens) → [[graft.operators.Knn.quantizeIvfIndex]] (params
     * derived from the even cells) → append the odd half (codes grown in
-    * place under FROZEN params). Probing at `asOfCommits = 1` targets
+    * place under FROZEN params). Probing at `AsOf.Commits(1)` targets
     * the quantize commit: the codes read lists that commit's file
     * manifest (appended odd codes structurally unseen) and the
     * reconstruction params come from the SAME historical generation's
@@ -1289,7 +1286,7 @@ object Queries {
     val emb = Tables(spark, sfDir, "embeddings")
     Knn.ivfTopKAgainstIndexSq8(emb.filter($"vec_id" < 10),
         sq8TimeTravelIndex(spark, sfDir),
-        "vec_id", "embedding", k = 5, asOfCommits = 1)
+        "vec_id", "embedding", k = 5, asOf = AsOf.Commits(1))
       .orderBy($"qid", $"rnk")
   }
 
@@ -3445,7 +3442,7 @@ object Queries {
   /** q177: BM25 index TIME TRAVEL — the rollback read completing the
     * serving lifecycle's operational story: build(evens) →
     * append(odds) → DELETE(doc_id % 7 == 3), then probe with
-    * `asOfCommits = 1` — the index exactly as it was BEFORE the
+    * `AsOf.Commits(1)` — the index exactly as it was BEFORE the
     * takedown ("a bad delete landed; serve yesterday's index while we
     * fix it"). The probe resolves every member table (postings, dfs,
     * bounds, deletes) from the family snapshot log's manifest
@@ -3460,14 +3457,14 @@ object Queries {
   def bm25TimeTravelTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     graft.operators.Bm25.topKAgainstIndex(bm25QueryBatch(spark, sfDir),
-        bm25TimeTravelIndex(spark, sfDir), k = 5, asOfCommits = 1)
+        bm25TimeTravelIndex(spark, sfDir), k = 5, asOf = AsOf.Commits(1))
       .orderBy($"qid", $"rank")
   }
 
   /** q179: time travel ACROSS an in-place append commit — the round-15
     * capability the r14 contract refused. Same maintenance history as
     * q177 (build on evens → append odds → delete %7==3; one layout,
-    * [[bm25TimeTravelIndex]]), probed at `asOfCommits = 2`: the BUILD-TIME
+    * [[bm25TimeTravelIndex]]), probed at `AsOf.Commits(2)`: the BUILD-TIME
     * state. The probe's posting read lists the build commit's FILE
     * MANIFEST (recorded per maintenance commit in the family snapshot
     * log's `_logfiles` sibling) instead of the live generation
@@ -3481,7 +3478,7 @@ object Queries {
       sfDir: String): DataFrame = {
     import spark.implicits._
     graft.operators.Bm25.topKAgainstIndex(bm25QueryBatch(spark, sfDir),
-        bm25TimeTravelIndex(spark, sfDir), k = 5, asOfCommits = 2)
+        bm25TimeTravelIndex(spark, sfDir), k = 5, asOf = AsOf.Commits(2))
       .orderBy($"qid", $"rank")
   }
 
@@ -3516,9 +3513,9 @@ object Queries {
   /** q186: BM25 time travel BY WALL-CLOCK TIMESTAMP — "serve
     * yesterday's index by yesterday's clock" (r16 verdict directive 4):
     * the maintenance history here includes an auto-compaction commit
-    * the operator never scheduled, so a fixed `asOfCommits` depth would
+    * the operator never scheduled, so a fixed `AsOf.Commits` depth would
     * name a different state depending on cadence; the probe instead
-    * passes `asOfTimestamp = ts(takedown) − 1 ms`, resolved against the
+    * passes `AsOf.At(ts(takedown) − 1 ms)`, resolved against the
     * wall-clock column every manifest row now carries
     * ([[graft.sources.Snapshots.backForTimestamp]]: max commit id at or
     * before the instant — commit ids stay the total order, the clock is
@@ -3533,7 +3530,7 @@ object Queries {
       .select($"ts").head().getLong(0)
     graft.operators.Bm25.topKAgainstIndex(
         bm25QueryBatch(spark, sfDir), tbl, k = 5,
-        asOfTimestamp = tsDelete - 1L)
+        asOf = AsOf.At(tsDelete - 1L))
       .orderBy($"qid", $"rank")
   }
 
@@ -3541,7 +3538,7 @@ object Queries {
     * known-good state by NAME before a risky op" read (the Iceberg tag
     * shape, r16 verdict directive 4): the layout tags `pre_takedown`
     * right before its delete, and the probe passes
-    * `asOfTag = "pre_takedown"` — no commit arithmetic, no clock; the
+    * `AsOf.Tag("pre_takedown")` — no commit arithmetic, no clock; the
     * tag rides the manifest log as a table property, survives
     * compactLog's view flips, and PINS its commit against log
     * retention. Same pre-delete full-corpus state as q186, same
@@ -3551,7 +3548,7 @@ object Queries {
     val tbl = bm25TsTravelLayout(spark, sfDir)
     graft.operators.Bm25.topKAgainstIndex(
         bm25QueryBatch(spark, sfDir), tbl, k = 5,
-        asOfTag = "pre_takedown")
+        asOf = AsOf.Tag("pre_takedown"))
       .orderBy($"qid", $"rank")
   }
 
@@ -3587,7 +3584,7 @@ object Queries {
         autoCompactAfter = 1)
     }
     val from = graft.sources.Snapshots.commitIdFor(spark, tbl,
-      asOfTag = "feed_ckpt")
+      asOf = AsOf.Tag("feed_ckpt"))
     val to = graft.sources.Snapshots.commitIdFor(spark, tbl)
     graft.operators.Dedup.docsAddedBetween(spark, tbl, from, to)
       .select($"id".as("doc_id"))
@@ -3598,7 +3595,7 @@ object Queries {
     * consumer feed (a re-embedding or replication job catching up on
     * appended vectors), windowed BY COMMIT DEPTH this time: history is
     * build(evens) → append(ids ≡ 1 mod 4) → append(≡ 3 mod 4), and the
-    * consumer reads between `asOfCommits = 2` (the build) and the live
+    * consumer reads between `AsOf.Commits(2)` (the build) and the live
     * head — both appended batches, the base corpus excluded.
     * [[graft.operators.Knn.vectorsAddedBetween]] scans exactly the two
     * batches' cell files (pinned from the snapshot log's add-file
@@ -3619,7 +3616,7 @@ object Queries {
         "embedding", tbl)
     }
     val from = graft.sources.Snapshots.commitIdFor(spark, tbl,
-      asOfCommits = 2)
+      asOf = AsOf.Commits(2))
     val to = graft.sources.Snapshots.commitIdFor(spark, tbl)
     Knn.vectorsAddedBetween(spark, tbl, from, to)
       .select($"id".as("vec_id"), size($"v").cast("long").as("dims"))
@@ -3641,7 +3638,7 @@ object Queries {
     import spark.implicits._
     val tbl = bm25TimeTravelIndex(spark, sfDir)
     val from = graft.sources.Snapshots.commitIdFor(spark, tbl,
-      asOfCommits = 2)
+      asOf = AsOf.Commits(2))
     val to = graft.sources.Snapshots.commitIdFor(spark, tbl)
     val added = graft.operators.Bm25.docsAddedBetween(spark, tbl, from, to,
       ignoreDeletes = true)
@@ -3698,7 +3695,7 @@ object Queries {
     * ([[graft.sources.Snapshots.tagStack]]): the operator mints
     * `stack_v1` over the BM25 log (its build commit, depth 2) and the
     * IVF log (its build commit, depth 1) in one call, and every leg of
-    * the hybrid probe then passes the same `asOfTag = "stack_v1"` — no
+    * the hybrid probe then passes the same `AsOf.Tag("stack_v1")` — no
     * per-index commit arithmetic, and each index pins its tagged
     * commit against its own log's retention, so the named deployment
     * state stays servable as maintenance continues. Layouts shared
@@ -3722,10 +3719,10 @@ object Queries {
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
-          asOfTag = "stack_v1"),
+          asOf = AsOf.Tag("stack_v1")),
       Knn.ivfTopKAgainstIndex(
           emb.filter($"vec_id" % 50 === 0), ivfTbl, "vec_id", "embedding",
-          k = 10, asOfTag = "stack_v1"))
+          k = 10, asOf = AsOf.Tag("stack_v1")))
     rrfFuse(bm, ivf)
   }
 
@@ -3829,9 +3826,9 @@ object Queries {
     * ingest landed across the retrieval stack; serve the last good
     * state of BOTH indexes while we fix it". The BM25 leg is q179's
     * layout (build evens → append odds → delete) probed at
-    * `asOfCommits = 2` — the build commit's file manifest, statistics
+    * `AsOf.Commits(2)` — the build commit's file manifest, statistics
     * included; the IVF leg is q181's layout (build evens → append odds)
-    * probed at `asOfCommits = 1` — the even-trained, even-candidate
+    * probed at `AsOf.Commits(1)` — the even-trained, even-candidate
     * build state. Fusion identical to q169: integer-exact RRF
     * (1e9 div (60 + rank), pure BIGINT sums), ties on doc_id, n_lists
     * pinned. 100 TB plan: both historical legs stay dir-/cell-pruned
@@ -3845,17 +3842,16 @@ object Queries {
     val (bm, ivf) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
-          asOfCommits = 2),
+          asOf = AsOf.Commits(2)),
       Knn.ivfTopKAgainstIndex(
           emb.filter($"vec_id" % 50 === 0), ivfTbl, "vec_id", "embedding",
-          k = 10, asOfCommits = 1))
+          k = 10, asOf = AsOf.Commits(1)))
     rrfFuse(bm, ivf)
   }
 
   /** q185: the QUANTIZED "serve yesterday's stack" — q184's time-travel
     * fusion with the vector leg served from the SQ8 REPLICA at its
-    * quantize-time commit (directive 7's optional half, composable once
-    * the SQ8 probe gained `asOfCommits`): the rollback story now covers
+    * quantize-time commit: the rollback story now covers
     * the serving-economics deployment — an operator running byte-coded
     * vectors in production rolls BOTH legs back in one move, lexical
     * and quantized-vector, each from its own family's snapshot log.
@@ -3869,10 +3865,10 @@ object Queries {
     val (bm, sq) = Concurrent.both(
       graft.operators.Bm25
         .topKAgainstIndex(bm25QueryBatch(spark, sfDir), bmTbl, k = 10,
-          asOfCommits = 2),
+          asOf = AsOf.Commits(2)),
       Knn.ivfTopKAgainstIndexSq8(
           emb.filter($"vec_id" % 50 === 0), sqTbl, "vec_id", "embedding",
-          k = 10, asOfCommits = 1))
+          k = 10, asOf = AsOf.Commits(1)))
     rrfFuse(bm, sq)
   }
 

@@ -1916,7 +1916,7 @@ object SparkEntry {
     // semantics (and tombstone merges are idempotent under redelivery).
     Query("q176_bm25_delete_stream", Queries.bm25DeleteStreaming,
       bm25Top5(Bm25OracleSql.rankedCtesExcluding("p.doc_id % 7 = 3"))),
-    // q177 likewise: the TIME-TRAVEL probe (asOfCommits = 1 after
+    // q177 likewise: the TIME-TRAVEL probe (AsOf.Commits(1) after
     // build → append → delete) must reconstruct the pre-delete index
     // exactly — which is the full corpus, i.e. the q152/q155 ranking.
     // Equality pins the whole snapshot-log resolution path: manifest
@@ -1924,7 +1924,7 @@ object SparkEntry {
     // tombstone list.
     Query("q177_bm25_time_travel", Queries.bm25TimeTravelTopK, bm25OracleSql),
     Query("q178_knn_ivf_sq8", Queries.knnIvfSq8, SfOracles.ivfSq8),
-    // q179: time travel ACROSS the in-place append commit (asOf = 2 in
+    // q179: time travel ACROSS the in-place append commit (AsOf.Commits(2) in
     // the same build→append→delete history) — the probe reads the build
     // commit's FILE MANIFEST, so it must rank exactly like a fresh
     // index over the even build half alone, statistics included (N,
@@ -1945,8 +1945,8 @@ object SparkEntry {
     Query("q185_hybrid_rrf_tt_sq8", Queries.hybridRrfTimeTravelSq8,
       SfOracles.hybridRrfTimeTravelSq8),
     // q186/q187 likewise: the same pre-delete state addressed by WALL
-    // CLOCK (asOfTimestamp over the manifest's new ts column) and by
-    // NAME (asOfTag) instead of commit depth — and their layout ran its
+    // CLOCK (AsOf.At over the manifest's ts column) and by NAME
+    // (AsOf.Tag) instead of commit depth — and their layout ran its
     // append with auto-compaction ON, so the equality also pins that a
     // cadence-inserted compact commit shifts neither selector (the r17
     // reason these selectors exist). Pre-delete state = full corpus =

@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.sources.{AsOf, Snapshots}
+
 /** BM25 top-k lexical retrieval (Robertson–Spärck Jones / Okapi BM25 —
   * Robertson & Zaragoza 2009, "The Probabilistic Relevance Framework")
   * — the canonical keyword scorer a RAG pipeline runs beside the
@@ -559,7 +561,7 @@ object Bm25 {
 
   /** One manifest row in the family snapshot log per maintenance
     * commit — what [[graft.sources.Snapshots.resolveStateAsOf]] replays
-    * for time-travel probes ([[topKAgainstIndex]]'s `asOfCommits`). The
+    * for time-travel probes ([[topKAgainstIndex]]'s `asOf`). The
     * postings member is file-tracked: appends mutate its generation in
     * place, so each commit records its exact file list — that is what
     * lets a historical probe cross an append commit. */
@@ -757,7 +759,7 @@ object Bm25 {
       graft.sources.Tombstones.add(spark, table, ids, s"${table}_postings")
       // revertible: the merge landed as a fresh deletes generation; the
       // prior list survives under retention — "undo the takedown" is
-      // exactly the asOfCommits=1 probe
+      // exactly the AsOf.Commits(1) probe
       recordSnapshot(spark, table, "delete", revertible = true)
     }
 
@@ -1151,7 +1153,10 @@ object Bm25 {
     *   machinery keeps its losslessness argument verbatim (ub bounds a
     *   superset; θ comes from surviving candidates' achieved scores).
     *   The filtered-RAG serving shape: "top-k over docs matching this
-    *   tenant/language/date predicate". */
+    *   tenant/language/date predicate".
+    * @param asOf the index state to serve (the operational rollback
+    *   read: "a bad takedown/compaction landed; serve yesterday's index
+    *   while we fix it"). */
   def topKAgainstIndex(queries: DataFrame, table: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75,
       maxDf: Long = Long.MaxValue,
@@ -1160,40 +1165,13 @@ object Bm25 {
       pruneMinMaxDf: Long = 1000000L,
       semiJoinMinPrunable: Long = 50000000L,
       maxBatchPairs: Long = 8000000L,
-      asOfCommits: Int = 0,
+      asOf: AsOf = AsOf.Live,
       candidateFilter: Option[Column] = None,
-      asOfTimestamp: Long = 0L,
-      asOfTag: String = "",
       spreadMinFanout: Long = 1000000L): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(floorTermsPerQuery >= 1,
       s"need floorTermsPerQuery >= 1, got $floorTermsPerQuery")
     val spark = queries.sparkSession
-    // drop any cached file listing THIS session holds for the index
-    // tables: maintenance may have run in ANOTHER session (a foreachBatch
-    // micro-batch clone — q167's stream), whose appends refresh only its
-    // own caches; a stale listing here silently serves pre-append files
-    // (caught by q167's oracle). Cost: the next read re-lists, which
-    // planning pays anyway.
-    graft.sources.Generations.refreshTables(spark,
-      s"${table}_postings", s"${table}_dfs", s"${table}_bounds")
-    // TIME TRAVEL: resolve every member to a historical state from the
-    // family snapshot log ([[graft.sources.Snapshots]]) — the
-    // operational rollback read ("a bad takedown/compaction landed;
-    // serve yesterday's index while we fix it"). Addressable three
-    // ways (at most one): `asOfCommits` (fixed depth), `asOfTimestamp`
-    // (epoch millis — "yesterday's index by yesterday's clock", stable
-    // under any auto-compaction cadence, r17 directive 4), or
-    // `asOfTag` (a name minted by Snapshots.tagSnapshot). The postings
-    // member is file-tracked: its historical read lists the commit's
-    // FILE MANIFEST instead of the directory, so the probe crosses
-    // append commits exactly (files appended later are unseen). The
-    // rest of the probe is IDENTICAL: same dir pruning, same WAND
-    // bounds, same scoring tree, just over the historical members; a
-    // retired generation is named loudly on first read, never
-    // partially served.
-    val timeTravel = asOfCommits != 0 || asOfTimestamp != 0L ||
-      (asOfTag != null && asOfTag.nonEmpty)
     import spark.implicits._
     val qProjected =
       queries.select(col("qid").cast("long").as("qid"), col("term"))
@@ -1202,26 +1180,17 @@ object Bm25 {
     // purpose is the cap check). take() stops at cap+1 rows, so even an
     // abusive corpus-sized batch costs the driver one legal batch.
     val capProbe = (math.min(maxBatchPairs, Int.MaxValue - 2L) + 1L).toInt
-    // the snapshot resolve (manifest + file-log collects) and the
-    // cap-check take are INDEPENDENT bounded driver jobs — overlapped
-    // (r18): a time-travel probe's construction latency is its
-    // sequential job count, and these were its two longest serial
-    // spans. Both are awaited before anything reads a member.
-    val (resolved, qPairsRaw) =
-      if (!timeTravel)
-        (Map.empty[String, graft.sources.Snapshots.MemberState],
-          qProjected.take(capProbe))
-      else Concurrent.both(graft.sources.Snapshots.resolveSelector(
-        spark, table, asOfCommits, asOfTimestamp, asOfTag),
-        qProjected.take(capProbe))
-    def member(live: String): DataFrame =
-      resolved.get(live).map(_.read(spark)).getOrElse(spark.table(live))
-    // lazy val, not def: a historical member read builds a fresh file
-    // index (re-listing the manifest's files) per call, and the probe
-    // reads the postings/dfs frames more than once (r18)
-    lazy val pTbl = member(s"${table}_postings")
-    lazy val dTbl = member(s"${table}_dfs")
-    lazy val bTbl = member(s"${table}_bounds")
+    // the snapshot read at `asOf`: the postings member is file-tracked,
+    // so a historical read lists the commit's file manifest and crosses
+    // append commits exactly; the rest of the probe is identical over
+    // the resolved members. A historical resolve and the cap-check take
+    // are independent bounded driver jobs, so they overlap (r18).
+    val (snap, qPairsRaw) = Snapshots.openAlongside(spark, table,
+        Seq(s"${table}_postings", s"${table}_dfs", s"${table}_bounds"),
+        asOf, candidateFilter)(qProjected.take(capProbe))
+    val pTbl = snap.read(s"${table}_postings")
+    val dTbl = snap.read(s"${table}_dfs")
+    val bTbl = snap.read(s"${table}_bounds")
     // a dfs table persisted by a pre-WAND build lacks (max_tf, min_dl):
     // probes stay SERVABLE via the exact path (no bounds to evaluate —
     // the prune is a cost optimization, never a semantic one), loudly
@@ -1233,32 +1202,21 @@ object Bm25 {
         "WAND-stats format (missing max_tf/min_dl) — running the exact " +
         "scan-score-sort path (identical ranking, no top-k prune); " +
         "rebuild the index with buildIndex to re-enable WAND")
+    // every posting read below goes through the snapshot's tombstone
+    // anti-join and candidate filter (`snap.alive`), so both probe paths
+    // and the over-cap fallback filter identically. Scoring statistics
+    // stay historical (the Lucene trade — see deleteFromIndex), so the
+    // WAND machinery is untouched: ub bounds a SUPERSET of the surviving
+    // postings (still an upper bound) and θ comes from achieved scores
+    // of SURVIVORS (still a valid floor) — losslessness holds with
+    // deletes and filters in play.
+    //
     // the loud batch cap (the Dedup.incrementalAssembled pattern): the
-    // qPairs collect above is bounded only by the one-retrieval-batch
-    // contract — a caller handing a corpus-sized "batch" used to get a
-    // driver OOM. Over the cap, fall back to the fully-distributed batch
+    // qPairs take above is bounded only by the one-retrieval-batch
+    // contract. Over the cap, fall back to the fully-distributed batch
     // shape against the index's tables: no driver collect, no dir
     // pruning, no WAND — identical rows (maxDf included: the dfs inner
     // join drops over-frequent terms), corpus-scale cost, loudly logged.
-    // tombstones (deleteFromIndex): fetched ONCE per probe; every
-    // posting frame below anti-joins it, so deleted docs are out of all
-    // rankings immediately. Scoring statistics stay historical (the
-    // Lucene trade — see deleteFromIndex), so the WAND machinery is
-    // untouched: ub bounds a SUPERSET of the surviving postings (still
-    // an upper bound) and θ comes from achieved scores of SURVIVORS
-    // (still a valid floor) — losslessness holds with deletes in play.
-    val tomb =
-      if (!timeTravel) graft.sources.Tombstones.frame(spark, table)
-      else resolved.get(s"${table}_deletes")
-        .flatMap(g => graft.sources.Tombstones.frameAt(spark, g.gen))
-    def minusDeleted(df: DataFrame): DataFrame = {
-      val alive = graft.sources.Tombstones.filterWith(df, "doc_id", tomb, table)
-      // candidateFilter rides the same spot: candidates only, statistics
-      // index-wide (see the param doc) — every posting read below goes
-      // through here, so both probe paths and the over-cap fallback
-      // filter identically
-      candidateFilter.fold(alive)(alive.filter)
-    }
     if (qPairsRaw.length >= capProbe) {
       logger.warn(s"bm25 topKAgainstIndex: query batch has > " +
         s"$maxBatchPairs (qid, term) pairs (maxBatchPairs) — falling " +
@@ -1268,8 +1226,8 @@ object Bm25 {
       val qStaged = Stage.cut(qProjected)
       val dfsAll = dTbl
         .select($"term", $"df").filter($"df" <= maxDf)
-      val postingsAll = minusDeleted(pTbl
-        .select($"term", $"doc_id", $"tf", $"dl"))
+      val postingsAll = snap.alive(pTbl
+        .select($"term", $"doc_id", $"tf", $"dl"), "doc_id")
       val totals = bTbl.select($"n", $"sumdl")
       return scoreAndRank(qStaged, postingsAll, dfsAll, totals, k, k1, b,
         broadcastQueries = false)
@@ -1324,9 +1282,9 @@ object Bm25 {
       // term's whole join fanout and its partial aggregation runs the
       // stage single-threaded (measured 3.5x on the agg at 10M)
       {
-        val scan = minusDeleted(pTbl
+        val scan = snap.alive(pTbl
           .filter($"tb".isin(tbOf(terms): _*) && $"term".isin(terms: _*))
-          .select($"term", $"doc_id", $"tf", $"dl"))
+          .select($"term", $"doc_id", $"tf", $"dl"), "doc_id")
         // the spread matters only where the consumer fans out map-side
         // (the scoring join); the floor/candidate consumers flow into
         // their own hash exchange immediately — spreading them first

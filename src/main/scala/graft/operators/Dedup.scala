@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import scala.util.hashing.MurmurHash3
 
+import graft.sources.{AsOf, Snapshots}
+
 /** Deduplication operators for large-scale text pipelines (builder brief:
   * exact, MinHash+LSH, SimHash, n-gram Jaccard). All are pure shuffle-based
   * DataFrame plans: per-row signatures are computed map-side (deterministic
@@ -385,52 +387,31 @@ object Dedup {
     * onto the signature scan — zero exchanges carry full-history rows
     * (spec-pinned: every exchange above an index scan sits above the
     * candidate-bounding broadcast join). Signature parameters come from
-    * the index's meta table; only the threshold is per-call. */
+    * the index's meta table; only the threshold is per-call. `asOf`
+    * classifies against the history as it was at a named state. */
   def minhashIncrementalAgainstIndex(incoming: DataFrame, table: String,
       idCol: String, textCol: String, threshold: Double = 0.8,
       broadcastMaxBatchDocs: Long = 2000000L,
-      asOfCommits: Int = 0, asOfTimestamp: Long = 0L,
-      asOfTag: String = ""): DataFrame = {
-    val spark = incoming.sparkSession
-    // the index may have grown in another session (q165's foreachBatch
-    // clone) — drop this session's cached listings first (the
-    // Bm25.topKAgainstIndex note)
-    graft.sources.Generations.refreshTables(spark,
-      s"${table}_sigs", s"${table}_buckets", s"${table}_meta")
-    // TIME TRAVEL (the Bm25.topKAgainstIndex contract: commit depth,
-    // wall-clock timestamp, or snapshot tag — r17 directive 4):
-    // classify against the history as it was at the named state —
-    // members resolve from the family snapshot log
-    val timeTravel = asOfCommits != 0 || asOfTimestamp != 0L ||
-      (asOfTag != null && asOfTag.nonEmpty)
-    val resolved: Map[String, graft.sources.Snapshots.MemberState] =
-      if (!timeTravel) Map.empty
-      else graft.sources.Snapshots.resolveSelector(spark, table,
-        asOfCommits, asOfTimestamp, asOfTag)
-    def member(live: String): org.apache.spark.sql.DataFrame =
-      resolved.get(live).map(_.read(spark)).getOrElse(spark.table(live))
-    lazy val sTbl = member(s"${table}_sigs")
-    lazy val bTbl = member(s"${table}_buckets")
-    lazy val mTbl = member(s"${table}_meta")
-    val meta = mTbl.collect()
+      asOf: AsOf = AsOf.Live): DataFrame = {
+    val (sigs, buckets, (shingleSize, numHashes, bands)) =
+      historyAt(incoming.sparkSession, table, asOf)
+    incrementalCore(incoming, sigs, buckets, idCol, textCol, shingleSize,
+      numHashes, bands, threshold, broadcastMaxBatchDocs)
+  }
+
+  /** The history a persisted-index classification reads at `asOf`: the
+    * signature and band-bucket members minus tombstoned docs (deleted
+    * docs leave the effective history immediately), and the signature
+    * parameters (shingle size, hashes, bands) from the meta member. */
+  private def historyAt(spark: org.apache.spark.sql.SparkSession,
+      table: String, asOf: AsOf): (DataFrame, DataFrame, (Int, Int, Int)) = {
+    val snap = Snapshots.open(spark, table,
+      Seq(s"${table}_sigs", s"${table}_buckets", s"${table}_meta"), asOf)
+    val meta = snap.read(s"${table}_meta").collect()
     require(meta.length == 1, s"index ${table}_meta must hold exactly 1 row")
-    val (shingleSize, numHashes, bands) =
-      (meta(0).getInt(0), meta(0).getInt(1), meta(0).getInt(2))
-    // tombstones (deleteFromMinhashIndex): deleted docs leave the
-    // effective history immediately — both history scans anti-join the
-    // list, fetched once per probe (historical generation under time
-    // travel)
-    val tomb =
-      if (!timeTravel) graft.sources.Tombstones.frame(spark, table)
-      else resolved.get(s"${table}_deletes")
-        .flatMap(g => graft.sources.Tombstones.frameAt(spark, g.gen))
-    def live(df: org.apache.spark.sql.DataFrame) =
-      graft.sources.Tombstones.filterWith(df, "id", tomb, table)
-    incrementalCore(incoming,
-      live(sTbl),
-      live(bTbl),
-      idCol, textCol, shingleSize, numHashes, bands, threshold,
-      broadcastMaxBatchDocs)
+    (snap.alive(snap.read(s"${table}_sigs"), "id"),
+      snap.alive(snap.read(s"${table}_buckets"), "id"),
+      (meta(0).getInt(0), meta(0).getInt(1), meta(0).getInt(2)))
   }
 
   /** The full daily-ingest step: classify `incoming` against the
@@ -481,21 +462,12 @@ object Dedup {
     // finish (or discard) any ingest that died mid-commit before
     // classifying against the history it half-grew (r16 directive 1)
     recoverPendingAppend(spark, table)
-    graft.sources.Generations.refreshTables(spark,
-      s"${table}_sigs", s"${table}_buckets", s"${table}_meta")
-    val meta = spark.table(s"${table}_meta").collect()
-    require(meta.length == 1, s"index ${table}_meta must hold exactly 1 row")
-    val (shingleSize, numHashes, bands) =
-      (meta(0).getInt(0), meta(0).getInt(1), meta(0).getInt(2))
-    // the same tombstone anti-join the pure probe applies (deleted docs
-    // are out of the effective history); the APPEND below is untouched —
-    // history rows stay physically present until compaction folds them
-    val tomb = graft.sources.Tombstones.frame(spark, table)
-    def live(df: org.apache.spark.sql.DataFrame) =
-      graft.sources.Tombstones.filterWith(df, "id", tomb, table)
-    val (assembled, incSigs) = incrementalAssembled(incoming,
-      live(spark.table(s"${table}_sigs")),
-      live(spark.table(s"${table}_buckets")),
+    // the live history the pure probe reads (tombstoned docs out); the
+    // APPEND below is untouched — history rows stay physically present
+    // until compaction folds them
+    val (sigs, buckets, (shingleSize, numHashes, bands)) =
+      historyAt(spark, table, AsOf.Live)
+    val (assembled, incSigs) = incrementalAssembled(incoming, sigs, buckets,
       idCol, textCol, shingleSize, numHashes, bands, threshold,
       broadcastMaxBatchDocs)
     // eager: classification is on disk/blocks before the index mutates

@@ -1,12 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.util.hashing.MurmurHash3
 
 import graft.expressions.VectorExpressions.dot
+import graft.sources.{AsOf, Snapshots}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`) — builder brief §similarity-search.
@@ -239,7 +240,8 @@ object Knn {
     * never a semantic change) — exact cosine rerank, per-query top-k
     * window on the candidate-bounded frame. */
   private def scoreCells(cells: DataFrame, qcells: DataFrame, k: Int,
-      nQcells: Long, broadcastMaxQcells: Long): DataFrame = {
+      nQcells: Long, broadcastMaxQcells: Long,
+      score: Option[Column] = None): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
     val bc: DataFrame => DataFrame =
@@ -253,7 +255,8 @@ object Knn {
     val w = Window.partitionBy($"qid").orderBy($"score".desc, $"id".asc)
     cells.join(bc(qcells), Seq("cell"))
       .filter($"id" =!= $"qid")
-      .withColumn("score", dot(spark)($"qv", $"v") / ($"qn" * $"nrm"))
+      .withColumn("score",
+        score.getOrElse(dot(spark)($"qv", $"v") / ($"qn" * $"nrm")))
       .withColumn("rnk", row_number().over(w))
       .filter($"rnk" <= k)
       .select($"qid", $"rnk", $"id".as("nid"), $"score")
@@ -520,60 +523,49 @@ object Knn {
     *   top-k would under-fill k. Pre-filtering is the right shape here
     *   because the rerank is exact: recall loss stays the quantizer's
     *   (a selective filter thins candidates per probed cell; raise
-    *   nProbe to compensate, the standard filtered-IVF trade). */
+    *   nProbe to compensate, the standard filtered-IVF trade).
+    * @param asOf the index state to serve; the cells member is
+    *   file-tracked, so a historical read crosses append commits
+    *   exactly. */
   def ivfTopKAgainstIndex(queries: DataFrame, table: String,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
       broadcastMaxQcells: Long = 8000000L,
-      candidateFilter: Option[org.apache.spark.sql.Column] = None,
-      asOfCommits: Int = 0, asOfTimestamp: Long = 0L,
-      asOfTag: String = ""): DataFrame = {
+      candidateFilter: Option[Column] = None,
+      asOf: AsOf = AsOf.Live): DataFrame =
+    ivfProbe(queries, table, idCol, vecCol, k, nProbe, broadcastMaxQcells,
+        candidateFilter, asOf, Nil) { snap =>
+      (snap.read(s"${table}_cells").select(col("cell"), col("id"), col("v"),
+        col("nrm")), None)
+    }
+
+  /** The persisted-index IVF probe both scorers share: the snapshot
+    * read at `asOf` ([[Snapshots.open]]), the centroids, ONE bounded
+    * take of the exploded query frame (it decides the path AND
+    * materializes the batch: under the cap the query frame is a
+    * LocalRelation, the probed-cell set comes from the rows in hand and
+    * the scoring broadcast builds without a Spark job), the probed-cell
+    * `IN` (partition pruning at planning), the tombstone and candidate
+    * filter, and [[scoreCells]]. Over the cap pruning is moot (a
+    * corpus-sized batch probes essentially every cell): all cells are
+    * scanned, loudly, with the shuffle-join fallback — identical rows.
+    * `cellsAt` names the scorer's cells frame (columns `cell`, `id` and
+    * its payload) and score column (None: the float cosine). */
+  private def ivfProbe(queries: DataFrame, table: String, idCol: String,
+      vecCol: String, k: Int, nProbe: Int, broadcastMaxQcells: Long,
+      candidateFilter: Option[Column], asOf: AsOf, members: Seq[String])(
+      cellsAt: Snapshots.Snapshot => (DataFrame, Option[Column]))
+      : DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    // maintenance may have run in another session (q168's foreachBatch
-    // clone) — drop this session's cached listings first (the
-    // Bm25.topKAgainstIndex note)
-    graft.sources.Generations.refreshTables(spark,
-      s"${table}_cells", s"${table}_centroids")
-    // TIME TRAVEL (the Bm25.topKAgainstIndex contract, addressable by
-    // commit depth, wall-clock timestamp, or snapshot tag — r17
-    // directive 4): members resolve to a historical manifest; the
-    // cells member is file-tracked, so the historical read lists the
-    // commit's file manifest and the probe crosses append commits
-    // exactly. The probe below is otherwise identical (same cell
-    // pruning, same scoring) over the historical state.
-    val timeTravel = asOfCommits != 0 || asOfTimestamp != 0L ||
-      (asOfTag != null && asOfTag.nonEmpty)
-    val resolved: Map[String, graft.sources.Snapshots.MemberState] =
-      if (!timeTravel) Map.empty
-      else graft.sources.Snapshots.resolveSelector(spark, table,
-        asOfCommits, asOfTimestamp, asOfTag)
-    def member(live: String): DataFrame =
-      resolved.get(live).map(_.read(spark)).getOrElse(spark.table(live))
-    lazy val cTbl = member(s"${table}_cells")
-    lazy val cenTbl = member(s"${table}_centroids")
-    // tombstones (deleteFromIvfIndex): deleted vectors are out of every
-    // result immediately — the cell scan anti-joins the list (read at
-    // its historical generation under time travel)
-    val tomb =
-      if (!timeTravel) graft.sources.Tombstones.frame(spark, table)
-      else resolved.get(s"${table}_deletes")
-        .flatMap(g => graft.sources.Tombstones.frameAt(spark, g.gen))
-    val centroids: Array[Array[Double]] = cenTbl
+    val snap = Snapshots.open(spark, table,
+      Seq(s"${table}_cells", s"${table}_centroids") ++ members, asOf,
+      candidateFilter)
+    val (cellScan, score) = cellsAt(snap)
+    val centroids: Array[Array[Double]] = snap.read(s"${table}_centroids")
       .orderBy($"cell").collect().map(_.getSeq[Double](1).toArray)
     val qFrame = withVecAndNorm(queries, idCol, vecCol)
       .withColumn("cell", explode(probesUdf(centroids, nProbe)($"v")))
       .select($"cell", $"id".as("qid"), $"v".as("qv"), $"nrm".as("qn"))
-    // ONE bounded take decides the path AND materializes the bounded
-    // batch (r17 optimization: the previous checkpoint + count +
-    // distinct-collect shape cost three sequential driver jobs per
-    // probe; the broadcast below materializes the same rows driver-side
-    // anyway, so the take adds no memory the broadcast path didn't
-    // already need). Under the cap the exploded query frame is a
-    // LocalRelation — downstream reads are driver-local, the probed-cell
-    // set comes from the rows in hand, and the scoring broadcast builds
-    // without a Spark job. Over the cap pruning is moot (a corpus-sized
-    // batch probes essentially every cell): scan all cells, loudly, with
-    // the scoreCells shuffle-join fallback — identical rows.
     val capQ = (math.min(broadcastMaxQcells, Int.MaxValue - 2L) + 1L).toInt
     val qRows = qFrame.take(capQ)
     val (qcells, nQcells) =
@@ -582,7 +574,7 @@ object Knn {
           java.util.Arrays.asList(qRows: _*), qFrame.schema),
           qRows.length.toLong)
       else {
-        log.warn(s"ivf ivfTopKAgainstIndex: query batch explodes to > " +
+        log.warn(s"ivf probe of $table: query batch explodes to > " +
           s"$broadcastMaxQcells cell rows (broadcastMaxQcells) — " +
           "skipping cell pruning and scanning all cells (identical " +
           "rows; split the workload into bounded retrieval batches to " +
@@ -590,15 +582,11 @@ object Knn {
         (Stage.cut(qFrame), capQ.toLong)
       }
     val cells =
-      if (nQcells <= broadcastMaxQcells) {
-        val probed = qRows.map(_.getInt(0)).distinct.toSeq
-        cTbl
-          .filter($"cell".isin(probed: _*))
-          .select($"cell", $"id", $"v", $"nrm")
-      } else cTbl.select($"cell", $"id", $"v", $"nrm")
-    val alive = graft.sources.Tombstones.filterWith(cells, "id", tomb, table)
-    val candidates = candidateFilter.fold(alive)(alive.filter)
-    scoreCells(candidates, qcells, k, nQcells, broadcastMaxQcells)
+      if (nQcells <= broadcastMaxQcells)
+        cellScan.filter($"cell".isin(qRows.map(_.getInt(0)).distinct.toSeq: _*))
+      else cellScan
+    scoreCells(snap.alive(cells, "id"), qcells, k, nQcells,
+      broadcastMaxQcells, score)
   }
 
   /** Does the index carry an SQ8 replica ([[quantizeIvfIndex]] ran)? */
@@ -764,111 +752,42 @@ object Knn {
   }
 
   /** [[ivfTopKAgainstIndex]] over the SQ8 codes table from
-    * [[quantizeIvfIndex]]: identical cell pruning (same centroids, same
-    * probesUdf), identical tombstone anti-join, but the rerank scores
-    * cosine(query, RECONSTRUCTION) — `mins[i] + code[i]·steps[i]` —
-    * through the fused [[graft.expressions.Sq8Dot]] /
-    * [[graft.expressions.Sq8NormSq]] codegen loops, reading 1 byte per
-    * dimension instead of 8. Approximation is the quantization's (≤ half
-    * a step per dimension); q178 prices the recall against the exact
-    * top-k. `candidateFilter` sees columns (id, codes, cell).
-    * `asOfCommits` serves the QUANTIZED index as it was n maintenance
-    * commits ago (r15 verdict directive 3 — the float probe had time
-    * travel, the SQ8 probe didn't, so "serve yesterday's index" wasn't
-    * available on a quantized deployment): the codes member is
-    * file-tracked in the snapshot log, so the historical read crosses
-    * append commits exactly, and the reconstruction params come from
-    * the SAME historical generation's sidecar — the (codes, params)
-    * pairing survives time travel by construction. */
+    * [[quantizeIvfIndex]]: the same probe body (cell pruning, tombstone
+    * and candidate filter, broadcast-or-shuffle choice, top-k window),
+    * but the rerank scores cosine(query, RECONSTRUCTION) —
+    * `mins[i] + code[i]·steps[i]` — through the fused
+    * [[graft.expressions.Sq8Dot]] / [[graft.expressions.Sq8NormSq]]
+    * codegen loops, reading 1 byte per dimension instead of 8.
+    * Approximation is the quantization's (≤ half a step per dimension);
+    * q178 prices the recall against the exact top-k. `candidateFilter`
+    * sees columns (cell, id, codes).
+    *
+    * The codes scan and the reconstruction params come from ONE pinned
+    * `_cells_q8` generation — the live one, or the one the `asOf` state
+    * names (codes via its file manifest, params via its sidecar, frozen
+    * at its quantize) — so a (re)quantize flipping the live view
+    * mid-probe leaves the probe stale but consistent, never scoring
+    * codes with mismatched params (r14 ADVICE). */
   def ivfTopKAgainstIndexSq8(queries: DataFrame, table: String,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
       broadcastMaxQcells: Long = 8000000L,
-      candidateFilter: Option[org.apache.spark.sql.Column] = None,
-      asOfCommits: Int = 0, asOfTimestamp: Long = 0L,
-      asOfTag: String = ""): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
+      candidateFilter: Option[Column] = None,
+      asOf: AsOf = AsOf.Live): DataFrame = {
     import graft.expressions.VectorExpressions.{sq8Dot, sq8NormSq}
-    graft.sources.Generations.refreshTables(spark,
-      s"${table}_cells_q8", s"${table}_centroids", s"${table}_qparams")
-    // TIME TRAVEL (the ivfTopKAgainstIndex contract: commit depth,
-    // timestamp, or tag — r17 directive 4)
-    val timeTravel = asOfCommits != 0 || asOfTimestamp != 0L ||
-      (asOfTag != null && asOfTag.nonEmpty)
-    val resolved: Map[String, graft.sources.Snapshots.MemberState] =
-      if (!timeTravel) Map.empty
-      else graft.sources.Snapshots.resolveSelector(spark, table,
-        asOfCommits, asOfTimestamp, asOfTag)
-    def member(live: String): DataFrame =
-      resolved.get(live).map(_.read(spark)).getOrElse(spark.table(live))
-    val tomb =
-      if (!timeTravel) graft.sources.Tombstones.frame(spark, table)
-      else resolved.get(s"${table}_deletes")
-        .flatMap(g => graft.sources.Tombstones.frameAt(spark, g.gen))
-    val centroids: Array[Array[Double]] = member(s"${table}_centroids")
-      .orderBy($"cell").collect().map(_.getSeq[Double](1).toArray)
-    // resolve the q8 GENERATION once and read both the codes scan and
-    // the params from it: a (re)quantize flipping the live view mid-probe
-    // can then only make this probe stale-but-consistent, never serve a
-    // mismatched (codes, params) pair (r14 ADVICE; the superseded
-    // generation's files are retained until the next maintenance commit,
-    // so the pinned scan still collects). Under time travel the pair
-    // comes from the HISTORICAL generation — codes via the commit's file
-    // manifest (appended files unseen), params via that generation's
-    // sidecar (frozen at its quantize, untouched by appends).
-    val (q8Gen, q8Scan) =
-      if (!timeTravel) {
-        val g = graft.sources.Generations.current(spark, s"${table}_cells_q8")
-        (g, spark.table(g))
-      } else {
-        val st = resolved.getOrElse(s"${table}_cells_q8",
-          throw new IllegalStateException(
-            s"index $table had no SQ8 replica at the requested commit " +
-              "— quantizeIvfIndex had not run yet; probe the float " +
-              "index (ivfTopKAgainstIndex) at that commit instead"))
-        (st.gen, st.read(spark))
-      }
-    val (minsArr, stepsArr) = qparamsFor(spark, table, q8Gen)
-    // same bounded-take staging as ivfTopKAgainstIndex: one job decides
-    // the path and yields the LocalRelation query frame (jobless
-    // broadcasts, driver-local probed-cell set); over the cap the
-    // distributed fallback is unchanged
-    val qFrame = withVecAndNorm(queries, idCol, vecCol)
-      .withColumn("cell", explode(probesUdf(centroids, nProbe)($"v")))
-      .select($"cell", $"id".as("qid"), $"v".as("qv"), $"nrm".as("qn"))
-    val capQ = (math.min(broadcastMaxQcells, Int.MaxValue - 2L) + 1L).toInt
-    val qRows = qFrame.take(capQ)
-    val (qcells, nQcells) =
-      if (qRows.length < capQ)
-        (spark.createDataFrame(
-          java.util.Arrays.asList(qRows: _*), qFrame.schema),
-          qRows.length.toLong)
-      else {
-        log.warn(s"ivf ivfTopKAgainstIndexSq8: query batch explodes to > " +
-          s"$broadcastMaxQcells cell rows (broadcastMaxQcells) — " +
-          "skipping cell pruning and scanning all cells (identical rows)")
-        (Stage.cut(qFrame), capQ.toLong)
-      }
-    val cells =
-      if (nQcells <= broadcastMaxQcells) {
-        val probed = qRows.map(_.getInt(0)).distinct.toSeq
-        q8Scan
-          .filter($"cell".isin(probed: _*))
-          .select($"cell", $"id", $"codes")
-      } else q8Scan.select($"cell", $"id", $"codes")
-    val alive = graft.sources.Tombstones.filterWith(cells, "id", tomb, table)
-    val candidates = candidateFilter.fold(alive)(alive.filter)
-    val bc: DataFrame => DataFrame =
-      if (nQcells <= broadcastMaxQcells) broadcast else identity
-    val w = Window.partitionBy($"qid").orderBy($"score".desc, $"id".asc)
-    candidates.join(bc(qcells), Seq("cell"))
-      .filter($"id" =!= $"qid")
-      .withColumn("score",
-        sq8Dot(spark)($"qv", $"codes", minsArr, stepsArr) /
-          ($"qn" * sqrt(sq8NormSq(spark)($"codes", minsArr, stepsArr))))
-      .withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
-      .select($"qid", $"rnk", $"id".as("nid"), $"score")
+    ivfProbe(queries, table, idCol, vecCol, k, nProbe, broadcastMaxQcells,
+        candidateFilter, asOf,
+        Seq(s"${table}_cells_q8", s"${table}_qparams")) { snap =>
+      val spark = queries.sparkSession
+      val (q8Gen, q8Scan) = snap.pinned(s"${table}_cells_q8").getOrElse(
+        throw new IllegalStateException(
+          s"index $table had no SQ8 replica at the requested commit " +
+            "— quantizeIvfIndex had not run yet; probe the float " +
+            "index (ivfTopKAgainstIndex) at that commit instead"))
+      val (mins, steps) = qparamsFor(spark, table, q8Gen)
+      (q8Scan.select(col("cell"), col("id"), col("codes")),
+        Some(sq8Dot(spark)(col("qv"), col("codes"), mins, steps) /
+          (col("qn") * sqrt(sq8NormSq(spark)(col("codes"), mins, steps)))))
+    }
   }
 
   /** Compact a [[writeIvfIndex]] index after [[appendToIvfIndex]]

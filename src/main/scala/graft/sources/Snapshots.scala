@@ -1,7 +1,29 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+/** Which state of a persisted index a probe reads. */
+sealed trait AsOf
+
+object AsOf {
+  /** The live member views; no manifest is read. */
+  case object Live extends AsOf
+
+  /** The state `n` maintenance commits back. `Commits(0)` replays the
+    * newest manifest (a pinned repeatable read). Counts commits, so an
+    * auto-compaction cadence shifts fixed depths. */
+  final case class Commits(n: Int) extends AsOf {
+    require(n >= 0, s"need n >= 0, got $n")
+  }
+
+  /** The newest commit recorded at or before `epochMs`: "yesterday's
+    * index by yesterday's clock", stable under any maintenance cadence. */
+  final case class At(epochMs: Long) extends AsOf
+
+  /** The commit a [[Snapshots.tagSnapshot]] name pins. */
+  final case class Tag(name: String) extends AsOf
+}
 
 /** Family-level snapshot log for persisted indexes — the piece that
   * makes "probe the index as it was BEFORE the last maintenance op"
@@ -718,12 +740,9 @@ object Snapshots {
     * member never fails on it. */
   def resolveStateAsOf(spark: SparkSession, index: String,
       back: Int): Map[String, MemberState] = {
-    require(back >= 0, s"need back >= 0, got $back")
-    val commits = collectedCommits(spark, index)
-    require(commits.length > back,
-      s"index $index has ${commits.length} recorded maintenance commits — " +
-        s"cannot step back $back")
-    resolveStateAt(spark, index, commits, back)
+    val commitsTs = collectedCommitsTs(spark, index)
+    resolveStateAt(spark, index, commitsTs.map(c => (c._1, c._2, c._3, c._4)),
+      positionOf(spark, index, commitsTs, AsOf.Commits(back)))
   }
 
   /** The manifest log collected newest-first — bounded by compactLog
@@ -918,8 +937,8 @@ object Snapshots {
     * later append added, so this form keeps the strict pre-file-log
     * refusal: it throws when stepping across ANY non-revertible commit,
     * and eagerly validates that every resolved generation still exists
-    * (the original contract, preserved for audit tooling). Probes use
-    * [[resolveStateAsOf]] + [[MemberState.read]] instead. */
+    * (the original contract, preserved for audit tooling). Probes read
+    * through [[open]] instead. */
   def resolveAsOf(spark: SparkSession, index: String,
       back: Int): Map[String, String] = {
     require(back >= 0, s"need back >= 0, got $back")
@@ -947,7 +966,7 @@ object Snapshots {
   }
 
   // ---- timestamp / named-snapshot resolution (r17 directive 4) -------
-  // `asOfCommits` counts commits, so an enabled auto-compaction cadence
+  // `AsOf.Commits` counts commits, so an enabled auto-compaction cadence
   // SHIFTS fixed depths (each triggered compaction is one more commit —
   // the reason auto-compact shipped defaulting off). Timestamps and
   // tags name a state without commit arithmetic: rollback reads stay
@@ -962,7 +981,7 @@ object Snapshots {
   /** Name the state `back` commits ago (default: the newest commit) so
     * probes can resolve it later by name — `tagSnapshot(s, idx,
     * "pre_migration")` before a risky maintenance run, then
-    * `asOfTag = "pre_migration"` on any probe while it is vetted. The
+    * `AsOf.Tag("pre_migration")` on any probe while it is vetted. The
     * tag is one table property on the manifest log: O(1), crash-atomic
     * with the catalog op, carried across compactLog flips, and it PINS
     * its commit — compactLog never drops manifests at or after the
@@ -986,7 +1005,7 @@ object Snapshots {
     * deployment, a corpus index plus its dedup history) so an operator
     * pins or rolls back the WHOLE stack with a single tag instead of
     * per-index commit arithmetic: every probe of every member index
-    * then passes the same `asOfTag`. Each entry is `(index, back)` —
+    * then passes the same `AsOf.Tag`. Each entry is `(index, back)` —
     * the per-index commit depth to tag (0 = its live head).
     *
     * NOT atomic across indexes (each tag is one catalog op on its own
@@ -1039,8 +1058,13 @@ object Snapshots {
   /** The `back` depth of commit `targetId` in the current history —
     * how timestamp/tag selectors reuse the one resolution path. */
   private def backForCommitId(spark: SparkSession, index: String,
+      targetId: Long): Int =
+    positionOfId(index, collectedCommits(spark, index).map(_._1), targetId)
+
+  /** Position of commit `targetId` in the newest-first `ids`; the one
+    * retention refusal of every selector. */
+  private def positionOfId(index: String, ids: Array[Long],
       targetId: Long): Int = {
-    val ids = collectedCommits(spark, index).map(_._1)
     val pos = ids.indexOf(targetId)
     require(pos >= 0,
       s"commit $targetId of index $index is no longer in the snapshot " +
@@ -1057,76 +1081,124 @@ object Snapshots {
     * are the total order, ts is the name). */
   def backForTimestamp(spark: SparkSession, index: String,
       tsMillis: Long): Int =
-    backForTimestampIn(index, collectedCommitsTs(spark, index),
-      manifestHasTs(spark, index), tsMillis)
+    positionOf(spark, index, collectedCommitsTs(spark, index),
+      AsOf.At(tsMillis))
 
-  /** The driver-side half of [[backForTimestamp]] over an already-
-    * collected manifest — so a selector resolve pays ONE manifest job,
-    * not one per addressing hop. Same contract: max commit id among
-    * stamped rows at or before the instant (ids are the total order,
-    * the clock is the name; NULL-ts legacy rows never match). */
-  private def backForTimestampIn(index: String,
+  /** Position (0 = newest) in the newest-first manifest `commits` of
+    * the commit `asOf` names — the one depth / timestamp / tag lookup
+    * behind [[open]] and [[commitIdFor]]; `Live` names the newest
+    * commit. Timestamps resolve to the max commit id among stamped rows
+    * at or before the instant (ids are the total order, the clock is
+    * the name; NULL-ts legacy rows never match). */
+  private def positionOf(spark: SparkSession, index: String,
       commits: Array[(Long, String, Boolean, Seq[(String, String)], Option[Long])],
-      hasTsColumn: Boolean, tsMillis: Long): Int = {
-    require(hasTsColumn,
-      s"snapshot log of $index predates wall-clock stamping — run any " +
-        "maintenance op to migrate it, then probe by timestamp")
-    val qualifying = commits.filter(_._5.exists(_ <= tsMillis))
-    require(qualifying.nonEmpty,
-      s"index $index has no maintenance commit recorded at or before " +
-        s"timestamp $tsMillis")
-    val targetId = qualifying.map(_._1).max
-    val pos = commits.map(_._1).indexOf(targetId)
-    require(pos >= 0,
-      s"commit $targetId of index $index is no longer in the snapshot " +
-        "log (compactLog retention dropped it) — time travel reaches " +
-        "only kept manifests")
+      asOf: AsOf): Int = {
+    val ids = commits.map(_._1)
+    val pos = asOf match {
+      case AsOf.Live => 0
+      case AsOf.Commits(n) => n
+      case AsOf.At(tsMillis) =>
+        require(manifestHasTs(spark, index),
+          s"snapshot log of $index predates wall-clock stamping — run " +
+            "any maintenance op to migrate it, then probe by timestamp")
+        val qualifying = commits.filter(_._5.exists(_ <= tsMillis))
+        require(qualifying.nonEmpty,
+          s"index $index has no maintenance commit recorded at or " +
+            s"before timestamp $tsMillis")
+        positionOfId(index, ids, qualifying.map(_._1).max)
+      case AsOf.Tag(name) =>
+        val known = tags(spark, index)
+        positionOfId(index, ids, known.getOrElse(name,
+          throw new IllegalArgumentException(
+            s"index $index has no snapshot tag '$name' — tags: " +
+              known.keys.toSeq.sorted.mkString(", "))))
+    }
+    require(commits.length > pos,
+      s"index $index has ${commits.length} recorded maintenance commits — " +
+        s"cannot step back $pos")
     pos
   }
 
-  /** [[resolveStateAsOf]] addressed by commit depth, wall-clock
-    * timestamp, or snapshot tag — the shared probe entry (BM25 / IVF /
-    * MinHash probes all delegate here). At most one selector may be
-    * set; all unset resolves the LIVE state (empty map — the caller
-    * reads the live tables). */
-  def resolveSelector(spark: SparkSession, index: String,
-      asOfCommits: Int, asOfTimestamp: Long = 0L,
-      asOfTag: String = ""): Map[String, MemberState] = {
-    val set = Seq(asOfCommits != 0, asOfTimestamp != 0L,
-      asOfTag != null && asOfTag.nonEmpty)
-    require(set.count(identity) <= 1,
-      "set at most ONE of asOfCommits / asOfTimestamp / asOfTag")
-    if (set.forall(!_)) return Map.empty
-    // ONE manifest collect serves every addressing mode (r17
-    // optimization round: the previous delegation chain re-collected
-    // the manifest per hop — tag → depth lookup → resolveStateAsOf was
-    // three manifest jobs on every tag-addressed probe)
-    val commitsTs = collectedCommitsTs(spark, index)
-    val commits = commitsTs.map(c => (c._1, c._2, c._3, c._4))
-    val back =
-      if (asOfCommits != 0) {
-        require(asOfCommits >= 0, s"need back >= 0, got $asOfCommits")
-        asOfCommits
-      } else if (asOfTimestamp != 0L)
-        backForTimestampIn(index, commitsTs,
-          manifestHasTs(spark, index), asOfTimestamp)
-      else {
-        val t = tags(spark, index).getOrElse(asOfTag,
-          throw new IllegalArgumentException(
-            s"index $index has no snapshot tag '$asOfTag' — tags: " +
-              tags(spark, index).keys.toSeq.sorted.mkString(", ")))
-        val pos = commits.map(_._1).indexOf(t)
-        require(pos >= 0,
-          s"commit $t of index $index is no longer in the snapshot " +
-            "log (compactLog retention dropped it) — time travel " +
-            "reaches only kept manifests")
-        pos
-      }
-    require(commits.length > back,
-      s"index $index has ${commits.length} recorded maintenance commits — " +
-        s"cannot step back $back")
-    resolveStateAt(spark, index, commits, back)
+  /** [[resolveStateAsOf]] at the state `asOf` names, from ONE manifest
+    * collect. `Live` resolves nothing: the caller reads the live views. */
+  private def resolveSelector(spark: SparkSession, index: String,
+      asOf: AsOf): Map[String, MemberState] =
+    if (asOf == AsOf.Live) Map.empty
+    else {
+      val commitsTs = collectedCommitsTs(spark, index)
+      resolveStateAt(spark, index, commitsTs.map(c => (c._1, c._2, c._3, c._4)),
+        positionOf(spark, index, commitsTs, asOf))
+    }
+
+  /** One probe's read of an index family at the state [[open]] resolved:
+    * its members, its tombstone list and the probe's candidate filter. */
+  final class Snapshot private[Snapshots] (spark: SparkSession,
+      index: String, asOf: AsOf, states: Map[String, MemberState],
+      tomb: Option[(DataFrame, Long)], candidateFilter: Option[Column]) {
+    private val reads = scala.collection.mutable.Map.empty[String, DataFrame]
+
+    /** Member `live` at this state: the live view, or the resolved
+      * generation (its recorded files for an in-place-append member).
+      * Read once per snapshot: a historical read builds a fresh file
+      * index per call, and probes read some members more than once. */
+    def read(live: String): DataFrame = reads.getOrElseUpdate(live,
+      states.get(live).map(_.read(spark)).getOrElse(spark.table(live)))
+
+    /** The generation table member `live` serves at this state and its
+      * frame, for a reader that pairs the member with a sidecar of the
+      * same generation — a concurrent flip of the live view then leaves
+      * the probe stale but consistent. None when the resolved state
+      * predates the member. */
+    def pinned(live: String): Option[(String, DataFrame)] =
+      if (asOf == AsOf.Live) {
+        val g = Generations.current(spark, live)
+        Some((g, spark.table(g)))
+      } else states.get(live).map(st => (st.gen, st.read(spark)))
+
+    /** `df` without this state's tombstoned ids on `idColumn`, then the
+      * probe's candidate filter: deleted and non-qualifying documents
+      * leave every candidate set while scoring statistics stay
+      * index-wide. */
+    def alive(df: DataFrame, idColumn: String): DataFrame = {
+      val kept = Tombstones.filterWith(df, idColumn, tomb, index)
+      candidateFilter.fold(kept)(kept.filter)
+    }
   }
+
+  /** The one snapshot read of every persisted-index probe:
+    *  1. drops this session's cached listings of `members` — maintenance
+    *     may have run in another session (a foreachBatch clone), whose
+    *     appends refresh only its own caches;
+    *  2. resolves `asOf` from the family log (`Live` runs no manifest
+    *     job);
+    *  3. picks the tombstone list: the live one, or the deletes
+    *     generation the resolved manifest names.
+    * Members are read through [[Snapshot.read]] / [[Snapshot.pinned]],
+    * candidates through [[Snapshot.alive]]. A retired generation is
+    * named loudly on first read, never partially served. */
+  def open(spark: SparkSession, index: String, members: Seq[String],
+      asOf: AsOf, candidateFilter: Option[Column] = None): Snapshot = {
+    Generations.refreshTables(spark, members: _*)
+    val states = resolveSelector(spark, index, asOf)
+    val tomb =
+      if (asOf == AsOf.Live) Tombstones.frame(spark, index)
+      else states.get(Tombstones.tableName(index))
+        .flatMap(st => Tombstones.frameAt(spark, st.gen))
+    new Snapshot(spark, index, asOf, states, tomb, candidateFilter)
+  }
+
+  /** [[open]] overlapped with an independent bounded driver job — a
+    * historical resolve (manifest and file-log collects) runs on a pool
+    * thread while `job` runs on the caller's; both are awaited. The
+    * live open runs no job, so it stays on the caller's thread. */
+  def openAlongside[T](spark: SparkSession, index: String,
+      members: Seq[String], asOf: AsOf,
+      candidateFilter: Option[Column] = None)(job: => T): (Snapshot, T) =
+    if (asOf == AsOf.Live) {
+      val snap = open(spark, index, members, asOf, candidateFilter)
+      (snap, job)
+    } else graft.operators.Concurrent.both(
+      open(spark, index, members, asOf, candidateFilter), job)
 
   // ---- incremental (CDC-style) reads (r17 addendum) ------------------
   // A downstream consumer of a maintained index — an embedding pipeline
@@ -1140,38 +1212,14 @@ object Snapshots {
   // the Iceberg incremental-append / Delta CDF read, at maintenance-
   // commit granularity.
 
-  /** The commit id a selector names — depth / wall-clock timestamp /
-    * snapshot tag, at most one; ALL UNSET resolves the NEWEST commit.
-    * The addressing half of [[readAddedBetween]]: endpoints of an
-    * incremental window are named the same three ways probes name a
-    * historical state. */
-  def commitIdFor(spark: SparkSession, index: String, asOfCommits: Int = 0,
-      asOfTimestamp: Long = 0L, asOfTag: String = ""): Long = {
-    val set = Seq(asOfCommits != 0, asOfTimestamp != 0L,
-      asOfTag != null && asOfTag.nonEmpty)
-    require(set.count(identity) <= 1,
-      "set at most ONE of asOfCommits / asOfTimestamp / asOfTag")
-    // ONE narrow manifest collect serves every addressing mode (r18 —
-    // the timestamp branch used to re-collect via backForTimestamp, and
-    // the id projection ran history()'s distributed orderBy)
+  /** The commit id `asOf` names; `Live` names the NEWEST commit. The
+    * addressing half of [[readAddedBetween]]: endpoints of an
+    * incremental window are named the same ways probes name a
+    * historical state. One narrow manifest collect serves every mode. */
+  def commitIdFor(spark: SparkSession, index: String,
+      asOf: AsOf = AsOf.Live): Long = {
     val commitsTs = collectedCommitsTs(spark, index)
-    val ids = commitsTs.map(_._1) // newest first; retention-bounded
-    require(ids.nonEmpty, s"index $index has an empty snapshot log")
-    if (asOfTimestamp != 0L)
-      ids(backForTimestampIn(index, commitsTs,
-        manifestHasTs(spark, index), asOfTimestamp))
-    else if (asOfTag != null && asOfTag.nonEmpty) {
-      val t = tags(spark, index).getOrElse(asOfTag,
-        throw new IllegalArgumentException(
-          s"index $index has no snapshot tag '$asOfTag' — tags: " +
-            tags(spark, index).keys.toSeq.sorted.mkString(", ")))
-      t
-    } else {
-      require(ids.length > asOfCommits,
-        s"index $index has ${ids.length} recorded maintenance commits — " +
-          s"cannot step back $asOfCommits")
-      ids(asOfCommits)
-    }
+    commitsTs(positionOf(spark, index, commitsTs, asOf))._1
   }
 
   /** The rows maintenance commits in `(fromId, toId]` APPENDED to

@@ -858,23 +858,23 @@ object ScaleSmoke {
         s"history=${graft.sources.Snapshots.history(spark, "g_conc_smoke")
           .select("op").collect().map(_.getString(0)).mkString(",")}")
       // time-travel cost at this decade: delete a slice (a revertible
-      // commit), then compare the LIVE probe against the asOfCommits=1
+      // commit), then compare the LIVE probe against the AsOf.Commits(1)
       // probe of the SAME queries — the rollback read must cost the
       // live probe plus a metadata constant, never an index rescan
       graft.operators.Bm25.deleteFromIndex(spark, "g_conc_smoke",
         spark.range(batchN)
           .select(($"id" + 1000000000L).as("id"))
           .filter(pmod($"id", lit(7L)) === 3L))
-      def ttProbe(tag: String, asOf: Int) = {
-        def one(i: Int) = time(s"probe [$tag#$i] (asOfCommits=$asOf)") {
+      def ttProbe(tag: String, asOf: graft.sources.AsOf) = {
+        def one(i: Int) = time(s"probe [$tag#$i] ($asOf)") {
           graft.operators.Bm25.topKAgainstIndex(probeQ, "g_conc_smoke",
-              k = 10, asOfCommits = asOf)
+              k = 10, asOf = asOf)
             .agg(count(lit(1)), sum($"doc_id"), sum($"score_e4")).collect()(0)
         }
         one(1); one(2)
       }
-      val live = ttProbe("live", 0)
-      val back = ttProbe("time-travel", 1)
+      val live = ttProbe("live", graft.sources.AsOf.Live)
+      val back = ttProbe("time-travel", graft.sources.AsOf.Commits(1))
       require(live != back,
         "the delete must separate the live and asOf=1 probe results")
       println(s"  live=$live asOf1=$back")
@@ -1152,9 +1152,10 @@ object ScaleSmoke {
           1000000000L + i.toLong * batchN)
         .select($"id", array((0 until dims).map(comp): _*).as("v"))
       val queries = vecs.filter($"id" < 1000L).localCheckpoint(true)
-      def checksum(tbl: String, asOfTs: Long = 0L): org.apache.spark.sql.Row =
-        Knn.ivfTopKAgainstIndex(queries, tbl, "id", "v", k = 10,
-            asOfTimestamp = asOfTs)
+      def checksum(tbl: String,
+          asOf: graft.sources.AsOf = graft.sources.AsOf.Live)
+          : org.apache.spark.sql.Row =
+        Knn.ivfTopKAgainstIndex(queries, tbl, "id", "v", k = 10, asOf = asOf)
           .agg(count(lit(1)), sum($"nid")).collect()(0)
       // twin A: never crashes
       val tblA = "g_r17_clean"
@@ -1209,8 +1210,8 @@ object ScaleSmoke {
       def liveProbe(i: Int) = time(s"[r17] LIVE probe #$i (1000 q, k=10)") {
         checksum(tblB)
       }
-      def tsProbe(i: Int) = time(s"[r17] asOfTimestamp probe #$i") {
-        checksum(tblB, asOfTs = nowTs)
+      def tsProbe(i: Int) = time(s"[r17] AsOf.At probe #$i") {
+        checksum(tblB, graft.sources.AsOf.At(nowTs))
       }
       liveProbe(1); val lv = liveProbe(2)
       tsProbe(1); val tv = tsProbe(2)

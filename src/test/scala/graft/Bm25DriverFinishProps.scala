@@ -9,6 +9,7 @@ import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.operators.Bm25
+import graft.sources.AsOf
 
 /** Differential property: a straight `Bm25.topKAgainstIndex` probe whose
   * scoring fanout is below `spreadMinFanout` (the driver finish) returns
@@ -118,7 +119,8 @@ object Bm25DriverFinishProps extends Properties("bm25DriverFinish") {
     val depth = math.min(c.asOfCommits, fx.commitsAfterBuild)
     def probe(spreadMinFanout: Long): DataFrame =
       Bm25.topKAgainstIndex(queries(c), fx.table, c.k,
-        candidateFilter = c.filter.map(_._2), asOfCommits = depth,
+        candidateFilter = c.filter.map(_._2),
+        asOf = if (depth == 0) AsOf.Live else AsOf.Commits(depth),
         spreadMinFanout = spreadMinFanout)
     val finish = probe(1000000L)
     val tail = probe(0L)

@@ -5,7 +5,7 @@ import java.util.concurrent.CountDownLatch
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bm25, Dedup}
-import graft.sources.{ConcurrentMaintenanceException, Generations, PendingAppend, Tombstones}
+import graft.sources.{AsOf, ConcurrentMaintenanceException, Generations, PendingAppend, Tombstones}
 
 /** The multi-writer contract of index maintenance (round 14, third
   * session — the "operational concurrency" gap the r13 verdict named):
@@ -390,7 +390,7 @@ class ConcurrentMaintenanceSpec extends AnyFunSuite {
       baseOnly, s"$dir/base", nDirs = 4)
     assert(
       Bm25.topKAgainstIndex(qs.toDF("qid", "term"), tbl, k = 100,
-          asOfCommits = 1)
+          asOf = AsOf.Commits(1))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
       Bm25.topKAgainstIndex(qs.toDF("qid", "term"), baseOnly, k = 100)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bm25, Dedup, Knn}
-import graft.sources.{Snapshots, Tombstones}
+import graft.sources.{AsOf, Snapshots, Tombstones}
 
 /** Incremental (CDC-style) reads off the snapshot log's add-file deltas
   * (r17 addendum — the Iceberg incremental-append / Delta CDF shape at
@@ -124,7 +124,7 @@ class IncrementalReadSpec extends AnyFunSuite {
       Snapshots.readAddedBetween(spark, tbl, s"${tbl}_sigs", buildId, head)
     }
     assert(eDropped.getMessage.contains("kept manifest"))
-    val from = Snapshots.commitIdFor(spark, tbl, asOfTag = "ckpt")
+    val from = Snapshots.commitIdFor(spark, tbl, AsOf.Tag("ckpt"))
     assert(from == ingest1Id)
     assert(addedIds(tbl, from, head, ignoreDeletes = true)
       == (20L until 30L))
@@ -141,16 +141,15 @@ class IncrementalReadSpec extends AnyFunSuite {
     Snapshots.tagSnapshot(spark, tbl, "after_append")
     val ids = Snapshots.history(spark, tbl).collect().map(_.getLong(0))
     assert(Snapshots.commitIdFor(spark, tbl) == ids.max)
-    assert(Snapshots.commitIdFor(spark, tbl, asOfCommits = 1) == ids.min)
+    assert(Snapshots.commitIdFor(spark, tbl, AsOf.Commits(1)) == ids.min)
     assert(Snapshots.commitIdFor(spark, tbl,
-      asOfTimestamp = tsAfterBuild) == ids.min)
+      AsOf.At(tsAfterBuild)) == ids.min)
     assert(Snapshots.commitIdFor(spark, tbl,
-      asOfTag = "after_append") == ids.max)
+      AsOf.Tag("after_append")) == ids.max)
+    // one AsOf value names one state: combining selectors does not
+    // type-check
     intercept[IllegalArgumentException] {
-      Snapshots.commitIdFor(spark, tbl, asOfCommits = 1, asOfTag = "x")
-    }
-    intercept[IllegalArgumentException] {
-      Snapshots.commitIdFor(spark, tbl, asOfTag = "no_such_tag")
+      Snapshots.commitIdFor(spark, tbl, AsOf.Tag("no_such_tag"))
     }
   }
 
@@ -265,7 +264,7 @@ class IncrementalReadSpec extends AnyFunSuite {
     assert(Snapshots.tags(spark, a)("stack_v1")
       == Snapshots.commitIdFor(spark, a))
     assert(Snapshots.tags(spark, b)("stack_v1")
-      == Snapshots.commitIdFor(spark, b, asOfCommits = 1))
+      == Snapshots.commitIdFor(spark, b, AsOf.Commits(1)))
     // partial failure: the second index has no snapshot log
     val e = intercept[IllegalStateException] {
       Snapshots.tagStack(spark,

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.{Bm25, Dedup, Knn}
+import graft.sources.AsOf
 
 /** Contract battery for tombstone DELETEs across all three persisted
   * index families (q170/q171/q172) and the metadata-filtered IVF probe
@@ -137,9 +138,10 @@ class IndexDeleteSpec extends AnyFunSuite {
       bmDocs.filter($"doc_id" % 5 === 1).select($"doc_id"))
     Bm25.appendToIndex(Seq((100L, "alpha g0 fresh")).toDF("doc_id", "text"),
       "doc_id", "text", tbl)
-    // asOfCommits = 1: after the delete, before the append
+    // AsOf.Commits(1): after the delete, before the append
     def historical(): Seq[(Long, Long, Long, Long)] =
-      bmRows(Bm25.topKAgainstIndex(bmQueries, tbl, k = 100, asOfCommits = 1))
+      bmRows(Bm25.topKAgainstIndex(bmQueries, tbl, k = 100,
+        asOf = AsOf.Commits(1)))
     val flat = historical()
     assert(flat.nonEmpty && flat.forall(_._3 % 5 != 1) && !flat.exists(_._3 == 100L))
     // move the deletes generation's data files one level down, as a

@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** `Queries.cachedLayout` keys a layout on its corpus path itself: two
   * corpora whose paths share a `String.hashCode` (sibling dirs `Aa` and
   * `BB`) must each build and read their own layout. A layout shared by
-  * several queries is built once per corpus, and a run-once step owns
-  * no directory. */
+  * several queries is built once per corpus with its whole snapshot
+  * history, and a run-once step owns no directory. */
 class LayoutKeySpec extends AnyFunSuite {
   import SparkSuiteBase.{deleteTree, sfDir, spark}
 
@@ -52,11 +52,26 @@ class LayoutKeySpec extends AnyFunSuite {
     } finally deleteTree(root)
   }
 
+  test("q158 alone on a fresh corpus leaves exactly one quantize commit " +
+      "in its IVF index's history") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-layout-ivf")
+    try {
+      Files.copy(Paths.get(s"$sfDir/embeddings.parquet"),
+        root.resolve("embeddings.parquet"))
+      SparkEntry.queries("q158_knn_ivf_index")(spark, root.toString)
+      val ops = graft.sources.Snapshots
+        .history(spark, Queries.ivfIndex(spark, root.toString))
+        .select($"op").collect().map(_.getString(0)).toSeq
+      assert(ops == Seq("quantize", "build"),
+        s"the IVF layout's writer owns its quantize commit: $ops")
+    } finally deleteTree(root)
+  }
+
   test("run-once steps run once and own no dir; every cached layout dir " +
       "holds a file") {
     import spark.implicits._
-    val steps = Seq("q178_knn_ivf_sq8" -> "q178_ivfsq8",
-      "q192_hybrid_rrf_stack_tag" -> "q192_stacktag")
+    val steps = Seq("q192_hybrid_rrf_stack_tag" -> "q192_stacktag")
     for ((query, step) <- steps) {
       def construct(): Unit = {
         val calls = Queries.layoutCalls

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.{Bm25, Dedup, Knn}
-import graft.sources.{Generations, PendingAppend, Snapshots}
+import graft.sources.{AsOf, Generations, PendingAppend, Snapshots}
 
 /** Self-healing append crash recovery through the one
   * [[PendingAppend]] protocol (IVF and MinHash here; BM25's commit-window
@@ -36,9 +36,10 @@ class PendingAppendSpec extends AnyFunSuite {
     (i, v.toSeq)
   }.toDF("vec_id", "embedding")
 
-  private def knnRows(tbl: String, asOf: Int = 0): Seq[(Long, Int, Long, Double)] =
+  private def knnRows(tbl: String,
+      asOf: AsOf = AsOf.Live): Seq[(Long, Int, Long, Double)] =
     Knn.ivfTopKAgainstIndex(vecs.filter($"vec_id" < 5), tbl,
-        "vec_id", "embedding", k = 3, asOfCommits = asOf)
+        "vec_id", "embedding", k = 3, asOf = asOf)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
@@ -79,7 +80,7 @@ class PendingAppendSpec extends AnyFunSuite {
       assert(ops.contains("append-recovery"),
         s"roll-forward must be a recorded commit: $ops")
       // time travel ACROSS the recovered append serves the build state
-      assert(knnRows(tbl, asOf = 1) == atBuild,
+      assert(knnRows(tbl, AsOf.Commits(1)) == atBuild,
         "history must step back across the recovered append")
     }
     // either way the final state equals one clean build+append

@@ -78,10 +78,10 @@ class PlanAuditSpec extends AnyFunSuite {
                                    // stream-tombstoned index — same
                                    // 1-row bounds broadcast
       "q177_bm25_time_travel",     // q155's probe over the HISTORICAL
-                                   // generations (asOfCommits=1) — same
+                                   // generations (AsOf.Commits(1)) — same
                                    // 1-row bounds broadcast, read from
                                    // the manifest-resolved bounds gen
-      "q179_bm25_tt_across_append", // q177's probe at asOfCommits=2 —
+      "q179_bm25_tt_across_append", // q177's probe at AsOf.Commits(2) —
                                     // same 1-row bounds broadcast, read
                                     // from the build-time bounds gen
                                     // (the postings read is file-pinned)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bm25, Dedup, Knn}
-import graft.sources.{Generations, Snapshots}
+import graft.sources.{AsOf, Generations, Snapshots}
 
 /** The family snapshot log + time-travel contract
   * ([[graft.sources.Snapshots]], round 14 third session):
@@ -12,7 +12,7 @@ import graft.sources.{Generations, Snapshots}
   *    generation each member table serves when the op finishes, with
   *    its revertibility (fresh-generation rewrites yes; in-place file
   *    appends no);
-  *  - `topKAgainstIndex(asOfCommits = n)` serves the index exactly as
+  *  - `topKAgainstIndex(asOf = AsOf.Commits(n))` serves the index exactly as
   *    it was n maintenance commits ago — the rollback read for a bad
   *    takedown ("serve yesterday's index while we fix it");
   *  - stepping ACROSS a non-revertible commit refuses loudly (the
@@ -29,9 +29,9 @@ class SnapshotsSpec extends AnyFunSuite {
   }
   private val qs = Seq((1L, "rare3"), (2L, "rare5"), (3L, "filler"))
 
-  private def probe(tbl: String, asOf: Int = 0): Seq[(Long, Long, Long, Long)] =
-    Bm25.topKAgainstIndex(qs.toDF("qid", "term"), tbl, k = 100,
-        asOfCommits = asOf)
+  private def probe(tbl: String,
+      asOf: AsOf = AsOf.Live): Seq[(Long, Long, Long, Long)] =
+    Bm25.topKAgainstIndex(qs.toDF("qid", "term"), tbl, k = 100, asOf = asOf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2)).toSeq
 
@@ -57,16 +57,16 @@ class SnapshotsSpec extends AnyFunSuite {
       (0L, "build", true)))
 
     // asOf = 0 is the live read
-    assert(probe(tbl, asOf = 0) == atDelete)
+    assert(probe(tbl, AsOf.Live) == atDelete)
     // asOf = 1 replays the pre-delete (post-append) state exactly
-    assert(probe(tbl, asOf = 1) == atAppend)
+    assert(probe(tbl, AsOf.Commits(1)) == atAppend)
     assert(atAppend != atDelete, "the delete must have changed the ranking")
     // stepping ACROSS the in-place append serves the build-time state
     // exactly: the build commit's FILE MANIFEST pins the postings read
     // to the files present then, un-seeing the appended ones (round 15
     // — the r14 contract refused here)
     assert(atBuild != atAppend) // (sanity: the crossed state really differs)
-    assert(probe(tbl, asOf = 2) == atBuild,
+    assert(probe(tbl, AsOf.Commits(2)) == atBuild,
       "asOf=2 must cross the append commit via the file manifest and " +
         "serve the build-time ranking exactly")
     // ... but the name-only resolver (audit tooling that reads the
@@ -81,7 +81,7 @@ class SnapshotsSpec extends AnyFunSuite {
     val lfLoc = Generations.location(spark, lf)
     spark.sql(s"DROP TABLE IF EXISTS $lf")
     try {
-      val e2 = intercept[IllegalStateException] { probe(tbl, asOf = 2) }
+      val e2 = intercept[IllegalStateException] { probe(tbl, AsOf.Commits(2)) }
       assert(e2.getMessage.contains("commit 1") &&
         e2.getMessage.contains("file log"))
     } finally {
@@ -91,7 +91,7 @@ class SnapshotsSpec extends AnyFunSuite {
         s"LOCATION '$lfLoc'")
     }
     // history deeper than recorded refuses
-    intercept[IllegalArgumentException] { probe(tbl, asOf = 3) }
+    intercept[IllegalArgumentException] { probe(tbl, AsOf.Commits(3)) }
   }
 
   test("a compaction folds the delete but asOf=1 still serves the " +
@@ -107,11 +107,11 @@ class SnapshotsSpec extends AnyFunSuite {
     // rankings are invariant across the fold (q170's contract), and the
     // asOf=1 replay of the pre-compaction state must agree
     assert(probe(tbl) == atDelete)
-    assert(probe(tbl, asOf = 1) == atDelete)
+    assert(probe(tbl, AsOf.Commits(1)) == atDelete)
     // reclaim the superseded postings generation, then the asOf read
     // must fail NAMING the retired generation, never partially read
     Generations.vacuum(spark, s"${tbl}_postings")
-    val e = intercept[IllegalStateException] { probe(tbl, asOf = 1) }
+    val e = intercept[IllegalStateException] { probe(tbl, AsOf.Commits(1)) }
     assert(e.getMessage.contains("retired"))
   }
 
@@ -123,17 +123,17 @@ class SnapshotsSpec extends AnyFunSuite {
     val tbl = "g_snap_ivftt"
     Knn.writeIvfIndex(vecs.toDF("vec_id", "embedding"), "vec_id", "embedding",
       tbl, s"$dir/ivf", nCells = 4)
-    def probe(asOf: Int) = Knn.ivfTopKAgainstIndex(
+    def probe(asOf: AsOf) = Knn.ivfTopKAgainstIndex(
         vecs.filter(_._1 < 5).toDF("vec_id", "embedding"),
-        tbl, "vec_id", "embedding", k = 10, asOfCommits = asOf)
+        tbl, "vec_id", "embedding", k = 10, asOf = asOf)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2)).toSeq
-    val pre = probe(0)
+    val pre = probe(AsOf.Live)
     Knn.deleteFromIvfIndex(spark, tbl,
       vecs.map(_._1).filter(_ % 3 == 1).toDF("id"))
-    val post = probe(0)
+    val post = probe(AsOf.Live)
     assert(post != pre, "the delete must change the neighbor set")
-    assert(probe(1) == pre,
+    assert(probe(AsOf.Commits(1)) == pre,
       "asOf=1 must serve the pre-delete neighbor set exactly")
   }
 
@@ -148,19 +148,19 @@ class SnapshotsSpec extends AnyFunSuite {
     // replay exact copies of history docs 0..9 as a new batch
     val replay = (0L until 10L).map(i => (1000L + i, doc(i)))
       .toDF("doc_id", "text")
-    def cls(asOf: Int) = Dedup.minhashIncrementalAgainstIndex(
-        replay, tbl, "doc_id", "text", asOfCommits = asOf)
+    def cls(asOf: AsOf) = Dedup.minhashIncrementalAgainstIndex(
+        replay, tbl, "doc_id", "text", asOf = asOf)
       .select($"doc_id", $"status", $"n_hist_dups").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
       .sortBy(_._1).toSeq
-    val pre = cls(0)
+    val pre = cls(AsOf.Live)
     assert(pre.forall(_._2 == "dup_history"))
     Dedup.deleteFromMinhashIndex(spark, tbl,
       (0L until 10L).filter(_ % 2 == 0).toDF("id"))
-    val post = cls(0)
+    val post = cls(AsOf.Live)
     assert(post.count(_._2 == "new") == 5,
       s"evens' twins tombstoned => their replays classify new: $post")
-    assert(cls(1) == pre,
+    assert(cls(AsOf.Commits(1)) == pre,
       "asOf=1 must classify against the full pre-delete history")
   }
 
@@ -223,12 +223,12 @@ class SnapshotsSpec extends AnyFunSuite {
     // fold both logs, keeping the full history — one file each, every
     // manifest (and its file rows) intact
     Snapshots.compactLog(spark, tbl, keepCommits = 3)
-    assert(probe(tbl, asOf = 2) == atBuild,
+    assert(probe(tbl, AsOf.Commits(2)) == atBuild,
       "the build commit's file manifest must survive the log fold — " +
         "time travel across the append still serves the build state")
     // and a bounded fold truncates file rows WITH their manifests
     Snapshots.compactLog(spark, tbl, keepCommits = 1)
-    intercept[IllegalArgumentException] { probe(tbl, asOf = 2) }
+    intercept[IllegalArgumentException] { probe(tbl, AsOf.Commits(2)) }
   }
 
   test("the file-pinned historical read keeps partition pruning (the " +
@@ -288,13 +288,13 @@ class SnapshotsSpec extends AnyFunSuite {
     // the retention window (each append flips the dfs generation, and
     // retention keeps ONE superseded generation per member — so two
     // commits back is the guaranteed-servable depth)
-    assert(probe(tbl, asOf = 1) == states(3),
+    assert(probe(tbl, AsOf.Commits(1)) == states(3),
       "asOf=1 must fold base+adds to the pre-delete state")
-    assert(probe(tbl, asOf = 2) == states(2),
+    assert(probe(tbl, AsOf.Commits(2)) == states(2),
       "asOf=2 must fold base+adds to the post-second-append state")
     // deeper targets a retired dfs generation: loudly NAMED, never a
     // partial read (the Delta VACUUM trade, per the retention contract)
-    val retired = intercept[IllegalStateException] { probe(tbl, asOf = 4) }
+    val retired = intercept[IllegalStateException] { probe(tbl, AsOf.Commits(4)) }
     assert(retired.getMessage.contains("retired"))
     // addsSinceBase counts the growth for the auto-compaction trigger
     assert(Snapshots.addsSinceBase(spark, tbl, s"${tbl}_postings") == 3L)
@@ -332,7 +332,7 @@ class SnapshotsSpec extends AnyFunSuite {
           java.util.Arrays.asList(kept: _*)), schema)
       .coalesce(1).write.format("parquet").option("path", loc)
       .saveAsTable(lf)
-    val e = intercept[IllegalStateException] { probe(tbl, asOf = 1) }
+    val e = intercept[IllegalStateException] { probe(tbl, AsOf.Commits(1)) }
     assert(e.getMessage.contains(s"${tbl}_postings") &&
       e.getMessage.contains("no base file manifest"),
       s"must refuse NAMING the unreconstructable member: ${e.getMessage}")
@@ -414,7 +414,7 @@ class SnapshotsSpec extends AnyFunSuite {
       "record() must migrate a legacy file log to the delta schema")
     // ...and history still serves: asOf=1 targets the build commit,
     // whose legacy full-list row reads as a base manifest
-    assert(probe(tbl, asOf = 1) == atBuild,
+    assert(probe(tbl, AsOf.Commits(1)) == atBuild,
       "legacy full-list rows must keep serving as base manifests")
     // appends after migration open with a fresh base (the legacy gen is
     // unknown), then deltas take over

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.Knn
+import graft.sources.AsOf
 
 /** SQ8 scalar quantization of the IVF index
   * ([[Knn.quantizeIvfIndex]] / [[Knn.ivfTopKAgainstIndexSq8]] /
@@ -99,14 +100,15 @@ class Sq8Spec extends AnyFunSuite {
     assert(got.exists(_._3 % 2 == 1),
       "workload sanity: some appended (odd) vector must actually rank")
     // TIME TRAVEL (r15 directive 3 — the q183 contract at unit scale):
-    // asOfCommits = 1 targets the quantize commit, so the probe must
+    // AsOf.Commits(1) targets the quantize commit, so the probe must
     // serve the QUANTIZE-TIME (codes, params) pair exactly — the
     // appended odd codes structurally unseen via the file manifest, the
     // params from the historical generation's sidecar, candidates evens
     val gotTt = Knn.ivfTopKAgainstIndexSq8(
         union.filter(_._1 < 10).map { case (id, v) => (id, v.toSeq) }
           .toDF("vec_id", "embedding"),
-        tbl, "vec_id", "embedding", k = 8, nProbe = 4, asOfCommits = 1)
+        tbl, "vec_id", "embedding", k = 8, nProbe = 4,
+        asOf = AsOf.Commits(1))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
     val wantTt = IvfMirror.recomputeSq8(union, maxQid = 10L, k = 8,
@@ -114,14 +116,14 @@ class Sq8Spec extends AnyFunSuite {
       trainFilter = _ % 2 == 0, paramFilter = _ % 2 == 0,
       candidateFilter = _ % 2 == 0)
     assert(gotTt == wantTt,
-      "asOfCommits=1 must serve the quantize-time SQ8 state exactly")
+      "AsOf.Commits(1) must serve the quantize-time SQ8 state exactly")
     assert(gotTt != got, "sanity: the historical state must differ")
     // a probe BEFORE the quantize commit names the missing replica
     val e = intercept[IllegalStateException] {
       Knn.ivfTopKAgainstIndexSq8(
         union.filter(_._1 < 2).map { case (id, v) => (id, v.toSeq) }
           .toDF("vec_id", "embedding"),
-        tbl, "vec_id", "embedding", k = 3, asOfCommits = 2)
+        tbl, "vec_id", "embedding", k = 3, asOf = AsOf.Commits(2))
     }
     assert(e.getMessage.contains("no SQ8 replica"),
       s"pre-quantize targets must refuse loudly: ${e.getMessage}")

@@ -3,19 +3,19 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Bm25
-import graft.sources.{Generations, Snapshots}
+import graft.sources.{AsOf, Generations, Snapshots}
 
 /** Timestamp + named-tag time travel (r17, r16 verdict directive 4):
-  * `asOfCommits` counts commits, so an enabled auto-compaction cadence
+  * `AsOf.Commits` counts commits, so an enabled auto-compaction cadence
   * SHIFTS fixed depths — these selectors name a state without commit
   * arithmetic. Contract:
   *
   *  - every manifest row carries a wall-clock `ts`;
-  *    `asOfTimestamp = t` resolves the newest commit recorded at or
+  *    `AsOf.At(t)` resolves the newest commit recorded at or
   *    before `t` (max commit id among qualifying rows — ids stay the
   *    total order, the clock is the name);
   *  - `tagSnapshot(name)` pins the current (or `back`-deep) commit
-  *    under a name; `asOfTag = name` resolves it; tags survive
+  *    under a name; `AsOf.Tag(name)` resolves it; tags survive
   *    compactLog's view flips AND pin their commit against log
   *    retention (the Iceberg tag contract);
   *  - compactLog never re-seeds the next commit id BACKWARDS (r16
@@ -38,10 +38,9 @@ class TimeTravelSelectorsSpec extends AnyFunSuite {
   }
   private val qs = Seq((1L, "rare3"), (2L, "rare5"), (3L, "filler"))
 
-  private def probe(tbl: String, asOf: Int = 0, asOfTs: Long = 0L,
-      asOfTag: String = ""): Seq[(Long, Long, Long, Long)] =
-    Bm25.topKAgainstIndex(qs.toDF("qid", "term"), tbl, k = 100,
-        asOfCommits = asOf, asOfTimestamp = asOfTs, asOfTag = asOfTag)
+  private def probe(tbl: String,
+      asOf: AsOf = AsOf.Live): Seq[(Long, Long, Long, Long)] =
+    Bm25.topKAgainstIndex(qs.toDF("qid", "term"), tbl, k = 100, asOf = asOf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2)).toSeq
 
@@ -72,10 +71,10 @@ class TimeTravelSelectorsSpec extends AnyFunSuite {
     assert(hist.map(_._2).toSeq ==
       Seq("delete", "compact", "append", "build"))
     val tsDelete = hist.head._3
-    val preDelete = probe(tbl, asOf = 1) // the compact commit's state
-    assert(probe(tbl, asOfTs = tsDelete - 1L) == preDelete,
+    val preDelete = probe(tbl, AsOf.Commits(1)) // the compact commit's state
+    assert(probe(tbl, AsOf.At(tsDelete - 1L)) == preDelete,
       "ts(delete)−1 must serve the newest pre-delete state")
-    assert(probe(tbl, asOfTs = System.currentTimeMillis()) == probe(tbl),
+    assert(probe(tbl, AsOf.At(System.currentTimeMillis())) == probe(tbl),
       "a now-or-later timestamp pins the newest commit")
     // the compact state == the append state (layout-only rewrite), and
     // both differ from the post-delete ranking — the selector really
@@ -84,19 +83,17 @@ class TimeTravelSelectorsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Snapshots.backForTimestamp(spark, tbl, hist.last._3 - 10000L)
     }
-    // selectors are mutually exclusive
-    intercept[IllegalArgumentException] {
-      probe(tbl, asOf = 1, asOfTs = tsDelete - 1L)
-    }
+    // selectors are mutually exclusive by type: one AsOf value names
+    // one state
   }
 
   test("asOfTag resolves the pinned commit by name; unknown tags are " +
       "a loud error naming the known tags") {
     val tbl = fixture
-    assert(probe(tbl, asOfTag = "pre_takedown") == probe(tbl, asOf = 1),
+    assert(probe(tbl, AsOf.Tag("pre_takedown")) == probe(tbl, AsOf.Commits(1)),
       "the tag minted before the delete must serve the pre-delete state")
     val e = intercept[IllegalArgumentException] {
-      probe(tbl, asOfTag = "no_such_tag")
+      probe(tbl, AsOf.Tag("no_such_tag"))
     }
     assert(e.getMessage.contains("pre_takedown"))
     intercept[IllegalArgumentException] {
@@ -114,7 +111,8 @@ class TimeTravelSelectorsSpec extends AnyFunSuite {
     val queries = qs.toDF("qid", "raw")
       .select($"qid", failing($"raw").as("term"))
     val thrown = intercept[Throwable] {
-      Bm25.topKAgainstIndex(queries, tbl, k = 10, asOfTag = "no_such_tag")
+      Bm25.topKAgainstIndex(queries, tbl, k = 10,
+        asOf = AsOf.Tag("no_such_tag"))
     }
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: chain(t.getCause)
@@ -140,7 +138,7 @@ class TimeTravelSelectorsSpec extends AnyFunSuite {
     Snapshots.compactLog(spark, tbl, keepCommits = 1)
     assert(Snapshots.tags(spark, tbl).get("pre_takedown").contains(tagged),
       "the tag must survive the compactLog view flip")
-    assert(probe(tbl, asOfTag = "pre_takedown") == probe(tbl, asOf = 1),
+    assert(probe(tbl, AsOf.Tag("pre_takedown")) == probe(tbl, AsOf.Commits(1)),
       "the tagged state must stay resolvable after log retention")
     // new commits mint strictly increasing ids (no reuse after the fold)
     Bm25.deleteFromIndex(spark, tbl,
@@ -231,7 +229,7 @@ class TimeTravelSelectorsSpec extends AnyFunSuite {
       s"legacy rows carry NULL ts, new commits a real stamp: ${rows.toSeq}")
     // a timestamp at the new commit resolves it; commit-depth reads of
     // the legacy commit still work
-    assert(probe(tbl, asOfTs = rows.head._2.get) == probe(tbl))
-    assert(probe(tbl, asOf = 1).nonEmpty)
+    assert(probe(tbl, AsOf.At(rows.head._2.get)) == probe(tbl))
+    assert(probe(tbl, AsOf.Commits(1)).nonEmpty)
   }
 }
