@@ -598,6 +598,26 @@ object Bm25 {
     val h = get(); set(() => ()); h()
   }
 
+  /** The one (n, sumdl, n_dirs) row of bounds generation `gen`. */
+  private def boundsRow(spark: org.apache.spark.sql.SparkSession,
+      table: String, gen: String): Row = {
+    val rows = spark.table(gen).collect()
+    require(rows.length == 1, s"index ${table}_bounds must hold exactly 1 row")
+    rows(0)
+  }
+
+  /** Format check of maintenance ops: a dfs table persisted by a
+    * pre-WAND build lacks the (max_tf, min_dl) stats an append merge
+    * carries forward — fail loudly with the recovery path instead of an
+    * AnalysisException mid-plan. */
+  private def requireWandStats(spark: org.apache.spark.sql.SparkSession,
+      table: String, op: String): Unit =
+    require(Set("max_tf", "min_dl")
+        .subsetOf(spark.table(s"${table}_dfs").columns.toSet),
+      s"index ${table}_dfs predates the WAND-stats format (missing " +
+        s"max_tf/min_dl columns) — rebuild the index with buildIndex " +
+        s"before $op; probes still work via the exact-scan fallback")
+
   /** Add the batch's (n, Σdl) to the bounds table — a fresh tagged
     * generation behind an atomic flip, with an UNBOUNDED
     * re-read-and-retry on a lost CAS: a cross-JVM append committing its
@@ -611,11 +631,15 @@ object Bm25 {
     * double-counting df (r15 ADVICE). It always converges: each lost
     * round means another writer COMMITTED (system-wide progress). The
     * batch tag on the committed generation is what makes the delta
-    * exactly-once under crash recovery. */
+    * exactly-once under crash recovery. `read` is a (generation, row)
+    * pair the caller already collected; it spares the first round's
+    * bounds job when that generation is still current. */
   private def addBoundsTagged(spark: org.apache.spark.sql.SparkSession,
-      table: String, addN: Long, addSumdl: Long, batchId: String): Unit = {
+      table: String, addN: Long, addSumdl: Long, batchId: String,
+      read: Option[(String, Row)] = None): Unit = {
     import spark.implicits._
     import graft.sources.Generations
+    var known = read
     var committed = false
     var attempts = 0
     while (!committed) {
@@ -634,12 +658,12 @@ object Bm25 {
           "skipping")
         return
       }
-      val rows = spark.table(bCur).collect()
-      require(rows.length == 1,
-        s"index ${table}_bounds must hold exactly 1 row")
+      // a committed generation never changes, so the row the append read
+      // from this same generation is still its content
+      val row = known.collect { case (g, r) if g == bCur => r }
+        .getOrElse(boundsRow(spark, table, bCur))
       val nextB = Generations.reserve(spark, s"${table}_bounds")
-      Seq((rows(0).getLong(0) + addN, rows(0).getLong(1) + addSumdl,
-          rows(0).getLong(2)))
+      Seq((row.getLong(0) + addN, row.getLong(1) + addSumdl, row.getLong(2)))
         .toDF("n", "sumdl", "n_dirs")
         .write.format("parquet")
         .option("path", Generations.genPath(
@@ -652,6 +676,7 @@ object Bm25 {
         committed = true
       } catch {
         case e: graft.sources.ConcurrentMaintenanceException =>
+          known = None
           logger.warn(s"bm25 append: bounds CAS lost a cross-JVM race " +
             s"(attempt $attempts) — re-reading and re-adding: $e")
       }
@@ -840,19 +865,12 @@ object Bm25 {
     val pGen = Generations.ensureGen(spark, s"${table}_postings")
     val dGen = Generations.ensureGen(spark, s"${table}_dfs")
     val bGen = Generations.ensureGen(spark, s"${table}_bounds")
-    // format check: a dfs table persisted by a pre-WAND build lacks the
-    // (max_tf, min_dl) stats this merge must carry forward — fail loudly
-    // with the recovery path instead of an AnalysisException mid-plan
-    val dfsCols = spark.table(dGen).columns.toSet
-    require(Set("max_tf", "min_dl").subsetOf(dfsCols),
-      s"index ${table}_dfs predates the WAND-stats format (missing " +
-        "max_tf/min_dl columns) — rebuild the index with buildIndex " +
-        "before appending; probes still work via the exact-scan fallback")
-    val bounds = spark.table(bGen).collect()
-    require(bounds.length == 1, s"index ${table}_bounds must hold exactly 1 row")
-    // n/sumdl are re-read at the bounds commit below (additive CAS retry);
-    // only the immutable directory fanout is needed up front
-    val nDirs = bounds(0).getLong(2)
+    requireWandStats(spark, table, "appending")
+    // the bounds commit below adds to this row while bGen stays current
+    // (re-reading only after a lost CAS round); the directory fanout is
+    // immutable
+    val bounds = boundsRow(spark, table, bGen)
+    val nDirs = bounds.getLong(2)
 
     // postings are STAGED, not appended directly: the batch's posting
     // files land in a sibling staging directory first (same tb layout,
@@ -888,13 +906,17 @@ object Bm25 {
       // flipped atomically — a probe in another session during the merge
       // reads the complete previous generation, never a partial one. df
       // adds, max_tf/min_dl merge by max/min — the probe's per-term score
-      // bound stays valid over any append sequence.
+      // bound stays valid over any append sequence. ONE aggregation:
+      // each batch posting enters as a (df = 1, max_tf = tf, min_dl = dl)
+      // row, and the tb repartition ahead of it satisfies both the
+      // aggregate and writeDirs' own tb repartition — one exchange.
       val nextD = Generations.reserve(spark, s"${table}_dfs")
       writeDirs(
-        spark.table(dGen)
+        spark.table(dGen).select($"tb", $"term", $"df", $"max_tf", $"min_dl")
           .unionByName(postingsOf(docs, idCol, textCol, nDirs.toInt)
-            .groupBy($"tb", $"term").agg(count(lit(1)).as("df"),
-              max($"tf").as("max_tf"), min($"dl").as("min_dl")))
+            .select($"tb", $"term", lit(1L).as("df"), $"tf".as("max_tf"),
+              $"dl".as("min_dl")))
+          .repartition($"tb")
           .groupBy($"tb", $"term").agg(sum($"df").as("df"),
             max($"max_tf").as("max_tf"), min($"min_dl").as("min_dl")),
         nextD,
@@ -956,7 +978,8 @@ object Bm25 {
     // file names become the commit's add-file delta, which is exactly
     // what lets resolveStateAsOf serve history ACROSS this commit.
     PendingAppend.complete(spark, anchor, batchId, Seq(staged), added => {
-      addBoundsTagged(spark, table, addN, addSumdl, batchId)
+      addBoundsTagged(spark, table, addN, addSumdl, batchId,
+        Some(bGen -> bounds))
       recordSnapshot(spark, table, "append", revertible = false,
         addedFiles = added)
     })
@@ -972,15 +995,17 @@ object Bm25 {
   /** Compact an index after [[appendToIndex]] batches — the THIRD
     * maintenance primitive (build → append → compact, the Lucene
     * segment-merge / Delta OPTIMIZE shape). Every append adds its own
-    * term-sorted file per touched tb directory, so after N batches a
-    * probe of a directory reads N files and in-file term sorting (the
-    * row-group prune) holds only per batch. Compaction rewrites each
-    * table as ONE fresh generation — term-sorted across everything in
-    * the directory — then swaps the table to it and deletes the old
-    * generation (write-new / swap / delete-old: never an in-place
-    * overwrite of files a plan is reading; transient 2× disk on the
-    * rewritten table is how segment merges pay for themselves, and the
-    * swap is metadata-only).
+    * term-sorted file per touched tb directory of the postings, so after
+    * N batches a probe of a directory reads N files and in-file term
+    * sorting (the row-group prune) holds only per batch. Compaction
+    * rewrites the postings as ONE fresh generation — term-sorted across
+    * everything in the directory — then flips the table to it (write-new
+    * / flip / delete-old: never an in-place overwrite of files a plan is
+    * reading; transient 2× disk on the postings is how segment merges pay
+    * for themselves, and the flip is metadata-only). The dfs table needs
+    * no rewrite: every dfs generation is written whole by `writeDirs`
+    * (build and each append's merge), which already leaves one
+    * term-sorted file per tb directory.
     *
     * Pure layout maintenance: rows are untouched, so ranking equality
     * with the uncompacted index IS the correctness check (q161 shares
@@ -988,19 +1013,16 @@ object Bm25 {
     * pins one file per directory afterwards).
     *
     * Crash safety and concurrent readers (the [[graft.sources
-    * .Generations]] contract): each table's new generation is FULLY
+    * .Generations]] contract): the new postings generation is FULLY
     * written and registered before the live view flips onto it — ONE
-    * atomic catalog op, so a probe resolving the live name at any
-    * instant sees a complete generation, never a missing or
-    * half-swapped table. A failure mid-rewrite leaves the live index
-    * intact; re-running the compaction overwrites the partial
-    * generation idempotently. The two tables flip one after the other;
-    * a crash between them leaves a half-compacted LAYOUT (both tables
-    * internally complete — re-run to finish). The superseded generation
-    * is RETAINED until the next maintenance commit, so even a probe
-    * frame PLANNED before the compaction still collects; only plans
-    * held across two maintenance cycles lose their files
-    * (`GenerationsSpec` pins both properties). */
+    * atomic catalog op, the compaction's only flip, so a probe resolving
+    * the live name at any instant sees either the whole old layout or
+    * the whole new one. A failure mid-rewrite leaves the live index
+    * intact; re-running the compaction overwrites the partial generation
+    * idempotently. The superseded generation is RETAINED until the next
+    * maintenance commit, so even a probe frame PLANNED before the
+    * compaction still collects; only plans held across two maintenance
+    * cycles lose their files (`GenerationsSpec` pins both properties). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit =
     graft.sources.Generations.withMaintenanceLock(table) {
@@ -1013,39 +1035,33 @@ object Bm25 {
     recoverPendingAppend(spark, table)
     graft.sources.Snapshots.auditUnrecorded(spark, table,
       Seq(s"${table}_postings"))
-    def swap(live: String, cols: Seq[Column],
-        fold: DataFrame => DataFrame = identity): Unit = {
-      val gen = Generations.ensureGen(spark, live)
-      val old = Generations.location(spark, gen)
-      val nextGen = Generations.reserve(spark, live)
-      // read by PATH, not by name: the live view keeps serving the old
-      // generation until the commit below, and the rewrite must not
-      // depend on the registration it supersedes (partition discovery
-      // types tb as int — cast back to the build schema so compaction
-      // never drifts the contract). writeDirs overwrites the reserve
-      // placeholder in place — the claim is never released.
-      writeDirs(fold(spark.read.parquet(old).select(cols: _*)), nextGen,
-        Generations.genPath(old.replaceAll("__g\\d+$", ""), nextGen))
-      // CAS on the generation the rewrite read: losing a race here would
-      // silently resurrect rows a concurrent maintenance op removed
-      Generations.commit(spark, live, nextGen, Some(gen))
-    }
-    require(spark.table(s"${table}_dfs").columns
-        .toSet.intersect(Set("max_tf", "min_dl")).size == 2,
-      s"index ${table}_dfs predates the WAND-stats format (missing " +
-        "max_tf/min_dl columns) — rebuild the index with buildIndex " +
-        "before compacting; probes still work via the exact-scan fallback")
+    requireWandStats(spark, table, "compacting")
     // fold tombstones into the postings rewrite (their rows drop
     // physically); the dfs/bounds statistics are deliberately NOT
     // adjusted — deleteFromIndex's semantics freeze them at the
     // historical corpus, which is what keeps rankings invariant across
     // this fold (q170 compacts mid-query and stays on its oracle)
     val tomb = Tombstones.frame(spark, table)
-    swap(s"${table}_postings", Seq($"tb".cast("long").as("tb"),
-        $"term", $"doc_id", $"tf", $"dl"),
-      df => Tombstones.filterWith(df, "doc_id", tomb, table))
-    swap(s"${table}_dfs", Seq($"tb".cast("long").as("tb"), $"term", $"df",
-      $"max_tf", $"min_dl"))
+    val live = s"${table}_postings"
+    val gen = Generations.ensureGen(spark, live)
+    val old = Generations.location(spark, gen)
+    val nextGen = Generations.reserve(spark, live)
+    // read by PATH, not by name: the live view keeps serving the old
+    // generation until the commit below, and the rewrite must not
+    // depend on the registration it supersedes. The generation's
+    // catalog schema (tb as BIGINT, the build contract) types the
+    // partition column and spares a footer-inference job. writeDirs
+    // overwrites the reserve placeholder in place — the claim is never
+    // released.
+    writeDirs(
+      Tombstones.filterWith(
+        spark.read.schema(spark.table(gen).schema).parquet(old)
+          .select($"tb", $"term", $"doc_id", $"tf", $"dl"),
+        "doc_id", tomb, table),
+      nextGen, Generations.genPath(old.replaceAll("__g\\d+$", ""), nextGen))
+    // CAS on the generation the rewrite read: losing a race here would
+    // silently resurrect rows a concurrent maintenance op removed
+    Generations.commit(spark, live, nextGen, Some(gen))
     // reset AFTER the fold's flip: a crash in between leaves tombstones
     // for rows that no longer exist — the anti-join is then a no-op and
     // the next compaction clears the residue

@@ -433,7 +433,18 @@ object Generations {
     * [[commit]]s with the base generation its rewrite READ — the CAS
     * decides the race's winner. Crash after reserve leaves an orphan
     * placeholder: skipped by future reservations, reclaimed by
-    * [[vacuum]]. */
+    * [[vacuum]].
+    *
+    * The placeholder is declared PARTITIONED so that its resolved
+    * relation takes partitions from the catalog and never lists its
+    * directory. `saveAsTable` in overwrite mode resolves the placeholder
+    * (its relation stays in the session's relation cache), drops it,
+    * which deletes its warehouse directory, and writes the new table; a
+    * partitioned write then repairs partitions, which refreshes the
+    * name through that cached relation. An unpartitioned placeholder's
+    * relation re-listed the deleted directory there, one wasted listing
+    * and one `HadoopFSUtils ... was not found` warning per partitioned
+    * generation write. */
   def reserve(spark: SparkSession, live: String): String =
     monitor(live).synchronized {
       var n =
@@ -443,7 +454,8 @@ object Generations {
         val name = genTableName(live, n)
         if (!exists(spark, name)) {
           try {
-            spark.sql(s"CREATE TABLE $name (graft_reserved INT) USING parquet")
+            spark.sql(s"CREATE TABLE $name (graft_reserved INT, " +
+              "graft_part INT) USING parquet PARTITIONED BY (graft_part)")
             return name
           } catch {
             // another JVM claimed it between our check and create —

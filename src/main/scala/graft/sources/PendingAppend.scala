@@ -59,7 +59,10 @@ object PendingAppend {
     * merge committed, no marker yet → recovery derives the marker from
     * the dfs tag and rolls forward), `pending.afterMarker` (marker
     * written, nothing moved → roll forward), `pending.afterMove` (files
-    * in, snapshot not recorded → roll forward records). */
+    * in, snapshot not recorded → roll forward records),
+    * `snapshots.record.afterFileRows` (inside [[Snapshots.record]]: the
+    * commit's file-log rows landed, its cached per-member counts and
+    * manifest row did not → roll forward records again). */
   private[graft] var testCrashPoint: String = ""
   private[graft] def crashPoint(name: String): Unit =
     if (testCrashPoint == name) {

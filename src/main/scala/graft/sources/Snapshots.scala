@@ -84,7 +84,7 @@ object AsOf {
   * RETENTION bound: [[Generations]] keeps one superseded generation per
   * member (until the next commit on that member), so `back = 1` is
   * always servable and deeper history is servable until a member's
-  * generation is retired — [[resolveAsOf]] verifies every member table
+  * generation is retired — [[MemberState.read]] checks the member table
   * still exists and otherwise names the retired one (the Delta VACUUM
   * trade, surfaced as an error instead of a partial read).
   */
@@ -218,6 +218,32 @@ object Snapshots {
     * only ever causes a spurious (safe) base manifest. */
   private def lastGenProp(member: String) = s"graft.lastgen.$member"
 
+  /** Property holding a member's adds-since-base count as
+    * `"<commit id>:<count>"`, written by [[record]] in the same ALTER as
+    * [[lastGenProp]]. It answers [[addsSinceBase]] with no log scan, but
+    * only while its commit id is the manifest's last claimed id: a
+    * record that crashed between its file rows and the ALTER, a legacy
+    * log, or a [[compactLog]] flip (which drops the property and folds
+    * adds into a base) falls back to the scan. */
+  private def addsProp(member: String) = s"graft.adds.$member"
+
+  /** A log table's catalog entry: its properties and schema, read with
+    * no file listing. */
+  private def meta(spark: SparkSession, name: String) =
+    spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+
+  private def props(spark: SparkSession, name: String): Map[String, String] =
+    meta(spark, name).properties
+
+  /** The count [[addsProp]] holds for `member` when it was written at
+    * commit `at`. */
+  private def cachedAdds(fileLogProps: Map[String, String], member: String,
+      at: Option[Long]): Option[Long] =
+    fileLogProps.get(addsProp(member)).map(_.split(":")).collect {
+      case Array(c, n) if at.contains(c.toLong) => n.toLong
+    }
+
   /** The file log normalized to the r16 delta schema. Legacy logs
     * (pre-r16: full list per commit, no gen/kind columns) read as all-
     * `base` rows with an unknown generation — sound, because each
@@ -267,8 +293,7 @@ object Snapshots {
   private def migrateFileLogIfLegacy(spark: SparkSession,
       index: String): Unit = {
     val lf = logFilesTable(index)
-    spark.catalog.refreshTable(lf)
-    if (spark.table(lf).columns.contains("kind")) return
+    if (meta(spark, lf).schema.fieldNames.contains("kind")) return
     logger.info(s"migrating legacy file log $lf to the add-file delta " +
       "schema (one-time rewrite)")
     val rows = fileLogRows(spark, lf)
@@ -284,12 +309,9 @@ object Snapshots {
   /** Last generation recorded in the file log per member: the prop
     * cache first, one combined scan of the tiny log for misses. */
   private def lastRecordedGens(spark: SparkSession, lf: String,
-      ms: Seq[String]): Map[String, String] = {
+      lfProps: Map[String, String], ms: Seq[String]): Map[String, String] = {
     if (!exists(spark, lf)) return Map.empty
-    val props = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(lf))
-      .properties
-    val cached = ms.flatMap(m => props.get(lastGenProp(m)).map(m -> _)).toMap
+    val cached = ms.flatMap(m => lfProps.get(lastGenProp(m)).map(m -> _)).toMap
     val missing = ms.filterNot(cached.contains)
     if (missing.isEmpty) cached
     else cached ++ fileLogRows(spark, lf)
@@ -300,13 +322,17 @@ object Snapshots {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
   }
 
-  private def setLastGens(spark: SparkSession, lf: String,
-      entries: Seq[(String, String)]): Unit = {
-    if (entries.isEmpty) return
+  /** One ALTER for the file log's per-member caches: the last recorded
+    * generation of each member that got a row, and every tracked
+    * member's adds-since-base count keyed on commit `commitId`. */
+  private def setMemberCaches(spark: SparkSession, lf: String,
+      gens: Seq[(String, String)], adds: Seq[(String, Long)],
+      commitId: Long): Unit = {
     val kw = if (isView(spark, lf)) "VIEW" else "TABLE"
-    val kv = entries
-      .map { case (m, g) => s"'${lastGenProp(m)}' = '$g'" }.mkString(", ")
-    spark.sql(s"ALTER $kw $lf SET TBLPROPERTIES ($kv)")
+    val kv = (gens.map { case (m, g) => s"'${lastGenProp(m)}' = '$g'" } ++
+      adds.map { case (m, n) => s"'${addsProp(m)}' = '$commitId:$n'" })
+      .mkString(", ")
+    if (kv.nonEmpty) spark.sql(s"ALTER $kw $lf SET TBLPROPERTIES ($kv)")
   }
 
   /** Append one commit manifest: the CURRENT generation of every member
@@ -333,8 +359,10 @@ object Snapshots {
     *   tombstone member).
     *
     * Ordering is the crash-safety story: the commit id is claimed
-    * (nextIdProp bump) FIRST, file rows land SECOND, the lastgen prop
-    * cache THIRD, and the manifest row LAST — so a crash anywhere
+    * (nextIdProp bump) FIRST, file rows land SECOND, the lastgen and
+    * adds-since-base prop caches THIRD (one ALTER, also on a commit that
+    * left every tracked member untouched, so the counts stay keyed on
+    * the newest id), and the manifest row LAST — so a crash anywhere
     * leaves an id gap and/or orphan file rows, never a manifest
     * claiming files it doesn't have and never a reused id. Orphan ADD
     * rows are not just harmless but REQUIRED for correctness: the
@@ -352,19 +380,20 @@ object Snapshots {
     // just paid for, re-opening the duplicate-id crash window the
     // claim-first ordering closed (r15 ADVICE)
     if (!bootstrap) migrateManifestIfLegacy(spark, index)
+    // the claim property before this record bumps it: one above the id
+    // of the previous record, the only id the cached adds counts hold at
+    val claimed: Option[Long] =
+      if (bootstrap) None else props(spark, live).get(nextIdProp).map(_.toLong)
     val nextId: Long =
       if (bootstrap) 0L
       else {
-        val id = spark.sessionState.catalog
-          .getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(live))
-          .properties.get(nextIdProp).map(_.toLong).getOrElse {
-            spark.catalog.refreshTable(live)
-            spark.table(live).agg(max($"commit_id")).head() match {
-              case r if r.isNullAt(0) => 0L
-              case r => r.getLong(0) + 1L
-            }
+        val id = claimed.getOrElse {
+          spark.catalog.refreshTable(live)
+          spark.table(live).agg(max($"commit_id")).head() match {
+            case r if r.isNullAt(0) => 0L
+            case r => r.getLong(0) + 1L
           }
+        }
         setNextId(spark, live, id + 1L) // claim the id BEFORE any row
         id
       }
@@ -374,7 +403,9 @@ object Snapshots {
       .flatMap(m => Generations.currentOpt(spark, m).map(m -> _))
     if (tracked.nonEmpty) {
       if (exists(spark, lf)) migrateFileLogIfLegacy(spark, index)
-      val lastGens = lastRecordedGens(spark, lf, tracked.map(_._1))
+      val lfProps =
+        if (exists(spark, lf)) props(spark, lf) else Map.empty[String, String]
+      val lastGens = lastRecordedGens(spark, lf, lfProps, tracked.map(_._1))
       val rows: Seq[(Long, String, String, String, Seq[String])] =
         tracked.flatMap { case (m, g) =>
           if (!lastGens.get(m).contains(g)) {
@@ -396,8 +427,19 @@ object Snapshots {
             .saveAsTable(lf)
         else df.write.format("parquet").mode("append")
           .saveAsTable(appendTarget(spark, lf)) // a view after compactLog
-        setLastGens(spark, lf, rows.map(r => (r._2, r._3)))
       }
+      PendingAppend.crashPoint("snapshots.record.afterFileRows")
+      // adds since base: 0 after a base row, +1 per add row, carried
+      // over an untouched commit — from the previous commit's cached
+      // count, or one scan when that cache is not valid there
+      val adds = tracked.map { case (m, _) =>
+        val row = rows.find(_._2 == m)
+        m -> (if (row.exists(_._4 == "base")) 0L
+          else cachedAdds(lfProps, m, claimed.map(_ - 1L))
+            .map(_ + (if (row.isDefined) 1L else 0L))
+            .getOrElse(scanAddsSinceBase(spark, lf, m)))
+      }
+      setMemberCaches(spark, lf, rows.map(r => (r._2, r._3)), adds, nextId)
     }
     // ---- manifest row LAST ----
     val manifest = members.map { m =>
@@ -431,17 +473,15 @@ object Snapshots {
     * claim re-opens the max-scan fallback (harmless but paid). */
   private def withLogPropsPreserved[T](spark: SparkSession, live: String)(
       body: => T): T = {
-    val props =
+    val kept =
       if (!exists(spark, live)) Map.empty[String, String]
-      else spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(live))
-        .properties
+      else props(spark, live)
         .filter { case (k, _) =>
           k == nextIdProp || k.startsWith(tagPropPrefix) }
     val out = body
-    if (props.nonEmpty) {
+    if (kept.nonEmpty) {
       val kw = if (isView(spark, live)) "VIEW" else "TABLE"
-      val kv = props
+      val kv = kept
         .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ")
       spark.sql(s"ALTER $kw $live SET TBLPROPERTIES ($kv)")
     }
@@ -458,10 +498,10 @@ object Snapshots {
   private def migrateManifestIfLegacy(spark: SparkSession,
       index: String): Unit = {
     val live = logTable(index)
-    spark.catalog.refreshTable(live)
-    if (spark.table(live).columns.contains("ts")) return
+    if (meta(spark, live).schema.fieldNames.contains("ts")) return
     logger.info(s"migrating legacy snapshot manifest $live to the " +
       "timestamped schema (one-time rewrite; legacy rows get ts = NULL)")
+    spark.catalog.refreshTable(live)
     withLogPropsPreserved(spark, live) {
       val rows = spark.table(live)
         .withColumn("ts", lit(null).cast("long"))
@@ -476,9 +516,7 @@ object Snapshots {
   }
 
   private def isView(spark: SparkSession, name: String): Boolean =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-      .tableType ==
+    meta(spark, name).tableType ==
       org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
 
   private def appendTarget(spark: SparkSession, live: String): String =
@@ -499,7 +537,7 @@ object Snapshots {
     * N files. compactLog folds both into ONE file each, optionally
     * dropping manifests older than the newest `keepCommits` — after
     * which `history()` reaches exactly that far and a deeper
-    * `resolveAsOf` refuses with the usual cannot-step-back error
+    * [[resolveStateAsOf]] refuses with the usual cannot-step-back error
     * (retired-generation reads already fail loudly per member).
     *
     * For the FILE log this is the CHECKPOINT half of the delta scheme
@@ -539,10 +577,7 @@ object Snapshots {
       // later-ids-are-never-reused invariant the duplicate-base
       // disambiguation relies on (r16 ADVICE)
       val claimed: Long =
-        spark.sessionState.catalog
-          .getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(live))
-          .properties.get(nextIdProp).map(_.toLong).getOrElse(0L)
+        props(spark, live).get(nextIdProp).map(_.toLong).getOrElse(0L)
       withLogPropsPreserved(spark, live) {
         // manifest log: plain truncating fold
         val gen = Generations.ensureGen(spark, live)
@@ -694,13 +729,34 @@ object Snapshots {
     * manifest — the auto-compaction trigger (r15 directive 6): each
     * in-place append adds ~one file per touched directory, so this
     * counts the probe's files-per-directory growth from the log alone,
-    * with no FS walk. Returns 0 for untracked members or absent logs. */
+    * with no FS walk. Read from the count [[record]] caches on the file
+    * log (two catalog reads, no Spark job); [[scanAddsSinceBase]] when
+    * that cache is not valid at the last claimed commit. Returns 0 for
+    * untracked members or absent logs. */
   def addsSinceBase(spark: SparkSession, index: String,
       member: String): Long = {
     val lf = logFilesTable(index)
     if (!exists(spark, lf)) return 0L
-    // aggregate-only (r17 directive 3): the governing base id and the
-    // add count both fold distributed; no file list touches the driver
+    cachedAddsSinceBase(spark, index, member)
+      .getOrElse(scanAddsSinceBase(spark, lf, member))
+  }
+
+  /** The cached adds-since-base count of `member`, if it was written at
+    * the manifest's last claimed commit id. */
+  private[graft] def cachedAddsSinceBase(spark: SparkSession, index: String,
+      member: String): Option[Long] = {
+    val (live, lf) = (logTable(index), logFilesTable(index))
+    if (!exists(spark, live) || !exists(spark, lf)) None
+    else cachedAdds(props(spark, lf), member,
+      props(spark, live).get(nextIdProp).map(_.toLong - 1L))
+  }
+
+  /** The adds-since-base count scanned from file log `lf`: add rows
+    * after the member's newest base row. Aggregate-only (r17 directive
+    * 3): the governing base id and the add count both fold distributed;
+    * no file list touches the driver. */
+  private[graft] def scanAddsSinceBase(spark: SparkSession, lf: String,
+      member: String): Long = {
     val baseIds = baseIdsAtOrBefore(spark, lf, Seq(member), Long.MaxValue)
     if (baseIds.isEmpty) return 0L
     memberLogRows(spark, lf, Seq(member), Long.MaxValue)
@@ -932,39 +988,6 @@ object Snapshots {
     }.toMap
   }
 
-  /** Name-only view of [[resolveStateAsOf]] for callers that read the
-    * generation TABLES directly — such a reader cannot un-see files a
-    * later append added, so this form keeps the strict pre-file-log
-    * refusal: it throws when stepping across ANY non-revertible commit,
-    * and eagerly validates that every resolved generation still exists
-    * (the original contract, preserved for audit tooling). Probes read
-    * through [[open]] instead. */
-  def resolveAsOf(spark: SparkSession, index: String,
-      back: Int): Map[String, String] = {
-    require(back >= 0, s"need back >= 0, got $back")
-    val commits = collectedCommits(spark, index)
-    require(commits.length > back,
-      s"index $index has ${commits.length} recorded maintenance commits — " +
-        s"cannot step back $back")
-    commits.take(back).find(!_._3).foreach { c =>
-      throw new IllegalStateException(
-        s"cannot time-travel across commit ${c._1} (op '${c._2}') on " +
-          s"index $index via the name-only resolver: it appended files " +
-          "into a live generation in place — use resolveStateAsOf, whose " +
-          "per-commit file manifests reconstruct the prior state exactly")
-    }
-    val target = commits(back)
-    target._4.filter(_._2.nonEmpty).map { case (live, gen) =>
-      if (!exists(spark, gen))
-        throw new IllegalStateException(
-          s"snapshot commit ${target._1} of index $index references " +
-            s"generation $gen of $live, which has been retired " +
-            "(retention keeps one superseded generation per member; " +
-            "vacuum or later maintenance reclaimed this one)")
-      live -> gen
-    }.toMap
-  }
-
   // ---- timestamp / named-snapshot resolution (r17 directive 4) -------
   // `AsOf.Commits` counts commits, so an enabled auto-compaction cadence
   // SHIFTS fixed depths (each triggered compaction is one more commit —
@@ -1038,12 +1061,10 @@ object Snapshots {
   def tags(spark: SparkSession, index: String): Map[String, Long] = {
     val live = logTable(index)
     if (!exists(spark, live)) return Map.empty
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(live))
-      .properties.collect {
-        case (k, v) if k.startsWith(tagPropPrefix) =>
-          k.stripPrefix(tagPropPrefix) -> v.toLong
-      }
+    props(spark, live).collect {
+      case (k, v) if k.startsWith(tagPropPrefix) =>
+        k.stripPrefix(tagPropPrefix) -> v.toLong
+    }
   }
 
   /** Drop a named snapshot — its commit stops pinning retention at the

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bm25
+import graft.sources.Snapshots
 
 /** Contract battery for the persisted BM25 serving index (q155,
   * `Bm25.buildIndex` + `topKAgainstIndex`): the index shape must rank
@@ -194,19 +195,9 @@ class Bm25IndexSpec extends AnyFunSuite {
     val queries = Seq((1L, "rare3"), (2L, "rare5")).toDF("qid", "term")
     // warm one probe (listings, codegen) so the counted run is steady
     Bm25.topKAgainstIndex(queries, "g_bm25_spec_jobs", k = 5).collect()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsOf {
       Bm25.topKAgainstIndex(queries, "g_bm25_spec_jobs", k = 5).collect()
-      // listener delivery is async; JobStart events for jobs the collect
-      // above ran are in flight at most briefly
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // The steady probe of this 2-query batch (fanout far below
     // spreadMinFanout, so the straight path finishes on the driver) runs
     // THREE jobs: the 1-row bounds collect, the dir-pruned dfs stats
@@ -217,7 +208,52 @@ class Bm25IndexSpec extends AnyFunSuite {
     // count()-for-the-cap regression, a max-scan on a log, a broadcast of
     // driver-local rows) a test failure instead of a silent serving-path
     // tax.
-    assert(jobs.get() <= 3,
-      s"steady probe must stay within the measured 3 jobs, got ${jobs.get()}")
+    assert(jobs <= 3,
+      s"steady probe must stay within the measured 3 jobs, got $jobs")
+  }
+
+  test("appends pay for the batch, not the bookkeeping: a plain append " +
+      "runs at most 11 Spark jobs and a compacting one at most 19") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_appjobs").toString
+    val table = "g_bm25_spec_appjobs"
+    Bm25.buildIndex(corpus.filter(_._1 < 20).toDF("doc_id", "text"),
+      "doc_id", "text", table, s"$dir/idx", nDirs = 4)
+    def append(lo: Long): Int = jobsOf {
+      Bm25.appendToIndex(
+        corpus.filter(t => t._1 >= lo && t._1 < lo + 20).toDF("doc_id", "text"),
+        "doc_id", "text", table, autoCompactAfter = 2)
+    }
+    val plain = append(20L)
+    val compacting = append(40L)
+    assert(Snapshots.history(spark, table).select("op").collect()
+      .map(_.getString(0)).toSeq == Seq("compact", "append", "append", "build"))
+    // Measured: 10 and 17 jobs. A plain append runs the bounds read, the
+    // staged postings write, the batch bounds aggregate, the one-exchange
+    // dfs merge, the bounds write and the two snapshot-log appends; the
+    // adds-since-base check is a catalog read. The compaction adds the
+    // unrecorded-files audit, the postings rewrite and its two log
+    // appends, and no dfs rewrite. A log scan on the trigger, a second
+    // bounds read or a second dfs exchange breaks the pin.
+    assert(plain <= 11 && compacting <= 19,
+      s"appends must stay within 11 (plain) and 19 (compacting) jobs, got " +
+        s"$plain and $compacting")
+  }
+
+  /** Spark jobs started while `body` runs. Listener delivery is async;
+    * the JobStart events of the jobs `body` ran are in flight at most
+    * briefly. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
   }
 }

@@ -69,13 +69,18 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(probe(tbl, AsOf.Commits(2)) == atBuild,
       "asOf=2 must cross the append commit via the file manifest and " +
         "serve the build-time ranking exactly")
-    // ... but the name-only resolver (audit tooling that reads the
-    // generation TABLES directly) still refuses, since a table read
-    // cannot un-see appended files
-    val e = intercept[IllegalStateException] {
-      Snapshots.resolveAsOf(spark, tbl, 2)
-    }
-    assert(e.getMessage.contains("commit 1"))
+    // ... because the resolved state pins the postings member to the
+    // build commit's files instead of naming the generation table, whose
+    // directory also holds the appended files
+    val atBuildState = Snapshots.resolveStateAsOf(spark, tbl, 2)
+    val postingsAtBuild = atBuildState(s"${tbl}_postings")
+    assert(postingsAtBuild.gen == Generations.current(spark, s"${tbl}_postings"),
+      "the append added files to the build's postings generation in place")
+    assert(postingsAtBuild.files.exists(_.nonEmpty),
+      "the build-time postings must be pinned to a file list")
+    assert(postingsAtBuild.read(spark).count() <
+        spark.table(s"${tbl}_postings").count(),
+      "the build-time postings read must leave out the appended files")
     // a LEGACY manifest (no per-commit file log) still refuses loudly
     val lf = Snapshots.logFilesTable(tbl)
     val lfLoc = Generations.location(spark, lf)
@@ -454,8 +459,9 @@ class SnapshotsSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getBoolean(1))).toSeq
     assert(mhHist == Seq(("compact", true), ("build", true)))
     // the manifests resolve: every recorded member generation exists
-    val m = Snapshots.resolveAsOf(spark, "g_snap_mh", 1)
+    val m = Snapshots.resolveStateAsOf(spark, "g_snap_mh", 1)
     assert(m.keySet == Set("g_snap_mh_sigs", "g_snap_mh_buckets",
       "g_snap_mh_meta", "g_snap_mh_deletes"))
+    m.values.foreach(_.read(spark))
   }
 }
