@@ -4085,7 +4085,7 @@ object Queries {
       val q = graft.streaming.StreamingOps.indexDeleteStream(
         spark.readStream.schema(b1.schema)
           .option("maxFilesPerTrigger", "1").parquet(in),
-        tbl, s"${tbl}_postings", s"$d/ckpt",
+        tbl, graft.operators.Bm25.family, s"$d/ckpt",
         trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
       q.awaitTermination()
     }

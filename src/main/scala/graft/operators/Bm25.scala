@@ -502,78 +502,63 @@ object Bm25 {
     * double-counted with no error raised. Dedup upstream (q16's exact
     * dedup) if the source can repeat ids. */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
-      table: String, path: String, nDirs: Int = 64): Unit =
-    graft.sources.Generations.withMaintenanceLock(table) {
+      table: String, path: String, nDirs: Int = 64): Unit = {
     require(nDirs >= 1, s"need nDirs >= 1, got $nDirs")
     val spark = docs.sparkSession
     import spark.implicits._
     import graft.sources.Generations
-    // a rebuild supersedes the postings generation a crashed append's
-    // intent targets — finish that append first, or its marker could
-    // never roll forward again
-    recoverPendingAppend(spark, table)
-    // every live name is a Generations VIEW over generation tables, so
-    // maintenance flips are one atomic catalog op each (no window in
-    // which a probe sees a missing or half-swapped table). Each member
-    // generation is RESERVED (unique name + path even under racing
-    // writers) and committed with the CAS form — a rebuild racing
-    // another maintenance op loses loudly instead of clobbering it.
-    // Reserving also makes rebuild-over-an-existing-index safe for
-    // concurrent probes: the fresh build lands as a NEW generation
-    // behind the usual atomic flip (the old shape overwrote g0's files
-    // in place while the live view served them).
-    val pBase = Generations.currentOpt(spark, s"${table}_postings")
-    val pGen = Generations.reserve(spark, s"${table}_postings")
-    writeDirs(postingsOf(docs, idCol, textCol, nDirs), pGen,
-      Generations.genPath(s"$path/postings", pGen))
-    Generations.commit(spark, s"${table}_postings", pGen, pBase)
-    // dfs derived FROM the written postings — a (tb, term)-pruned
-    // columnar scan of the index itself, already tb-partitioned on disk.
-    // The previous form checkpointed the whole posting stream to feed
-    // both writes: at the 100M decade that uncompressed copy (plus the
-    // extra shuffle it fed) exceeded local disk before the index itself
-    // was a problem. max_tf/min_dl ride the same aggregation: the
-    // per-term WAND/maxscore score bound the probe's lossless top-k
-    // prune evaluates at query time (tfPart is increasing in tf and
-    // decreasing in dl, so (max_tf, min_dl) bounds every posting's
-    // contribution under ANY future avgdl — append-safe by max/min
-    // merge).
-    val dBase = Generations.currentOpt(spark, s"${table}_dfs")
-    val dGen = Generations.reserve(spark, s"${table}_dfs")
-    writeDirs(spark.table(pGen)
-        .groupBy($"tb", $"term").agg(count(lit(1)).as("df"),
-          max($"tf").as("max_tf"), min($"dl").as("min_dl")),
-      dGen, Generations.genPath(s"$path/dfs", dGen))
-    Generations.commit(spark, s"${table}_dfs", dGen, dBase)
-    val bBase = Generations.currentOpt(spark, s"${table}_bounds")
-    val bGen = Generations.reserve(spark, s"${table}_bounds")
-    boundsOf(docs, idCol, textCol)
-      .withColumn("n_dirs", lit(nDirs.toLong))
-      .write.format("parquet")
-      .option("path", Generations.genPath(s"$path/bounds", bGen))
-      .mode("overwrite").saveAsTable(bGen)
-    Generations.commit(spark, s"${table}_bounds", bGen, bBase)
-    // empty tombstone list, so deleteFromIndex/probes have it by
-    // construction (probes still tolerate absence for pre-delete indexes)
-    graft.sources.Tombstones.init(spark, table, s"$path/deletes")
-    recordSnapshot(spark, table, "build", revertible = true)
+    family.build(spark, table, path) {
+      // every live name is a Generations VIEW over generation tables, so
+      // maintenance flips are one atomic catalog op each (no window in
+      // which a probe sees a missing or half-swapped table). Each member
+      // generation is RESERVED (unique name + path even under racing
+      // writers) and committed with the CAS form — a rebuild racing
+      // another maintenance op loses loudly instead of clobbering it.
+      // Reserving also makes rebuild-over-an-existing-index safe for
+      // concurrent probes: the fresh build lands as a NEW generation
+      // behind the usual atomic flip (the old shape overwrote g0's files
+      // in place while the live view served them).
+      val pBase = Generations.currentOpt(spark, s"${table}_postings")
+      val pGen = Generations.reserve(spark, s"${table}_postings")
+      writeDirs(postingsOf(docs, idCol, textCol, nDirs), pGen,
+        Generations.genPath(s"$path/postings", pGen))
+      Generations.commit(spark, s"${table}_postings", pGen, pBase)
+      // dfs derived FROM the written postings — a (tb, term)-pruned
+      // columnar scan of the index itself, already tb-partitioned on disk.
+      // The previous form checkpointed the whole posting stream to feed
+      // both writes: at the 100M decade that uncompressed copy (plus the
+      // extra shuffle it fed) exceeded local disk before the index itself
+      // was a problem. max_tf/min_dl ride the same aggregation: the
+      // per-term WAND/maxscore score bound the probe's lossless top-k
+      // prune evaluates at query time (tfPart is increasing in tf and
+      // decreasing in dl, so (max_tf, min_dl) bounds every posting's
+      // contribution under ANY future avgdl — append-safe by max/min
+      // merge).
+      val dBase = Generations.currentOpt(spark, s"${table}_dfs")
+      val dGen = Generations.reserve(spark, s"${table}_dfs")
+      writeDirs(spark.table(pGen)
+          .groupBy($"tb", $"term").agg(count(lit(1)).as("df"),
+            max($"tf").as("max_tf"), min($"dl").as("min_dl")),
+        dGen, Generations.genPath(s"$path/dfs", dGen))
+      Generations.commit(spark, s"${table}_dfs", dGen, dBase)
+      val bBase = Generations.currentOpt(spark, s"${table}_bounds")
+      val bGen = Generations.reserve(spark, s"${table}_bounds")
+      boundsOf(docs, idCol, textCol)
+        .withColumn("n_dirs", lit(nDirs.toLong))
+        .write.format("parquet")
+        .option("path", Generations.genPath(s"$path/bounds", bGen))
+        .mode("overwrite").saveAsTable(bGen)
+      Generations.commit(spark, s"${table}_bounds", bGen, bBase)
+    }
   }
 
-  /** One manifest row in the family snapshot log per maintenance
-    * commit — what [[graft.sources.Snapshots.resolveStateAsOf]] replays
-    * for time-travel probes ([[topKAgainstIndex]]'s `asOf`). The
-    * postings member is file-tracked: appends mutate its generation in
-    * place, so each commit records its exact file list — that is what
-    * lets a historical probe cross an append commit. */
-  private def recordSnapshot(spark: org.apache.spark.sql.SparkSession,
-      table: String, op: String, revertible: Boolean,
-      addedFiles: Map[String, Seq[String]] = Map.empty): Unit =
-    graft.sources.Snapshots.record(spark, table, op, revertible,
-      Seq(s"${table}_postings", s"${table}_dfs", s"${table}_bounds",
-        s"${table}_deletes"),
-      s"${table}_postings",
-      fileTracked = Set(s"${table}_postings"),
-      addedFiles = addedFiles)
+  /** The BM25 index family ([[graft.sources.IndexFamily]]): postings
+    * (file-tracked — appends grow their generation in place), dfs,
+    * bounds and the tombstone list. Its pre-marker commit is the append's
+    * dfs merge, tagged with the batch id and its bounds delta. */
+  val family: graft.sources.IndexFamily = new graft.sources.IndexFamily(
+    "bm25", Seq("postings", "dfs", "bounds", "deletes"), "postings",
+    Seq("postings"), preMarker = Some(taggedBatch(_, _)))
 
   // ---- append crash recovery ([[graft.sources.PendingAppend]]) ------
   // Properties tagging the dfs generation with the append batch that
@@ -683,30 +668,17 @@ object Bm25 {
     }
   }
 
-  /** Recover an [[appendToIndex]] that died mid-commit — called
-    * automatically at the start of every maintenance op, and available
-    * directly for an operator who just restarted a dead ingest job.
-    * The [[graft.sources.PendingAppend]] protocol, with BM25's point of
-    * no return being its tagged dfs generation: if the current dfs
-    * generation's batch tag names a pending intent, the df merge
-    * COMMITTED, so that batch's commit marker is written first and
-    * [[graft.sources.PendingAppend.recover]] rolls it FORWARD (staged
-    * moves replayed, bounds delta applied exactly once from the dfs
-    * tag, snapshot commit recorded); every other pending batch rolls
-    * BACK (stage and sidecar deleted, index untouched — re-run it).
-    * Orphan stages of a write that died before its intent are swept. */
-  def recoverPendingAppend(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-      graft.sources.Generations.withMaintenanceLock(table) {
-    import graft.sources.{Generations, PendingAppend}
-    val anchor = s"${table}_postings"
-    val cat = spark.sessionState.catalog
-    if (!cat.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(anchor)))
-      return
-    // an index crashed mid-append under the previous sidecar format
-    // holds a batch only that build can finish — refuse, never ignore it
+  /** BM25's [[graft.sources.IndexFamily]] pre-marker tag: the batch the
+    * current dfs generation names (its df merge COMMITTED, so recovery
+    * writes its marker and rolls it forward), with the roll-forward's
+    * bounds step — the delta rides the tag and applies exactly once. An
+    * index crashed mid-append under the previous sidecar format holds a
+    * batch only that build can finish: refuse, never ignore it. */
+  private def taggedBatch(spark: org.apache.spark.sql.SparkSession,
+      table: String): Option[(String, () => Unit)] = {
+    import graft.sources.Generations
     val parent = new org.apache.hadoop.fs.Path(
-      Generations.basePath(spark, anchor)).getParent
+      Generations.basePath(spark, s"${table}_postings")).getParent
     Option(parent.getFileSystem(spark.sessionState.newHadoopConf())
         .globStatus(new org.apache.hadoop.fs.Path(parent, "_pending_append_*")))
       .flatMap(_.headOption).foreach { legacy =>
@@ -717,57 +689,37 @@ object Bm25 {
           "buildIndex")
       }
     val dfsProps = Generations.currentOpt(spark, s"${table}_dfs")
-      .map(g => cat.getTableMetadata(
+      .map(g => spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(g)).properties)
       .getOrElse(Map.empty[String, String])
-    val committed = dfsProps.get(batchProp)
-      .filter(PendingAppend.intentExists(spark, anchor, _))
-    committed.foreach(PendingAppend.markCommitted(spark, anchor, _))
-    PendingAppend.recover(spark, anchor, added => {
-      // every append's dfs commit follows this recovery, so only the
-      // tagged batch can carry a marker
-      val id = committed.getOrElse(throw new IllegalStateException(
-        s"bm25 $table: a pending append passed its commit marker but the " +
-          "dfs generation is not tagged with it; delete its " +
-          "_pending_idx_append_/_commit_idx_append_ files and rebuild the " +
-          "index"))
+    dfsProps.get(batchProp).map(id => id -> (() =>
       addBoundsTagged(spark, table, dfsProps(batchNProp).toLong,
-        dfsProps(batchSumdlProp).toLong, id)
-      recordSnapshot(spark, table, "append-recovery", revertible = false,
-        addedFiles = added)
-    })
+        dfsProps(batchSumdlProp).toLong, id)))
   }
 
-  /** The documents [[appendToIndex]] commits in `(fromId, toId]` added
-    * to the serving index — the incremental-consumer read ("which docs
-    * entered the corpus since the state I last processed"), resolved
-    * from the snapshot log's add-file deltas
-    * ([[graft.sources.Snapshots.readAddedBetween]] over the postings
-    * member, distinct doc ids): O(window) metadata, a pinned scan of
-    * exactly the appended posting files, zero directory walks.
-    * Endpoints come from [[graft.sources.Snapshots.commitIdFor]]
-    * (depth / timestamp / tag); compaction commits inside the window
-    * are transparent; a takedown (`delete`) inside it refuses unless
-    * `ignoreDeletes` (then anti-join the live tombstone list —
-    * [[graft.sources.Tombstones.frame]] — to drop since-deleted ids,
-    * which is exactly what q190 demonstrates). */
+  /** Recover an [[appendToIndex]] that died mid-commit
+    * ([[graft.sources.IndexFamily.recover]]; a batch whose df merge
+    * committed rolls forward with its bounds delta). Every maintenance
+    * op calls it first; call it directly after restarting a dead ingest
+    * job. */
+  def recoverPendingAppend(spark: org.apache.spark.sql.SparkSession,
+      table: String): Unit = family.recover(spark, table)
+
+  /** The distinct doc ids [[appendToIndex]] commits in `(fromId, toId]`
+    * added ([[graft.sources.IndexFamily.addedBetween]] over the
+    * postings); with `ignoreDeletes`, anti-join the live tombstone list
+    * to drop since-deleted ids, as q190 does. */
   def docsAddedBetween(spark: org.apache.spark.sql.SparkSession,
       table: String, fromId: Long, toId: Long,
       ignoreDeletes: Boolean = false): DataFrame =
-    graft.sources.Snapshots.readAddedBetween(spark, table,
-        s"${table}_postings", fromId, toId, ignoreDeletes)
+    family.addedBetween(spark, table, fromId, toId, ignoreDeletes)
       .select(col("doc_id")).distinct()
 
   /** DELETE documents from a [[buildIndex]] index — the takedown
-    * primitive (a removal request must stop serving a document NOW, not
-    * at the next rebuild). Lucene-style tombstones
-    * ([[graft.sources.Tombstones]]): the ids merge into a tiny
-    * `{table}_deletes` list (fresh generation, atomic flip — a
-    * concurrent probe reads the complete previous list, stale by one
-    * batch at worst) and every probe anti-joins its posting frames
-    * against it, so the documents vanish from all rankings immediately
-    * at batch cost — no posting rewrite. The next [[compactIndex]]
-    * folds the tombstones physically and resets the list.
+    * primitive ([[graft.sources.IndexFamily.delete]]): every probe
+    * anti-joins its posting frames against the tombstone list, so the
+    * documents vanish from all rankings immediately at batch cost; the
+    * next [[compactIndex]] folds them physically.
     *
     * Ranking semantics (what the q170 oracle pins): deleted documents
     * are EXCLUDED from every ranking; corpus statistics (df, N, Σdl)
@@ -778,15 +730,7 @@ object Bm25 {
     * folding compaction. A deleted id stays invisible even if
     * re-appended before that compaction; re-add by appending after it. */
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String, ids: DataFrame): Unit =
-    graft.sources.Generations.withMaintenanceLock(table) {
-      recoverPendingAppend(spark, table)
-      graft.sources.Tombstones.add(spark, table, ids, s"${table}_postings")
-      // revertible: the merge landed as a fresh deletes generation; the
-      // prior list survives under retention — "undo the takedown" is
-      // exactly the AsOf.Commits(1) probe
-      recordSnapshot(spark, table, "delete", revertible = true)
-    }
+      table: String, ids: DataFrame): Unit = family.delete(spark, table, ids)
 
   /** Grow a [[buildIndex]] index with a batch of NEW documents — the
     * index-maintenance half of the serving shape (a daily ingest appends
@@ -822,16 +766,12 @@ object Bm25 {
     * always converges; exhausting a bounded retry here would let
     * ConcurrentMaintenanceException escape AFTER the postings moved in,
     * and the documented wrapper would replay the whole append,
-    * duplicating postings). A CRASH after the dfs commit — mid-move,
-    * mid-bounds, anywhere — is rolled FORWARD by
-    * [[recoverPendingAppend]] (r15 directive 4): the batch's staged
-    * file list was persisted as a [[graft.sources.PendingAppend]]
-    * intent before the commit and its bounds delta rides the tagged dfs
-    * generation, renames are idempotent and the bounds delta is
-    * exactly-once via a generation tag, so the next
-    * maintenance op (or an explicit recover call) COMPLETES the append
-    * instead of the old rebuild-from-snapshot prescription; a crash
-    * before the commit rolls back to an untouched index. A probe
+    * duplicating postings). The commit runs through
+    * [[graft.sources.IndexFamily.appendStaged]] with the dfs merge as
+    * its pre-marker commit: a CRASH after the dfs commit is rolled
+    * FORWARD by [[recoverPendingAppend]] (the bounds delta rides the
+    * dfs tag and applies exactly once), a crash before it rolls back to
+    * an untouched index. A probe
     * running DURING an append may observe the df merge before the
     * batch's postings land — the documented transient staleness,
     * resolved at the move + bounds commit (or the recovery). The df merge
@@ -871,6 +811,9 @@ object Bm25 {
     // immutable
     val bounds = boundsRow(spark, table, bGen)
     val nDirs = bounds.getLong(2)
+    // the batch's additive bounds delta (n, Σdl): it rides the dfs tag,
+    // so recovery can roll it forward
+    val b = boundsOf(docs, idCol, textCol).collect()(0)
 
     // postings are STAGED, not appended directly: the batch's posting
     // files land in a sibling staging directory first (same tb layout,
@@ -887,20 +830,12 @@ object Bm25 {
       postingsOf(docs, idCol, textCol, nDirs.toInt)
         .repartition($"tb").sortWithinPartitions($"tb", $"term"),
       anchor, pGen, "tb")
-    val batchId = java.util.UUID.randomUUID().toString.take(8)
-    val (addN, addSumdl) = try {
-      // the staged write is the phase that scales with the batch — renew
-      // the cross-JVM lease before entering the commit window (r16
-      // ADVICE: an append outrunning the TTL could have its stage rolled
-      // back under it by another JVM's recovery)
-      Generations.renewLease(table)
-      val b = boundsOf(docs, idCol, textCol).collect()(0)
-      // the batch's intent (staged file list) persists BEFORE the dfs
-      // merge commits; the new dfs generation carries the batch id and
-      // its additive bounds delta, so a crash ANYWHERE after the dfs
-      // commit is rolled FORWARD by recoverPendingAppend and a crash
-      // before it rolls BACK (stage + sidecar deleted, index untouched)
-      PendingAppend.writeIntent(spark, anchor, batchId, Seq(staged))
+    // the batch's intent (staged file list) persists BEFORE the dfs
+    // merge commits; the new dfs generation carries the batch id and
+    // its additive bounds delta, so a crash ANYWHERE after the dfs
+    // commit is rolled FORWARD by recoverPendingAppend and a crash
+    // before it rolls BACK (stage + sidecar deleted, index untouched)
+    val mergeDfs: String => Unit = batchId => {
       fireHook(() => testAfterPendingHook, testAfterPendingHook = _)
       // df merge: vocabulary-sized, written as a FRESH generation and
       // flipped atomically — a probe in another session during the merge
@@ -948,48 +883,23 @@ object Bm25 {
       // discarded. Losing here rolls the batch back — index unchanged,
       // op retryable (retryOnConcurrentMaintenance-safe).
       Generations.commit(spark, s"${table}_dfs", nextD, Some(dGen))
-      (b.getLong(0), b.getLong(1))
-    } catch {
-      case e: Throwable =>
-        PendingAppend.rollBack(spark, anchor, batchId, Seq(staged))
-        throw e
     }
-    PendingAppend.crashPoint("bm25.append.afterDfsCommit")
-    fireHook(() => testAfterDfsCommitHook, testAfterDfsCommitHook = _)
-    // the dfs flip committed — past here the batch WILL land. If the
-    // sidecar is gone NOW, another JVM's recovery saw the committed tag
-    // and rolled the batch FORWARD to completion (moves, bounds,
-    // snapshot — it deletes the sidecar LAST): everything this op still
-    // had to do is done; finish as a success instead of double-applying
-    // (r16 ADVICE — the lease-TTL-outrun window, closed end to end)
-    if (!PendingAppend.intentExists(spark, anchor, batchId)) {
-      logger.warn(s"bm25 append $batchId on $table: completed by another " +
-        "JVM's recovery after this op outran its lease TTL — the batch " +
-        "is fully applied (postings, bounds, snapshot); nothing left to do")
-      return
-    }
-    PendingAppend.markCommitted(spark, anchor, batchId)
-    // move the staged posting files into the live generation's tb
-    // directories (pure renames; file names carry the write job's UUID,
-    // so they never collide with resident files), then apply the bounds
-    // — additive counters, 1 driver row, exactly-once via the batch tag,
-    // unbounded CAS retry — and record the commit. NOT revertible
-    // (directory readers cannot un-see the appended files); the moved
-    // file names become the commit's add-file delta, which is exactly
-    // what lets resolveStateAsOf serve history ACROSS this commit.
-    PendingAppend.complete(spark, anchor, batchId, Seq(staged), added => {
-      addBoundsTagged(spark, table, addN, addSumdl, batchId,
-        Some(bGen -> bounds))
-      recordSnapshot(spark, table, "append", revertible = false,
-        addedFiles = added)
-    })
-    // auto-compaction cadence: reentrant under the family lock
-    if (autoCompactAfter > 0 && graft.sources.Snapshots.addsSinceBase(
-        spark, table, s"${table}_postings") >= autoCompactAfter) {
-      logger.info(s"bm25 $table: $autoCompactAfter appends since the last " +
-        "base manifest — auto-compacting")
-      compactIndex(spark, table)
-    }
+    // the dfs flip committed — past here the batch WILL land (a sidecar
+    // gone now means another JVM's recovery saw the committed tag and
+    // completed the batch: moves, bounds, snapshot). Then the staged
+    // posting files move into the live generation's tb directories (pure
+    // renames; file names carry the write job's UUID, so they never
+    // collide with resident files) and the bounds apply — additive
+    // counters, 1 driver row, exactly-once via the batch tag, unbounded
+    // CAS retry — before the commit is recorded.
+    family.appendStaged(spark, table, Seq(staged), "append",
+      autoCompactAfter, () => compactIndex(spark, table),
+      commit = Some((mergeDfs, () => {
+        PendingAppend.crashPoint("bm25.append.afterDfsCommit")
+        fireHook(() => testAfterDfsCommitHook, testAfterDfsCommitHook = _)
+      })),
+      beforeRecord = batchId => addBoundsTagged(spark, table, b.getLong(0),
+        b.getLong(1), batchId, Some(bGen -> bounds)))
   }
 
   /** Compact an index after [[appendToIndex]] batches — the THIRD
@@ -1024,24 +934,15 @@ object Bm25 {
     * compaction still collects; only plans held across two maintenance
     * cycles lose their files (`GenerationsSpec` pins both properties). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-    graft.sources.Generations.withMaintenanceLock(table) {
+      table: String): Unit = family.compact(spark, table) { tomb =>
     import spark.implicits._
     import graft.sources.{Generations, Tombstones}
-    // finish (or discard) any append that died mid-commit before the
-    // rewrite reads the directories it left behind; audit unrecorded
-    // files loudly before the fresh base manifest folds them back into
-    // served history (r16 directive 6)
-    recoverPendingAppend(spark, table)
-    graft.sources.Snapshots.auditUnrecorded(spark, table,
-      Seq(s"${table}_postings"))
     requireWandStats(spark, table, "compacting")
-    // fold tombstones into the postings rewrite (their rows drop
+    // tombstones fold into the postings rewrite (their rows drop
     // physically); the dfs/bounds statistics are deliberately NOT
     // adjusted — deleteFromIndex's semantics freeze them at the
     // historical corpus, which is what keeps rankings invariant across
     // this fold (q170 compacts mid-query and stays on its oracle)
-    val tomb = Tombstones.frame(spark, table)
     val live = s"${table}_postings"
     val gen = Generations.ensureGen(spark, live)
     val old = Generations.location(spark, gen)
@@ -1062,11 +963,6 @@ object Bm25 {
     // CAS on the generation the rewrite read: losing a race here would
     // silently resurrect rows a concurrent maintenance op removed
     Generations.commit(spark, live, nextGen, Some(gen))
-    // reset AFTER the fold's flip: a crash in between leaves tombstones
-    // for rows that no longer exist — the anti-join is then a no-op and
-    // the next compaction clears the residue
-    if (tomb.nonEmpty) Tombstones.clear(spark, table)
-    recordSnapshot(spark, table, "compact", revertible = true)
   }
 
   /** Spark's `xxhash64(string, seed=42)` evaluated locally — the same

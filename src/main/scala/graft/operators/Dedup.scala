@@ -265,27 +265,26 @@ object Dedup {
     */
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       table: String, path: String, numBuckets: Int = 64,
-      shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit =
-      graft.sources.Generations.withMaintenanceLock(table) {
+      shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16): Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val sigUdf = udf((s: String) => minhashSig(s, shingleSize, numHashes))
-    // ONE signature pass feeds both tables: the UDF is the dominant cost
-    // and without the cut each bucketed write would re-run it
-    val sigs = Stage.cut(corpus
-      .select(col(idCol).cast("long").as("id"), sigUdf(col(textCol)).as("sig")))
-    graft.sources.Bucketing.writeBucketed(
-      spark, sigs, s"${table}_sigs", s"$path/sigs", numBuckets, Seq("id"))
-    graft.sources.Bucketing.writeBucketed(
-      spark, bandBucketsOf(sigs, bands, numHashes / bands),
-      s"${table}_buckets", s"$path/buckets", numBuckets, Seq("band", "bh"))
-    // the 1-row parameter table rides the same generation machinery as
-    // every other member: a REBUILD over a live index swaps it with one
-    // atomic flip instead of a drop+recreate window a concurrent probe
-    // could land in
-    locally {
-      import graft.sources.Generations
+    import graft.sources.Generations
+    minhashFamily.build(spark, table, path) {
+      val sigUdf = udf((s: String) => minhashSig(s, shingleSize, numHashes))
+      // ONE signature pass feeds both tables: the UDF is the dominant cost
+      // and without the cut each bucketed write would re-run it
+      val sigs = Stage.cut(corpus
+        .select(col(idCol).cast("long").as("id"), sigUdf(col(textCol)).as("sig")))
+      graft.sources.Bucketing.writeBucketed(
+        spark, sigs, s"${table}_sigs", s"$path/sigs", numBuckets, Seq("id"))
+      graft.sources.Bucketing.writeBucketed(
+        spark, bandBucketsOf(sigs, bands, numHashes / bands),
+        s"${table}_buckets", s"$path/buckets", numBuckets, Seq("band", "bh"))
+      // the 1-row parameter table rides the same generation machinery as
+      // every other member: a REBUILD over a live index swaps it with one
+      // atomic flip instead of a drop+recreate window a concurrent probe
+      // could land in
       val mBase = Generations.currentOpt(spark, s"${table}_meta")
       val mGen = Generations.reserve(spark, s"${table}_meta")
       Seq((shingleSize, numHashes, bands))
@@ -295,86 +294,40 @@ object Dedup {
         .mode("overwrite").saveAsTable(mGen)
       Generations.commit(spark, s"${table}_meta", mGen, mBase)
     }
-    // empty tombstone list, so deleteFromMinhashIndex/probes have it by
-    // construction (probes still tolerate absence for pre-delete indexes)
-    graft.sources.Tombstones.init(spark, table, s"$path/deletes")
-    recordSnapshot(spark, table, "build", revertible = true)
   }
 
-  /** One manifest row in the family snapshot log per maintenance commit
-    * (see [[graft.sources.Snapshots]]). Ingest commits pass the staged
-    * batch's file names via `addedFiles`, so the log records an
-    * O(batch) delta instead of re-walking the index (r16). */
-  private def recordSnapshot(spark: org.apache.spark.sql.SparkSession,
-      table: String, op: String, revertible: Boolean,
-      addedFiles: Map[String, Seq[String]] = Map.empty): Unit =
-    graft.sources.Snapshots.record(spark, table, op, revertible,
-      Seq(s"${table}_sigs", s"${table}_buckets", s"${table}_meta",
-        s"${table}_deletes"),
-      s"${table}_sigs",
-      // the ingest loop appends into both generations in place — their
-      // per-commit file manifests make time travel cross ingest commits
-      fileTracked = Set(s"${table}_sigs", s"${table}_buckets"),
-      addedFiles = addedFiles)
+  /** The MinHash index family ([[graft.sources.IndexFamily]]): signatures,
+    * band buckets, the parameter row and the tombstone list. The ingest
+    * loop appends into sigs and buckets in place, so those two are
+    * file-tracked. */
+  val minhashFamily: graft.sources.IndexFamily =
+    new graft.sources.IndexFamily("minhash",
+      Seq("sigs", "buckets", "meta", "deletes"), "sigs", Seq("sigs", "buckets"))
 
   /** DELETE documents from a [[writeMinhashIndex]] history index — the
-    * takedown primitive (a removed document must stop matching incoming
-    * duplicates NOW, not at the next rebuild). Lucene-style tombstones
-    * ([[graft.sources.Tombstones]]): the ids merge into a tiny
-    * `{table}_deletes` list (fresh generation, atomic flip) and every
-    * probe anti-joins the signature and band-bucket scans against it,
-    * so the documents leave the effective history immediately at batch
-    * cost — classification equals a probe against an index that never
-    * held them (the q171 oracle replays exactly that). The next
-    * [[compactMinhashIndex]] folds the tombstones physically and resets
-    * the list; a deleted id stays invisible even if re-ingested before
-    * that compaction (re-add by ingesting after it). */
+    * takedown primitive ([[graft.sources.IndexFamily.delete]]): every
+    * probe anti-joins the signature and band-bucket scans against the
+    * tombstone list, so classification equals a probe against an index
+    * that never held the documents (the q171 oracle replays exactly
+    * that); [[compactMinhashIndex]] folds them physically. */
   def deleteFromMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, ids: DataFrame): Unit =
-    graft.sources.Generations.withMaintenanceLock(table) {
-      recoverPendingAppend(spark, table)
-      graft.sources.Tombstones.add(spark, table, ids, s"${table}_sigs")
-      recordSnapshot(spark, table, "delete", revertible = true)
-    }
+    minhashFamily.delete(spark, table, ids)
 
-  /** Recover an [[ingestAgainstIndex]] that died mid-commit — called
-    * automatically at the start of every MinHash maintenance op, and
-    * available directly after restarting a dead ingest job. The
-    * [[graft.sources.PendingAppend]] sidecar + commit-marker protocol
-    * shared by every index family: past the marker the
-    * batch rolls FORWARD (both bucketed tables' staged moves replayed,
-    * snapshot commit recorded); before it, BACK (stages + sidecar
-    * deleted, index untouched — re-run the batch; re-ingesting is
-    * classification-idempotent per the ingest contract). */
+  /** Recover an [[ingestAgainstIndex]] that died mid-commit
+    * ([[graft.sources.IndexFamily.recover]]; a rolled-back batch is
+    * re-ingested, classification-idempotent per the ingest contract).
+    * Every MinHash maintenance op calls it first. */
   def recoverPendingAppend(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-      graft.sources.Generations.withMaintenanceLock(table) {
-    if (!spark.sessionState.catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_sigs")))
-      return
-    graft.sources.PendingAppend.recover(spark, s"${table}_sigs",
-      added => recordSnapshot(spark, table, "append-recovery",
-        revertible = false, addedFiles = added))
-  }
+      table: String): Unit = minhashFamily.recover(spark, table)
 
-  /** The documents [[ingestAgainstIndex]] commits in `(fromId, toId]`
-    * added to the history index — the incremental-consumer read
-    * ("which docs entered the corpus since the state I last
-    * processed"), resolved from the snapshot log's add-file deltas
-    * ([[graft.sources.Snapshots.readAddedBetween]] over the signature
-    * member): O(window) metadata, a pinned scan of exactly the ingested
-    * batches' signature files, zero directory walks and no re-scan of
-    * the history. Endpoints come from
-    * [[graft.sources.Snapshots.commitIdFor]] (depth / timestamp / tag);
-    * compaction commits inside the window — auto-compaction cadence
-    * included — are transparent; a takedown (`delete`) inside it
-    * refuses unless `ignoreDeletes` (then anti-join the live tombstone
-    * list to drop since-deleted ids). */
+  /** The doc ids [[ingestAgainstIndex]] commits in `(fromId, toId]`
+    * added to the history index
+    * ([[graft.sources.IndexFamily.addedBetween]] over the signatures). */
   def docsAddedBetween(spark: org.apache.spark.sql.SparkSession,
       table: String, fromId: Long, toId: Long,
       ignoreDeletes: Boolean = false): DataFrame =
-    graft.sources.Snapshots.readAddedBetween(spark, table,
-        s"${table}_sigs", fromId, toId, ignoreDeletes)
+    minhashFamily.addedBetween(spark, table, fromId, toId, ignoreDeletes)
       .select(org.apache.spark.sql.functions.col("id"))
 
   /** [[minhashIncremental]] probing a PERSISTED history index written by
@@ -483,31 +436,8 @@ object Dedup {
     val stagedBuckets = graft.sources.Bucketing.stageBucketed(spark,
       bandBucketsOf(incSigs, bands, numHashes / bands), s"${table}_buckets")
     incSigs.unpersist()
-    // staged writes done — renew the cross-JVM lease before the commit
-    // window (r16 ADVICE: an ingest outrunning the TTL could have its
-    // stage rolled back under it)
-    graft.sources.Generations.renewLease(table)
-    val members = Seq(stagedSigs, stagedBuckets)
-    val batchId = java.util.UUID.randomUUID().toString.take(8)
-    graft.sources.PendingAppend.writeIntent(spark, s"${table}_sigs",
-      batchId, members)
-    graft.sources.PendingAppend.crashPoint("pending.afterIntent")
-    graft.sources.PendingAppend.markCommitted(spark, s"${table}_sigs",
-      batchId)
-    graft.sources.PendingAppend.crashPoint("pending.afterMarker")
-    // NOT revertible: bucketed files appended into live generations;
-    // the staged batch's file names become the commit's add-file delta
-    graft.sources.PendingAppend.complete(spark, s"${table}_sigs",
-      batchId, members,
-      added => recordSnapshot(spark, table, "ingest", revertible = false,
-        addedFiles = added))
-    // auto-compaction cadence: reentrant under the family lock
-    if (autoCompactAfter > 0 && graft.sources.Snapshots.addsSinceBase(
-        spark, table, s"${table}_sigs") >= autoCompactAfter) {
-      log.info(s"minhash $table: $autoCompactAfter ingests since the " +
-        "last base manifest — auto-compacting")
-      compactMinhashIndex(spark, table)
-    }
+    minhashFamily.appendStaged(spark, table, Seq(stagedSigs, stagedBuckets),
+      "ingest", autoCompactAfter, () => compactMinhashIndex(spark, table))
     out
   }
 
@@ -530,27 +460,13 @@ object Dedup {
     * `MinhashIndexSpec` additionally pins one file per bucket
     * afterwards. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-      graft.sources.Generations.withMaintenanceLock(table) {
-    // finish (or discard) any ingest that died mid-commit before the
-    // rewrite reads the directories it left behind; audit unrecorded
-    // files loudly before the fresh base manifest folds them back into
-    // served history (r16 directive 6)
-    recoverPendingAppend(spark, table)
-    graft.sources.Snapshots.auditUnrecorded(spark, table,
-      Seq(s"${table}_sigs", s"${table}_buckets"))
+      table: String): Unit = minhashFamily.compact(spark, table) { tomb =>
     // fold tombstones into the rewrite both tables were getting anyway
-    // (the Lucene segment-merge shape): the dead rows drop physically,
-    // then the list resets — a crash in between leaves tombstones for
-    // rows that no longer exist, a harmless no-op anti-join cleared by
-    // the next compaction
-    val tomb = graft.sources.Tombstones.frame(spark, table)
+    // (the Lucene segment-merge shape): the dead rows drop physically
     def fold(df: org.apache.spark.sql.DataFrame) =
       graft.sources.Tombstones.filterWith(df, "id", tomb, table)
     graft.sources.Bucketing.compactBucketed(spark, s"${table}_sigs", fold)
     graft.sources.Bucketing.compactBucketed(spark, s"${table}_buckets", fold)
-    if (tomb.nonEmpty) graft.sources.Tombstones.clear(spark, table)
-    recordSnapshot(spark, table, "compact", revertible = true)
   }
 
   // ----------------------------------------------------------- minhash

@@ -304,83 +304,61 @@ object Knn {
     * shares q42's oracle. */
   def writeIvfIndex(data: DataFrame, idCol: String, vecCol: String,
       table: String, path: String,
-      nCells: Int = 16, iterations: Int = 5): Unit =
-      graft.sources.Generations.withMaintenanceLock(table) {
+      nCells: Int = 16, iterations: Int = 5): Unit = {
     val spark = data.sparkSession
     import spark.implicits._
     import graft.sources.Generations
-    val d = withVecAndNorm(data, idCol, vecCol).cache()
-    try {
-      val centroids = trainCentroids(d, nCells, iterations)
-      // live names are Generations VIEWS over generation tables —
-      // maintenance flips are one atomic catalog op each; each member
-      // generation is RESERVED (unique name/path under racing writers)
-      // and CAS-committed, so a rebuild-by-writeIvfIndex racing another
-      // maintenance op loses loudly instead of clobbering it
-      val centBase = Generations.currentOpt(spark, s"${table}_centroids")
-      val centGen = Generations.reserve(spark, s"${table}_centroids")
-      centroids.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "c")
-        .coalesce(1)
-        .write.format("parquet")
-        .option("path", Generations.genPath(s"$path/centroids", centGen))
-        .mode("overwrite").saveAsTable(centGen)
-      Generations.commit(spark, s"${table}_centroids", centGen, centBase)
-      val cellsBase = Generations.currentOpt(spark, s"${table}_cells")
-      val cellsGen = Generations.reserve(spark, s"${table}_cells")
-      d.withColumn("cell", nearestUdf(centroids)($"v"))
-        .select($"id", $"v", $"nrm", $"cell")
-        .repartition($"cell")
-        .write.format("parquet")
-        .option("path", Generations.genPath(s"$path/cells", cellsGen))
-        .partitionBy("cell").mode("overwrite").saveAsTable(cellsGen)
-      Generations.commit(spark, s"${table}_cells", cellsGen, cellsBase)
-      // empty tombstone list, so deleteFromIvfIndex/probes have it by
-      // construction (probes still tolerate absence for pre-delete
-      // indexes)
-      graft.sources.Tombstones.init(spark, table, s"$path/deletes")
-      recordSnapshot(spark, table, "build", revertible = true)
-    } finally d.unpersist()
+    ivfFamily.build(spark, table, path) {
+      val d = withVecAndNorm(data, idCol, vecCol).cache()
+      try {
+        val centroids = trainCentroids(d, nCells, iterations)
+        // live names are Generations VIEWS over generation tables —
+        // maintenance flips are one atomic catalog op each; each member
+        // generation is RESERVED (unique name/path under racing writers)
+        // and CAS-committed, so a rebuild-by-writeIvfIndex racing another
+        // maintenance op loses loudly instead of clobbering it
+        val centBase = Generations.currentOpt(spark, s"${table}_centroids")
+        val centGen = Generations.reserve(spark, s"${table}_centroids")
+        centroids.zipWithIndex
+          .map { case (c, i) => (i, c.toSeq) }.toSeq
+          .toDF("cell", "c")
+          .coalesce(1)
+          .write.format("parquet")
+          .option("path", Generations.genPath(s"$path/centroids", centGen))
+          .mode("overwrite").saveAsTable(centGen)
+        Generations.commit(spark, s"${table}_centroids", centGen, centBase)
+        val cellsBase = Generations.currentOpt(spark, s"${table}_cells")
+        val cellsGen = Generations.reserve(spark, s"${table}_cells")
+        d.withColumn("cell", nearestUdf(centroids)($"v"))
+          .select($"id", $"v", $"nrm", $"cell")
+          .repartition($"cell")
+          .write.format("parquet")
+          .option("path", Generations.genPath(s"$path/cells", cellsGen))
+          .partitionBy("cell").mode("overwrite").saveAsTable(cellsGen)
+        Generations.commit(spark, s"${table}_cells", cellsGen, cellsBase)
+      } finally d.unpersist()
+    }
   }
 
-  /** One manifest row in the family snapshot log per maintenance commit
-    * (see [[graft.sources.Snapshots]]). Append commits pass the staged
-    * batch's file names via `addedFiles`, so the log records an
-    * O(batch) delta instead of re-walking the index (r16). */
-  private def recordSnapshot(spark: org.apache.spark.sql.SparkSession,
-      table: String, op: String, revertible: Boolean,
-      addedFiles: Map[String, Seq[String]] = Map.empty): Unit =
-    graft.sources.Snapshots.record(spark, table, op, revertible,
-      Seq(s"${table}_cells", s"${table}_centroids", s"${table}_deletes",
-        s"${table}_cells_q8", s"${table}_qparams"),
-      s"${table}_cells",
-      // appends mutate these two generations in place — their per-commit
-      // file manifests make time travel cross append commits
-      fileTracked = Set(s"${table}_cells", s"${table}_cells_q8"),
-      addedFiles = addedFiles)
+  /** The IVF index family ([[graft.sources.IndexFamily]]): cells,
+    * centroids, the tombstone list and the SQ8 replica (codes and
+    * params). Appends grow cells and cells_q8 in place, so those two are
+    * file-tracked. */
+  val ivfFamily: graft.sources.IndexFamily = new graft.sources.IndexFamily(
+    "ivf", Seq("cells", "centroids", "deletes", "cells_q8", "qparams"),
+    "cells", Seq("cells", "cells_q8"))
 
   /** DELETE vectors from a [[writeIvfIndex]] index — the takedown
-    * primitive (a removed document's embedding must stop surfacing as a
-    * neighbor NOW, not at the next rebuild). Lucene-style tombstones
-    * ([[graft.sources.Tombstones]]): the ids merge into a tiny
-    * `{table}_deletes` list (fresh generation, atomic flip) and every
-    * probe anti-joins the cell scan against it, so the vectors vanish
-    * from all results immediately at batch cost — no cell rewrite, and
-    * the partition-pruned probe plan is untouched (the anti-join rides
-    * the pruned scan). [[compactIvfIndex]] and [[rebuildIvfIndex]] fold
-    * the tombstones physically and reset the list; a deleted id stays
-    * invisible even if re-appended before that fold (re-add by
-    * appending after it). Centroids are untouched — quantizer drift
+    * primitive ([[graft.sources.IndexFamily.delete]]): every probe
+    * anti-joins the pruned cell scan against the tombstone list, so the
+    * vectors vanish from all results immediately at batch cost;
+    * [[compactIvfIndex]] and [[rebuildIvfIndex]] fold them physically.
+    * Centroids are untouched — quantizer drift
     * from heavy deletion shows up in [[ivfCellStats]] like any other
     * distribution shift, answered by a rebuild. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, ids: DataFrame): Unit =
-    graft.sources.Generations.withMaintenanceLock(table) {
-      recoverPendingAppend(spark, table)
-      graft.sources.Tombstones.add(spark, table, ids, s"${table}_cells")
-      recordSnapshot(spark, table, "delete", revertible = true)
-    }
+    ivfFamily.delete(spark, table, ids)
 
   /** Grow a [[writeIvfIndex]] index with a batch of NEW vectors — the
     * index-maintenance half of the serving shape. The quantizer is NOT
@@ -404,18 +382,10 @@ object Knn {
       graft.sources.Generations.withMaintenanceLock(table) {
     val spark = data.sparkSession
     import spark.implicits._
-    // a previous append may have died past its commit marker — roll it
-    // forward (or a pre-marker death back) before building on the
-    // index state (the PendingAppend protocol every family shares)
     recoverPendingAppend(spark, table)
     // appends target the CURRENT generation in place (new files only —
-    // never a rewrite of files a reader holds, so no flip needed). The
-    // batch STAGES beside the index (StagedAppend, r16), persists its
-    // intent + commit marker (PendingAppend, r17), and only then moves
-    // in: a crash during the write leaves the index unchanged, a crash
-    // past the marker is completed by the next maintenance op, and the
-    // staged file names hand the snapshot log its exact add-file
-    // delta — zero directory walks per append commit.
+    // never a rewrite of files a reader holds, so no flip needed); the
+    // batch stages beside the index and commits through the family
     val cellsGen = graft.sources.Generations.ensureGen(spark, s"${table}_cells")
     val centroids: Array[Array[Double]] = spark.table(s"${table}_centroids")
       .orderBy($"cell").collect().map(_.getSeq[Double](1).toArray)
@@ -439,72 +409,25 @@ object Knn {
             .repartition($"cell"),
           s"${table}_cells_q8", q8Gen, "cell"))
       }
-    // the staged write is the phase that scales with the batch — renew
-    // the cross-JVM lease before entering the commit window (r16
-    // ADVICE: an op outrunning the TTL could have its stage rolled
-    // back under it)
-    graft.sources.Generations.renewLease(table)
-    val members = Seq(stagedCells) ++ stagedQ8
-    val batchId = java.util.UUID.randomUUID().toString.take(8)
-    graft.sources.PendingAppend.writeIntent(spark, s"${table}_cells",
-      batchId, members)
-    graft.sources.PendingAppend.crashPoint("pending.afterIntent")
-    graft.sources.PendingAppend.markCommitted(spark, s"${table}_cells",
-      batchId)
-    graft.sources.PendingAppend.crashPoint("pending.afterMarker")
-    // NOT revertible: files appended into the live cells generation;
-    // the staged batch's file names become the commit's add-file delta
-    graft.sources.PendingAppend.complete(spark, s"${table}_cells",
-      batchId, members,
-      added => recordSnapshot(spark, table, "append", revertible = false,
-        addedFiles = added))
-    // auto-compaction cadence: reentrant under the family lock
-    if (autoCompactAfter > 0 && graft.sources.Snapshots.addsSinceBase(
-        spark, table, s"${table}_cells") >= autoCompactAfter) {
-      log.info(s"ivf $table: $autoCompactAfter appends since the last " +
-        "base manifest — auto-compacting")
-      compactIvfIndex(spark, table)
-    }
+    ivfFamily.appendStaged(spark, table, Seq(stagedCells) ++ stagedQ8,
+      "append", autoCompactAfter, () => compactIvfIndex(spark, table))
   }
 
-  /** Recover an [[appendToIvfIndex]] that died mid-commit — called
-    * automatically at the start of every IVF maintenance op, and
-    * available directly for an operator who just restarted a dead
-    * ingest job. Keyed on the [[graft.sources.PendingAppend]] sidecar
-    * + commit marker: past the marker the batch rolls FORWARD (staged
-    * moves replayed idempotently, snapshot commit recorded so
-    * historical reads see the batch); before it, BACK (stage and
-    * sidecar deleted, index untouched — re-run the batch). */
+  /** Recover an [[appendToIvfIndex]] that died mid-commit
+    * ([[graft.sources.IndexFamily.recover]]). Every IVF maintenance op
+    * calls it first; call it directly after restarting a dead ingest
+    * job. */
   def recoverPendingAppend(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-      graft.sources.Generations.withMaintenanceLock(table) {
-    if (!spark.sessionState.catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${table}_cells")))
-      return
-    graft.sources.PendingAppend.recover(spark, s"${table}_cells",
-      added => recordSnapshot(spark, table, "append-recovery",
-        revertible = false, addedFiles = added))
-  }
+      table: String): Unit = ivfFamily.recover(spark, table)
 
-  /** The vectors [[appendToIvfIndex]] commits in `(fromId, toId]`
-    * added — the incremental-consumer read ("give me only the vectors
-    * ingested since the state I last processed"), resolved entirely
-    * from the snapshot log's add-file deltas
-    * ([[graft.sources.Snapshots.readAddedBetween]]): O(window) metadata
-    * on the driver, a pinned scan of exactly the appended cell files,
-    * zero directory walks — a downstream job catching up on a daily-
-    * append index pays for the new batches, never a re-scan of the
-    * corpus. Window endpoints come from
-    * [[graft.sources.Snapshots.commitIdFor]] (depth / timestamp / tag).
-    * Compaction/quantize commits inside the window are transparent
-    * (layout rewrites add no logical rows); a `delete` commit inside it
-    * refuses unless `ignoreDeletes` — then anti-join the live tombstone
-    * list to drop since-deleted ids. */
+  /** The (id, v) vectors [[appendToIvfIndex]] commits in
+    * `(fromId, toId]` added ([[graft.sources.IndexFamily.addedBetween]]
+    * over the cells); quantize commits in the window are transparent
+    * like compactions. */
   def vectorsAddedBetween(spark: org.apache.spark.sql.SparkSession,
       table: String, fromId: Long, toId: Long,
       ignoreDeletes: Boolean = false): DataFrame =
-    graft.sources.Snapshots.readAddedBetween(spark, table,
-        s"${table}_cells", fromId, toId, ignoreDeletes)
+    ivfFamily.addedBetween(spark, table, fromId, toId, ignoreDeletes)
       .select(col("id"), col("v"))
 
   /** [[ivfTopK]] against a PERSISTED index from [[writeIvfIndex]]:
@@ -748,7 +671,7 @@ object Knn {
       .option("path", Generations.genPath(s"$parent/qparams", qpGen))
       .mode("overwrite").saveAsTable(qpGen)
     Generations.commit(spark, qpName, qpGen, qpBase)
-    recordSnapshot(spark, table, "quantize", revertible = true)
+    ivfFamily.record(spark, table, "quantize", revertible = true)
   }
 
   /** [[ivfTopKAgainstIndex]] over the SQ8 codes table from
@@ -803,69 +726,41 @@ object Knn {
     * IS the correctness check (q163 shares q160's oracle verbatim;
     * `IvfIndexSpec` additionally pins one file per cell afterwards). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
-      graft.sources.Generations.withMaintenanceLock(table) {
+      table: String): Unit = ivfFamily.compact(spark, table) { tomb =>
     import spark.implicits._
     import graft.sources.Generations
-    // finish (or discard) any append that died mid-commit before the
-    // rewrite reads the directories it left behind; then audit — files
-    // present but unrecorded (an append that bypassed the log) are
-    // named loudly before this rewrite's base manifest folds them back
-    // into served history (r16 verdict directive 6)
-    recoverPendingAppend(spark, table)
-    graft.sources.Snapshots.auditUnrecorded(spark, table,
-      Seq(s"${table}_cells", s"${table}_cells_q8"))
-    val name = s"${table}_cells"
-    val gen = Generations.ensureGen(spark, name)
-    val old = Generations.location(spark, gen)
-    val nextGen = Generations.reserve(spark, name)
-    // fold tombstones into the rewrite (dead rows drop physically),
-    // then reset the list — a crash in between leaves no-op tombstones
-    // cleared by the next compaction
-    val tomb = graft.sources.Tombstones.frame(spark, table)
-    // read by PATH (the live view serves the old generation until the
-    // commit); partition discovery types cell as int — matching the
-    // build schema, but cast explicitly so the contract never drifts
-    graft.sources.Tombstones.filterWith(
-        spark.read.parquet(old)
-          .select($"id", $"v", $"nrm", $"cell".cast("int").as("cell")),
-        "id", tomb, table)
-      .repartition($"cell")
-      .write.format("parquet")
-      .option("path",
-        Generations.genPath(old.replaceAll("__g\\d+$", ""), nextGen))
-      .partitionBy("cell").mode("overwrite").saveAsTable(nextGen)
-    // atomic flip, CAS'd on the generation the rewrite read; the
-    // superseded generation is retained for in-flight readers until the
-    // next maintenance commit
-    Generations.commit(spark, name, nextGen, Some(gen))
-    // fold the SAME tombstones into the SQ8 replica BEFORE the list
-    // resets — otherwise the cleared list would let the dead rows still
-    // sitting in cells_q8 RESURFACE in quantized results
-    if (hasQ8(spark, table)) {
-      val q8name = s"${table}_cells_q8"
-      val gen8 = Generations.ensureGen(spark, q8name)
-      val old8 = Generations.location(spark, gen8)
-      val next8 = Generations.reserve(spark, q8name)
-      val next8Path = Generations.genPath(old8.replaceAll("__g\\d+$", ""), next8)
+    // one cell-partitioned member rewritten as ONE fresh generation, its
+    // tombstoned rows dropped: read by PATH (the live view serves the old
+    // generation until the commit); partition discovery types cell as
+    // int — matching the build schema, but cast explicitly so the
+    // contract never drifts. An SQ8 params sidecar carries over before
+    // the flip (codes are unchanged, so the matched pair stays matched —
+    // the one-pair-per-generation contract of quantize). The flip is
+    // CAS'd on the generation the rewrite read; the superseded one is
+    // retained for in-flight readers until the next maintenance commit
+    def rewrite(name: String, cols: String*): Unit = {
+      val gen = Generations.ensureGen(spark, name)
+      val old = Generations.location(spark, gen)
+      val next = Generations.reserve(spark, name)
+      val nextPath = Generations.genPath(old.replaceAll("__g\\d+$", ""), next)
       graft.sources.Tombstones.filterWith(
-          spark.read.parquet(old8)
-            .select($"id", $"codes", $"cell".cast("int").as("cell")),
+          spark.read.parquet(old)
+            .select(cols.map(col) :+ $"cell".cast("int").as("cell"): _*),
           "id", tomb, table)
         .repartition($"cell")
         .write.format("parquet")
-        .option("path", next8Path)
-        .partitionBy("cell").mode("overwrite").saveAsTable(next8)
-      // the rewrite doesn't change codes, so the matched params carry
-      // over unchanged into the new generation (sidecar copy before the
-      // flip — same one-pair-per-generation contract as quantize)
-      readQparamsSidecar(spark, old8).foreach { case (mins8, steps8) =>
-        writeQparamsSidecar(spark, next8Path, mins8, steps8)
+        .option("path", nextPath)
+        .partitionBy("cell").mode("overwrite").saveAsTable(next)
+      readQparamsSidecar(spark, old).foreach { case (mins, steps) =>
+        writeQparamsSidecar(spark, nextPath, mins, steps)
       }
-      Generations.commit(spark, q8name, next8, Some(gen8))
+      Generations.commit(spark, name, next, Some(gen))
     }
-    if (tomb.nonEmpty) graft.sources.Tombstones.clear(spark, table)
-    recordSnapshot(spark, table, "compact", revertible = true)
+    rewrite(s"${table}_cells", "id", "v", "nrm")
+    // fold the SAME tombstones into the SQ8 replica BEFORE the list
+    // resets — otherwise the cleared list would let the dead rows still
+    // sitting in cells_q8 RESURFACE in quantized results
+    if (hasQ8(spark, table)) rewrite(s"${table}_cells_q8", "id", "codes")
   }
 
   /** Per-cell occupancy of a persisted IVF index — the drift metric an
@@ -911,59 +806,52 @@ object Knn {
       graft.sources.Generations.withMaintenanceLock(table) {
     import spark.implicits._
     import graft.sources.Generations
-    // the rebuild reads the live cell directories — recover any dead
-    // append first, and audit for unrecorded files the fresh base
-    // manifest is about to fold back into history (r16 directive 6)
-    recoverPendingAppend(spark, table)
-    graft.sources.Snapshots.auditUnrecorded(spark, table,
-      Seq(s"${table}_cells", s"${table}_cells_q8"))
-    val cellsName = s"${table}_cells"
-    val centName = s"${table}_centroids"
-    val cellsGen = Generations.ensureGen(spark, cellsName)
-    val centGen = Generations.ensureGen(spark, centName)
-    val oldCells = Generations.location(spark, cellsGen)
-    val oldCent = Generations.location(spark, centGen)
-    // read by PATH: v and nrm round-trip parquet doubles exactly, so
-    // retraining from the index equals retraining from the source rows.
-    // Tombstones fold here too — the rebuild trains on and re-assigns
-    // the SURVIVING corpus, bit-identical to a fresh writeIvfIndex over
-    // it (IndexDeleteSpec pins that equality), and the list resets after
-    // both flips
-    val tomb = graft.sources.Tombstones.frame(spark, table)
-    val d = graft.sources.Tombstones.filterWith(
-        spark.read.parquet(oldCells).select($"id", $"v", $"nrm"),
-        "id", tomb, table)
-      .cache()
-    try {
-      val centroids = trainCentroids(d, nCells, iterations)
-      val nextCent = Generations.reserve(spark, centName)
-      val nextCells = Generations.reserve(spark, cellsName)
-      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "c").coalesce(1)
-        .write.format("parquet")
-        .option("path",
-          Generations.genPath(oldCent.replaceAll("__g\\d+$", ""), nextCent))
-        .mode("overwrite").saveAsTable(nextCent)
-      d.withColumn("cell", nearestUdf(centroids)($"v"))
-        .select($"id", $"v", $"nrm", $"cell")
-        .repartition($"cell")
-        .write.format("parquet")
-        .option("path",
-          Generations.genPath(oldCells.replaceAll("__g\\d+$", ""), nextCells))
-        .partitionBy("cell").mode("overwrite").saveAsTable(nextCells)
-      // both new generations fully written and registered BEFORE either
-      // flip; each flip is one atomic catalog op (CAS'd on the
-      // generation the retrain read), and the superseded generations
-      // survive until the next maintenance commit
-      Generations.commit(spark, centName, nextCent, Some(centGen))
-      Generations.commit(spark, cellsName, nextCells, Some(cellsGen))
-      if (tomb.nonEmpty) graft.sources.Tombstones.clear(spark, table)
-      recordSnapshot(spark, table, "rebuild", revertible = true)
-      // a rebuild reassigns every row, so an existing SQ8 replica is
-      // wholesale stale: re-derive it (fresh params — the rebuild IS the
-      // retrain cadence); one more recorded 'quantize' commit
-      if (hasQ8(spark, table)) quantizeIvfIndex(spark, table)
-    } finally d.unpersist()
+    ivfFamily.compact(spark, table, "rebuild") { tomb =>
+      val cellsName = s"${table}_cells"
+      val centName = s"${table}_centroids"
+      val cellsGen = Generations.ensureGen(spark, cellsName)
+      val centGen = Generations.ensureGen(spark, centName)
+      val oldCells = Generations.location(spark, cellsGen)
+      val oldCent = Generations.location(spark, centGen)
+      // read by PATH: v and nrm round-trip parquet doubles exactly, so
+      // retraining from the index equals retraining from the source rows.
+      // Tombstones fold here too — the rebuild trains on and re-assigns
+      // the SURVIVING corpus, bit-identical to a fresh writeIvfIndex over
+      // it (IndexDeleteSpec pins that equality), and the list resets after
+      // both flips
+      val d = graft.sources.Tombstones.filterWith(
+          spark.read.parquet(oldCells).select($"id", $"v", $"nrm"),
+          "id", tomb, table)
+        .cache()
+      try {
+        val centroids = trainCentroids(d, nCells, iterations)
+        val nextCent = Generations.reserve(spark, centName)
+        val nextCells = Generations.reserve(spark, cellsName)
+        centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+          .toDF("cell", "c").coalesce(1)
+          .write.format("parquet")
+          .option("path",
+            Generations.genPath(oldCent.replaceAll("__g\\d+$", ""), nextCent))
+          .mode("overwrite").saveAsTable(nextCent)
+        d.withColumn("cell", nearestUdf(centroids)($"v"))
+          .select($"id", $"v", $"nrm", $"cell")
+          .repartition($"cell")
+          .write.format("parquet")
+          .option("path",
+            Generations.genPath(oldCells.replaceAll("__g\\d+$", ""), nextCells))
+          .partitionBy("cell").mode("overwrite").saveAsTable(nextCells)
+        // both new generations fully written and registered BEFORE either
+        // flip; each flip is one atomic catalog op (CAS'd on the
+        // generation the retrain read), and the superseded generations
+        // survive until the next maintenance commit
+        Generations.commit(spark, centName, nextCent, Some(centGen))
+        Generations.commit(spark, cellsName, nextCells, Some(cellsGen))
+      } finally d.unpersist()
+    }
+    // a rebuild reassigns every row, so an existing SQ8 replica is
+    // wholesale stale: re-derive it (fresh params — the rebuild IS the
+    // retrain cadence); one more recorded 'quantize' commit
+    if (hasQ8(spark, table)) quantizeIvfIndex(spark, table)
   }
 
   /** Embedding near-duplicate PAIRS above a cosine threshold via LSH

@@ -207,11 +207,11 @@ object PendingAppend {
   }
 
   /** Recover every pending append of the family anchored at
-    * `anchorTable` — called (under the family lock) at the start of
-    * every maintenance op, and exposed through each operator's
-    * `recoverPendingAppend` for an operator who just restarted a dead
-    * ingest job. `record` is the family's snapshot-record callback
-    * (op = "append-recovery"). Also sweeps orphan stage directories —
+    * `anchorTable` — called through [[IndexFamily.recover]] (under the
+    * family lock) at the start of every maintenance op, and exposed as
+    * each operator's `recoverPendingAppend` for an operator who just
+    * restarted a dead ingest job. `record` is the family's roll-forward
+    * callback (op = "append-recovery"). Also sweeps orphan stage directories —
     * residue of a crash DURING the staged write, before any sidecar
     * existed (safe under the lock: no live append of this family can
     * be in flight). */
@@ -222,8 +222,7 @@ object PendingAppend {
     val parent = parentDir(spark, anchorTable)
     val fs = fsOf(spark, parent)
     if (!fs.exists(parent)) return
-    val entries = fs.listStatus(parent)
-    val pendings = entries.filter(s =>
+    val pendings = fs.listStatus(parent).filter(s =>
       s.isFile && s.getPath.getName.startsWith("_pending_idx_append_"))
     pendings.sortBy(_.getPath.getName).foreach { pend =>
       val batchId = pend.getPath.getName.stripPrefix("_pending_idx_append_")
@@ -255,8 +254,10 @@ object PendingAppend {
     }
     // orphan stages: a crash during the staged WRITE left directories
     // no sidecar references (a sidecar is written only after every
-    // stage is complete) — sibling residue, reclaimed here
-    entries.filter(s => s.isDirectory &&
+    // stage is complete) — sibling residue, reclaimed here. Listed
+    // AFTER the batches above resolved: their own stages are gone by
+    // now, so only true orphans remain
+    fs.listStatus(parent).filter(s => s.isDirectory &&
         s.getPath.getName.contains("__stage"))
       .foreach { d =>
         logger.warn(s"pending append recovery at $anchorTable: deleting " +

@@ -294,28 +294,29 @@ object StreamingOps {
   /** TAKEDOWN feed as a stream — the delete half of the streaming
     * maintenance story (removal requests arrive continuously in a real
     * serving deployment, exactly like ingest): each micro-batch of ids
-    * merges into the index's tombstone list
-    * ([[graft.sources.Tombstones.add]] via the family's anchor table —
-    * `{t}_postings` for BM25, `{t}_sigs` for MinHash, `{t}_cells` for
-    * IVF), so the documents leave every probe as soon as their batch
-    * commits; the next compaction folds them physically. One wrapper
-    * serves all three families because the delete op itself is
-    * family-agnostic.
+    * is one delete of the index `family` serves
+    * ([[graft.sources.IndexFamily.delete]] — `Bm25.family`,
+    * `Knn.ivfFamily` or `Dedup.minhashFamily`), the same op as the
+    * batch `deleteFrom*` calls: it recovers a crashed append first,
+    * merges the ids into the tombstone list and records a `delete`
+    * commit, so the documents leave every probe as soon as their batch
+    * commits, an incremental read over the window refuses unless
+    * `ignoreDeletes`, and the next compaction folds them physically.
     *
     * Redelivery is SAFE here, unlike the append streams: the tombstone
-    * merge is a distinct union, so a crash-replayed micro-batch is a
-    * no-op — deletes are naturally idempotent, the nicest possible
-    * foreachBatch contract. Micro-batches are serialized by the
-    * engine, satisfying the tombstone list's single-writer rule. */
+    * merge is a distinct union, so a crash-replayed micro-batch changes
+    * no id (it records one more `delete` commit) — deletes are
+    * naturally idempotent, the nicest possible foreachBatch contract.
+    * Micro-batches are serialized by the engine, and each delete runs
+    * under the index's maintenance lock. */
   def indexDeleteStream(
       ids: DataFrame, // streaming frame whose FIRST column is the id
-      index: String, anchorTable: String,
+      index: String, family: graft.sources.IndexFamily,
       checkpoint: String,
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val applyBatch: (DataFrame, Long) => Unit = { (batch, _) =>
-      graft.sources.Tombstones.add(batch.sparkSession, index, batch,
-        anchorTable)
+      family.delete(batch.sparkSession, index, batch)
     }
     val writer = ids.writeStream
       .option("checkpointLocation", checkpoint)

@@ -258,6 +258,40 @@ class IndexDeleteSpec extends AnyFunSuite {
   private def mhWords(group: String, n: Int): IndexedSeq[String] =
     (0 until n).map(i => s"${group}w$i")
 
+  test("bm25: a stream delete is the family delete — a recorded delete " +
+      "commit, so an incremental read across it refuses unless " +
+      "ignoreDeletes") {
+    val dir = tmp("graft_del_stream")
+    val tbl = "g_del_stream"
+    Bm25.buildIndex(bmDocs.filter($"doc_id" < 30L), "doc_id", "text", tbl,
+      s"$dir/idx", nDirs = 4)
+    Bm25.appendToIndex(bmDocs.filter($"doc_id" >= 30L), "doc_id", "text",
+      tbl)
+    val doomed = Seq(3L, 31L).toDF("doc_id")
+    doomed.coalesce(1).write.parquet(s"$dir/in")
+    graft.streaming.StreamingOps.indexDeleteStream(
+        spark.readStream.schema(doomed.schema).parquet(s"$dir/in"),
+        tbl, Bm25.family, s"$dir/ckpt",
+        trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+      .awaitTermination()
+    val hist = graft.sources.Snapshots.history(spark, tbl)
+      .select("commit_id", "op").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq // newest first
+    assert(hist.map(_._2) == Seq("delete", "append", "build"),
+      s"the stream delete must be the newest commit: $hist")
+    val (build, latest) = (hist.last._1, hist.head._1)
+    val e = intercept[IllegalStateException] {
+      Bm25.docsAddedBetween(spark, tbl, build, latest).collect()
+    }
+    assert(e.getMessage.contains("delete commit"), e.getMessage)
+    assert(Bm25.docsAddedBetween(spark, tbl, build, latest,
+        ignoreDeletes = true).as[Long].collect().sorted.toSeq ==
+      (30L until 40L), "ignoreDeletes reads the appended ids anyway")
+    assert(Bm25.topKAgainstIndex(bmQueries, tbl, k = 40)
+      .filter($"doc_id".isin(3L, 31L)).isEmpty,
+      "the stream-deleted docs leave every ranking")
+  }
+
   test("minhash: delete == probing a history that never held the docs; " +
       "compaction folds physically and resets the list") {
     val a = mhWords("a", 50)

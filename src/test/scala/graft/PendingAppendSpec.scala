@@ -293,27 +293,122 @@ class PendingAppendSpec extends AnyFunSuite {
     assert(bmRows(tbl) == bmRows(ref), "the re-run must equal a clean build")
   }
 
-  test("a BM25 rebuild over an append that crashed past its commit " +
-      "marker finishes that append first; recovery stays a no-op after") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bmcr_rebuild").toString
-    val tbl = "g_bmcr_rebuild"
-    val (base, batch) = bmDocs.partition(_._1 % 2 == 0)
-    Bm25.buildIndex(base.toDF("doc_id", "text"), "doc_id", "text", tbl,
-      s"$dir/idx", nDirs = 4)
+  /** Build a family's index over half the corpus, crash an append of
+    * the other half past its commit marker (files moved in, snapshot not
+    * recorded), then REBUILD over the whole corpus: the rebuild must
+    * finish the crashed append first, so a later recovery is a no-op and
+    * the index equals a clean build. Without that, the rebuild's flip
+    * strands the append's marker on a superseded generation and every
+    * later maintenance op refuses. */
+  private def rebuildOverCrashCase[R](tag: String,
+      build: (String, String, Boolean) => Unit, append: String => Unit,
+      recover: String => Unit, rows: String => R): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_rebuild_$tag").toString
+    val tbl = s"g_rebuild_$tag"
+    build(tbl, s"$dir/idx", false)
     PendingAppend.testCrashPoint = "pending.afterMove"
-    intercept[RuntimeException] {
-      Bm25.appendToIndex(batch.toDF("doc_id", "text"), "doc_id", "text", tbl)
-    }
-    Bm25.buildIndex(bmDocs.toDF("doc_id", "text"), "doc_id", "text", tbl,
-      s"$dir/idx", nDirs = 4)
+    intercept[RuntimeException](append(tbl))
+    build(tbl, s"$dir/idx", true)
     val histBefore = Snapshots.history(spark, tbl).count()
-    Bm25.recoverPendingAppend(spark, tbl)
+    recover(tbl)
     assert(Snapshots.history(spark, tbl).count() == histBefore,
       "no pending append may survive the rebuild")
-    val ref = "g_bmcr_rebuild_ref"
-    Bm25.buildIndex(bmDocs.toDF("doc_id", "text"), "doc_id", "text", ref,
-      s"$dir/ref", nDirs = 4)
-    assert(bmRows(tbl) == bmRows(ref), "the rebuild must equal a clean build")
+    val ref = s"g_rebuild_${tag}_ref"
+    build(ref, s"$dir/ref", true)
+    assert(rows(tbl) == rows(ref), "the rebuild must equal a clean build")
+  }
+
+  test("a BM25 rebuild over an append that crashed past its commit " +
+      "marker finishes that append first; recovery stays a no-op after") {
+    val (base, batch) = bmDocs.partition(_._1 % 2 == 0)
+    rebuildOverCrashCase("bm25",
+      (t, path, whole) => Bm25.buildIndex(
+        (if (whole) bmDocs else base).toDF("doc_id", "text"), "doc_id",
+        "text", t, path, nDirs = 4),
+      t => Bm25.appendToIndex(batch.toDF("doc_id", "text"), "doc_id",
+        "text", t),
+      t => Bm25.recoverPendingAppend(spark, t), bmRows)
+  }
+
+  test("an IVF rebuild over an append that crashed past its commit " +
+      "marker finishes that append first; recovery stays a no-op after") {
+    rebuildOverCrashCase("ivf",
+      (t, path, whole) => Knn.writeIvfIndex(
+        if (whole) vecs else vecs.filter($"vec_id" % 2 === 0), "vec_id",
+        "embedding", t, path, nCells = 4),
+      t => Knn.appendToIvfIndex(vecs.filter($"vec_id" % 2 === 1),
+        "vec_id", "embedding", t),
+      t => Knn.recoverPendingAppend(spark, t), knnRows(_))
+  }
+
+  test("a MinHash rebuild over an ingest that crashed past its commit " +
+      "marker finishes that ingest first; recovery stays a no-op after") {
+    val hist = (0L until 20L).map(i => (i, doc(i)))
+    val batch = (100L until 110L).map(i => (i, doc(i)))
+    rebuildOverCrashCase("mh",
+      (t, path, whole) => Dedup.writeMinhashIndex(
+        (if (whole) hist ++ batch else hist).toDF("doc_id", "text"),
+        "doc_id", "text", t, path, numBuckets = 4),
+      t => Dedup.ingestAgainstIndex(batch.toDF("doc_id", "text"), t,
+        "doc_id", "text").collect(),
+      t => Dedup.recoverPendingAppend(spark, t),
+      t => mhStatuses(t, hist.map(_._1) ++ batch.map(_._1)))
+  }
+
+  /** The messages `logger` emits at WARN or above while `body` runs. */
+  private def warnings(logger: String)(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    val log = org.apache.logging.log4j.LogManager.getLogger(logger)
+      .asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-warn-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    val level = log.getLevel
+    capture.start()
+    log.addAppender(capture)
+    log.setLevel(org.apache.logging.log4j.Level.WARN)
+    try body
+    finally {
+      log.removeAppender(capture)
+      log.setLevel(level)
+      capture.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a roll-forward warns about true orphan stages only: the batch's " +
+      "own cleaned stage is never reported, a planted orphan is swept") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivfcr_orphlog").toString
+    val tbl = "g_ivfcr_orphlog"
+    Knn.writeIvfIndex(vecs.filter($"vec_id" % 2 === 0), "vec_id",
+      "embedding", tbl, s"$dir/idx", nCells = 4)
+    PendingAppend.testCrashPoint = "pending.afterMarker"
+    intercept[RuntimeException] {
+      Knn.appendToIvfIndex(vecs.filter($"vec_id" % 2 === 1), "vec_id",
+        "embedding", tbl)
+    }
+    val batchStages = stageDirs(s"${tbl}_cells")
+    assert(batchStages.nonEmpty, "the crashed batch left its stage")
+    val orphan = new org.apache.hadoop.fs.Path(
+      Generations.basePath(spark, s"${tbl}_cells") + "__stagedeadbeef")
+    val fs = orphan.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.mkdirs(new org.apache.hadoop.fs.Path(orphan, "cell=0"))
+    val warned = warnings("graft.sources.PendingAppend$") {
+      Knn.recoverPendingAppend(spark, tbl)
+    }
+    assert(warned.exists(_.contains("rolling FORWARD")), warned)
+    val orphanWarnings = warned.filter(_.contains("orphan stage directory"))
+    assert(orphanWarnings.length == 1 &&
+        orphanWarnings.head.contains(orphan.getName),
+      s"only the planted orphan may be reported (batch stages " +
+        s"$batchStages): $orphanWarnings")
+    assert(!fs.exists(orphan), "the planted orphan is swept")
+    assert(stageDirs(s"${tbl}_cells").isEmpty, "no stage survives recovery")
   }
 
   test("a BM25 index holding a sidecar in the pre-PendingAppend format " +
